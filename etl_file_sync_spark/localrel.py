@@ -19,15 +19,61 @@ rather than literal spelling, so arbitrary strings (quotes, backslashes,
 newlines), dates, decimals, NaN/Infinity doubles and NULLs round-trip
 exactly with zero escaping risk; an outer ``CAST`` per column pins the
 declared schema exactly as ``createDataFrame``'s schema string would.
+Because that ``CAST`` would also coerce a wrong-typed cell (``1.5`` into
+a bigint column reads back ``1``, ``"abc"`` reads back NULL), every
+non-NULL cell is first checked against its declared type, the way
+``createDataFrame`` verifies rows.
+
+:func:`sql_double` is the one spelling of a driver-side double inside SQL
+text (bucket boundaries, query vectors, model coefficients).
 """
 
 from __future__ import annotations
+
+import datetime
+import decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
 # simple (non-nested) SQL types only — every current call site; nested
 # types would need a comma-aware schema parser and struct parameters
 _NESTED = ("array<", "map<", "struct<")
+
+# Python cell types each declared simple type accepts. Ints widen into
+# floating/decimal columns (SQL's own implicit numeric widening); nothing
+# narrows or parses. bool is an int subclass and is refused for numbers.
+_INTEGRAL = ("tinyint", "byte", "smallint", "short", "int", "integer", "bigint", "long")
+_ACCEPTS: dict[str, tuple[type, ...]] = {
+    **{t: (int,) for t in _INTEGRAL},
+    **{t: (int, float) for t in ("float", "real", "double")},
+    "decimal": (int, decimal.Decimal),
+    **{t: (str,) for t in ("string", "varchar", "char")},
+    "boolean": (bool,),
+    "date": (datetime.date,),
+    **{t: (datetime.datetime,) for t in ("timestamp", "timestamp_ltz", "timestamp_ntz")},
+    "binary": (bytes, bytearray),
+}
+
+
+def sql_double(x) -> str:
+    """``x`` as an exact SQL DOUBLE: ``CAST('<repr(float(x))>' AS DOUBLE)``.
+
+    ``repr`` round-trips every double (the nearest double to the printed
+    decimal IS the original), and the string cast also parses ``inf``,
+    ``-inf`` and ``nan`` — a bare ``CAST(inf AS DOUBLE)`` would read
+    ``inf`` as a column name."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def _check_cell(v, name: str, sql_type: str) -> None:
+    """Raise TypeError unless ``v`` is a Python value of ``sql_type``."""
+    accepts = _ACCEPTS.get(sql_type.lower().split("(", 1)[0].strip())
+    if accepts is None:
+        raise TypeError(f"local_rows_df: column {name!r} has unsupported type {sql_type!r}")
+    if not isinstance(v, accepts) or (isinstance(v, bool) and bool not in accepts):
+        raise TypeError(
+            f"local_rows_df: column {name!r} ({sql_type}) got {type(v).__name__} {v!r}"
+        )
 
 
 def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -56,6 +102,7 @@ def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
             if v is None:
                 cells.append("NULL")
             else:
+                _check_cell(v, *names_types[j])
                 key = f"v{i}_{j}"
                 args[key] = v
                 cells.append(f":{key}")

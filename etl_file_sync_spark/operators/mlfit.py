@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from etl_file_sync_spark.localrel import local_rows_df
+from etl_file_sync_spark.localrel import local_rows_df, sql_double
 
 
 def logistic_irls(
@@ -75,11 +75,10 @@ def logistic_irls(
             # one F.expr per aggregate (the nested-Column spelling cost
             # ~300 py4j round trips per step x 8 steps of driver time);
             # the strings parse to the same doubles algebra, with beta
-            # entering as exact repr literals (decimal literal -> nearest
-            # double == the original float, the repr round-trip property)
-            z = f"CAST({float(beta[0])!r} AS DOUBLE)"
+            # entering as exact sql_double literals
+            z = sql_double(beta[0])
             for i in range(1, k):
-                z += f" + CAST({float(beta[i])!r} AS DOUBLE) * {xs[i]}"
+                z += f" + {sql_double(beta[i])} * {xs[i]}"
             p = f"(CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + exp(-({z}))))"
             w = f"({p} * (CAST(1.0 AS DOUBLE) - {p}))"
             aggs = []

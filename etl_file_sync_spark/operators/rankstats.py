@@ -1,83 +1,98 @@
-"""Distributed order statistics: global ranks / cumulative sums without a
-single-partition window.
+"""Distributed order statistics: global ranks / running sums / running
+maxima without a single-partition window.
 
 A bare ``Window.orderBy(v)`` (no partitionBy) funnels the whole table
 through ONE task — the classic Spark scale cliff for rank statistics
-(Mann-Whitney, Kolmogorov-Smirnov, ECDFs, balanced sharding). This module
-implements the standard two-phase plan instead:
+(Mann-Whitney, Kolmogorov-Smirnov, ECDFs, balanced sharding). Every
+function here is the same two-phase plan instead, built from two helpers:
 
-1. ``approxQuantile`` picks ~``n_buckets`` boundary values of the leading
-   order column (a tiny driver-side pull of <= 63 doubles). Rows map to a
-   bucket by counting boundaries strictly below the value, so equal keys
-   can never straddle buckets.
-2. Per-bucket weight totals (<= n_buckets rows) collect to the driver,
-   prefix-sum into offsets, and rejoin as a broadcast dimension. A window
-   PARTITIONED BY bucket computes within-bucket running sums / row
-   numbers; the global figure is ``bucket_offset + within_bucket``.
+1. :func:`_buckets` caches the input and makes the call's ONE driver
+   action: a one-row aggregate of ``percentile_approx`` boundaries per
+   order column, NULL counts per order/group column and the row count.
+   NULL keys raise right there, before any plan runs. A row's bucket is
+   the number of boundaries strictly below its key, so equal keys never
+   straddle buckets and bucket order follows key order.
+2. :func:`_offsets` aggregates the per-(group, bucket) totals (at most
+   ``n_groups * n_buckets`` rows) and turns them into exclusive running
+   offsets with a window over the bucket id. The caller broadcast-joins
+   them back — the offsets stay a JVM-only branch of the returned plan,
+   no driver round trip — and a window PARTITIONED BY bucket finishes
+   the job: global figure = bucket offset + within-bucket figure.
 
 Bucket boundaries affect only the partitioning, never the arithmetic, so
-the output is deterministic even if the quantile sketch shifts between
-runs. Each bucket holds ~1/n_buckets of the rows, so the per-bucket
-window is shuffle-balanced and spill-safe at any scale; callers that rank
-distinct values of an aggregate (the rank-test pattern) additionally
-shrink the frame before the window ever runs.
+integer outputs are identical for any bucketing (double sums only
+reassociate at bucket edges). Each bucket holds ~1/n_buckets of the rows,
+so the per-bucket window is shuffle-balanced and spill-safe at any scale;
+callers that rank distinct values of an aggregate (the rank-test pattern)
+additionally shrink the frame before the window ever runs.
 
-The reference (`/root/reference/`, SURVEY.md §2.2) has no analytics
-surface; this is engine-only scale infrastructure.
+The input is cached because the boundary probe, the offsets branch and
+the final window all read it; callers/bench own ``clearCache()``, the
+same lifecycle convention as the dedup shingle caches.
+
+The reference pipeline has no analytics surface (SURVEY.md §2.2); this
+is engine-only scale infrastructure.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_file_sync_spark.localrel import local_rows_df
+from etl_file_sync_spark.localrel import sql_double
 
 _BUCKET = "__rs_bucket"
 
 
-def _boundaries(df: DataFrame, order_col: str, n_buckets: int) -> list[float]:
-    """Approximate interior quantiles of ``order_col`` (driver pull of
-    <= n_buckets-1 doubles; tiny by construction)."""
-    if n_buckets < 2:
-        return []
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    with_key = df.select(F.col(order_col).cast("double").alias("__rs_key"))
-    bounds = with_key.stat.approxQuantile("__rs_key", probs, 0.001)
-    return sorted(set(bounds))
+def _buckets(
+    df: DataFrame, order_cols: list[str], n_buckets: int, group_cols=()
+) -> tuple[DataFrame, list[Column], int]:
+    """Cache ``df`` and run the call's one driver action; returns the
+    cached frame, one bucket-id Column per order column and the row count.
 
-
-def _bucket_expr(order_col: str, bounds: list[float]) -> Column:
-    """Bucket id = number of boundaries strictly below the value; equal
-    keys always share a bucket.
-
-    Built as ONE F.expr string rather than a Python reduce of Column
-    ops: the per-boundary spelling cost ~5 py4j round trips per bound
-    per call site (~150 per rankstats call, 54 call sites across the
-    query modules — pure driver build overhead counted in every bench
-    run). ``repr(float)`` round-trips exactly (the nearest double to
-    the printed decimal IS the original float), so the parsed literal
-    compares identically to the old F.lit boundary.
-    """
-    import math
-
-    if not bounds:
-        return F.lit(0)
-    if not all(math.isfinite(b) for b in bounds):
-        # non-finite boundary (pathological input): keep the Column
-        # spelling, which handles inf literals
-        return reduce(
-            lambda acc, b: acc + (F.col(order_col).cast("double") > F.lit(b)).cast("int"),
-            bounds,
-            F.lit(0),
+    The bucket id is ONE ``F.expr`` sum of ``CAST(key > bound AS INT)``
+    terms (a Column-op spelling costs py4j round trips per bound), each
+    bound spelled by :func:`sql_double`, which parses finite, ±inf and
+    NaN boundaries alike."""
+    src = df.cache()
+    probs = ", ".join(f"{i / n_buckets!r}D" for i in range(1, n_buckets))
+    exprs = ["count(1) AS n"]
+    for i, c in enumerate(order_cols):
+        exprs.append(f"count_if(`{c}` IS NULL) AS o{i}")
+        if probs:
+            exprs.append(f"percentile_approx(CAST(`{c}` AS DOUBLE), array({probs}), 1000) AS q{i}")
+    exprs += [f"count_if(`{g}` IS NULL) AS g{j}" for j, g in enumerate(group_cols)]
+    row = src.selectExpr(*exprs).collect()[0]
+    if any(row[f"g{j}"] for j in range(len(group_cols))):
+        raise ValueError(
+            f"rankstats: NULL values in group columns {list(group_cols)!r}; filter them first"
         )
-    terms = " + ".join(
-        f"CAST(CAST(`{order_col}` AS DOUBLE) > CAST({b!r} AS DOUBLE) AS INT)"
-        for b in bounds
-    )
-    return F.expr(f"0 + {terms}")
+    buckets = []
+    for i, c in enumerate(order_cols):
+        bounds = sorted(set(row[f"q{i}"] or [])) if probs else []
+        if row[f"o{i}"] and bounds:
+            # a NULL key gets a NULL bucket and would silently drop at the
+            # offsets join — refuse. With no boundaries (an all-NULL key
+            # column) every row shares bucket 0 and nothing drops.
+            raise ValueError(f"rankstats: NULL values in order column {c!r}; filter them first")
+        terms = "".join(f" + CAST(CAST(`{c}` AS DOUBLE) > {sql_double(b)} AS INT)" for b in bounds)
+        buckets.append(F.expr(f"0{terms}"))
+    return src, buckets, row["n"]
+
+
+def _offsets(b: DataFrame, keys: list[str], totals: dict[str, Column], combine) -> DataFrame:
+    """Per-(group, bucket) ``totals`` turned into exclusive running
+    ``combine`` (``F.sum`` or ``F.max``) offsets in bucket order within
+    each group; ``keys`` is ``[*group_cols, bucket_col]``. At most
+    n_groups * n_buckets rows — meant for a broadcast join. An empty
+    prefix sums to 0 and maxes to NULL."""
+    *groups, bucket = keys
+    win = Window.partitionBy(*groups).orderBy(bucket).rowsBetween(Window.unboundedPreceding, -1)
+    offs = {n: combine(n).over(win) for n in totals}
+    if combine is F.sum:
+        offs = {n: F.coalesce(o, F.lit(0)) for n, o in offs.items()}
+    t = b.groupBy(*keys).agg(*[c.alias(n) for n, c in totals.items()])
+    return t.select(*keys, *[o.alias(n) for n, o in offs.items()])
 
 
 def bucketed_cumsums(
@@ -86,81 +101,29 @@ def bucketed_cumsums(
     weight_cols: list[str],
     inclusive: bool = True,
     n_buckets: int = 32,
-    bounds: list[float] | None = None,
-    return_bounds: bool = False,
-):
+) -> DataFrame:
     """Global running sum of each weight column over rows ordered by
     ``order_col`` (ascending, keys assumed distinct — aggregate first),
     as new columns ``cum_<w>``. ``inclusive=False`` gives the exclusive
-    prefix (sum over strictly-smaller keys).
-
-    ``bounds``/``return_bounds``: callers that chain TWO cumsum passes
-    over the SAME order column and row set (the survival-curve shape:
-    at-risk counts first, hazard terms second) can reuse the first
-    pass's quantile boundaries for the second — one approxQuantile
-    driver action instead of two. Boundaries affect only partitioning,
-    never arithmetic (the bucket-independence property), so any bounds
-    list yields identical output values."""
-    # cache BEFORE the quantile probe: approxQuantile, the totals collect
-    # below, and the final plan all consume this frame — uncached, the
-    # upstream lineage (often a groupBy over the raw table) would run
-    # three times. Callers/bench own clearCache(), the same lifecycle
-    # convention as the dedup shingle caches.
-    src = df.cache()
-    if bounds is None:
-        bounds = _boundaries(src, order_col, n_buckets)
-    b = src.withColumn(_BUCKET, _bucket_expr(order_col, bounds))
-
-    # per-bucket totals: <= n_buckets rows — a k-row driver pull, not data
-    totals = (
-        b.groupBy(_BUCKET)
-        .agg(*[F.sum(w).alias(w) for w in weight_cols])
-        .collect()
-    )
-    if not totals:  # empty input: prefix sums degenerate
-        out = df
-        for w in weight_cols:
-            out = out.withColumn(f"cum_{w}", F.col(w) if inclusive else F.lit(0))
-        return (out, bounds) if return_bounds else out
-    if any(row[_BUCKET] is None for row in totals):
-        # a NULL key would silently drop at the offsets join — refuse
-        raise ValueError(f"rankstats: NULL values in order column {order_col!r}; filter them first")
-    totals.sort(key=lambda r: r[_BUCKET])
-    # seed/declare each offset with the weight column's numeric family —
-    # a fractional weight (e.g. ln factors) must not infer from the
-    # integer zero of the first bucket (LongType/DoubleType merge error)
-    frac = {
-        w: b.schema[w].dataType.simpleString() in ("double", "float")
-        for w in weight_cols
-    }
-    offsets, acc = [], {w: (0.0 if frac[w] else 0) for w in weight_cols}
-    for row in totals:
-        offsets.append((row[_BUCKET], *[acc[w] for w in weight_cols]))
-        for w in weight_cols:
-            acc[w] += row[w] or 0
-    schema = ", ".join(
-        [f"{_BUCKET} int"]
-        + [f"__off_{w} {'double' if frac[w] else 'bigint'}" for w in weight_cols]
-    )
-    # LocalRelation, not createDataFrame: a list-built frame scans as a
-    # pickled Python RDD, and its broadcast build blocks a whole stage
-    # of tasks on Python worker handshakes (etl_file_sync_spark/localrel.py)
-    off_df = local_rows_df(b.sparkSession, offsets, schema)
-
-    end = 0 if inclusive else -1
+    prefix (sum over strictly-smaller keys)."""
+    src, (bucket,), _ = _buckets(df, [order_col], n_buckets)
+    b = src.withColumn(_BUCKET, bucket)
+    offs = {f"__off_{w}": F.sum(w) for w in weight_cols}
     win = (
         Window.partitionBy(_BUCKET)
         .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, end)
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
     )
-    out = b.join(F.broadcast(off_df), _BUCKET)
-    for w in weight_cols:
-        out = out.withColumn(
-            f"cum_{w}",
-            F.coalesce(F.sum(w).over(win), F.lit(0)) + F.col(f"__off_{w}"),
+    return (
+        b.join(F.broadcast(_offsets(b, [_BUCKET], offs, F.sum)), _BUCKET)
+        .withColumns(
+            {
+                f"cum_{w}": F.coalesce(F.sum(w).over(win), F.lit(0)) + F.col(f"__off_{w}")
+                for w in weight_cols
+            }
         )
-    out = out.drop(_BUCKET, *[f"__off_{w}" for w in weight_cols])
-    return (out, bounds) if return_bounds else out
+        .drop(_BUCKET, *offs)
+    )
 
 
 def grouped_bucketed_cumsum(
@@ -177,53 +140,17 @@ def grouped_bucketed_cumsum(
 
     Same two-phase plan as :func:`bucketed_cumsums` but the offsets are
     prefix-summed independently per group, so a group whose rows span
-    every time bucket still never funnels through one task. The driver
-    pull is ``n_groups * n_buckets`` rows — callers must only use this
+    every time bucket still never funnels through one task. The offsets
+    frame is ``n_groups * n_buckets`` rows — callers must only use this
     with a BOUNDED group cardinality (an enum-like column such as
     event_type, not a user id)."""
-    src = df.cache()
-    bounds = _boundaries(src, order_col, n_buckets)
-    b = src.withColumn(_BUCKET, _bucket_expr(order_col, bounds))
-
-    # per (group, bucket) totals: n_groups * n_buckets rows — k-row pull
-    totals = (
-        b.groupBy(*group_cols, _BUCKET).agg(F.sum(weight_col).alias("__w")).collect()
-    )
-    if not totals:
-        return df.withColumn(out_col, F.col(weight_col))
-    if any(row[_BUCKET] is None for row in totals):
-        raise ValueError(
-            f"rankstats: NULL values in order column {order_col!r}; filter them first"
-        )
-    if any(any(row[g] is None for g in group_cols) for row in totals):
-        raise ValueError(
-            f"rankstats: NULL values in group columns {group_cols!r}; filter them first"
-        )
-    totals.sort(key=lambda r: ([r[g] for g in group_cols], r[_BUCKET]))
-    frac = b.schema[weight_col].dataType.simpleString() in ("double", "float")
-    zero = 0.0 if frac else 0
-    offsets, acc = [], {}
-    for row in totals:
-        gkey = tuple(row[g] for g in group_cols)
-        prev = acc.get(gkey, zero)
-        offsets.append((*gkey, row[_BUCKET], prev))
-        acc[gkey] = prev + (row["__w"] or 0)
-    gschema = ", ".join(
-        f"{g} {b.schema[g].dataType.simpleString()}" for g in group_cols
-    )
-    off_df = local_rows_df(
-        b.sparkSession,
-        offsets,
-        f"{gschema}, {_BUCKET} int, __off {'double' if frac else 'bigint'}",
-    )
-
-    win = (
-        Window.partitionBy(*group_cols, _BUCKET)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    src, (bucket,), _ = _buckets(df, [order_col], n_buckets, group_cols)
+    b = src.withColumn(_BUCKET, bucket)
+    keys = [*group_cols, _BUCKET]
+    off = _offsets(b, keys, {"__off": F.sum(weight_col)}, F.sum)
+    win = Window.partitionBy(*keys).orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
     return (
-        b.join(F.broadcast(off_df), [*group_cols, _BUCKET])
+        b.join(F.broadcast(off), keys)
         .withColumn(out_col, F.sum(weight_col).over(win) + F.col("__off"))
         .drop(_BUCKET, "__off")
     )
@@ -244,40 +171,17 @@ def bucketed_cummax(
     the building block for distributed 2-D skyline membership.
 
     Same two-phase plan as :func:`bucketed_cumsums`: max is associative,
-    so per-bucket maxima (<= n_buckets rows, a k-row driver pull)
-    prefix-combine into bucket offsets and rejoin broadcast; the
-    within-bucket window is PARTITIONED BY bucket, never global."""
-    src = df.cache()
-    bounds = _boundaries(src, order_col, n_buckets)
-    b = src.withColumn(_BUCKET, _bucket_expr(order_col, bounds))
-
-    totals = b.groupBy(_BUCKET).agg(F.max(value_col).alias("__m")).collect()
-    if not totals:
-        vtype = df.schema[value_col].dataType.simpleString()
-        out_val = F.col(value_col) if inclusive else F.lit(None).cast(vtype)
-        return df.withColumn(out_col, out_val)
-    if any(row[_BUCKET] is None for row in totals):
-        raise ValueError(
-            f"rankstats: NULL values in order column {order_col!r}; filter them first"
-        )
-    totals.sort(key=lambda r: r[_BUCKET])
-    offsets, running = [], None
-    for row in totals:
-        offsets.append((row[_BUCKET], running))
-        m = row["__m"]
-        if m is not None and (running is None or m > running):
-            running = m
-    schema = f"{_BUCKET} int, __off {b.schema[value_col].dataType.simpleString()}"
-    off_df = local_rows_df(b.sparkSession, offsets, schema)
-
-    end = 0 if inclusive else -1
+    so per-bucket maxima prefix-combine into bucket offsets."""
+    src, (bucket,), _ = _buckets(df, [order_col], n_buckets)
+    b = src.withColumn(_BUCKET, bucket)
+    off = _offsets(b, [_BUCKET], {"__off": F.max(value_col)}, F.max)
     win = (
         Window.partitionBy(_BUCKET)
         .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, end)
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
     )
     return (
-        b.join(F.broadcast(off_df), _BUCKET)
+        b.join(F.broadcast(off), _BUCKET)
         .withColumn(out_col, F.greatest(F.max(value_col).over(win), F.col("__off")))
         .drop(_BUCKET, "__off")
     )
@@ -292,31 +196,7 @@ def bucketed_row_number(
 ) -> DataFrame:
     """Global 1-based ``row_number`` ordered by ``(order_col,
     *tiebreak_cols)`` ascending, without a single-partition window."""
-    tiebreak_cols = tiebreak_cols or []
-    # cache before the quantile probe (see bucketed_cumsums)
-    src = df.cache()
-    bounds = _boundaries(src, order_col, n_buckets)
-    b = src.withColumn(_BUCKET, _bucket_expr(order_col, bounds))
-
-    counts = b.groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("c")).collect()
-    if not counts:
-        return df.withColumn(out_col, F.lit(1))
-    if any(row[_BUCKET] is None for row in counts):
-        raise ValueError(f"rankstats: NULL values in order column {order_col!r}; filter them first")
-    counts.sort(key=lambda r: r[_BUCKET])
-    offsets, acc = [], 0
-    for row in counts:
-        offsets.append((row[_BUCKET], acc))
-        acc += row["c"]
-    # bigint matches what createDataFrame used to infer for Python ints
-    off_df = local_rows_df(b.sparkSession, offsets, f"{_BUCKET} bigint, __off bigint")
-
-    win = Window.partitionBy(_BUCKET).orderBy(order_col, *tiebreak_cols)
-    return (
-        b.join(F.broadcast(off_df), _BUCKET)
-        .withColumn(out_col, F.row_number().over(win) + F.col("__off"))
-        .drop(_BUCKET, "__off")
-    )
+    return bucketed_row_numbers(df, [(order_col, tiebreak_cols or [], out_col)], n_buckets)
 
 
 def bucketed_row_numbers(
@@ -330,79 +210,30 @@ def bucketed_row_numbers(
     out_col); the result is ``df`` plus every out_col.
 
     Output-identical to calling :func:`bucketed_row_number` once per
-    spec and equi-joining the results back on a unique key, but:
-    - ONE approxQuantile probe (multi-column) and ONE per-bucket counts
-      aggregation replace a probe + counts job per ranking (driver
-      actions scale O(1), not O(#rankings));
-    - the rankings are layered as successive windows on one cached
-      frame, so the per-ranking equi-joins (a shuffle of the frame per
-      ranking at scale) disappear entirely.
-    Boundaries still affect only partitioning, never arithmetic (the
-    bucket-count independence property), so per-ranking outputs equal
-    the single-ranking operator's exactly.
+    spec and equi-joining the results back on a unique key, but the
+    boundary probe is one driver action for all rankings, and the
+    rankings are layered as successive windows on one cached frame, so
+    the per-ranking equi-joins (a shuffle of the frame per ranking at
+    scale) disappear entirely.
 
     ``return_count=True`` returns ``(frame, n_rows)`` — the exact row
-    count the counts pass already computed — so callers that need the
-    total (quintile = ((rn-1)*k) div n) spell it as a literal instead
-    of paying their own count action + broadcast-join dimension.
+    count the probe already computed — so callers that need the total
+    (quintile = ((rn-1)*k) div n) spell it as a literal instead of
+    paying their own count action + broadcast-join dimension.
     """
-    src = df.cache()
-    order_cols = [o for o, _, _ in specs]
-    keyed = src.select(
-        *[F.col(c).cast("double").alias(f"__rs_key{i}") for i, c in enumerate(order_cols)]
-    )
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    if n_buckets < 2:
-        all_bounds: list[list[float]] = [[] for _ in specs]
-    else:
-        raw = keyed.stat.approxQuantile(
-            [f"__rs_key{i}" for i in range(len(order_cols))], probs, 0.001
-        )
-        all_bounds = [sorted(set(b)) for b in raw]
-
-    b = src
-    for i, (order_col, _, _) in enumerate(specs):
-        b = b.withColumn(f"{_BUCKET}{i}", _bucket_expr(order_col, all_bounds[i]))
-
-    # ONE pass: per-ranking per-bucket counts as conditional sums
-    count_exprs = [
-        F.expr(f"sum(CAST(`{_BUCKET}{i}` = {bk} AS INT))").alias(f"c_{i}_{bk}")
-        for i in range(len(specs))
-        for bk in range(len(all_bounds[i]) + 1)
-    ] + [F.count(F.lit(1)).alias("__n")]
-    row = b.agg(*count_exprs).collect()[0]
-    n_rows = row["__n"]
-    if n_rows == 0:  # empty input: every ranking degenerates to 1
-        out = df
-        for _, _, out_col in specs:
-            out = out.withColumn(out_col, F.lit(1))
-        return (out, 0) if return_count else out
-
+    src, buckets, n_rows = _buckets(df, [o for o, _, _ in specs], n_buckets)
+    keys = [f"{_BUCKET}{i}" for i in range(len(specs))]
+    b = src.withColumns(dict(zip(keys, buckets)))
     out = b
-    for i, (order_col, tiebreak_cols, out_col) in enumerate(specs):
-        nb = len(all_bounds[i]) + 1
-        counts = [(bk, row[f"c_{i}_{bk}"] or 0) for bk in range(nb)]
-        # NULL order keys never reach a bucket column (the bucket expr
-        # yields NULL) and would silently drop at the offsets join —
-        # refuse, like bucketed_row_number
-        if sum(c for _, c in counts) != n_rows:
-            raise ValueError(
-                f"rankstats: NULL values in order column {order_col!r}; filter them first"
-            )
-        offsets, acc = [], 0
-        for bk, c in counts:
-            offsets.append((bk, acc))
-            acc += c
-        off_df = local_rows_df(
-            b.sparkSession, offsets, f"{_BUCKET}{i} bigint, __off bigint"
-        )
-        win = Window.partitionBy(f"{_BUCKET}{i}").orderBy(order_col, *tiebreak_cols)
+    for key, (order_col, tiebreak_cols, out_col) in zip(keys, specs):
+        off = _offsets(b, [key], {"__off": F.count(F.lit(1))}, F.sum)
+        win = Window.partitionBy(key).orderBy(order_col, *tiebreak_cols)
         out = (
-            out.join(F.broadcast(off_df), f"{_BUCKET}{i}")
+            out.join(F.broadcast(off), key)
             .withColumn(out_col, F.row_number().over(win) + F.col("__off"))
             .drop("__off")
         )
-    out = out.drop(*[f"{_BUCKET}{i}" for i in range(len(specs))])
+    out = out.drop(*keys)
     return (out, n_rows) if return_count else out
 
 

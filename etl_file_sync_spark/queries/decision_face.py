@@ -268,11 +268,7 @@ def stat_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("obs").cast("bigint").alias("d"),
     )
     tot = g.agg(F.sum("c").cast("bigint").alias("n"))
-    # the two cumsum passes order by the SAME dur_s over the same rows:
-    # reuse the first probe's quantile boundaries for the second (one
-    # approxQuantile driver action instead of two; bounds affect only
-    # partitioning, never values)
-    cum, _bnds = bucketed_cumsums(g, "dur_s", ["c"], inclusive=False, return_bounds=True)
+    cum = bucketed_cumsums(g, "dur_s", ["c"], inclusive=False)
     cum = cum.crossJoin(F.broadcast(tot)).withColumn(  # 1-row totals dimension
         "n_risk", F.col("n") - F.col("cum_c")
     )
@@ -286,7 +282,7 @@ def stat_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lnf"),
         F.when(F.col("d") == F.col("n_risk"), 1).otherwise(0).alias("zf"),
     )
-    s = bucketed_cumsums(fac, "dur_s", ["lnf", "zf"], inclusive=True, bounds=_bnds)
+    s = bucketed_cumsums(fac, "dur_s", ["lnf", "zf"], inclusive=True)
     return s.select(
         "dur_s",
         F.col("c").alias("n_subjects"),
@@ -775,8 +771,7 @@ def stat_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("obs").cast("bigint").alias("d"),
     )
     tot = g.agg(F.sum("c").cast("bigint").alias("n"))
-    # same boundary reuse as stat_kaplan_meier: one quantile probe
-    cum, _bnds = bucketed_cumsums(g, "dur_s", ["c"], inclusive=False, return_bounds=True)
+    cum = bucketed_cumsums(g, "dur_s", ["c"], inclusive=False)
     risk = cum.crossJoin(F.broadcast(tot)).select(  # 1-row totals dimension
         "dur_s",
         "c",
@@ -790,7 +785,7 @@ def stat_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("d") * F.lit(1.0) / F.col("n_risk")).alias("hz"),
         (F.col("d") * F.lit(1.0) / (F.col("n_risk") * F.col("n_risk"))).alias("vz"),
     )
-    s = bucketed_cumsums(terms, "dur_s", ["hz", "vz"], inclusive=True, bounds=_bnds)
+    s = bucketed_cumsums(terms, "dur_s", ["hz", "vz"], inclusive=True)
     return (
         s.where(F.col("d") > 0)
         .select(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_file_sync_spark.localrel import sql_double
 from etl_file_sync_spark.operators.rankstats import (
     bucketed_row_number,
     bucketed_row_numbers,
@@ -570,13 +571,13 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # All three rankings LAYERED on one frame (negative key => descending
-    # recency rank without a desc order path): one quantile probe + one
-    # counts pass instead of three of each, and the three per-ranking
-    # equi-joins back on o_custkey (a shuffle of the customer frame per
-    # ranking at scale) disappear — output-identical by the rankstats
-    # bucket-independence property. The customer count rides out of the
-    # same counts pass as an exact literal (no extra count action, no
-    # broadcast dimension, no caller-side cache — the operator caches).
+    # recency rank without a desc order path): one boundary probe
+    # instead of three, and the three per-ranking equi-joins back on
+    # o_custkey (a shuffle of the customer frame per ranking at scale)
+    # disappear — output-identical by the rankstats bucket-independence
+    # property. The customer count rides out of the same probe as an
+    # exact literal (no extra count action, no broadcast dimension, no
+    # caller-side cache — the operator caches).
     ranked, n_rows = bucketed_row_numbers(
         c.withColumn("neg_r", -F.col("r_days")),
         [
@@ -1103,9 +1104,9 @@ def layout_zorder_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both dimension rankings LAYERED on one frame (no per-dimension
     # equi-join back on the order key at all — the old spelling shuffled
     # the fact frame once per dimension to reassemble (x, y)): one
-    # quantile probe + one counts pass, output-identical by the
+    # boundary probe serves both rankings, output-identical by the
     # rankstats bucket-independence property. The row count rides out of
-    # the counts pass as an exact literal (no count action, no broadcast
+    # that probe as an exact literal (no count action, no broadcast
     # dimension, no caller cache — the operator caches internally).
     ranked, n_rows = bucketed_row_numbers(
         o,
@@ -1237,10 +1238,8 @@ def sim_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         qr = queries[qid]
         # ONE F.expr literal array per arm instead of 64 F.lit py4j
         # round trips x 5 arms (driver build tax, family-B pattern);
-        # repr(float) round-trips to the identical double
-        qdv = F.expr(
-            "array(" + ",".join(f"CAST({float(x)!r} AS DOUBLE)" for x in qr["dv"]) + ")"
-        )
+        # sql_double spells each component exactly, ±inf/NaN included
+        qdv = F.expr("array(" + ",".join(sql_double(x) for x in qr["dv"]) + ")")
         cos = F.aggregate(
             F.zip_with(F.col("dv"), qdv, lambda a, b: a * b), F.lit(0.0), lambda a, x: a + x
         ) / (F.col("nrm") * F.lit(float(qr["nrm"])))
