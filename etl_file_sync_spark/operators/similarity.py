@@ -158,13 +158,19 @@ def cosine_topk(
 def _centroid_matrix(centroids: DataFrame):
     """Collect the (tiny, by IVF design) centroid set into a normalized
     numpy matrix sorted by centroid_id — aggregate metadata, not data."""
+    return _normalized_centroids(centroids.select("centroid_id", "cv").collect())
+
+
+def _normalized_centroids(rows):
+    """(ids, normalized matrix) of already-collected (centroid_id, cv)
+    rows, sorted by centroid_id."""
     import numpy as np
 
-    rows = sorted(centroids.select("centroid_id", "cv").collect(), key=lambda r: r.centroid_id)
-    ids = np.array([r.centroid_id for r in rows], dtype=np.int64)
+    rows = sorted(rows, key=lambda r: r[0])
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
     if not rows:  # degenerate corpus: zero centroids, typed empty matrix
         return ids, np.zeros((0, 0), dtype=np.float64)
-    C = np.array([list(r.cv) for r in rows], dtype=np.float64)
+    C = np.array([list(r[1]) for r in rows], dtype=np.float64)
     return ids, C / np.linalg.norm(C, axis=1, keepdims=True)
 
 
