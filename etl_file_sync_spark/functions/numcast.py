@@ -31,7 +31,7 @@ json_extract_string expands decimals ("12345678.0") — all three match
 the grammar and parse back to the same double, so the composed
 json→string→int result is identical everywhere. Pinned by
 tests/test_convention_properties.py (oracle spelling vs the Python
-model on random strings), tests/test_json_props.py (engine vs oracle
+model on random strings), tests/test_tier*.py (engine vs oracle
 on the poked tier, plus the Spark-side battery).
 
 Reference parity: the reference parses payloads with json.loads and

@@ -28,7 +28,7 @@ def vec_ok(col: Column) -> Column:
     front, and the oracles carry the matching
     ``len(list_filter(v, x -> x IS NULL)) = 0 AND
     len(list_filter(v, x -> x <> 0)) > 0`` guard
-    (tests/test_constant_tier.py pins the lockstep).
+    (the constant tier of tests/test_tiers.py pins the lockstep).
 
     Spelled as ONE ``aggregate`` fold (track has-null and has-nonzero
     in a struct accumulator, decide in the finish lambda) instead of

@@ -40,7 +40,7 @@ def tokens(col: Column | str) -> Column:
 # the point. The analysis path folds case for ASCII A-Z only (the
 # deterministic subset every runtime agrees on); pipelines needing full
 # Unicode casefold do it at ingest with a pinned ICU build. The
-# unicode-poked tier sweep (tests/test_unicode_text.py) pins this
+# unicode-poked tier sweep (tests/test_tiers.py) pins this
 # contract engine-vs-oracle.
 _A_UP = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _A_LO = "abcdefghijklmnopqrstuvwxyz"

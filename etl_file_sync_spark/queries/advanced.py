@@ -288,7 +288,7 @@ def scalar_variant_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads parse to a NULL variant, missing paths and wrong-typed
     values extract to NULL, never an error — plain parse_json would
     abort the whole 100 TB job on the first truncated producer write
-    (the JSON-poked tier tests/test_json_props.py pins this). Values
+    (the JSON-poked tier in tests/test_tiers.py pins this). Values
     extract as string and cast under the shared numeric-string grammar
     convention (functions/numcast.py: '12.7' -> 12, '1e3' -> 1000;
     boolean/junk/overflow -> NULL) so both engines agree on every

@@ -344,7 +344,7 @@ def stat_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier) and diverge between the engines' summation orders; the
     d_g-anchored algebra keeps every sum at replicate-deviation
     magnitude, so it is both numerically stable and cross-engine
-    deterministic under round(6). Caught by tools/conditioning_tier.py."""
+    deterministic under round(6). Caught by the tools/tiers.py conditioning tier."""
     g = (
         t(spark, sf_dir, "orders")
         .join(

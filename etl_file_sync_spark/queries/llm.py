@@ -23,7 +23,7 @@ from etl_file_sync_spark.queries.registry import register, t
 # ASCII fold, not lower(): full-Unicode case mapping is runtime-dependent
 # (JVM SpecialCasing vs utf8proc simple maps — upper('ß') is 'SS' vs 'ẞ'),
 # so a cross-engine-reproducible fingerprint folds A-Z only. See
-# operators/text.py ascii_lower / tests/test_unicode_text.py.
+# operators/text.py ascii_lower / tests/test_tier_truths.py.
 _NORM = X.NORM_SQL  # one spelling: operators/text.py is the source of truth
 
 

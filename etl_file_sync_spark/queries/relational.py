@@ -701,7 +701,7 @@ def scalar_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     is LENIENT — malformed payloads, wrong-typed values, non-integral
     number strings and out-of-range integers all yield NULL, never an
     error (the don't-kill-the-job posture; the JSON-poked tier
-    tests/test_json_props.py pins this against the guarded oracle).
+    tests/test_tiers.py pins this against the guarded oracle).
     The int coercion is the shared numeric-string grammar convention
     (functions/numcast.py), not the engine-native cast, so both
     engines agree at the edges ('1e3' -> 1000, '1d'/junk -> NULL).

@@ -474,7 +474,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     — verified empirically on Spark 4 (events at 00:00 and 00:30 with
     a 30-minute gap form ONE session [00:00, 01:00)), matching
     sessionize_events' strict-> convention. The boundary tier
-    (tools/boundary_tier.py) forces gaps exactly at the timeout and
+    (tools/tiers.py) forces gaps exactly at the timeout and
     caught the previous >= mis-model.
     """
     from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink

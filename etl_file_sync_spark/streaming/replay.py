@@ -29,7 +29,7 @@ EVENTS_RAW_SCHEMA = (
 # admissible event time at ingest (the don't-poison-the-watermark
 # posture, same family as catalog._sanitize_doubles); rows outside the
 # window belong in a DLQ, not in the watermark domain. The time-edge
-# poked tier (tests/test_timeedge.py) pins this: without the window,
+# poked tier (tests/test_tier_truths.py) pins this: without the window,
 # five watermarked queries lost 2-15 rows each to a single poked 2262
 # event. Replay-harness flush sentinels are exempt — advancing the
 # watermark is their job. Sentinels are identified by ONE reserved id

@@ -66,7 +66,7 @@ def test_ascii_trim_oracle_spelling_matches_python(duck, s):
 # either native cast with an explicit shared grammar implemented
 # identically in both engines. These properties pin the DuckDB
 # spelling to the Python model; the Spark side is pinned by the
-# battery in tests/test_json_props.py.
+# battery in tests/test_tier_truths.py.
 
 _NUMISH = st.one_of(
     st.integers(-(10**25), 10**25).map(str),

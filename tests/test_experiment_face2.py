@@ -114,7 +114,7 @@ def test_jackknife_ratio_matches_python_loop(spark, sf_dir):
     assert got["jk_bias"] == pytest.approx((gk - 1) * (tbar - theta), abs=1e-4)
 
 
-def test_jackknife_ratio_accurate_under_offset(spark, tmp_path):
+def test_jackknife_ratio_accurate_under_offset(spark, tier_dir):
     """ACCURACY (not just parity) on the conditioning tier: with
     o_totalprice + 1e8 the point estimate sits at ~1e10 cents, where the
     textbook replicate moments (Σθ²_g − G·θ̄², θ̄ − θ) cancel ~15
@@ -124,9 +124,7 @@ def test_jackknife_ratio_accurate_under_offset(spark, tmp_path):
     the respell is stable, not merely order-deterministic."""
     from fractions import Fraction
 
-    from tools.conditioning_tier import synthesize
-
-    tier = synthesize(str(tmp_path / "cond"))
+    tier = tier_dir("conditioning")
     got = REGISTRY["stat_jackknife_ratio"].build(spark, tier).collect()[0]
 
     o = _pq(tier, "orders")

@@ -28,7 +28,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from etl_file_sync_spark.catalog import load_table  # noqa: E402
+from etl_file_sync_spark.catalog import TABLES, load_table  # noqa: E402
 from etl_file_sync_spark.queries import REGISTRY  # noqa: E402
 from etl_file_sync_spark.session import get_spark  # noqa: E402
 
@@ -285,9 +285,9 @@ def synthesize_10x(spark, src_dir: str, out_dir: str, factor: int = 10) -> None:
         .parquet(os.path.join(out_dir, "orders.parquet"))
     )
     # remaining tables: straight copies so any query can run on the tier
-    for t in ["region", "nation", "customer", "supplier", "part", "lineitem", "events"]:
+    for t in TABLES:
         src = os.path.join(src_dir, f"{t}.parquet")
-        if os.path.exists(src):
+        if t not in ("orders", "documents", "embeddings") and os.path.exists(src):
             dst = os.path.join(out_dir, f"{t}.parquet")
             shutil.copy2(src, dst) if os.path.isfile(src) else shutil.copytree(
                 src, dst, dirs_exist_ok=True
@@ -409,7 +409,7 @@ def main() -> None:
         "DECIMAL(37/38,0) — matching the DuckDB oracle's HUGEINT — and",
         "converts to double exactly once, so tier outputs are bit-identical",
         "while the 100 TB path cannot wrap. The magnitude-stress tier",
-        "(tools/stress_tier.py, x1000 money; tests/test_stress_oracle.py)",
+        "(the stress entry of tools/tiers.py, x1000 money; tests/test_tiers.py)",
         "re-runs all 350 oracle comparisons at overflow-triggering",
         "magnitudes as the empirical detector for any new site. Remaining",
         "BIGINT sums (plain cents totals, counts) peak around 1e17-1e18 with",
@@ -449,7 +449,7 @@ def main() -> None:
         "",
         "Uniform vs Zipfian key distribution at IDENTICAL row count",
         "(tools/skew_growth.py on sf0.01; skew rules from",
-        "tools/skew_tier.py — 80% of events on one user, half the orders",
+        "tools/tiers.py skew entry — 80% of events on one user, half the orders",
         "on one customer, 30% of lineitems on one part, 80% of documents",
         "on one source; warm-up pass first, run alone). Ratio isolates",
         "hot-key cost at fixed volume: ~1x = shuffles don't concentrate",
@@ -457,7 +457,7 @@ def main() -> None:
         "blowup candidate. Every measured operator lands 0.56-1.56x —",
         "inside this box's documented 2x noise band, no blowup. Oracle",
         "parity on the skewed tier is 350/350 green",
-        "(tests/test_skew_oracle.py). The mildly-elevated rows are the",
+        "(tests/test_tiers.py -k skew). The mildly-elevated rows are the",
         "per-user ordered windows (inter-event gaps 1.56x, retention",
         "1.54x, running windows 1.28x): per-entity ORDER is inherently",
         "one task per entity, so a bot account holding 80% of a 100 TB",

@@ -2,7 +2,7 @@
 
 For the operators whose shuffles key on the skewed columns, time each
 query on the ORGANIC sf0.01 tier and on a SKEWED copy with identical
-row counts (tools/skew_tier.py rules: 80 % of events on one user,
+row counts (the tools/tiers.py skew rules: 80 % of events on one user,
 half the orders on one customer, 30 % of lineitems on one part, 80 %
 of documents on one source). The ratio skewed/uniform isolates
 hot-key cost at fixed data volume:
@@ -57,10 +57,10 @@ def main() -> int:
 
     from etl_file_sync_spark.queries import REGISTRY
     from etl_file_sync_spark.session import get_spark, prep
-    from tools.skew_tier import synthesize
+    from tools.tiers import synthesize
 
     uniform = "/root/testdata/sf0.01"
-    skewed = synthesize(tempfile.mkdtemp(prefix="skew_growth_"), src=uniform)
+    skewed = synthesize("skew", tempfile.mkdtemp(prefix="skew_growth_"), src=uniform)
 
     spark = get_spark()
     prep(spark)

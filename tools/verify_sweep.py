@@ -20,11 +20,9 @@ import duckdb  # noqa: E402
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 
+from etl_file_sync_spark.catalog import TABLES  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
