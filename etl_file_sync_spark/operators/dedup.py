@@ -15,13 +15,103 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import functools
+import operator
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_file_sync_spark.operators.similarity import vec_ok
 
 from etl_file_sync_spark.operators.text import normalize_text
+
+
+# --- the candidate-pair core ------------------------------------------
+# Every pair generator below is block -> candidates -> verify: rows that
+# share a block key meet in ONE keyed self-join (_self_pairs; banded
+# signatures go through _band_pairs first), and only those candidates
+# are scored (_verify). The join shuffles on the key space, never the
+# O(n^2) pair space.
+
+
+def _self_pairs(frame: DataFrame, key_cols, carry=(), count_as: str | None = None) -> DataFrame:
+    """Keyed self-join of ``frame`` (an ``id`` column plus ``key_cols``):
+    one row per unordered id pair per shared key, id_a < id_b, projected
+    to (id_a, id_b) plus ``<c>_a``/``<c>_b`` for every ``carry`` column.
+    With ``count_as``, one row per pair instead: (id_a, id_b, count_as)
+    with its number of shared keys, aggregated straight off the join."""
+    a, b = frame.alias("a"), frame.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+    joined = a.join(b, functools.reduce(operator.and_, [*on, F.col("a.id") < F.col("b.id")]))
+    pair = (F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+    if count_as is not None:
+        return joined.groupBy(*pair).agg(F.count(F.lit(1)).alias(count_as))
+    carried = [F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in ("a", "b") for c in carry]
+    return joined.select(*pair, *carried)
+
+
+def _band_pairs(frame: DataFrame, bands: list[str], carry=()) -> DataFrame:
+    """Banded candidates: rows agreeing on ANY band become a pair. Each
+    SQL expression in ``bands`` is one band value; the (band, bval)
+    structs are exploded and self-joined, so the join shuffles on
+    (band, bval) — the scale-out alternative to all-pairs. Returns
+    distinct (id_a, id_b, carried...) with id_a < id_b. One F.expr for
+    all bands: a Column spelling per band element cost one py4j round
+    trip each per build (192 for the SRP layout)."""
+    structs = ", ".join(f"named_struct('band', {i}, 'bval', {b})" for i, b in enumerate(bands))
+    stacked = frame.select("id", *carry, F.expr(f"inline(array({structs}))"))
+    return _self_pairs(stacked, ["band", "bval"], carry).distinct()
+
+
+def _verify(
+    cand: DataFrame,
+    attrs: DataFrame | None,
+    name: str,
+    score: Column,
+    keep: Column,
+    digits: int | None = None,
+    extra=(),
+) -> DataFrame:
+    """Score candidate pairs: join ``attrs`` (``id`` plus per-row
+    attributes) onto both sides as ``<col>_a``/``<col>_b`` (None when
+    the candidates already carry them), compute ``score`` as ``name``,
+    keep the rows where ``keep`` holds, and project (id_a, id_b, *extra,
+    name) with ``name`` rounded to ``digits`` when given. The attribute
+    joins run on the candidate set only, after it has been deduped on
+    the narrow (id_a, id_b) pair."""
+    if attrs is not None:
+        for s in ("a", "b"):
+            side = attrs.select(*[F.col(c).alias(f"{c}_{s}") for c in attrs.columns])
+            cand = cand.join(side, f"id_{s}")
+    out = F.col(name) if digits is None else F.round(name, digits).alias(name)
+    return cand.withColumn(name, score).filter(keep).select("id_a", "id_b", *extra, out)
+
+
+def _token_windows(
+    df: DataFrame, id_col: str, text_col: str, width: int, last: Column, stride: int = 1
+) -> tuple[DataFrame, Column]:
+    """(base, windows): ``base`` is (id, _toks) with the space-split token
+    array, ``windows`` the array of ``width``-token strings starting every
+    ``stride`` tokens, window starts 0..``last`` (a Column over ``_toks``).
+
+    The token array is materialized in its own projection BEFORE the
+    per-window lambda: an expression referenced inside a higher-order
+    -function lambda is re-evaluated per element, so slicing
+    ``split(text)`` directly would re-split the whole text once per
+    position — O(len^2) chars per document, 2.2 GB of splitting for one
+    112 KB document (the monster-doc tier measured 27 s/doc; a
+    million-token web page would take days). CollapseProject keeps the
+    boundary because the alias is non-cheap and multiply referenced.
+    """
+    base = df.select(F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("_toks"))
+    toks = F.col("_toks")
+    windows = F.transform(
+        F.sequence(F.lit(0), last),
+        # stride 1 spells i + 1: no i * 1 term in the per-element lambda
+        lambda i: F.concat_ws(" ", F.slice(toks, (i if stride == 1 else i * stride) + 1, width)),
+    )
+    return base, windows
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -44,23 +134,8 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle).
-
-    The token array is materialized in its own projection BEFORE the
-    per-position lambda: an expression referenced inside a higher-order
-    -function lambda is re-evaluated per element, so slicing
-    ``split(text)`` directly would re-split the whole text once per
-    position — O(len^2) chars per document, 2.2 GB of splitting for one
-    112 KB document (the monster-doc tier measured 27 s/doc; a
-    million-token web page would take days). CollapseProject keeps the
-    boundary because the alias is non-cheap and multiply referenced.
-    """
-    base = df.select(F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("_toks"))
-    toks = F.col("_toks")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
+    """Distinct word n-gram shingles per document: (id, shingle)."""
+    base, grams = _token_windows(df, id_col, text_col, n, F.greatest(F.size("_toks") - n, F.lit(0)))
     return base.select("id", F.explode(F.array_distinct(grams)).alias("shingle")).where(
         F.length("shingle") > 0
     )
@@ -104,38 +179,26 @@ def jaccard_oracle_ctes(threshold: float, max_df_frac: float = 0.5) -> str:
     )"""
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df_frac: float | None = 0.5,
-) -> DataFrame:
-    """All candidate pairs with shingle-Jaccard >= threshold (id_a < id_b).
-
-    Exact verifier: join on shared shingles, count common, divide by union
-    size. Output: (id_a, id_b, jaccard). At scale, feed this only LSH
-    candidates (see minhash_lsh_candidates); with a selective shingle space
-    the shared-shingle join is itself the pruning step.
-
-    Stop-shingle cut: shingles present in more than `max_df_frac` of all
-    docs (boilerplate headers, license blurbs) are dropped BEFORE the
-    self-join — a hot shingle shared by f docs contributes f² join rows,
-    so one boilerplate line repeated corpus-wide turns the join quadratic.
-    Jaccard is then computed over the retained shingle universe (per-doc
-    sizes counted after the cut — standard stopword-removal semantics).
-    At small SF no shingle crosses a 0.5 df, so the cut is a no-op there;
-    pass None to disable.
+def _shingle_overlap(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_df_frac: float | None
+) -> tuple[DataFrame, DataFrame]:
+    """(common, sizes): ``common`` is (id_a, id_b, n_common) — the shared
+    hashed-shingle count of every doc pair with at least one shared
+    shingle, from one self-join on the shingle — and ``sizes`` is (id, n)
+    per-doc shingle counts. Shingles in more than ``max_df_frac`` of all
+    docs are cut first (None: no cut); sizes count after the cut.
 
     Shape: the hot-shingle set is a partial-agg groupBy filtered to the
     (by construction tiny) over-threshold keys and removed with a
     broadcast anti-join — never a window over the full shingle frame,
     which would shuffle every row just to drop a handful of keys.
-    Per-doc set sizes are a second partial-agg groupBy joined onto the
-    (already aggregated, much smaller) pair frame afterwards. The shingle
-    frame is cached for the self-join's two scans (small: |docs|·
-    |shingles| rows; a 100 TB run would checkpoint it instead).
+    Per-doc set sizes are a second partial-agg groupBy, joined onto the
+    (already aggregated, much smaller) pair frame by the verify step.
+
+    Cache lifecycle is the CALLER's: the result is lazy, so this
+    operator cannot unpersist the shingle cache; long-lived sessions
+    should clearCache() between invocations (bench.py does) or
+    checkpoint instead.
     """
     # The shingle STRING only matters for equality — collapse it to an
     # 8-byte xxhash64 right after the explode, so the cache, the hot-set
@@ -160,21 +223,37 @@ def jaccard_pairs(
             .select("shingle")
         )
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        pairs.join(sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn("jaccard", F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+    return _self_pairs(sh, ["shingle"], count_as="n_common"), sizes
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+    max_df_frac: float | None = 0.5,
+) -> DataFrame:
+    """All candidate pairs with shingle-Jaccard >= threshold (id_a < id_b).
+
+    Exact verifier: join on shared shingles, count common, divide by union
+    size. Output: (id_a, id_b, jaccard). At scale, feed this only LSH
+    candidates (see minhash_lsh_candidates); with a selective shingle space
+    the shared-shingle join is itself the pruning step.
+
+    Stop-shingle cut: shingles present in more than `max_df_frac` of all
+    docs (boilerplate headers, license blurbs) are dropped BEFORE the
+    self-join — a hot shingle shared by f docs contributes f² join rows,
+    so one boilerplate line repeated corpus-wide turns the join quadratic.
+    Jaccard is then computed over the retained shingle universe (per-doc
+    sizes counted after the cut — standard stopword-removal semantics).
+    At small SF no shingle crosses a 0.5 df, so the cut is a no-op there;
+    pass None to disable.
+    """
+    common, sizes = _shingle_overlap(df, id_col, text_col, n, max_df_frac)
+    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    return _verify(common, sizes, "jaccard", jac, F.col("jaccard") >= threshold, 4)
 
 
 def deletion_neighborhood_keys(df: DataFrame, id_col: str = "id", name_col: str = "name") -> DataFrame:
@@ -185,7 +264,7 @@ def deletion_neighborhood_keys(df: DataFrame, id_col: str = "id", name_col: str 
     a key (substitution at p: both delete p; insertion/deletion: the
     longer string's deletion equals the shorter string itself), so an
     equi-join on the key is a COMPLETE candidate generator for
-    max_dist=1 — with per-variant blocks instead of hot prefix blocks.
+    edit distance <= 1 — with per-variant blocks instead of hot prefix blocks.
     Returns (id, bkey); rows are distinct by construction — array_distinct
     dedupes variants inside each row, so no global distinct (and no
     shuffle) is needed, and the name column stays out of the frame so the
@@ -202,19 +281,20 @@ def deletion_neighborhood_keys(df: DataFrame, id_col: str = "id", name_col: str 
     return base.select("id", F.explode(F.array_distinct(variants)).alias("bkey"))
 
 
-def fuzzy_blocked_pairs(
-    df: DataFrame, id_col: str = "id", name_col: str = "name", max_dist: int = 1
+def _dist1_pairs(
+    df: DataFrame, id_col: str, name_col: str, name: str, score: Column, keep: Column
 ) -> DataFrame:
-    """Fuzzy entity matching WITHOUT an all-pairs cross join.
+    """Fuzzy name matching WITHOUT an all-pairs cross join: every pair
+    within edit distance 1 (deletion-neighborhood blocking, complete for
+    that radius — see deletion_neighborhood_keys) is a candidate, and
+    ``score`` over name_a/name_b verifies it. Output: (id_a, id_b, name),
+    id_a < id_b.
 
-    Deletion-neighborhood blocking → equi-join on block key (shuffles on
-    the key space, never O(n²) pairs) → levenshtein verify on candidates
-    only. Complete for max_dist=1 (see deletion_neighborhood_keys); for
-    larger radii chain deletions or fall back to q-gram/LSH blocking.
-    Output: (id_a, id_b, edit_dist), id_a < id_b.
+    The split of concerns is standard record linkage: BLOCKING bounds
+    the candidate set (recall is the blocker's contract — dist<=1 here;
+    widen with q-gram/LSH blocks for looser matching), the SCORER ranks
+    and thresholds candidates.
     """
-    if max_dist != 1:
-        raise ValueError("fuzzy_blocked_pairs blocking is complete for max_dist=1 only")
     # cache: both sides of the self-join scan this frame; without it the
     # explode + per-variant substring codegen runs twice (a 100 TB run
     # would checkpoint to cluster storage instead).
@@ -222,28 +302,22 @@ def fuzzy_blocked_pairs(
     # source's partitioning (often one small file = ONE partition), so
     # without it the self-join probe and the pair emission run nearly
     # single-threaded; hashing on bkey both parallelizes and co-locates
-    # equal keys (measured 2.5x on the JW sibling at sf0.1)
+    # equal keys (measured 2.5x on the JW scorer at sf0.1, 10s -> 4s)
     keys = deletion_neighborhood_keys(df, id_col, name_col).repartition("bkey").cache()
-    a = keys.alias("a")
-    b = keys.alias("b")
     # dedup candidates on the narrow (id_a, id_b) pair BEFORE touching
     # names: the distinct's shuffle then moves two longs per row, and the
     # name lookup joins run on the (much smaller) deduped pair set.
-    cand = (
-        a.join(b, (F.col("a.bkey") == F.col("b.bkey")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = _self_pairs(keys, ["bkey"]).distinct()
     names = df.select(F.col(id_col).alias("id"), F.col(name_col).alias("name"))
-    na = names.select(F.col("id").alias("id_a"), F.col("name").alias("name_a"))
-    nb = names.select(F.col("id").alias("id_b"), F.col("name").alias("name_b"))
-    return (
-        cand.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn("edit_dist", F.levenshtein("name_a", "name_b"))
-        .filter(F.col("edit_dist") <= max_dist)
-        .select("id_a", "id_b", "edit_dist")
-    )
+    return _verify(cand, names, name, score, keep)
+
+
+def fuzzy_blocked_pairs(df: DataFrame, id_col: str = "id", name_col: str = "name") -> DataFrame:
+    """Pairs within Levenshtein distance 1: (id_a, id_b, edit_dist),
+    id_a < id_b. Blocking is complete for that radius only; for larger
+    radii chain deletions or fall back to q-gram/LSH blocking."""
+    lev = F.levenshtein("name_a", "name_b")
+    return _dist1_pairs(df, id_col, name_col, "edit_dist", lev, F.col("edit_dist") <= 1)
 
 
 def jaro_winkler_py(s1: str, s2: str) -> float:
@@ -419,42 +493,14 @@ def jaro_winkler_col(a, b, single_eval: bool = False):
 def fuzzy_jw_blocked_pairs(
     df: DataFrame, id_col: str = "id", name_col: str = "name", threshold: float = 0.9
 ) -> DataFrame:
-    """Jaro-Winkler fuzzy matching WITHOUT an all-pairs cross join:
-    deletion-neighborhood candidate generation (complete for edit
-    distance <= 1, see deletion_neighborhood_keys) scored by JW.
-
-    The split of concerns is standard record linkage: BLOCKING bounds
-    the candidate set (recall is the blocker's contract — dist<=1 here;
-    widen with q-gram/LSH blocks for looser matching), the SCORER ranks
-    and thresholds candidates. JW rather than raw edit distance is the
-    scorer of choice for name-grain entities (prefix-weighted, length-
+    """Jaro-Winkler fuzzy matching over the edit-distance-1 candidates of
+    fuzzy_blocked_pairs. JW rather than raw edit distance is the scorer
+    of choice for name-grain entities (prefix-weighted, length-
     normalized). Output: (id_a, id_b, jw) with jw rounded to 6 dp so
     both engines' doubles agree at the comparison grain; id_a < id_b.
     """
-    # repartition by block key: parallelizes the (single-file-source)
-    # explode and co-locates equal keys for the self-join — see
-    # fuzzy_blocked_pairs; measured 10s -> 4s at sf0.1
-    keys = deletion_neighborhood_keys(df, id_col, name_col).repartition("bkey").cache()
-    a = keys.alias("a")
-    b = keys.alias("b")
-    cand = (
-        a.join(b, (F.col("a.bkey") == F.col("b.bkey")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    names = df.select(F.col(id_col).alias("id"), F.col(name_col).alias("name"))
-    na = names.select(F.col("id").alias("id_a"), F.col("name").alias("name_a"))
-    nb = names.select(F.col("id").alias("id_b"), F.col("name").alias("name_b"))
-    return (
-        cand.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn(
-            "jw",
-            F.round(jaro_winkler_col(F.col("name_a"), F.col("name_b"), single_eval=True), 6),
-        )
-        .filter(F.col("jw") >= threshold)
-        .select("id_a", "id_b", "jw")
-    )
+    jw = F.round(jaro_winkler_col(F.col("name_a"), F.col("name_b"), single_eval=True), 6)
+    return _dist1_pairs(df, id_col, name_col, "jw", jw, F.col("jw") >= threshold)
 
 
 def minhash_signatures(
@@ -501,43 +547,12 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """LSH banding: docs sharing any band hash become candidate pairs.
 
-    Shuffles on (band, band_hash) — the scale-out alternative to all-pairs.
-    Returns distinct (id_a, id_b) with id_a < id_b.
+    Each band hashes its signature elements directly as numeric columns
+    (no string concat in the hot path); `sig[i]` is the zero-based
+    getItem. Returns distinct (id_a, id_b) with id_a < id_b.
     """
-    num_perm = bands * rows_per_band
-    # hash the band's signature elements directly as numeric columns —
-    # no string concat in the hot path. One F.expr per band (the
-    # per-element getItem Column spelling cost bands*rows_per_band py4j
-    # round trips per build — 192 for the SRP layout); `sig[i]` parses
-    # to the identical zero-based getItem.
-    band_cols = [
-        F.expr(
-            "xxhash64("
-            + ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
-            + ")"
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = sig_df.select("id", *band_cols)
-    structs = ", ".join(
-        f"named_struct('band', {b}, 'bhash', band{b})" for b in range(bands)
-    )
-    stacked = banded.select(
-        "id",
-        F.expr(f"explode(array({structs}))").alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bhash").alias("bhash"))
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    elems = [[f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band)] for b in range(bands)]
+    return _band_pairs(sig_df, [f"xxhash64({', '.join(e)})" for e in elems])
 
 
 def exact_collapse(df: DataFrame, id_col: str, key) -> tuple[DataFrame, DataFrame]:
@@ -638,6 +653,52 @@ def expand_pairs(
     return out.unionByName(star) if star is not None else out
 
 
+def _collapsed(
+    df: DataFrame,
+    id_col: str,
+    ok: Column,
+    content: Column,
+    core,
+    score_col: str,
+    max_group_pairs: int | None,
+    checkpoint: bool = False,
+) -> DataFrame:
+    """exact_collapse → ``core`` → expand_pairs: run the pair pipeline
+    ``core`` (a function of the representative frame) on byte-identical
+    ``content`` once, then re-expand. Rows where ``ok`` is false
+    (content that never pairs) stay singleton clusters, so the collapse
+    is output-invariant: identical content pairs at exactly 1.0 either
+    way, but costs linear instead of quadratic·bands on exact-dup
+    clusters. ``checkpoint`` truncates the reps and membership lineage
+    (see srp_near_dup_pairs); max_group_pairs bounds the re-expansion of
+    pathological exact-dup clusters (see expand_pairs)."""
+    singleton = F.concat(F.lit("_s"), F.col(id_col).cast("string"))
+    key = F.when(ok, F.sha2(content, 256)).otherwise(singleton)
+    reps, membership = exact_collapse(df, id_col, key)
+    if checkpoint:
+        reps = reps.localCheckpoint(eager=True)
+        membership = membership.localCheckpoint(eager=True)
+    return expand_pairs(core(reps), membership, score_col, 1.0, max_group_pairs)
+
+
+def _minhash_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_perm: int,
+    bands: int,
+    threshold: float,
+    hash_fn: str,
+) -> DataFrame:
+    """minhash_dedup_pairs without the exact collapse."""
+    sig = minhash_signatures(df, id_col, text_col, n, num_perm, hash_fn).cache()
+    cand = minhash_lsh_candidates(sig, bands, num_perm // bands)
+    agree = F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
+    est = F.size(agree) / F.lit(num_perm)
+    return _verify(cand, sig, "est_jaccard", est, F.col("est_jaccard") >= threshold, 4)
+
+
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -647,43 +708,28 @@ def minhash_dedup_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     hash_fn: str = "xxhash",
-    collapse_exact: bool = True,
     max_group_pairs: int | None = None,
 ) -> DataFrame:
     """Full MinHash near-dup pipeline: exact-collapse → signatures → LSH
     candidates → signature-similarity estimate filter. Returns
     (id_a, id_b, est_jaccard).
 
-    collapse_exact pre-groups byte-identical texts (sha2 digest) and
-    runs LSH on unique texts only — output-invariant (identical texts
-    have identical signatures, so their pairs score exactly 1.0 either
-    way) but linear instead of quadratic·bands on exact-dup clusters.
-    max_group_pairs bounds the re-expansion of pathological exact-dup
-    clusters (see expand_pairs).
+    The collapse pre-groups byte-identical texts (sha2 digest) and runs
+    LSH on unique texts only (identical texts have identical signatures,
+    so their pairs score exactly 1.0 either way). Null/empty texts have
+    no shingles and never pair, so they stay singletons. max_group_pairs
+    bounds the re-expansion of pathological exact-dup clusters (see
+    expand_pairs).
     """
-    if collapse_exact:
-        # null/empty texts have no shingles and never pair in the LSH
-        # path — keep them singleton clusters so collapse stays
-        # output-invariant.
-        key = F.when(
-            F.length(F.coalesce(F.col(text_col), F.lit(""))) > 0, F.sha2(F.col(text_col), 256)
-        ).otherwise(F.concat(F.lit("_s"), F.col(id_col).cast("string")))
-        reps, membership = exact_collapse(df, id_col, key)
-        rep_pairs = minhash_dedup_pairs(
-            reps, id_col, text_col, n, num_perm, bands, threshold, hash_fn, collapse_exact=False
-        )
-        return expand_pairs(rep_pairs, membership, "est_jaccard", 1.0, max_group_pairs)
-    sig = minhash_signatures(df, id_col, text_col, n, num_perm, hash_fn).cache()
-    cand = minhash_lsh_candidates(sig, bands, num_perm // bands)
-    sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)) / F.lit(num_perm)
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard"))
+    ok = F.length(F.coalesce(F.col(text_col), F.lit(""))) > 0
+    return _collapsed(
+        df,
+        id_col,
+        ok,
+        F.col(text_col),
+        lambda reps: _minhash_pairs(reps, id_col, text_col, n, num_perm, bands, threshold, hash_fn),
+        "est_jaccard",
+        max_group_pairs,
     )
 
 
@@ -749,42 +795,14 @@ def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs via 4×16-bit block banding.
 
     Pigeonhole: hamming <= 3 over 64 bits => at least one of the four
-    16-bit blocks is identical; equi-join on (block_idx, block_value)
+    16-bit blocks is identical; the band join on (block_idx, block_value)
     finds all such candidates without the O(n²) pair space, then
     bit_count(XOR) verifies. Returns (id_a, id_b, hamming).
     """
-    blocks = sim_df.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftright(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)).alias("bval"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "simhash", F.col("bb.blk").alias("blk"), F.col("bb.bval").alias("bval"))
-    a = blocks.alias("a")
-    b = blocks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    blocks = [f"shiftright(simhash, {i * 16}) & 65535" for i in range(4)]
+    cand = _band_pairs(sim_df, blocks, carry=("simhash",))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return _verify(cand, None, "hamming", hamming, F.col("hamming") <= max_hamming)
 
 
 def embedding_dup_pairs(
@@ -905,6 +923,23 @@ def srp_signatures(
     return v.mapInPandas(sign_bits, "id long, sig array<bigint>")
 
 
+def _srp_pairs(
+    df: DataFrame, id_col: str, vec_col: str, threshold: float, n_planes: int, bands: int, seed: int
+) -> DataFrame:
+    """srp_near_dup_pairs without the exact collapse."""
+    from etl_file_sync_spark.operators.similarity import cosine_expr
+
+    # both band sides of the candidate self-join consume the signatures;
+    # checkpointing runs the SRP GEMM once instead of once per side
+    # (measured interleaved: 6.1 -> 4.7 s min-of-4 with the collapse
+    # checkpoints; outputs frame-equal)
+    sig = srp_signatures(df, id_col, vec_col, n_planes, seed).localCheckpoint(eager=True)
+    cand = minhash_lsh_candidates(sig, bands, n_planes // bands)
+    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    cos = cosine_expr(F.col("v_a"), F.col("v_b"))
+    return _verify(cand, v, "cosine", cos, F.col("cosine") >= threshold, 4)
+
+
 def srp_near_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -913,7 +948,6 @@ def srp_near_dup_pairs(
     n_planes: int = 192,
     bands: int = 16,
     seed: int = 7,
-    collapse_exact: bool = True,
     max_group_pairs: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs via SRP-LSH candidates + exact verify.
@@ -925,52 +959,31 @@ def srp_near_dup_pairs(
     defaults: 16 bands × 12 bits); use embedding_dup_pairs when the
     threshold sits inside the background cosine bulk.
 
-    collapse_exact pre-groups byte-identical vectors (grouping on the
-    raw array — exact equality, no digest collisions) so replicas cost
-    one signature instead of colliding in every band; output-invariant
-    because identical vectors pair at cosine exactly 1.0.
+    Byte-identical vectors are collapsed first (grouped on a digest of
+    the raw array) so replicas cost one signature instead of colliding
+    in every band; identical vectors pair at cosine exactly 1.0. Zero-
+    norm vectors have null cosine (never pair) and stay singletons.
+    max_group_pairs bounds the re-expansion (see expand_pairs).
     """
-    from etl_file_sync_spark.operators.similarity import cosine_expr
-
-    if collapse_exact:
-        # zero-norm vectors have null cosine (never pair in the verify
-        # filter) — keep them singletons so collapse is output-invariant.
-        vd = F.col(vec_col).cast("array<double>")
-        norm_sq = F.aggregate(vd, F.lit(0.0), lambda a, x: a + x * x)
-        key = F.when(
-            norm_sq > 0, F.sha2(F.concat_ws(",", F.col(vec_col).cast("array<string>")), 256)
-        ).otherwise(F.concat(F.lit("_s"), F.col(id_col).cast("string")))
-        reps, membership = exact_collapse(df, id_col, key)
-        # localCheckpoint (the r6 phash lesson): reps feeds THREE
-        # consumers (the signature GEMM and both exact-verify sides) and
-        # membership three more (expand's ma/mb/intra) — without the
-        # checkpoint each broadcast-subtree job re-executes the collapse
-        # shuffle + per-row sha digest (stage probe: ~9 broadcast jobs
-        # re-running the shared lineage, most of this query's CPU).
-        # Exchange reuse does not fire across these subtrees because the
-        # broadcast sides re-plan the lineage without an exchange.
-        reps = reps.localCheckpoint(eager=True)
-        membership = membership.localCheckpoint(eager=True)
-        rep_pairs = srp_near_dup_pairs(
-            reps, id_col, vec_col, threshold, n_planes, bands, seed, collapse_exact=False
-        )
-        return expand_pairs(rep_pairs, membership, "cosine", 1.0, max_group_pairs)
-
-    # both band sides of the candidate self-join consume the signatures;
-    # checkpointing runs the SRP GEMM once instead of once per side
-    # (measured interleaved: 6.1 -> 4.7 s min-of-4 with the collapse
-    # checkpoints above; outputs frame-equal)
-    sig = srp_signatures(df, id_col, vec_col, n_planes, seed).localCheckpoint(eager=True)
-    cand = minhash_lsh_candidates(sig, bands, n_planes // bands)
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-    va = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    vb = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", cosine_expr(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
+    vd = F.col(vec_col).cast("array<double>")
+    norm_sq = F.aggregate(vd, F.lit(0.0), lambda a, x: a + x * x)
+    # checkpoint (the r6 phash lesson): reps feeds THREE consumers (the
+    # signature GEMM and both exact-verify sides) and membership three
+    # more (expand's ma/mb/intra) — without the checkpoint each
+    # broadcast-subtree job re-executes the collapse shuffle + per-row
+    # sha digest (stage probe: ~9 broadcast jobs re-running the shared
+    # lineage, most of this query's CPU). Exchange reuse does not fire
+    # across these subtrees because the broadcast sides re-plan the
+    # lineage without an exchange.
+    return _collapsed(
+        df,
+        id_col,
+        norm_sq > 0,
+        F.concat_ws(",", F.col(vec_col).cast("array<string>")),
+        lambda reps: _srp_pairs(reps, id_col, vec_col, threshold, n_planes, bands, seed),
+        "cosine",
+        max_group_pairs,
+        checkpoint=True,
     )
 
 
@@ -981,16 +994,9 @@ def paragraph_segments(
     (id, seg_idx, seg). Only complete segments are emitted — the ragged
     tail is never dedup material. Built with slice() over the token
     array (no per-token explode; one array op per row, then one explode
-    per segment). The token array is materialized before the per-segment
-    lambda — slicing split(text) inside it would re-split the whole text
-    per segment, O(len^2/seg) chars per document (see shingles)."""
-    base = df.select(F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("_toks"))
-    toks = F.col("_toks")
-    n_segs = F.floor(F.size(toks) / seg_tokens).cast("int")
-    segs = F.transform(
-        F.sequence(F.lit(0), n_segs - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i * seg_tokens + 1, seg_tokens)),
-    )
+    per segment; see _token_windows)."""
+    n_segs = F.floor(F.size("_toks") / seg_tokens).cast("int")
+    base, segs = _token_windows(df, id_col, text_col, seg_tokens, n_segs - 1, stride=seg_tokens)
     return base.where(n_segs > 0).select("id", F.posexplode(segs).alias("seg_idx", "seg"))
 
 
@@ -1047,26 +1053,14 @@ def ngram_span_stats(
     over the span key for cross-doc counts, one broadcast-ish semi join
     back. The span string is the join key in both engines, so the result
     is value-exact oracle-checkable; a 100 TB run would hash spans to
-    bigints first (see jaccard_pairs) and accept the ~1e-11 collision.
-
-    The token array is materialized before the per-span lambda —
-    slicing split(text) inside it would re-split the whole text per
-    position, O(len^2) chars per document (see shingles).
+    bigints first (see _shingle_overlap) and accept the ~1e-11 collision.
     """
-    base = df.select(F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("_toks"))
-    toks = F.col("_toks")
-    spans = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - window),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, window)),
-    )
+    base, spans = _token_windows(df, id_col, text_col, window, F.size("_toks") - window)
     occ = (
-        base.where(F.size(toks) >= window)
+        base.where(F.size("_toks") >= window)
         .select("id", F.explode(spans).alias("span"))
         # three consumers (shared-set, dup counts, totals) — one explode
-        # pass. Cache lifecycle is the CALLER's (same contract as
-        # jaccard_pairs): the returned frame is lazy, so this operator
-        # cannot unpersist; long-lived sessions should clearCache()
-        # between invocations (bench.py does) or checkpoint instead.
+        # pass. Cache lifecycle is the CALLER's (see _shingle_overlap).
         .cache()
     )
     shared = (
@@ -1113,30 +1107,13 @@ def containment_pairs(
     Returns (id_a, id_b, n_common, containment) for ordered pairs where
     the SMALLER side's containment crosses `threshold` — containment is
     max(c/|A|, c/|B|), reported with id_a < id_b. Same shuffle shape as
-    jaccard_pairs: one hashed-shingle self-join, never all-pairs.
+    jaccard_pairs (one hashed-shingle self-join, never all-pairs), but
+    without the stop-shingle cut.
     """
-    sh = shingles(df, id_col, text_col, n).select("id", F.xxhash64("shingle").alias("shingle"))
-    # cache lifecycle is the CALLER's (same contract as jaccard_pairs):
-    # the result is lazy so unpersist here would defeat the reuse;
-    # long-lived sessions clearCache() between invocations.
-    sh = sh.cache()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        pairs.join(sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn(
-            "containment", F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "n_common", F.round("containment", 4).alias("containment"))
-    )
+    common, sizes = _shingle_overlap(df, id_col, text_col, n, None)
+    cont = F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))
+    keep = F.col("containment") >= threshold
+    return _verify(common, sizes, "containment", cont, keep, 4, ["n_common"])
 
 
 def semantic_dedup_buckets(
@@ -1183,17 +1160,16 @@ def semantic_dedup_buckets(
             )
         ).alias("nrm"),
     )
-    a, b = v.alias("a"), v.alias("b")
     dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
+        F.zip_with(F.col("v_a"), F.col("v_b"), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+    cos = dot / (F.col("nrm_a") * F.col("nrm_b"))
+    cand = _self_pairs(v, ["bucket"], carry=("v", "nrm"))
     dominated = (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .withColumn("cos", dot / (F.col("a.nrm") * F.col("b.nrm")))
-        .filter(F.col("cos") >= threshold)
-        .select(F.col("b.id").alias("id"))
+        _verify(cand, None, "cos", cos, F.col("cos") >= threshold)
+        .select(F.col("id_b").alias("id"))
         .distinct()
     )
     return (

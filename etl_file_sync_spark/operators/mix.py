@@ -106,7 +106,7 @@ def bigram_novelty(
     """
     # token array materialized before the per-position lambda —
     # element_at(split(text), i) inside it would re-split the whole
-    # text per position, O(len^2) chars per doc (see dedup.shingles)
+    # text per position, O(len^2) chars per doc (see dedup._token_windows)
     base = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
     words = F.col("_w")
     bigrams = F.when(
@@ -119,7 +119,7 @@ def bigram_novelty(
     occ = base.select(F.col(id_col), F.explode(bigrams).alias("bigram"))
     # cached: the corpus-count branch and the join branch both consume
     # this frame — without it the explode + partial agg runs twice.
-    # Cache lifecycle is the caller's (jaccard_pairs contract); a
+    # Cache lifecycle is the caller's (dedup._shingle_overlap contract); a
     # 100 TB run would checkpoint instead.
     doc_bg = occ.groupBy(id_col, "bigram").agg(F.count(F.lit(1)).alias("n_occ")).cache()
     corpus = doc_bg.groupBy("bigram").agg(F.sum("n_occ").alias("bg_count"))

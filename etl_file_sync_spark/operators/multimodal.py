@@ -1061,8 +1061,8 @@ def image_ahash_bands(df: DataFrame, id_col: str = "doc_id", payload_col: str = 
     (band i = blocks 16i..16i+15): by the pigeonhole principle two
     hashes within Hamming distance 3 share at least one band, so a
     4-way band equi-join is a recall-guaranteed candidate generator at
-    any scale (same shape as MinHash banding in operators/dedup.py).
-    Undecodable or non-16×16 payloads yield null bands (DLQ posture).
+    any scale (the block banding of operators/dedup.py simhash_near_pairs).
+    NULL, undecodable or non-16×16 payloads yield null bands (DLQ posture).
     """
     import numpy as np
 
@@ -1071,7 +1071,7 @@ def image_ahash_bands(df: DataFrame, id_col: str = "doc_id", payload_col: str = 
             out = {k: [] for k in ("doc_id", "band0", "band1", "band2", "band3")}
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
                 out["doc_id"].append(doc_id)
-                img = decode_image(bytes(payload))
+                img = None if payload is None else decode_image(bytes(payload))
                 if img is None or img.shape[0] != 16 or img.shape[1] != 16:
                     for b in range(4):
                         out[f"band{b}"].append(None)

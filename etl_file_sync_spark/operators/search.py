@@ -84,7 +84,7 @@ def bm25_topk(
     instead. Deterministic: ordered by (round(score,6) DESC, id) so
     engine ulp noise cannot reorder ranks.
 
-    Cache lifecycle is the caller's (same contract as jaccard_pairs):
+    Cache lifecycle is the caller's (same contract as dedup._shingle_overlap):
     the result is lazy; long-lived sessions clearCache() between calls.
 
     Returns (doc_id, bm25, rnk) — bm25 rounded to 4 decimals.

@@ -525,7 +525,7 @@ def bigram_doc_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     empty-string bigrams for space-only documents. The token array is
     materialized before the per-position lambda — element_at over the
     raw filter(split(text)) expression would re-tokenize the whole text
-    per position, O(len^2) chars per doc (see dedup.shingles).
+    per position, O(len^2) chars per doc (see dedup._token_windows).
     """
     base = df.select(
         F.col(id_col).alias("id"),

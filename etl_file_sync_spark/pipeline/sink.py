@@ -52,6 +52,16 @@ def _execute_one(row: pd.Series, staging_dir: str, skip_if_exists: bool = False)
     reference's STOR overwrite makes retries idempotent for FTP already).
     """
     tmp = os.path.join(staging_dir, f"etl-{uuid.uuid4().hex}")
+
+    def status(error: str | None = None) -> dict:
+        return {
+            "job_id": row["job_id"],
+            "status": "ok" if error is None else "error",
+            "error": error,
+            "src_path": row["src_path"],
+            "dst_path": row["dst_path"],
+        }
+
     try:
         src = TransferFactory.create(_config_from_row(row, "src"))
         dst = TransferFactory.create(_config_from_row(row, "dst"))
@@ -61,30 +71,12 @@ def _execute_one(row: pd.Series, staging_dir: str, skip_if_exists: bool = False)
             and isinstance(dst, LocalTransfer)
             and os.path.exists(dst._resolve(row["dst_path"]))
         ):
-            return {
-                "job_id": row["job_id"],
-                "status": "ok",
-                "error": None,
-                "src_path": row["src_path"],
-                "dst_path": row["dst_path"],
-            }
+            return status()
         src.download(row["src_path"], tmp)
         dst.upload(tmp, row["dst_path"])
-        return {
-            "job_id": row["job_id"],
-            "status": "ok",
-            "error": None,
-            "src_path": row["src_path"],
-            "dst_path": row["dst_path"],
-        }
+        return status()
     except Exception as exc:  # error → status row, never a task failure
-        return {
-            "job_id": row["job_id"],
-            "status": "error",
-            "error": f"{type(exc).__name__}: {exc}",
-            "src_path": row["src_path"],
-            "dst_path": row["dst_path"],
-        }
+        return status(f"{type(exc).__name__}: {exc}")
     finally:
         try:
             if os.path.exists(tmp):

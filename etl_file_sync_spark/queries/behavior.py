@@ -1295,19 +1295,23 @@ def ops_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM tr JOIN outs ON tr.f = outs.f
     ),
     -- self-loop augmentation: target-only states (purchase, null) hold
-    -- their pinned value through the joined-sum update
-    kernel AS (
+    -- their pinned value through the joined-sum update. kernel, states
+    -- and scen are MATERIALIZED: DuckDB otherwise inlines them into
+    -- every step of the recursive jac CTE (~9 GB RSS at sf0.001). The
+    -- step's sum runs in k.t order: the parallel plan would otherwise
+    -- add in varying order and flip floor(x * 1e6) at exact boundaries
+    kernel AS MATERIALIZED (
       SELECT f, t, p FROM kern0
       UNION ALL
       SELECT t, t, 1.0 FROM (SELECT DISTINCT t FROM kern0
                              WHERE t NOT IN (SELECT f FROM kern0))
     ),
-    states AS (SELECT DISTINCT f AS s FROM kernel),
+    states AS MATERIALIZED (SELECT DISTINCT f AS s FROM kernel),
     chans AS (
       SELECT s AS ch FROM states
       WHERE s NOT IN ('start', 'purchase', 'null')
     ),
-    scen AS (
+    scen AS MATERIALIZED (
       SELECT 'base' AS scenario, CAST(NULL AS VARCHAR) AS removed
       UNION ALL SELECT ch, ch FROM chans
     ),
@@ -1320,7 +1324,7 @@ def ops_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL
       SELECT jac.scenario, jac.removed, k.f AS s,
              CAST(sum(CASE WHEN jac.removed IS NOT NULL AND k.t = jac.removed
-                      THEN 0.0 ELSE k.p * jac.h END) AS DOUBLE) AS h,
+                      THEN 0.0 ELSE k.p * jac.h END ORDER BY k.t) AS DOUBLE) AS h,
              jac.it + 1
       FROM jac JOIN kernel k ON k.t = jac.s
       WHERE jac.it < {_MARKOV_ITERS}

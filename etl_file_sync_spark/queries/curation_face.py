@@ -249,40 +249,38 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     / image_ahash_bands), exact-integer 8×8 block aHash packed into four
     16-bit bands, band equi-join candidate generation (pigeonhole:
     Hamming ≤ 3 ⇒ some band equal), then exact Hamming ≤ 4 verify via
-    xor + bit_count — the image-side twin of MinHash banding. The
+    xor + bit_count — the image-side twin of SimHash banding, run by
+    operators/dedup.py simhash_near_pairs on the repacked hash. The
     oracle restates the pixel formula and every hash bit in exact
     integer SQL, so a decoder or pooling bug hash-mismatches. At scale
-    the band join shuffles only (band_key, doc_id, 4 ints); per-band
+    the band join shuffles only (band, band value, doc_id, hash); per-band
     bucket sizes bound candidate pairs exactly as in LSH dedup."""
     from etl_file_sync_spark.operators import multimodal as M
 
     docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
-    # materialize the hash frame ONCE: the 4 band self-joins below would
-    # otherwise re-run the whole PNG encode->decode->hash pipeline (and
-    # its source scan) up to 8x — measured 3.6x tier growth at constant
+    # materialize the hash frame ONCE: both sides of the band self-join
+    # would otherwise re-run the whole PNG encode->decode->hash pipeline
+    # (and its source scan) — measured 3.6x tier growth at constant
     # output before this, 1.0x after. The frame is (doc_id, 4 ints);
     # at corpus scale this is exactly the LSH shingle-cache convention.
     h = M.image_ahash_bands(M.attach_quad_payload(docs)).localCheckpoint(eager=True)
-    a, b = h.alias("a"), h.alias("b")
-    cands = None
-    for i in range(4):
-        c = a.join(
-            b,
-            (F.col(f"a.band{i}") == F.col(f"b.band{i}")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-            *[F.col(f"a.band{j}").alias(f"a{j}") for j in range(4)],
-            *[F.col(f"b.band{j}").alias(f"b{j}") for j in range(4)],
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    cands = cands.dropDuplicates(["doc_a", "doc_b"])
-    hamming = sum(
-        F.bit_count(F.col(f"a{j}").bitwiseXOR(F.col(f"b{j}"))) for j in range(4)
-    ).cast("bigint")
-    return (
-        cands.select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= 4)
-        .orderBy("doc_a", "doc_b")
+    return _ahash_pairs(h).orderBy("doc_a", "doc_b")
+
+
+def _ahash_pairs(h: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming) for the aHash band frame ``h`` of
+    image_ahash_bands: the four 16-bit bands are packed back into one
+    64-bit hash, so the SimHash 4x16-bit block banding joins on exactly
+    these bands; Hamming <= 4 verifies."""
+    from etl_file_sync_spark.operators.dedup import simhash_near_pairs
+
+    packed = F.expr("band0 | shiftleft(band1, 16) | shiftleft(band2, 32) | shiftleft(band3, 48)")
+    return simhash_near_pairs(
+        h.select(F.col("doc_id").alias("id"), packed.alias("simhash")), max_hamming=4
+    ).select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        F.col("hamming").cast("bigint").alias("hamming"),
     )
 
 

@@ -130,7 +130,7 @@ def dedup_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("id"), F.col("c_name").alias("name")
     )
     return (
-        fuzzy_blocked_pairs(c, "id", "name", max_dist=1)
+        fuzzy_blocked_pairs(c, "id", "name")
         .select("id_a", "id_b", F.col("edit_dist").cast("int").alias("edit_dist"))
         .orderBy("id_a", "id_b")
     )

@@ -196,7 +196,7 @@ def test_fuzzy_blocked_matches_allpairs_and_no_cartesian(spark, sf_dir):
         .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("name"))
         .cache()
     )
-    blocked = D.fuzzy_blocked_pairs(c, "id", "name", max_dist=1)
+    blocked = D.fuzzy_blocked_pairs(c, "id", "name")
     got = {(r.id_a, r.id_b): r.edit_dist for r in blocked.collect()}
     a = c.select(F.col("id").alias("id_a"), F.col("name").alias("name_a"))
     b = c.select(F.col("id").alias("id_b"), F.col("name").alias("name_b"))
@@ -615,23 +615,111 @@ def test_weighted_priority_sample_favors_heavy(spark):
     assert all(r.doc_id != 999 for r in kept)
 
 
-def test_exact_collapse_expand_is_output_invariant(spark):
-    from etl_file_sync_spark.operators.dedup import minhash_dedup_pairs
+def _grouped_copies(spark, kind):
+    """5 groups x 4 byte-identical copies (ids g*10+m), near each other
+    across groups, plus rows the collapse must keep as singletons (for
+    text: NULL and empty; for vectors: NULL and two zero vectors)."""
+    if kind == "minhash":
+        base = "the quick brown fox jumps over the lazy dog again and again"
+        rows = [(g * 10 + m, base + f" group{g}") for g in range(5) for m in range(4)]
+        rows += [(90, None), (91, ""), (92, "")]
+        return spark.createDataFrame(rows, "doc_id long, text string")
+    import numpy as np
 
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = []
-    for g in range(5):
-        text = base + f" group{g}"
-        for m in range(4):  # 4 byte-identical copies per group
-            rows.append((g * 10 + m, text))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    on = minhash_dedup_pairs(df, collapse_exact=True).collect()
-    off = minhash_dedup_pairs(df, collapse_exact=False).collect()
-    key = lambda r: ((r.id_a, r.id_b), r.est_jaccard)  # noqa: E731
-    assert sorted(map(key, on)) == sorted(map(key, off))
-    # within-group pairs (byte-identical copies) score exactly 1.0
-    intra = [r.est_jaccard for r in on if r.id_a // 10 == r.id_b // 10]
-    assert intra and set(intra) == {1.0}
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal(16)
+    groups = [base + 0.05 * rng.standard_normal(16) for _ in range(5)]
+    rows = [(g * 10 + m, [float(x) for x in groups[g]]) for g in range(5) for m in range(4)]
+    rows += [(90, None), (91, [0.0] * 16), (92, [0.0] * 16)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.parametrize("kind", ["minhash", "srp"])
+def test_exact_collapse_expand_is_output_invariant(spark, kind):
+    """The public near-dup pipelines (exact collapse -> core -> expand)
+    equal their uncollapsed cores, and byte-identical copies pair at
+    exactly 1.0."""
+    df = _grouped_copies(spark, kind)
+    if kind == "minhash":
+        on = D.minhash_dedup_pairs(df).collect()
+        off = D._minhash_pairs(df, "doc_id", "text", 3, 64, 16, 0.5, "xxhash").collect()
+    else:
+        on = D.srp_near_dup_pairs(df).collect()
+        off = D._srp_pairs(df, "vec_id", "embedding", 0.9, 192, 16, 7).collect()
+    assert sorted(map(tuple, on)) == sorted(map(tuple, off))
+    intra = [r[2] for r in on if r.id_a // 10 == r.id_b // 10]
+    assert len(intra) == 5 * 6 and set(intra) == {1.0}
+    assert not [r for r in on if r.id_b >= 90]
+
+
+def _docs_planted(spark):
+    base = "the quick brown fox jumps over the lazy dog while the cat sleeps in the sun"
+    rows = [(1, base), (2, base), (3, base), (4, base + " today"), (5, None), (6, "")]
+    # enough unrelated docs that the copies stay under jaccard's stop-shingle cut
+    words = "spark shuffles joins parquet footers broadcast exchange codegen stages tasks".split()
+    rows += [(k, " ".join(words[k % 10 :] + words[: k % 10])) for k in range(7, 13)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _names_planted(spark):
+    rows = [(1, "Customer#000000001"), (2, "Customer#000000001"), (3, "Customer#000000001"),
+            (4, "Customer#000000011"), (5, None), (6, ""), (7, "Supplier#9")]
+    return spark.createDataFrame(rows, "id long, name string")
+
+
+def _vecs_planted(spark):
+    v = [float(i % 7) - 3.0 for i in range(16)]
+    near = [x + 0.01 for x in v]
+    other = [float((i * 5) % 11) - 5.0 for i in range(16)]
+    rows = [(1, v), (2, v), (3, v), (4, near), (5, None), (6, [0.0] * 16), (7, other)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _phash_planted(spark):
+    from etl_file_sync_spark.queries.curation_face import _ahash_pairs
+
+    imgs = {i: M.synth_quad_image(i) for i in (8, 16, 17)}
+    rows = [(1, imgs[8]), (2, imgs[8]), (3, imgs[8]), (4, imgs[16]), (5, None), (6, b""),
+            (7, imgs[17])]
+    df = spark.createDataFrame(rows, "doc_id long, payload binary")
+    return _ahash_pairs(M.image_ahash_bands(df))
+
+
+# name -> (pairs over a planted frame, the output columns after the id
+# pair). Every planted frame has ids 1-3 byte-identical, 4 a near copy,
+# 5 NULL, 6 empty, 7+ unrelated.
+_PAIR_GENERATORS = {
+    "jaccard": (lambda s: D.jaccard_pairs(_docs_planted(s)), "jaccard:double"),
+    "containment": (
+        lambda s: D.containment_pairs(_docs_planted(s)), "n_common:bigint,containment:double"
+    ),
+    "fuzzy": (lambda s: D.fuzzy_blocked_pairs(_names_planted(s)), "edit_dist:int"),
+    "fuzzy_jw": (lambda s: D.fuzzy_jw_blocked_pairs(_names_planted(s)), "jw:double"),
+    "minhash_md5": (
+        lambda s: D.minhash_dedup_pairs(_docs_planted(s), hash_fn="md5"), "est_jaccard:double"
+    ),
+    "minhash_xxhash": (lambda s: D.minhash_dedup_pairs(_docs_planted(s)), "est_jaccard:double"),
+    "simhash": (lambda s: D.simhash_near_pairs(D.simhash(_docs_planted(s))), "hamming:int"),
+    "embedding": (lambda s: D.embedding_dup_pairs(_vecs_planted(s), blocks=3), "cosine:double"),
+    "srp": (lambda s: D.srp_near_dup_pairs(_vecs_planted(s)), "cosine:double"),
+    "phash": (_phash_planted, "hamming:bigint"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PAIR_GENERATORS))
+def test_pair_generator_contract(spark, name):
+    """Every pair generator: id_a < id_b, no pair twice, the documented
+    output schema, all byte-identical copies paired, and the NULL row
+    never paired."""
+    build, scored = _PAIR_GENERATORS[name]
+    out = build(spark)
+    a, b = ("doc_a", "doc_b") if name == "phash" else ("id_a", "id_b")
+    assert out.schema.simpleString() == f"struct<{a}:bigint,{b}:bigint,{scored}>"
+    pairs = [(r[0], r[1]) for r in out.collect()]
+    assert all(x < y for x, y in pairs), pairs
+    assert len(pairs) == len(set(pairs)), pairs
+    assert {(1, 2), (1, 3), (2, 3)} <= set(pairs), pairs
+    assert not [p for p in pairs if 5 in p], pairs
 
 
 def test_ivfpq_recall_vs_bruteforce(spark):
