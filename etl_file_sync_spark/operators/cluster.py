@@ -17,14 +17,27 @@ two grouped aggregations on node id:
 
 Rounds needed are O(log²n) in theory and a handful in practice — versus
 O(diameter) for naive min-label propagation, which a 1000-hop revision
-chain would defeat. Each round shuffles on node id only; localCheckpoint
-truncates the growing lineage so plan size stays constant.
+chain would defeat. Both steps keep every node, and a round that changes
+no edge has reached the fixpoint: a star per component around its
+minimum id.
+
+Cost: the symmetric edge list is checkpointed once (the upstream pair
+plan runs once). Each round is one lazily checkpointed generation, and
+its one driver action both materializes that generation and counts the
+edges in only one of it and the previous one; zero means converged.
+The checkpoint truncates lineage so plan size stays constant across
+rounds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Round budget. Convergence takes O(log²n) rounds, so 20 covers any
+# realistic graph; exhausting it raises rather than returning split
+# components.
+MAX_ROUNDS = 20
 
 
 def _sym(e: DataFrame) -> DataFrame:
@@ -42,57 +55,33 @@ def _min_nbr(sym: DataFrame) -> DataFrame:
     return sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """pairs(id_a, id_b) → (id, component) with component = min id reachable.
 
     Deterministic: labels are min-ids, independent of partitioning.
-    max_iter bounds ROUNDS of (large-star, small-star); convergence is
-    O(log²n) rounds so 20 covers any realistic graph — if the budget is
-    somehow exhausted we raise rather than return split components.
+    Self-loop-only nodes have no component (they are not in the graph).
     """
     edges = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    nodes = _sym(edges).select(F.col("u").alias("id")).distinct().localCheckpoint(eager=True)
     cur = _sym(edges).localCheckpoint(eager=True)
-
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # large-star: neighbors larger than u attach to min(N[u])
-        sym = cur
-        mn = _min_nbr(sym)
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mn, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        ls = _sym(large).localCheckpoint(eager=True)
-
+        large = cur.filter(F.col("v") > F.col("u")).join(_min_nbr(cur), "u")
+        ls = _sym(large.select(F.col("v").alias("u"), F.col("m").alias("v")))
         # small-star: u and its not-larger neighbors attach to min(N[u])
-        mn2 = _min_nbr(ls)
-        small = (
-            ls.filter(F.col("v") <= F.col("u"))
-            .join(mn2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mn2.select(F.col("u"), F.col("m").alias("v")))
-        )
-        new = _sym(small).localCheckpoint(eager=True)
-
-        changed = new.exceptAll(cur).limit(1).count() + cur.exceptAll(new).limit(1).count()
+        mn = _min_nbr(ls)
+        small = ls.filter(F.col("v") <= F.col("u")).join(mn, "u").select(F.col("v").alias("u"), "m")
+        new = _sym(small.union(mn).withColumnRenamed("m", "v")).localCheckpoint(eager=False)
+        # both generations are distinct edge sets: an edge seen once is
+        # in only one of them
+        changed = new.union(cur).groupBy("u", "v").count().filter("count = 1").count()
         cur = new
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} star rounds; "
-            "raise max_iter (pathological graph for the iteration budget)"
-        )
-
-    # fixpoint edges are stars (u, root): label = min neighbor (the root),
-    # or the node's own id for roots/singleton-in-pairs nodes
-    labels = cur.groupBy("u").agg(F.min("v").alias("root"))
-    return (
-        nodes.join(labels, nodes.id == labels.u, "left")
-        .select("id", F.when(F.col("root") < F.col("id"), F.col("root")).otherwise(F.col("id")).alias("component"))
+            # fixpoint edges are stars (u, root) over every node: the
+            # label is the minimum of the closed neighborhood
+            return _min_nbr(cur).select(F.col("u").alias("id"), F.col("m").alias("component"))
+    raise RuntimeError(
+        f"connected_components did not converge in {MAX_ROUNDS} star rounds; "
+        "raise MAX_ROUNDS (pathological graph for the round budget)"
     )
 
 

@@ -1,66 +1,59 @@
 """Graph operators beyond connected components: PageRank.
 
-Iterative dataflow on Spark: each round is rank/degree contributions
-shuffled to their destination and summed — one hash shuffle on the node
-id per iteration, the same key every round, so the exchange reuses its
-partitioning. Lineage is cut with localCheckpoint every few rounds
-(the cluster.py pattern) — without it the plan doubles per iteration and
-the driver, not the data, becomes the bottleneck.
+Iterative dataflow on Spark: each round is one join of the edge list
+with the current ranks, then rank/degree contributions summed per
+destination — one groupBy on the node id per iteration. The symmetric
+edge list, with each source's degree as a column, is checkpointed once;
+the ranks are checkpointed every few rounds (the cluster.py pattern) —
+without it the plan doubles per iteration and the driver, not the data,
+becomes the bottleneck.
 
-At 100 TB: iterations are the cost, so run to a tolerance, not a fixed
-count; dangling mass and per-component normalization follow the standard
-formulation below. Float contribution sums are partition-order dependent
-in the last ulps — callers needing bit-stable output across runs round
-the ranks (the registry query does).
+The iteration count is fixed by the caller, so the output is
+reproducible against an unrolled oracle; dangling mass and
+per-component normalization follow the standard formulation below.
+Float contribution sums are partition-order dependent in the last ulps
+— callers needing bit-stable output across runs round the ranks (the
+registry queries do).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+DAMPING = 0.85
+CHECKPOINT_EVERY = 5  # iterations between rank checkpoints
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iters: int = 15,
-    undirected: bool = True,
-    checkpoint_every: int = 5,
-) -> DataFrame:
-    """PageRank over an edge list (id_a, id_b). Returns (node, rank)
-    with Σrank = 1 (dangling nodes cannot exist in an undirected edge
-    list — every listed node has degree ≥ 1).
+
+def pagerank(edges: DataFrame, iters: int = 15) -> DataFrame:
+    """PageRank over an undirected edge list (id_a, id_b). Returns
+    (node, rank) with Σrank = 1 (dangling nodes cannot exist in an
+    undirected edge list — every listed node has degree ≥ 1, and is
+    some edge's destination). Duplicate edges and self-loops count as
+    parallel edges.
     """
     e = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    if undirected:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.localCheckpoint(eager=True)
+    e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    e = e.withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
+    e = e.localCheckpoint(eager=False)
+    n_nodes = e.agg(F.count_distinct("src")).first()[0]  # materializes e
     nodes = e.select(F.col("src").alias("node")).distinct()
-    n_nodes = nodes.count()  # scalar — metadata, not data
     if n_nodes == 0:  # empty graph: no ranks, stable schema
         return nodes.withColumn("rank", F.lit(0.0))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
 
     for i in range(iters):
-        contribs = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(deg, "src")
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
         ranks = (
-            nodes.join(contribs.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
+            e.join(ranks.withColumnRenamed("node", "src"), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(
                 (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
+                    F.lit((1.0 - DAMPING) / n_nodes)
+                    + F.lit(DAMPING) * F.sum(F.col("rank") / F.col("deg"))
+                ).alias("rank")
             )
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
 

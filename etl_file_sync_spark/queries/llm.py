@@ -813,8 +813,8 @@ def graph_pagerank_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the exact-Jaccard near-dup graph — centrality inside
     dup clusters identifies the canonical representative a curation run
     should keep (the most-connected variant). Iterative dataflow: one
-    node-keyed shuffle per round, lineage checkpointed (operators/
-    graph.py). Value-exact oracle-checked (round-3 verdict promotion):
+    join with the ranks and one destination-keyed groupBy per round,
+    lineage checkpointed (operators/graph.py). Value-exact oracle-checked (round-3 verdict promotion):
     the oracle unrolls the same 15 power iterations over the same
     jaccard>=0.5 edge CTE, and ranks are integer-scaled to micros —
     cross-engine float contribution sums agree to ~1e-15, far inside the

@@ -267,8 +267,8 @@ def dedup_fuzzy_jw_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_cluster_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs → connected components → per-cluster canonical doc.
 
-    Jaccard pairs (exact, >=0.5) feed alternating-star min-label
-    components; output is one row per clustered doc with its cluster id
+    Jaccard pairs (exact, >=0.5) feed alternating large/small-star
+    connected components (min-id labels); output is one row per clustered doc with its cluster id
     and survivor flag. Min-id labels are deterministic, so the oracle
     restates the whole thing: the same jaccard pair SQL + a recursive-
     CTE transitive closure with min-reachable-id labels — the iterative

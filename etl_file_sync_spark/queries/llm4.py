@@ -171,8 +171,8 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     built from the nation table — a 25-node ring plus bipartite links to
     the 5 regions — with ranks integer-scaled to micros so the driver's
     value hash applies. Exercises the same operators/graph.py iterative
-    dataflow as graph_pagerank_neardup (one node-keyed shuffle per
-    round, checkpointed lineage); the fp contribution sums agree across
+    dataflow as graph_pagerank_neardup (one join and one
+    destination-keyed groupBy per round, checkpointed lineage); the fp contribution sums agree across
     engines to ~1e-15, far inside the 1e-6 rounding grain."""
     from etl_file_sync_spark.operators.graph import pagerank
 
@@ -187,7 +187,7 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = ring.unionByName(reg)
     return (
-        pagerank(edges, damping=0.85, iters=10)
+        pagerank(edges, iters=10)
         .select("node", F.round(F.col("rank") * 1000000).cast("bigint").alias("rank_micro"))
         .orderBy("node")
     )

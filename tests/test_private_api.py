@@ -1,22 +1,37 @@
-"""Source-scan guard: the private ``DataFrame._jdf`` handle is read only
-in ``plans/inspect.py``, the one module whose job is plan inspection.
-Operators that read it tie their behavior to JVM internals that change
-between Spark versions and do not exist on Spark Connect."""
+"""Source-scan guard for private PySpark handles.
+
+- ``DataFrame._jdf`` is read only in ``plans/inspect.py``, the one
+  module whose job is plan inspection.
+- ``SparkContext._jsc`` is read only in ``operators/bpe.py``, which
+  frees its own merge-loop checkpoints through it. The iterative graph
+  operators (``cluster.py``, ``graph.py``) must not free theirs that
+  way.
+
+Operators that read these handles tie their behavior to JVM internals
+that change between Spark versions and do not exist on Spark Connect."""
 
 from __future__ import annotations
 
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "etl_file_sync_spark"
-ALLOWED = {PKG / "plans" / "inspect.py"}
+
+
+def _offenders(handle: str, allowed: Path) -> list[str]:
+    return [
+        f"{path.relative_to(PKG.parent)}:{i}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != allowed
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if handle in line
+    ]
 
 
 def test_private_jdf_only_in_plan_inspection():
-    offenders = [
-        f"{path.relative_to(PKG.parent)}:{i}"
-        for path in sorted(PKG.rglob("*.py"))
-        if path not in ALLOWED
-        for i, line in enumerate(path.read_text().splitlines(), 1)
-        if "._jdf" in line
-    ]
+    offenders = _offenders("._jdf", PKG / "plans" / "inspect.py")
     assert not offenders, f"private ._jdf read outside plans/inspect.py: {offenders}"
+
+
+def test_private_jsc_only_in_bpe():
+    offenders = _offenders("._jsc", PKG / "operators" / "bpe.py")
+    assert not offenders, f"private ._jsc read outside operators/bpe.py: {offenders}"

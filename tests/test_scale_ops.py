@@ -144,14 +144,26 @@ def test_connected_components_vs_union_find(spark):
     assert got == expected
 
 
-def test_connected_components_long_chain_converges_fast(spark):
+def test_connected_components_long_chain_converges_fast(spark, monkeypatch):
     """A 120-hop chain: naive min-label propagation needs 120 rounds; the
     alternating star algorithm must finish inside a 10-round budget."""
-    from etl_file_sync_spark.operators.cluster import connected_components
+    from etl_file_sync_spark.operators import cluster
 
+    monkeypatch.setattr(cluster, "MAX_ROUNDS", 10)
     pairs = spark.createDataFrame([(i, i + 1) for i in range(120)], "id_a long, id_b long")
-    got = {(r.id, r.component) for r in connected_components(pairs, max_iter=10).collect()}
+    got = {(r.id, r.component) for r in cluster.connected_components(pairs).collect()}
     assert got == {(i, 0) for i in range(121)}
+
+
+def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
+    """One round cannot collapse the 120-hop chain: the operator raises
+    instead of returning split components."""
+    from etl_file_sync_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "MAX_ROUNDS", 1)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(120)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cluster.connected_components(pairs)
 
 
 def test_connected_components_random_vs_union_find(spark):
