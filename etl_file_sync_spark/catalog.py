@@ -51,10 +51,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         key = None  # missing/odd path: no memo, let the reader raise as before
     if key is not None and key in _TABLE_MEMO:
         return _TABLE_MEMO[key]
-    if name == "events":
-        df = _sanitize_doubles(_load_events(spark, sf_dir))
-    else:
-        df = _sanitize_doubles(spark.read.parquet(path))
+    df = micros_ts(read_events(spark, path)) if name == "events" else spark.read.parquet(path)
+    df = _sanitize_doubles(df)
     if key is not None:
         _TABLE_MEMO[key] = df
     return df
@@ -88,26 +86,31 @@ def _sanitize_doubles(df: DataFrame) -> DataFrame:
     return df
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.ts has shipped as either parquet TIMESTAMP(MICROS) (current
-    testdata) or TIMESTAMP(NANOS) — the latter Spark's vectorized reader
-    rejects, so it is read as int64 nanos (legacy conf) and truncated to
-    a microsecond timestamp. Either way the result column is a plain
-    microsecond timestamp, matching the DuckDB oracle's TIMESTAMP."""
+def read_events(spark: SparkSession, path: str) -> DataFrame:
+    """Batch-read an events parquet file with a TIMESTAMP(NANOS) ``ts``
+    readable: Spark's vectorized reader rejects that vintage, so the
+    legacy conf surfaces it as int64 nanos for ``micros_ts`` to map."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
+
+
+def micros_ts(df: DataFrame) -> DataFrame:
+    """Map the events ``ts`` column of any frame, batch or streaming, read
+    through ``read_events``' conf to a plain microsecond TIMESTAMP, which
+    matches the DuckDB oracle's TIMESTAMP.
+
+    events.ts has shipped as parquet TIMESTAMP(NANOS) (arrives as int64
+    nanos, truncated to micros here) and as TIMESTAMP(MICROS,
+    isAdjustedToUTC=false), which arrives as TIMESTAMP_NTZ; watermarks
+    reject NTZ, and with the session TZ pinned to UTC the cast is
+    instant-preserving and keeps the oracle (NTZ semantics) in exact
+    agreement. This is the one place the vintage is decided."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
     if isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as
-        # TIMESTAMP_NTZ, which watermarks reject; with the session TZ
-        # pinned to UTC the cast is instant-preserving and keeps the
-        # DuckDB oracle (NTZ semantics) in exact agreement.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def estimated_scan_tasks(sf_dir: str, name: str) -> int:

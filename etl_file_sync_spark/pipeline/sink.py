@@ -29,8 +29,6 @@ from etl_file_sync_spark.pipeline.handlers import LocalTransfer, TransferFactory
 from etl_file_sync_spark.pipeline.schemas import STATUS_SCHEMA
 from etl_file_sync_spark.pipeline.transform import SplitResult, dlq_envelope, split_valid_dlq
 
-STATUS_DDL = "job_id STRING, status STRING, error STRING, src_path STRING, dst_path STRING"
-
 
 def _config_from_row(row: pd.Series, prefix: str) -> ServerConfig:
     return ServerConfig(
@@ -104,7 +102,7 @@ def run_transfers(
                 [_execute_one(row, staging, skip_if_exists) for _, row in pdf.iterrows()]
             )
 
-    return valid.mapInPandas(run, schema=STATUS_DDL)
+    return valid.mapInPandas(run, schema=STATUS_SCHEMA)
 
 
 def run_manifest_batch(

@@ -19,6 +19,8 @@ from etl_file_sync_spark.streaming.replay import (
     ADMIT_MAX_TS,
     ADMIT_MIN_TS,
     SENTINEL_UID,
+    replay,
+    run_to_memory_sink,
 )
 
 
@@ -55,16 +57,15 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the source is Kafka and the sink incremental — identical
     plan, same state-store windows.
     """
-    from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink
-
-    stream = events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
-    )
-    return run_to_memory_sink(agg, "stream_tumbling_counts_sink", "complete")
+    with replay(spark, sf_dir) as events:
+        agg = (
+            events()
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
+            .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
+        )
+        return run_to_memory_sink(agg, "stream_tumbling_counts_sink", "complete")
 
 
 @register(
@@ -216,27 +217,27 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern for clickstream attribution. The oracle restates it as a
     batch interval join over the full table.
     """
-    from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink
-
-    ev = events_stream(spark, sf_dir)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-        .withWatermark("ts", "1 hour")
-    )
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "1 hour")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("view_ts") <= F.col("ts")),
-        "inner",
-    ).select("event_id", "view_id", "user_id")
-    return run_to_memory_sink(joined, "stream_stream_join_sink", "append").orderBy("event_id", "view_id")
+    with replay(spark, sf_dir) as events:
+        ev = events()
+        purchases = (
+            ev.filter(F.col("event_type") == "purchase")
+            .select("event_id", "user_id", "ts")
+            .withWatermark("ts", "1 hour")
+        )
+        views = (
+            ev.filter(F.col("event_type") == "view")
+            .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
+            .withWatermark("view_ts", "1 hour")
+        )
+        joined = purchases.join(
+            views,
+            (F.col("user_id") == F.col("v_user"))
+            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
+            & (F.col("view_ts") <= F.col("ts")),
+            "inner",
+        ).select("event_id", "view_id", "user_id")
+        out = run_to_memory_sink(joined, "stream_stream_join_sink", "append")
+        return out.orderBy("event_id", "view_id")
 
 
 @register(
@@ -253,26 +254,27 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "late-data",
 )
 def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark late-data semantics, value-checked: the replay source
-    (events_stream_with_late_replay) re-delivers every 7th event in a
-    SECOND micro-batch with its event time shifted 10 days into the
-    past — far below the watermark established by batch one — and a
-    flush sentinel third batch emits all append-mode windows. The
-    15-minute tumbling counts must equal the oracle's counts over the
-    ON-TIME events alone: if the engine aggregates even one late row,
-    a window's count (or a phantom past window) hash-mismatches.
+    """Watermark late-data semantics, value-checked: the "late" replay
+    tail (streaming/replay.py) stages three micro-batches — the events,
+    then a far-future flush sentinel that advances the watermark and
+    emits all append-mode windows, then every 7th event re-delivered
+    with its event time shifted 10 days into the past. The late batch
+    comes two batches after the data that advanced the watermark,
+    because Spark filters late input with the watermark as of one batch
+    earlier. The 15-minute tumbling counts must equal the oracle's
+    counts over the ON-TIME events alone: if the engine aggregates even
+    one late row, a window's count (or a phantom past window)
+    hash-mismatches.
     """
-    from etl_file_sync_spark.streaming import run_to_memory_sink
-    from etl_file_sync_spark.streaming.replay import events_stream_with_late_replay
-
-    stream = events_stream_with_late_replay(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    out = run_to_memory_sink(agg, "stream_late_drop_sink", "append")
+    with replay(spark, sf_dir, "late") as events:
+        agg = (
+            events()
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
+        )
+        out = run_to_memory_sink(agg, "stream_late_drop_sink", "append")
     # the sentinel's own far-future window never emits (watermark stops
     # short of it); guard against it anyway for replay-parameter changes.
     # Max over the ADMITTED rows only: an unfiltered max(ts) would let a
@@ -360,17 +362,15 @@ def stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget — the 100 TB-stream answer, vs an unbounded dropDuplicates.
     The oracle is simply the distinct event set.
     """
-    from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink
-
-    s1 = events_stream(spark, sf_dir)
-    s2 = events_stream(spark, sf_dir)
-    doubled = s1.unionByName(s2)
-    deduped = (
-        doubled.withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select("event_id", "user_id", "event_type")
-    )
-    return run_to_memory_sink(deduped, "stream_dedup_sink", "append").orderBy("event_id")
+    with replay(spark, sf_dir) as events:
+        deduped = (
+            events()
+            .unionByName(events())
+            .withWatermark("ts", "10 minutes")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .select("event_id", "user_id", "event_type")
+        )
+        return run_to_memory_sink(deduped, "stream_dedup_sink", "append").orderBy("event_id")
 
 
 @register(
@@ -399,38 +399,36 @@ def stream_outer_attribution_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     with no prior view must emit WITH NULL right side once the watermark
     passes their join window (state eviction, not buffering forever).
 
-    Determinism: the replay source stages a far-future sentinel batch
-    (events_stream_with_flush) whose second micro-batch advances both
+    Determinism: the "flush" replay tail stages a far-future sentinel
+    batch (streaming/replay.py) whose second micro-batch advances both
     watermarks past all real state, so every outer-null row flushes
     inside one processAllAvailable and the full DuckDB oracle (batch
     LEFT JOIN over the distinct event set) hash-checks the result. On a
     live Kafka feed the continuing stream plays the sentinel's role.
     """
-    from etl_file_sync_spark.streaming import events_stream_with_flush, run_to_memory_sink
-
-    s1 = events_stream_with_flush(spark, sf_dir)
-    s2 = events_stream_with_flush(spark, sf_dir)
-    purchases = (
-        s1.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    )
-    deduped = (
-        purchases.unionByName(purchases)
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    views = (
-        s2.filter(F.col("event_type") == "view")
-        .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "10 minutes")
-    )
-    joined = deduped.join(
-        views,
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("view_ts") <= F.col("ts")),
-        "leftOuter",
-    ).select("event_id", "user_id", "view_id")
-    out = run_to_memory_sink(joined, "stream_outer_attr_sink", "append")
+    with replay(spark, sf_dir, "flush") as events:
+        purchases = (
+            events().filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
+        )
+        deduped = (
+            purchases.unionByName(purchases)
+            .withWatermark("ts", "10 minutes")
+            .dropDuplicatesWithinWatermark(["event_id"])
+        )
+        views = (
+            events()
+            .filter(F.col("event_type") == "view")
+            .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
+            .withWatermark("view_ts", "10 minutes")
+        )
+        joined = deduped.join(
+            views,
+            (F.col("user_id") == F.col("v_user"))
+            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
+            & (F.col("view_ts") <= F.col("ts")),
+            "leftOuter",
+        ).select("event_id", "user_id", "view_id")
+        out = run_to_memory_sink(joined, "stream_outer_attr_sink", "append")
     # drop the flush sentinels by their RESERVED id — "user_id >= 0" was
     # a sign convention that silently dropped real hash-range negative
     # users (extreme-id tier)
@@ -477,19 +475,17 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/tiers.py) forces gaps exactly at the timeout and
     caught the previous >= mis-model.
     """
-    from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink
-
-    stream = events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.min("ts").alias("session_start"), F.max("ts").alias("session_last"),
-             F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", "session_start", "session_last", "n_events")
-    )
-    return run_to_memory_sink(agg, "stream_session_sink", "complete").orderBy(
-        "user_id", "session_start"
-    )
+    with replay(spark, sf_dir) as events:
+        agg = (
+            events()
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+            .agg(F.min("ts").alias("session_start"), F.max("ts").alias("session_last"),
+                 F.count(F.lit(1)).alias("n_events"))
+            .select("user_id", "session_start", "session_last", "n_events")
+        )
+        out = run_to_memory_sink(agg, "stream_session_sink", "complete")
+        return out.orderBy("user_id", "session_start")
 
 
 @register(
@@ -533,8 +529,6 @@ def stream_stateful_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink
-
     def fold(key, pdfs, state):
         if state.exists:
             cum, n, done = state.get
@@ -562,17 +556,16 @@ def stream_stateful_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
                 return
         state.update((cum, n, 0))
 
-    stream = events_stream(spark, sf_dir)
-    crossed = stream.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType="user_id long, cross_ts timestamp, n_events_at_cross int, cum_cents_at_cross long",
-        stateStructType="cum long, n long, done int",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return run_to_memory_sink(crossed, "stream_stateful_threshold_sink", "update").orderBy(
-        "user_id"
-    )
+    with replay(spark, sf_dir) as events:
+        crossed = events().groupBy("user_id").applyInPandasWithState(
+            fold,
+            outputStructType="user_id long, cross_ts timestamp, n_events_at_cross int, cum_cents_at_cross long",
+            stateStructType="cum long, n long, done int",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        out = run_to_memory_sink(crossed, "stream_stateful_threshold_sink", "update")
+        return out.orderBy("user_id")
 
 
 
@@ -597,35 +590,34 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming join-type matrix (inner: stream_stream_join, left outer:
     stream_outer_attribution_dedup): unmatched PURCHASES and unmatched
     VIEWS must both emit with null other-side once the watermark passes
-    their join windows. The flush-sentinel replay
-    (events_stream_with_flush) advances both watermarks past all real
-    state so every null-emission flushes inside one
+    their join windows. The "flush" replay tail (streaming/replay.py)
+    advances both watermarks past all real state so every null-emission
+    flushes inside one
     processAllAvailable, making the full batch FULL OUTER oracle apply
     value-exactly."""
-    from etl_file_sync_spark.streaming import events_stream_with_flush, run_to_memory_sink
-
-    s1 = events_stream_with_flush(spark, sf_dir)
-    s2 = events_stream_with_flush(spark, sf_dir)
-    purchases = (
-        s1.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-        .withWatermark("ts", "10 minutes")
-    )
-    views = (
-        s2.filter(F.col("event_type") == "view")
-        .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "10 minutes")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("user_id") == F.col("v_user"))
-        & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("view_ts") <= F.col("ts")),
-        "full_outer",
-    ).select(
-        "event_id", "view_id", F.coalesce(F.col("user_id"), F.col("v_user")).alias("user_id")
-    )
-    out = run_to_memory_sink(joined, "stream_full_outer_sink", "append")
+    with replay(spark, sf_dir, "flush") as events:
+        purchases = (
+            events()
+            .filter(F.col("event_type") == "purchase")
+            .select("event_id", "user_id", "ts")
+            .withWatermark("ts", "10 minutes")
+        )
+        views = (
+            events()
+            .filter(F.col("event_type") == "view")
+            .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
+            .withWatermark("view_ts", "10 minutes")
+        )
+        joined = purchases.join(
+            views,
+            (F.col("user_id") == F.col("v_user"))
+            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
+            & (F.col("view_ts") <= F.col("ts")),
+            "full_outer",
+        ).select(
+            "event_id", "view_id", F.coalesce(F.col("user_id"), F.col("v_user")).alias("user_id")
+        )
+        out = run_to_memory_sink(joined, "stream_full_outer_sink", "append")
     # drop the two sentinel rows by their RESERVED id; both are unmatched
     # singletons ("user_id >= 0" was a sign convention — extreme-id tier)
     return out.filter(F.col("user_id") != SENTINEL_UID).orderBy(
@@ -653,7 +645,6 @@ def stream_pyds_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(value) is order-insensitive at the 2-decimal rounding grain used
     here (values are 2-decimal currency-like to begin with)."""
     from etl_file_sync_spark.sources.replay_stream_source import EventsReplayDataSource
-    from etl_file_sync_spark.streaming import run_to_memory_sink
 
     spark.dataSource.register(EventsReplayDataSource)
     s = (
@@ -706,8 +697,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles for the join (broadcast hash), only for the windowed
     agg. The oracle restates dim + join + windows over the same events
     batch-side."""
-    from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink
-
     e = t(spark, sf_dir, "events")
     counts = e.groupBy("event_type").agg(F.count(F.lit(1)).alias("c"))
     avg_c = counts.agg(F.avg("c").alias("a"))
@@ -724,20 +713,20 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("event_type", "type_rank")
     )
-    stream = events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    joined = stream.join(F.broadcast(dim), "event_type")
-    agg = (
-        joined.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type", "type_rank")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "type_rank",
-            "n_events",
-            "total_value",
+    with replay(spark, sf_dir) as events:
+        joined = events().withWatermark("ts", "10 minutes").join(F.broadcast(dim), "event_type")
+        agg = (
+            joined.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type", "type_rank")
+            .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
+            .select(
+                F.col("w.start").alias("window_start"),
+                "event_type",
+                "type_rank",
+                "n_events",
+                "total_value",
+            )
         )
-    )
-    return run_to_memory_sink(agg, "stream_static_enrich_sink", "complete")
+        return run_to_memory_sink(agg, "stream_static_enrich_sink", "complete")
 
 
 @register(
@@ -778,29 +767,30 @@ def stream_upsert_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
-    root = tempfile.mkdtemp(prefix="stream_upsert_")
-    stage = os.path.join(root, "stage")
-    # 3 staged files => 3 micro-batches; upsert correctness is
-    # replay-order-independent (merge keeps the (ts, event_id) max).
-    # The merge itself is RESTART-IDEMPOTENT (streaming/upsert.py:
-    # per-batch-id state dirs, _SUCCESS-gated recovery) — crash behavior
-    # is chaos-tested in tests/test_streaming.py.
-    ev.repartitionByRange(3, "ts").write.mode("overwrite").parquet(stage)
-    schema = spark.read.parquet(stage).schema
+    # the stage and the state dirs live under one root that the scope
+    # removes; the result is checkpointed before it does
+    with tempfile.TemporaryDirectory(prefix="stream_upsert_") as root:
+        stage = os.path.join(root, "stage")
+        # 3 staged files => 3 micro-batches; upsert correctness is
+        # replay-order-independent (merge keeps the (ts, event_id) max).
+        # The merge itself is RESTART-IDEMPOTENT (streaming/upsert.py:
+        # per-batch-id state dirs, _SUCCESS-gated recovery) — crash
+        # behavior is chaos-tested in tests/test_streaming.py.
+        ev.repartitionByRange(3, "ts").write.mode("overwrite").parquet(stage)
+        schema = spark.read.parquet(stage).schema
 
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
-    q = stream.writeStream.foreachBatch(make_upsert(root)).outputMode("update").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    final = final_state(spark, root)
-    return final.select(
-        "user_id",
-        F.col("event_type").alias("last_event_type"),
-        F.col("ts").alias("last_ts"),
-        F.round("value", 2).alias("last_value"),
-    ).orderBy("user_id").localCheckpoint(eager=True)
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+        q = stream.writeStream.foreachBatch(make_upsert(root)).outputMode("update").start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return final_state(spark, root).select(
+            "user_id",
+            F.col("event_type").alias("last_event_type"),
+            F.col("ts").alias("last_ts"),
+            F.round("value", 2).alias("last_value"),
+        ).orderBy("user_id").localCheckpoint(eager=True)
 
 
 @register(
@@ -829,17 +819,14 @@ def stream_alert_rate_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming query (watermark -> window agg -> filter ->
     memory sink, complete mode); at scale the sink is an alert topic
     and the mode update, same plan."""
-    from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink
-
-    stream = events_stream(spark, sf_dir)
-    agg = (
-        stream.where(F.col("event_type") == "error")
-        .withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "15 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_errors"))
-        .where(F.col("n_errors") >= 2)
-        .select(F.col("w.start").alias("window_start"), "n_errors")
-    )
-    return run_to_memory_sink(agg, "stream_alert_rate_sink", "complete").orderBy(
-        "window_start"
-    )
+    with replay(spark, sf_dir) as events:
+        agg = (
+            events()
+            .where(F.col("event_type") == "error")
+            .withWatermark("ts", "30 minutes")
+            .groupBy(F.window("ts", "15 minutes").alias("w"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_errors"))
+            .where(F.col("n_errors") >= 2)
+            .select(F.col("w.start").alias("window_start"), "n_errors")
+        )
+        return run_to_memory_sink(agg, "stream_alert_rate_sink", "complete").orderBy("window_start")

@@ -1,7 +1,6 @@
 """Streaming layer: replay sources and event-time query builders."""
 
 from etl_file_sync_spark.streaming.replay import (  # noqa: F401
-    events_stream,
-    events_stream_with_flush,
+    replay,
     run_to_memory_sink,
 )

@@ -1,23 +1,29 @@
 """Replay the events table as a Structured Streaming source.
 
-FileStreamSource needs a directory, and events.parquet has shipped with
-either microsecond or nanosecond timestamps (see catalog._load_events) —
-this module owns both quirks so streaming queries and tests share one
-code path. In production the source is Kafka: swap readStream.format,
-keep every operator downstream.
+One scope serves every caller: ``with replay(spark, sf_dir, tail) as
+events:`` stages the table as ONE parquet file (plus the tail's extra
+micro-batches) in a private directory, ``events()`` returns an admitted
+streaming frame over it, and the directory is removed when the scope
+exits — nothing staged outlives the query. The ts vintage (int64 nanos
+or TIMESTAMP) is decided in one place, catalog.micros_ts. In production
+the source is Kafka: swap readStream.format, keep every operator
+downstream.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import time
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
+import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EVENTS_RAW_SCHEMA = (
-    "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
-)
+from etl_file_sync_spark.catalog import micros_ts, read_events
 
 # Event-time ADMISSION WINDOW for stateful streaming. The watermark is a
 # global monotone high-water mark: ONE event with a far-future timestamp
@@ -41,6 +47,13 @@ ADMIT_MIN_TS = "1990-01-01 00:00:00"
 ADMIT_MAX_TS = "2035-01-01 00:00:00"
 SENTINEL_UID = -(2**63)  # reserved: replay-harness sentinel user id
 
+# The tails: "none" replays the real events as one micro-batch; "flush"
+# adds a far-future sentinel batch; "late" adds a late batch after that.
+TAILS = ("none", "flush", "late")
+FLUSH_HOURS = 10  # sentinel event time: max(ts) + FLUSH_HOURS
+LATE_EVERY_N = 7  # the late batch re-delivers every N-th event ...
+LATE_DAYS = 10  # ... with its event time shifted this far into the past
+
 
 def _admit(df: DataFrame) -> DataFrame:
     """Apply the event-time admission window (NULL ts fails it too)."""
@@ -53,231 +66,110 @@ def _admit(df: DataFrame) -> DataFrame:
     )
 
 
-def _stage_many(sf_dir: str, stage: str, prefix: str = "events") -> None:
-    """Symlink the events table into ``stage`` as plain parquet FILES.
+def _stage(sf_dir: str, stage: str, tail: str) -> str:
+    """Stage the events table as ONE parquet file, then the tail's files;
+    return the events file's path.
 
-    A tier may ship ``events.parquet`` as a single file OR as a directory
-    of part files (the layout a cluster writer produces); FileStreamSource
-    lists only plain files and silently skips subdirectories, so a
-    directory-shaped table symlinked whole replays ZERO rows. Staging
-    file-by-file keeps both layouts equivalent — with no
-    ``maxFilesPerTrigger`` every staged file lands in the same first
-    micro-batch, so batch composition (and therefore every watermark)
-    is identical across layouts.
+    Reads use ``maxFilesPerTrigger=1``, so the staged events are exactly
+    micro-batch #1 and each tail file one batch after it. A tier may ship
+    ``events.parquet`` as a directory of part files (the layout a cluster
+    writer produces); it is coalesced to one file (driver-side rewrite,
+    replay-harness scope), since each part as its own micro-batch would
+    let the advancing watermark wrongly late-drop rows of later parts. A
+    single-file table is symlinked.
+
+    FileStreamSource orders files by MODIFICATION time, not name, so the
+    write order IS the replay order: events → flush → late. The sentinel
+    rows (user_id = SENTINEL_UID, one 'purchase' + one 'view', ts =
+    max(ts) + FLUSH_HOURS) advance every downstream watermark past all
+    real event-time state, so outer-join null emissions and
+    watermark-scoped dedup state FLUSH deterministically inside one
+    processAllAvailable — the replay-side stand-in for a production
+    stream's continuing flow; callers filter ``user_id != SENTINEL_UID``.
+    The late batch re-delivers every LATE_EVERY_N-th event LATE_DAYS in
+    the past (re-keyed to negative event_ids), far below the watermark: a
+    correct watermarking operator MUST drop every one of them. It comes
+    two batches after the real events because Spark ≥3.5 filters late
+    INPUT with the watermark as of one batch earlier
+    (eventTimeWatermarkForLateEvents lags eventTimeWatermarkForEviction —
+    visible in the StateStoreSave physical node).
+
+    Tail rows are built in pandas on the DRIVER — correct only for the
+    test-scale replay files this module exists for.
     """
     src = os.path.join(sf_dir, "events.parquet")
+    events_file = os.path.join(stage, "00_events.parquet")
     if os.path.isdir(src):
-        for i, f in enumerate(sorted(os.listdir(src))):
-            if f.endswith(".parquet"):
-                os.symlink(os.path.join(src, f), os.path.join(stage, f"{prefix}_{i:03d}.parquet"))
-    else:
-        os.symlink(src, os.path.join(stage, f"{prefix}.parquet"))
-
-
-def _stage_single(sf_dir: str, stage: str, name: str) -> None:
-    """Stage the events table as exactly ONE parquet file.
-
-    The flush/late-replay harnesses rely on ``maxFilesPerTrigger=1`` to
-    make "all real events" micro-batch #1 — a directory-shaped table must
-    therefore be coalesced to one file (driver-side rewrite; replay-
-    harness scope, same posture as the pandas staging passes below), or
-    each part would become its own micro-batch and the advancing
-    watermark would wrongly late-drop rows of later parts.
-    """
-    src = os.path.join(sf_dir, "events.parquet")
-    dst = os.path.join(stage, name)
-    if os.path.isdir(src):
-        import time
-
-        import pyarrow.parquet as pq
-
-        pq.write_table(pq.read_table(src), dst)
-        # FileStreamSource orders batches by mtime; push the coalesced
-        # file firmly BEFORE the sentinel/late files written next (the
-        # symlink branch gets this for free from the old target mtime)
+        pq.write_table(pq.read_table(src), events_file)
+        # push the coalesced file firmly BEFORE the tail files written
+        # next (a symlink reports its old target's mtime for free)
         past = time.time() - 10
-        os.utime(dst, (past, past))
+        os.utime(events_file, (past, past))
     else:
-        os.symlink(src, dst)
-
-
-def events_stream(spark: SparkSession, sf_dir: str, stage_dir: str | None = None) -> DataFrame:
-    """Streaming DataFrame over {sf_dir}/events.parquet with a proper
-    microsecond event-time `ts` column."""
-    stage = stage_dir or tempfile.mkdtemp(prefix="events_stream_")
-    os.makedirs(stage, exist_ok=True)
-    if not any(f.endswith(".parquet") for f in os.listdir(stage)):
-        _stage_many(sf_dir, stage)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from pyspark.sql.types import LongType
-
-    # Sniff the footer once (batch read) to learn which vintage of the
-    # testdata this is: int64 nanos (legacy) or a real timestamp column.
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    if isinstance(batch_schema["ts"].dataType, LongType):
-        return _admit(
-            spark.readStream.schema(EVENTS_RAW_SCHEMA)
-            .parquet(stage)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        )
-    # TIMESTAMP_NTZ → TIMESTAMP: watermarks require the latter; with a
-    # UTC session TZ the cast is instant-preserving (see catalog.py).
-    return _admit(
-        spark.readStream.schema(batch_schema)
-        .parquet(stage)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+        os.symlink(src, events_file)
+    if tail == "none":
+        return events_file
+    # Pin the tail files to the events file's arrow schema: pandas
+    # re-infers column types on write, and an all-NULL string column
+    # (degenerate extract) would otherwise come back as a null/INT32
+    # parquet column the typed stream reader rejects. pandas reads both
+    # ts vintages as datetimes, so the tail needs no vintage branch.
+    schema = pq.read_schema(events_file)
+    pdf = pd.read_parquet(events_file, columns=None if tail == "late" else ["ts"])
+    flush_ts = pdf["ts"].max() + pd.Timedelta(hours=FLUSH_HOURS)
+    sentinel = pd.DataFrame(
+        {
+            "event_id": pd.Series([-1, -2], dtype="int64"),
+            "ts": pd.Series([flush_ts] * 2, dtype=pdf["ts"].dtype),
+            "user_id": pd.Series([SENTINEL_UID] * 2, dtype="int64"),
+            "event_type": ["purchase", "view"],
+            "value": [0.0, 0.0],
+            "props": ["{}", "{}"],
+        }
     )
+    sentinel[schema.names].to_parquet(os.path.join(stage, "01_flush.parquet"), schema=schema)
+    if tail == "late":
+        late = pdf[pdf["event_id"] % LATE_EVERY_N == 0].copy()
+        late["ts"] = late["ts"] - pd.Timedelta(days=LATE_DAYS)
+        late["event_id"] = -late["event_id"] - 1_000_000  # re-delivery, not dupes
+        time.sleep(0.02)  # distinct mtimes on coarse-granularity filesystems
+        late[schema.names].to_parquet(os.path.join(stage, "02_late.parquet"), schema=schema)
+    return events_file
+
+
+@contextmanager
+def replay(
+    spark: SparkSession, sf_dir: str, tail: str = "none"
+) -> Iterator[Callable[[], DataFrame]]:
+    """Scope over a staged replay of {sf_dir}/events.parquet; yields
+    ``events()``, which returns an admitted streaming frame with a
+    microsecond event-time ``ts``. ``tail`` is one of TAILS (see _stage).
+    Each ``events()`` call is its own source over the shared stage.
+    Drive every stream to completion inside the scope: the stage is
+    removed when it exits."""
+    if tail not in TAILS:
+        raise ValueError(f"unknown replay tail {tail!r}; known: {TAILS}")
+    with tempfile.TemporaryDirectory(prefix="events_replay_") as stage:
+        schema = read_events(spark, _stage(sf_dir, stage, tail)).schema
+
+        def events() -> DataFrame:
+            reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+            return _admit(micros_ts(reader.parquet(stage)))
+
+        yield events
 
 
 def run_to_memory_sink(df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
     """Drive a streaming frame to completion into a memory sink and return
-    the materialized batch result (checkpoint-free local replay)."""
+    the materialized batch result (checkpoint-free local replay). The
+    sink's view is dropped once its rows are checkpointed, so the driver
+    does not keep them twice."""
     q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     spark = df.sparkSession
-    return spark.table(name).localCheckpoint(eager=True)
-
-
-def events_stream_with_flush(
-    spark: SparkSession, sf_dir: str, flush_hours: int = 10
-) -> DataFrame:
-    """Streaming events with a far-future sentinel batch staged AFTER the
-    real data (maxFilesPerTrigger=1 ⇒ two micro-batches). The sentinel
-    rows (user_id = SENTINEL_UID, one 'purchase' + one 'view', ts =
-    max(ts) + `flush_hours`) advance every downstream watermark past all
-    real event-time state, so outer-join null emissions and
-    watermark-scoped dedup state FLUSH deterministically inside one
-    processAllAvailable — the replay-side stand-in for a production
-    stream's continuing flow. Callers filter
-    `user_id != SENTINEL_UID` from results.
-    """
-    import pandas as pd
-
-    from pyspark.sql.types import LongType
-
-    stage = tempfile.mkdtemp(prefix="events_flush_")
-    _stage_single(sf_dir, stage, "00_events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    is_nanos = isinstance(batch.schema["ts"].dataType, LongType)
-    hi = batch.agg(F.max("ts")).collect()[0][0]  # scalar pull, not a hot-path collect
-    sent = pd.DataFrame(
-        {
-            "event_id": pd.Series([-1, -2], dtype="int64"),
-            "ts": None,  # filled below per vintage
-            "user_id": pd.Series([SENTINEL_UID, SENTINEL_UID], dtype="int64"),
-            "event_type": ["purchase", "view"],
-            "value": [0.0, 0.0],
-            "props": ["{}", "{}"],
-        }
-    )
-    if is_nanos:
-        sent["ts"] = pd.Series([int(hi) + flush_hours * 3_600_000_000_000] * 2, dtype="int64")
-    else:
-        sent["ts"] = pd.Series([hi + pd.Timedelta(hours=flush_hours)] * 2).astype("datetime64[us]")
-    sent = sent[[f.name for f in batch.schema.fields]]
-    sent.to_parquet(os.path.join(stage, "01_flush.parquet"))
-    reader = spark.readStream.option("maxFilesPerTrigger", 1)
-    if is_nanos:
-        return _admit(
-            reader.schema(EVENTS_RAW_SCHEMA)
-            .parquet(stage)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        )
-    return _admit(
-        reader.schema(batch.schema).parquet(stage).withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-
-
-def events_stream_with_late_replay(
-    spark: SparkSession,
-    sf_dir: str,
-    every_n: int = 7,
-    late_days: int = 10,
-    flush_hours: int = 10,
-) -> DataFrame:
-    """Streaming events staged as THREE micro-batches (maxFilesPerTrigger=1):
-
-    1. the real events,
-    2. the far-future flush sentinel (user_id = SENTINEL_UID) — after this batch
-       the watermark is past every real window, so append-mode results
-       emit, AND the batch gap matters: Spark ≥3.5 filters late INPUT
-       with the watermark as of one batch earlier
-       (eventTimeWatermarkForLateEvents lags eventTimeWatermarkForEviction
-       — visible in the StateStoreSave physical node), so a late batch
-       must arrive ≥2 batches after the data that advanced the watermark,
-    3. a LATE batch — every `every_n`-th event re-delivered with its
-       event time shifted `late_days` into the past (re-keyed to negative
-       event_ids), far below the now-effective late-events watermark: a
-       correct watermarking operator MUST drop every one of them.
-
-    The late rows are the oracle's proof obligation: if the engine
-    wrongly aggregates them, every touched window's count shifts and the
-    value hash mismatches. Callers filter `user_id != SENTINEL_UID`.
-
-    Replay-harness scope: the pandas staging pass below reads the replay
-    parquet on the DRIVER — correct only for the test-scale replay files
-    this module exists for. A production deployment replaces this module
-    with the Kafka source; nothing downstream changes.
-    """
-    import time
-
-    import pandas as pd
-
-    from pyspark.sql.types import LongType
-
-    stage = tempfile.mkdtemp(prefix="events_late_")
-    _stage_single(sf_dir, stage, "00_events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    is_nanos = isinstance(batch.schema["ts"].dataType, LongType)
-    pdf = pd.read_parquet(f"{sf_dir}/events.parquet")
-    late = pdf[pdf["event_id"] % every_n == 0].copy()
-    if is_nanos:
-        late["ts"] = late["ts"].astype("int64") - late_days * 86_400_000_000_000
-        hi = int(pdf["ts"].astype("int64").max())
-        flush_ts = hi + flush_hours * 3_600_000_000_000
-    else:
-        late["ts"] = (late["ts"] - pd.Timedelta(days=late_days)).astype("datetime64[us]")
-        flush_ts = (pdf["ts"].max() + pd.Timedelta(hours=flush_hours))
-    late["event_id"] = -late["event_id"] - 1_000_000  # distinct ids: re-delivery, not dupes
-    sent = pd.DataFrame(
-        {
-            "event_id": pd.Series([-1], dtype="int64"),
-            "ts": [flush_ts],
-            "user_id": pd.Series([SENTINEL_UID], dtype="int64"),
-            "event_type": ["purchase"],
-            "value": [0.0],
-            "props": ["{}"],
-        }
-    )
-    if not is_nanos:
-        sent["ts"] = sent["ts"].astype("datetime64[us]")
-    sent = sent[[f.name for f in batch.schema.fields]]
-    late = late[[f.name for f in batch.schema.fields]]
-    # Pin the staged files to the SOURCE file's arrow schema: pandas
-    # re-infers column types on write, and an all-NULL string column
-    # (degenerate extract) would otherwise come back as a null/INT32
-    # parquet column the typed stream reader rejects.
-    import pyarrow.parquet as pq
-
-    # read from the STAGED single file (the source may be a directory)
-    src_schema = pq.read_schema(os.path.join(stage, "00_events.parquet"))
-    # FileStreamSource orders batches by file MODIFICATION time, so the
-    # write order below IS the replay order: events → flush → late.
-    sent.to_parquet(os.path.join(stage, "01_flush.parquet"), schema=src_schema)
-    time.sleep(0.02)  # distinct mtimes on coarse-granularity filesystems
-    late.to_parquet(os.path.join(stage, "02_late.parquet"), schema=src_schema)
-    reader = spark.readStream.option("maxFilesPerTrigger", 1)
-    if is_nanos:
-        return _admit(
-            reader.schema(EVENTS_RAW_SCHEMA)
-            .parquet(stage)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        )
-    return _admit(
-        reader.schema(batch.schema).parquet(stage).withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    out = spark.table(name).localCheckpoint(eager=True)
+    spark.catalog.dropTempView(name)
+    return out

@@ -10,12 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from etl_file_sync_spark.catalog import load_table
-from etl_file_sync_spark.streaming import events_stream
-
-
-def _events_stream(spark, sf_dir, tmp_path):
-    stage = tmp_path / "events_src"
-    return events_stream(spark, sf_dir, stage_dir=str(stage))
+from etl_file_sync_spark.streaming import replay, run_to_memory_sink
 
 
 def _run_to_completion(df, qname, mode):
@@ -26,14 +21,15 @@ def _run_to_completion(df, qname, mode):
         q.stop()
 
 
-def test_streaming_session_window(spark, sf_dir, tmp_path):
-    stream = _events_stream(spark, sf_dir, tmp_path)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    _run_to_completion(agg, "sess_sink", "complete")
+def test_streaming_session_window(spark, sf_dir):
+    with replay(spark, sf_dir) as events:
+        agg = (
+            events()
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+        )
+        _run_to_completion(agg, "sess_sink", "complete")
     got = spark.sql("SELECT sum(n_events) AS total, count(*) AS n_sessions FROM sess_sink").collect()[0]
     n_total = load_table(spark, sf_dir, "events").count()
     assert got.total == n_total  # every event lands in exactly one session
@@ -99,20 +95,22 @@ def test_apply_in_pandas_with_state_running_count(spark, tmp_path):
     assert rows == {"x": 3, "y": 1, "z": 1}  # state carried across batches
 
 
-def test_available_now_trigger(spark, sf_dir, tmp_path):
+def test_available_now_trigger(spark, sf_dir):
     """Trigger.AvailableNow: drain everything currently available in
     bounded batches, then stop on its own — the batch-over-stream runner
     used for backfills."""
-    stream = _events_stream(spark, sf_dir, tmp_path)
-    counts = stream.groupBy("event_type").count()
-    q = (
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("avail_now_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with replay(spark, sf_dir) as events:
+        q = (
+            events()
+            .groupBy("event_type")
+            .count()
+            .writeStream.outputMode("complete")
+            .format("memory")
+            .queryName("avail_now_sink")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
     total = spark.sql("SELECT sum(count) AS n FROM avail_now_sink").collect()[0].n
     assert total == load_table(spark, sf_dir, "events").count()
 
@@ -268,26 +266,24 @@ def test_left_outer_stream_stream_join_emits_nulls_after_watermark(spark, tmp_pa
     assert "b" in got and got["b"] is None, "expired unmatched left row must emit with NULL right"
 
 
-def test_transform_with_state_running_max(spark, tmp_path):
+def test_transform_with_state_running_max(spark):
     """Spark 4 typed-state surface (transformWithStateInPandas). The
     runtime needs google.protobuf (absent in this image -> clean skip;
     runs on any real cluster image)."""
     pytest.importorskip("google.protobuf")
     from pyspark.sql import functions as F
 
-    from etl_file_sync_spark.streaming import events_stream, run_to_memory_sink
     from etl_file_sync_spark.streaming.stateful import (
         running_max_batch_truth,
         running_max_stream,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    stream = events_stream(spark, sf_dir, str(tmp_path / "stage")).filter(
-        F.col("event_type") == "purchase"
-    )
-    got = run_to_memory_sink(
-        running_max_stream(stream), "tws_running_max_sink", "update"
-    ).orderBy("user_id")
+    with replay(spark, sf_dir) as events:
+        stream = events().filter(F.col("event_type") == "purchase")
+        got = run_to_memory_sink(
+            running_max_stream(stream), "tws_running_max_sink", "update"
+        ).orderBy("user_id")
     from etl_file_sync_spark.catalog import load_table
 
     truth = running_max_batch_truth(
@@ -398,3 +394,79 @@ def test_upsert_chaos_crash_recovery(spark, sf_dir, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, truth)
+
+
+def test_replay_builds_leave_nothing_behind(spark, sf_dir, tmp_path, monkeypatch):
+    """Nothing a streaming query stages outlives it: the replay stages
+    (single-file symlink, flush and late tails) and the upsert root are
+    removed, and no memory-sink view stays registered."""
+    import os
+    import tempfile
+
+    from etl_file_sync_spark.queries import REGISTRY
+    from etl_file_sync_spark.session import prep
+
+    prep(spark)  # ships the package zip (its own temp file) up front
+    for table in spark.catalog.listTables():
+        if table.name.endswith("_sink"):
+            spark.catalog.dropTempView(table.name)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in (
+        "stream_tumbling_counts",
+        "stream_full_outer_join",
+        "stream_late_data_drop",
+        "stream_upsert_materialize",
+    ):
+        REGISTRY[name].build(spark, sf_dir)
+    assert os.listdir(tmp_path) == []
+    assert [x.name for x in spark.catalog.listTables() if x.name.endswith("_sink")] == []
+
+
+def test_replay_reads_both_ts_vintages_alike(spark, tmp_path):
+    """events.ts has shipped as TIMESTAMP(NANOS) and TIMESTAMP(MICROS):
+    the batch table and the replay (late tail: events, flush sentinel,
+    late batch) give the same rows for both, nanos truncated to micros."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_file_sync_spark.streaming.replay import FLUSH_HOURS, LATE_DAYS, SENTINEL_UID
+
+    t0 = pd.Timestamp("2024-01-01 12:00:00")
+    ts = [t0, t0 + pd.Timedelta(minutes=5), t0 + pd.Timedelta(hours=1, nanoseconds=789)]
+    got = {}
+    for unit in ("ns", "us"):
+        d = tmp_path / unit
+        d.mkdir()
+        table = pa.table(
+            {
+                "event_id": pa.array([6, 7, 8], pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("ns")).cast(pa.timestamp(unit), safe=False),
+                "user_id": pa.array([1, 1, 2], pa.int64()),
+                "event_type": ["view", "purchase", "view"],
+                "value": [1.5, None, 3.0],
+                "props": ["{}", None, '{"a": 1}'],
+            }
+        )
+        pq.write_table(table, d / "events.parquet")
+        batch = load_table(spark, str(d), "events")
+        with replay(spark, str(d), "late") as events:
+            stream = run_to_memory_sink(events(), f"vintage_{unit}_sink", "append")
+        got[unit] = [
+            sorted(tuple(r) for r in frame.select(*batch.columns).collect())
+            for frame in (batch, stream)
+        ]
+    assert got["ns"] == got["us"]
+    batch_rows, stream_rows = got["us"]
+    assert batch_rows[-1][1] == dt.datetime(2024, 1, 1, 13, 0, 0)  # nanos truncated
+    flush = t0 + pd.Timedelta(hours=1 + FLUSH_HOURS)
+    late = (t0 + pd.Timedelta(minutes=5) - pd.Timedelta(days=LATE_DAYS)).to_pydatetime()
+    assert stream_rows == sorted(
+        batch_rows
+        + [
+            (-1, flush.to_pydatetime(), SENTINEL_UID, "purchase", 0.0, "{}"),
+            (-2, flush.to_pydatetime(), SENTINEL_UID, "view", 0.0, "{}"),
+            (-1_000_007, late, 1, "purchase", None, None),
+        ]
+    )
