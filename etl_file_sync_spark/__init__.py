@@ -13,10 +13,15 @@ service), re-expressed Spark-first:
 - ``operators/`` — LLM-data-pipeline operators: dedup (exact, MinHash-LSH,
   SimHash, n-gram Jaccard, embedding-cosine), similarity search, text
   analysis, multimodal binary columns, as-of/range joins.
-- ``streaming/`` — event-time windows, watermarks, sessionization,
-  stateful dedup over replayed streams.
+- ``streaming/`` — the scoped event replay that streaming queries run
+  over, and the restart-idempotent foreachBatch upsert.
+- ``sources/``   — the ``events_replay`` streaming Python Data Source.
+- ``functions/`` — reusable Column-expression builders, including the
+  numeric-string cast grammar shared with the oracles.
 
-Everything is built on public Apache Spark APIs only.
+Everything is built on public Apache Spark APIs, apart from the one
+private JVM handle that operators/bpe.py reads (pinned by
+tests/test_private_api.py).
 """
 
 __version__ = "0.1.0"

@@ -127,12 +127,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Return df with exact duplicates removed (min-id row survives)."""
-    keep = exact_dedup_groups(df, id_col, text_col).select(F.col("keep_id").alias(id_col))
-    return df.join(keep, id_col, "left_semi")
-
-
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle)."""
     base, grams = _token_windows(df, id_col, text_col, n, F.greatest(F.size("_toks") - n, F.lit(0)))

@@ -315,14 +315,6 @@ class _BitWriter:
             self.put((1 << pad) - 1, pad)  # 1-pad per spec
         return bytes(self.out)
 
-    def restart(self, idx: int) -> None:
-        """1-pad to a byte boundary and emit RSTn — the encoder side of
-        the restart-marker protocol (decoder: _BitReader.sync_restart)."""
-        if self.n:
-            pad = 8 - self.n
-            self.put((1 << pad) - 1, pad)
-        self.out += bytes([0xFF, 0xD0 + (idx % 8)])
-
 
 def encode_flat_jpeg(width: int, height: int, y: int, cb: int = 128, cr: int = 128) -> bytes:
     """Spec-valid baseline 4:4:4 JFIF whose every 8×8 block is flat at
@@ -358,46 +350,3 @@ def encode_flat_jpeg(width: int, height: int, y: int, cb: int = 128, cr: int = 1
             wtr.put(code, ln)
     return b"\xff\xd8" + qtab + sof + dhts + sos + wtr.finish() + b"\xff\xd9"
 
-
-def encode_gray_blocks_jpeg(block_vals, restart_interval: int = 0) -> bytes:
-    """Spec-valid baseline GRAYSCALE JFIF with one flat 8×8 block per
-    entry of `block_vals` (a 2-D grid of 0..255 values): exercises the
-    single-component path and the DC prediction chain with positive AND
-    negative diffs, still arithmetically exact to decode."""
-    import numpy as np
-
-    grid = np.asarray(block_vals, dtype=np.int64)
-    bh, bw = grid.shape
-    width, height = bw * 8, bh * 8
-    qtab = b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
-    sof = b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, height, width, 1) + bytes([1, 0x11, 0])
-    dhts = _dht(0, 0, _DC_COUNTS, _DC_VALUES) + _dht(1, 0, _AC_COUNTS, _AC_VALUES)
-    dri = (
-        b"\xff\xdd" + struct.pack(">HH", 4, restart_interval) if restart_interval else b""
-    )
-    sos = b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    dc_codes = _huff_codes(_DC_COUNTS, _DC_VALUES)
-    ac_codes = _huff_codes(_AC_COUNTS, _AC_VALUES)
-    wtr = _BitWriter()
-    pred = 0
-    mcu = 0
-    rst = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                wtr.restart(rst)
-                rst += 1
-                pred = 0  # DC prediction resets at every restart
-            mcu += 1
-            target = 8 * (int(grid[by, bx]) - 128)
-            diff = target - pred
-            pred = target
-            t = 0 if diff == 0 else int(abs(diff)).bit_length()
-            ln, code = dc_codes[t]
-            wtr.put(code, ln)
-            if t:
-                mag = diff if diff >= 0 else diff + (1 << t) - 1
-                wtr.put(mag, t)
-            ln, code = ac_codes[0x00]
-            wtr.put(code, ln)
-    return b"\xff\xd8" + qtab + sof + dhts + dri + sos + wtr.finish() + b"\xff\xd9"

@@ -1,7 +1,7 @@
 """MERGE INTO / CDC upsert emulation without a lakehouse format.
 
-Delta/Iceberg jars aren't in this build (sources.io gates them), so the
-engine supplies the plan-level equivalents:
+Delta/Iceberg jars aren't in this build, so the engine supplies the
+plan-level equivalents:
 
 - merge_upsert: MERGE INTO target USING source ON key
   WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
@@ -26,14 +26,6 @@ def merge_upsert(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
         raise ValueError(f"schema mismatch: {sorted(target.columns)} vs {sorted(source.columns)}")
     untouched = target.join(source.select(key), key, "left_anti")
     return untouched.unionByName(source)
-
-
-def merge_with_deletes(
-    target: DataFrame, upserts: DataFrame, deletes: DataFrame, key: str
-) -> DataFrame:
-    """MERGE with WHEN MATCHED DELETE: apply upserts, then drop delete keys."""
-    merged = merge_upsert(target, upserts, key)
-    return merged.join(deletes.select(key), key, "left_anti")
 
 
 def scd2_apply(

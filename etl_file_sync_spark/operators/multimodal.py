@@ -29,11 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "doc_id BIGINT, media_type STRING, payload BINARY, "
-    "meta STRUCT<byte_len: BIGINT, sha256: STRING, width: INT, height: INT>"
-)
-
 FEATURE_SCHEMA = "doc_id BIGINT, media_type STRING, byte_len BIGINT, feature ARRAY<DOUBLE>"
 
 

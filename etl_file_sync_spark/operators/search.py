@@ -1,4 +1,4 @@
-"""Full-text search operators: inverted-index postings, TF-IDF, BM25.
+"""Full-text search operators: inverted-index postings, BM25.
 
 The keyword-retrieval face of the corpus engine — the lexical complement
 to the embedding similarity path (operators/similarity.py). Everything is
@@ -43,11 +43,6 @@ def postings(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> D
     """Inverted-index postings: (term, id, tf). One explode + one
     partial-aggregated groupBy — the only wide op in the index build."""
     return tokens(df, id_col, text_col).groupBy("term", "id").agg(F.count(F.lit(1)).alias("tf"))
-
-
-def doc_lengths(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, dl) token counts per document."""
-    return tokens(df, id_col, text_col).groupBy("id").agg(F.count(F.lit(1)).alias("dl"))
 
 
 def term_doc_freq(post: DataFrame) -> DataFrame:
@@ -150,34 +145,3 @@ def bm25_topk(
         F.col("id").alias(id_col), F.round("score", 4).alias("bm25"), "rnk"
     )
 
-
-def tfidf_top_terms(
-    df: DataFrame,
-    per_doc: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Top `per_doc` TF-IDF terms per document (tfidf = tf · ln(N/df)).
-
-    The per-doc keyword extraction primitive (doc tagging, near-dup
-    explanation). One window over (id) ranks terms; ties break on the
-    term itself so output is deterministic across engines. df (document
-    frequency) is a second partial-agg groupBy broadcast back onto the
-    postings. Returns (doc_id, term, tfidf, trank).
-    """
-    from pyspark.sql import Window as W
-
-    post = postings(df, id_col, text_col)
-    dft = term_doc_freq(post)
-    n_docs = df.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    scored = (
-        post.join(F.broadcast(dft), "term")
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn("tfidf", F.col("tf") * F.log(F.col("n_docs") / F.col("df")))
-    )
-    w = W.partitionBy("id").orderBy(F.round("tfidf", 6).desc(), F.col("term"))
-    return (
-        scored.withColumn("trank", F.row_number().over(w))
-        .filter(F.col("trank") <= per_doc)
-        .select(F.col("id").alias(id_col), "term", F.round("tfidf", 4).alias("tfidf"), "trank")
-    )

@@ -47,7 +47,6 @@ _A_LO = "abcdefghijklmnopqrstuvwxyz"
 
 #: DuckDB spelling of the same fold, for oracle SQL: ASCII_LOWER_SQL.format(x=...)
 ASCII_LOWER_SQL = f"translate({{x}}, '{_A_UP}', '{_A_LO}')"
-ASCII_UPPER_SQL = f"translate({{x}}, '{_A_LO}', '{_A_UP}')"
 
 
 def ascii_lower(col: Column | str) -> Column:

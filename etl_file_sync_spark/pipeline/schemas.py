@@ -32,15 +32,6 @@ JOB_SCHEMA = T.StructType(
     ]
 )
 
-DLQ_SCHEMA = T.StructType(
-    [
-        T.StructField("original_message", T.StringType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("timestamp", T.TimestampType()),
-        T.StructField("retry_count", T.IntegerType()),
-    ]
-)
-
 SERVER_SCHEMA = T.StructType(
     [
         T.StructField("hostname", T.StringType(), False),

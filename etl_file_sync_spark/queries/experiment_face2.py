@@ -953,13 +953,6 @@ def stat_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CRAMER_PAIR_SQL = """
-      SELECT '{label}' AS pair, {row_expr} AS r, {col_expr} AS c,
-             CAST(count(*) AS BIGINT) AS o
-      FROM {tbl} GROUP BY {row_expr}, {col_expr}
-"""
-
-
 @register(
     "stat_cramers_v_matrix",
     """

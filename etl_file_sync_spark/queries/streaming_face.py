@@ -275,18 +275,10 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
         )
         out = run_to_memory_sink(agg, "stream_late_drop_sink", "append")
-    # the sentinel's own far-future window never emits (watermark stops
-    # short of it); guard against it anyway for replay-parameter changes.
-    # Max over the ADMITTED rows only: an unfiltered max(ts) would let a
-    # single poked 2262 timestamp push the bound past every window and
-    # silently void the guard (time-edge tier).
-    hi = (
-        t(spark, sf_dir, "events")
-        .where(F.col("ts") < F.lit(ADMIT_MAX_TS).cast("timestamp"))
-        .agg(F.max("ts"))
-        .collect()[0][0]
-    )
-    return out.filter(F.col("window_start") <= hi).orderBy("window_start", "event_type")
+    # No window after the last admitted event can emit: the sentinel's
+    # window ends past the watermark it sets, and the late rows sit 10
+    # days behind it.
+    return out.orderBy("window_start", "event_type")
 
 
 @register(
@@ -752,9 +744,9 @@ def stream_upsert_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     THREE genuine micro-batches (maxFilesPerTrigger=1 over a 3-file
     stage), and each batch incrementally merges 'latest event per user'
     into a parquet state table (read-modify-write into an alternating
-    per-batch directory — the sandbox stand-in for Delta/Iceberg MERGE,
-    which is exactly what foreachBatch would call with the jars
-    present; see sources/io.py gates). Latest-per-user inside each
+    per-batch directory — the plain-parquet stand-in for Delta/Iceberg
+    MERGE, which is exactly what foreachBatch would call with the jars
+    present; see streaming/upsert.py). Latest-per-user inside each
     merge is a user-partitioned row_number (ts, event_id tiebreak), so
     state stays one row per user and the merge cost is
     state + batch, never history. The final state table must equal the

@@ -12,9 +12,41 @@ import os
 import shutil
 import tempfile
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 _PYFILES_SHIPPED: set[int] = set()
+
+# Runtime-mutable SQL confs that decide result values or plan quality:
+# get_spark builds them into its session, and prep sets them on a session
+# built elsewhere (the correctness driver supplies its own).
+SQL_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    # Let AQE re-plan partitioning when reading CACHED frames
+    # (off by default): operator-internal caches (rankstats value
+    # frames, shingle/signature frames) otherwise pin every
+    # downstream stage to the static shuffle-partition count, so
+    # tiny k-row cached aggregates fan out 32 near-empty tasks per
+    # consumer. Scale-correct at any size: AQE picks counts from
+    # runtime bytes, exactly as it does for uncached exchanges.
+    # Interleaved A/B at sf0.1: rfm 5.18->3.56 s, kaplan 3.16->2.22,
+    # brown-forsythe 3.53->2.92; no query measured worse.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # Non-ANSI arithmetic: x/0 -> NULL, matching the DuckDB oracle
+    # (DuckDB: SELECT 1/0 IS NULL) and the pipeline posture a 100-TB
+    # job needs — one empty group / degenerate partition must yield
+    # NULL rows, not kill the whole job (Spark 4 flipped the default
+    # to ANSI=raise; every division-by-zero in a degenerate-input
+    # sweep then aborts the query where the oracle returns NULL).
+    "spark.sql.ansi.enabled": "false",
+    # ansi=false silently flips legacy.sizeOfNull to true (its
+    # default is !ansi.enabled), making size(NULL) return -1 — a
+    # NULL-text doc would report -1 tokens and shard plans would
+    # accumulate NEGATIVE token totals. Pin the modern semantics:
+    # size(NULL) = NULL, like DuckDB's len(NULL).
+    "spark.sql.legacy.sizeOfNull": "false",
+}
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -30,7 +62,10 @@ def _ship_package(spark: SparkSession) -> None:
     if key in _PYFILES_SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    stage = tempfile.mkdtemp(prefix="etl_pkg_")
+    # Stage under the context's SparkFiles root, which Spark deletes when
+    # the context stops. Not removed earlier: a cluster executor fetches
+    # the zip from the driver's file server by this path.
+    stage = tempfile.mkdtemp(prefix="etl_pkg_", dir=SparkFiles.getRootDirectory())
     zip_base = os.path.join(stage, "etl_file_sync_spark")
     zip_path = shutil.make_archive(zip_base, "zip", os.path.dirname(pkg_dir), "etl_file_sync_spark")
     spark.sparkContext.addPyFile(zip_path)
@@ -48,38 +83,15 @@ def get_spark(app_name: str = "etl_file_sync_spark", cpus: int | None = None) ->
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Let AQE re-plan partitioning when reading CACHED frames
-        # (off by default): operator-internal caches (rankstats value
-        # frames, shingle/signature frames) otherwise pin every
-        # downstream stage to the static shuffle-partition count, so
-        # tiny k-row cached aggregates fan out 32 near-empty tasks per
-        # consumer. Scale-correct at any size: AQE picks counts from
-        # runtime bytes, exactly as it does for uncached exchanges.
-        # Interleaved A/B at sf0.1: rfm 5.18->3.56 s, kaplan 3.16->2.22,
-        # brown-forsythe 3.53->2.92; no query measured worse.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Non-ANSI arithmetic: x/0 -> NULL, matching the DuckDB oracle
-        # (DuckDB: SELECT 1/0 IS NULL) and the pipeline posture a 100-TB
-        # job needs — one empty group / degenerate partition must yield
-        # NULL rows, not kill the whole job (Spark 4 flipped the default
-        # to ANSI=raise; every division-by-zero in a degenerate-input
-        # sweep then aborts the query where the oracle returns NULL).
-        .config("spark.sql.ansi.enabled", "false")
-        # ansi=false silently flips legacy.sizeOfNull to true (its
-        # default is !ansi.enabled), making size(NULL) return -1 — a
-        # NULL-text doc would report -1 tokens and shard plans would
-        # accumulate NEGATIVE token totals. Pin the modern semantics:
-        # size(NULL) = NULL, like DuckDB's len(NULL).
-        .config("spark.sql.legacy.sizeOfNull", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    for k, v in SQL_CONFS.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -106,14 +118,7 @@ def prep(spark: SparkSession) -> SparkSession:
     if key in _PREPPED:
         return spark
     _PREPPED.add(key)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    # oracle-parity division semantics (x/0 -> NULL, like DuckDB); see
-    # get_spark — ansi.enabled is runtime-mutable so it applies to the
-    # driver's externally-built session too
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    # see get_spark: ansi=false would otherwise flip size(NULL) to -1
-    spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
+    for k, v in SQL_CONFS.items():
+        spark.conf.set(k, v)
     _ship_package(spark)
     return spark

@@ -1,8 +1,1 @@
-"""Source/sink connectors: every format the engine reads and writes."""
-
-from etl_file_sync_spark.sources.io import (  # noqa: F401
-    FORMATS,
-    read_any,
-    read_binary_files,
-    write_any,
-)
+"""Streaming sources: the ``events_replay`` Python Data Source."""

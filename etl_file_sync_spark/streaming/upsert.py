@@ -10,9 +10,9 @@ the newest COMMITTED state directory strictly below the replaying batch
 id, where "committed" means the ``_SUCCESS`` marker Spark writes last —
 an interrupted (torn) write leaves no marker and is invisible.
 
-Re-expressed over plain parquet because the sandbox has no Delta/Iceberg
-jars (sources/io.py gates); with the jars present, ``upsert`` becomes a
-single ``MERGE INTO`` and everything else stands.
+Re-expressed over plain parquet because the build ships no
+Delta/Iceberg jars; with the jars present, ``upsert`` becomes a single
+``MERGE INTO`` and everything else stands.
 
 Used by queries/streaming_face.py::stream_upsert_materialize and the
 crash-recovery chaos test in tests/test_streaming.py.

@@ -75,6 +75,36 @@ def duck():
     con.close()
 
 
+@pytest.fixture(scope="session")
+def events_pd(sf_dir):
+    """The events table as pandas, read once. Tests must not mutate it:
+    take a ``.copy()`` before adding columns."""
+    return pd.read_parquet(f"{sf_dir}/events.parquet")
+
+
+def read_pq(sf_dir: str, name: str) -> pd.DataFrame:
+    """Table ``name`` of ``sf_dir`` as pandas."""
+    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+
+
+def query_pd(spark, sf_dir: str, name: str) -> pd.DataFrame:
+    """Registry query ``name`` built and collected to pandas; asserts it
+    returned at least one row."""
+    from etl_file_sync_spark.queries import REGISTRY
+
+    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
+    assert len(pdf) >= 1
+    return pdf
+
+
+def assert_close_dp(got, ref, dp, msg=""):
+    """``got`` equals ``ref`` up to rounding at ``dp`` decimal places
+    (plus a relative float slack)."""
+    assert abs(float(got) - float(ref)) <= 0.51 * 10**-dp + 5e-9 * max(
+        1.0, abs(float(ref))
+    ), (msg, got, ref)
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Canonicalize a result frame the way the driver compares: columns
     sorted by name, rows sorted by all columns, floats rounded."""

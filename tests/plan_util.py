@@ -1,4 +1,8 @@
-"""Introspect Spark physical plans (string-level, public explain output)."""
+"""Plan-shape helpers for tests that assert plan QUALITY, not just
+result correctness: filters pushed to the scan, dimensions broadcast, no
+shuffle where none is needed. They read the explain text through the
+private ``DataFrame._jdf`` handle, which the engine itself never touches
+(tests/test_private_api.py)."""
 
 from __future__ import annotations
 

@@ -11,15 +11,12 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_weighted_median_matches_python(spark, sf_dir):
     got = REGISTRY["agg_weighted_median"].build(spark, sf_dir).collect()[0]
-    li = _pq(sf_dir, "lineitem")
+    li = read_pq(sf_dir, "lineitem")
     v = (li.l_extendedprice * 100).round().astype("int64")
     w = li.l_quantity.astype("int64")
     g = pd.DataFrame({"v": v, "w": w}).groupby("v").w.sum().sort_index()
@@ -44,7 +41,7 @@ def test_weighted_median_matches_python(spark, sf_dir):
 def test_hapax_profile_matches_python(spark, sf_dir):
     got = {r["source"]: r for r in
            REGISTRY["text_hapax_profile"].build(spark, sf_dir).collect()}
-    d = _pq(sf_dir, "documents")
+    d = read_pq(sf_dir, "documents")
     for src, grp in d.groupby("source"):
         cnt: Counter = Counter()
         for text in grp.text:
@@ -63,10 +60,10 @@ def test_hapax_profile_matches_python(spark, sf_dir):
 def test_smd_balance_matches_numpy(spark, sf_dir):
     got = {r["stratum"]: r for r in
            REGISTRY["stat_smd_balance"].build(spark, sf_dir).collect()}
-    o = _pq(sf_dir, "orders")
-    c = _pq(sf_dir, "customer")
-    nn = _pq(sf_dir, "nation")
-    rr = _pq(sf_dir, "region")
+    o = read_pq(sf_dir, "orders")
+    c = read_pq(sf_dir, "customer")
+    nn = read_pq(sf_dir, "nation")
+    rr = read_pq(sf_dir, "region")
     df = (
         o.merge(c, left_on="o_custkey", right_on="c_custkey")
         .merge(nn, left_on="c_nationkey", right_on="n_nationkey")

@@ -11,15 +11,12 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_tost_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_tost_equivalence"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     p = e[e.event_type == "purchase"]
     c = (p.value * 100).round().astype("int64")
     a = c[p.user_id % 2 == 0].to_numpy(dtype=float)
@@ -45,7 +42,7 @@ def test_tost_matches_numpy(spark, sf_dir):
 def test_code_detection_matches_python(spark, sf_dir):
     got = {r["source"]: r for r in
            REGISTRY["text_code_detection"].build(spark, sf_dir).collect()}
-    d = _pq(sf_dir, "documents")
+    d = read_pq(sf_dir, "documents")
     sym_re = re.compile(r"[{}();=<>\[\]]")
     for src, grp in d.groupby("source"):
         syms, digs, scores = [], [], []
@@ -67,7 +64,7 @@ def test_code_detection_matches_python(spark, sf_dir):
 
 def test_error_budget_burn_matches_pandas(spark, sf_dir):
     got = REGISTRY["ops_error_budget_burn"].build(spark, sf_dir).collect()
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     d = (
         pd.DataFrame(
             {

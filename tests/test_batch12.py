@@ -10,15 +10,12 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_pettitt_matches_numpy(spark, sf_dir):
     got = REGISTRY["ts_pettitt_changepoint"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     daily = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate).dt.normalize(), "c": cents})
@@ -48,7 +45,7 @@ def test_pettitt_matches_numpy(spark, sf_dir):
 
 def test_log2_histogram_matches_python(spark, sf_dir):
     got = REGISTRY["agg_log2_histogram"].build(spark, sf_dir).collect()
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     p = e[(e.event_type == "purchase") & (e.value > 0)]
     c = (p.value * 100).round().astype("int64")
     buckets = c.apply(lambda x: int(x).bit_length())

@@ -11,15 +11,12 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_mood_median_matches_python(spark, sf_dir):
     got = REGISTRY["stat_mood_median_test"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     v = (o.o_totalprice * 100).round().astype("int64").to_numpy()
     grp = o.o_orderpriority.to_numpy()
     # lower median: smallest value whose inclusive cum count reaches n/2
@@ -46,7 +43,7 @@ def test_mood_median_matches_python(spark, sf_dir):
 def test_bigram_entropy_matches_python(spark, sf_dir):
     got = {r["source"]: r for r in
            REGISTRY["text_bigram_entropy_rate"].build(spark, sf_dir).collect()}
-    d = _pq(sf_dir, "documents")
+    d = read_pq(sf_dir, "documents")
     for src, grp in d.groupby("source"):
         c12: Counter = Counter()
         for text in grp.text:
@@ -69,7 +66,7 @@ def test_bigram_entropy_matches_python(spark, sf_dir):
 
 def test_stream_upsert_matches_batch_latest(spark, sf_dir):
     got = REGISTRY["stream_upsert_materialize"].build(spark, sf_dir).collect()
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     e = e.sort_values(["ts", "event_id"]).groupby("user_id").tail(1)
     expect = e.set_index("user_id").sort_index()
     assert len(got) == len(expect)
@@ -84,7 +81,7 @@ def test_stream_upsert_matches_batch_latest(spark, sf_dir):
 
 def test_alert_rate_threshold_matches_pandas(spark, sf_dir):
     got = REGISTRY["stream_alert_rate_threshold"].build(spark, sf_dir).collect()
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     err = e[e.event_type == "error"]
     w = (pd.to_datetime(err.ts).astype("datetime64[ns]").astype("int64") // 10**9 // 900) * 900
     counts = w.value_counts()
@@ -97,10 +94,10 @@ def test_alert_rate_threshold_matches_pandas(spark, sf_dir):
 
 def test_g_test_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_g_test_independence"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
-    c = _pq(sf_dir, "customer")
-    nn = _pq(sf_dir, "nation")
-    rr = _pq(sf_dir, "region")
+    o = read_pq(sf_dir, "orders")
+    c = read_pq(sf_dir, "customer")
+    nn = read_pq(sf_dir, "nation")
+    rr = read_pq(sf_dir, "region")
     df = (
         o.merge(c, left_on="o_custkey", right_on="c_custkey")
         .merge(nn, left_on="c_nationkey", right_on="n_nationkey")
@@ -143,7 +140,7 @@ def test_f1_sweep_matches_python(spark, sf_dir):
 
 def test_backtest_seasonal_naive_matches_pandas(spark, sf_dir):
     got = REGISTRY["ts_backtest_seasonal_naive"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     daily = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate).dt.normalize(), "c": cents})
@@ -173,7 +170,7 @@ def test_user_kfold_matches_python(spark, sf_dir):
     import hashlib
 
     got = REGISTRY["sample_user_kfold"].build(spark, sf_dir).collect()
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     folds = {
         u: int(hashlib.md5(f"{u}:0".encode()).hexdigest()[:8], 16) % 5
         for u in e.user_id.unique()
@@ -200,7 +197,7 @@ def test_markov_attribution_matches_python(spark, sf_dir):
 
     got = {r["channel"]: r for r in
            REGISTRY["behavior_markov_attribution"].build(spark, sf_dir).collect()}
-    e = _pq(sf_dir, "events").sort_values(["user_id", "ts", "event_id"])
+    e = read_pq(sf_dir, "events").sort_values(["user_id", "ts", "event_id"])
     pairs: dict[tuple[str, str], int] = defaultdict(int)
     for _, g in e.groupby("user_id"):
         types = list(g.event_type)
@@ -260,7 +257,7 @@ def test_bowker_matches_python(spark, sf_dir):
     from collections import defaultdict
 
     got = REGISTRY["stat_bowker_symmetry"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events").sort_values(["user_id", "ts", "event_id"])
+    e = read_pq(sf_dir, "events").sort_values(["user_id", "ts", "event_id"])
     tr: dict[tuple[str, str], int] = defaultdict(int)
     for _, g in e.groupby("user_id"):
         types = list(g.event_type)
@@ -307,7 +304,7 @@ def test_mcc_matches_python(spark, sf_dir):
 
 def test_page_trend_matches_python(spark, sf_dir):
     got = REGISTRY["stat_page_trend"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     cell = (
         pd.DataFrame(
@@ -340,7 +337,7 @@ def test_page_trend_matches_python(spark, sf_dir):
 
 def test_variance_ratio_matches_numpy(spark, sf_dir):
     got = REGISTRY["ts_variance_ratio"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     y = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate), "c": cents})
@@ -364,7 +361,7 @@ def test_variance_ratio_matches_numpy(spark, sf_dir):
 def test_new_vs_returning_matches_pandas(spark, sf_dir):
     got = {pd.Timestamp(r["day"]): r for r in
            REGISTRY["behavior_new_vs_returning"].build(spark, sf_dir).collect()}
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     du = (
         pd.DataFrame({"day": pd.to_datetime(e.ts).dt.normalize(), "u": e.user_id})
         .drop_duplicates()
@@ -388,10 +385,10 @@ def test_new_vs_returning_matches_pandas(spark, sf_dir):
 def test_split_quality_matches_python(spark, sf_dir):
     got = {r["feature"]: r for r in
            REGISTRY["ml_split_quality"].build(spark, sf_dir).collect()}
-    o = _pq(sf_dir, "orders")
-    c = _pq(sf_dir, "customer")
-    nn = _pq(sf_dir, "nation")
-    rr = _pq(sf_dir, "region")
+    o = read_pq(sf_dir, "orders")
+    c = read_pq(sf_dir, "customer")
+    nn = read_pq(sf_dir, "nation")
+    rr = read_pq(sf_dir, "region")
     df = (
         o.merge(c, left_on="o_custkey", right_on="c_custkey")
         .merge(nn, left_on="c_nationkey", right_on="n_nationkey")
@@ -426,7 +423,7 @@ def test_split_quality_matches_python(spark, sf_dir):
 
 def test_sign_test_matches_python(spark, sf_dir):
     got = REGISTRY["stat_sign_test_weekly"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     daily = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate).dt.normalize(), "c": cents})
@@ -454,7 +451,7 @@ def test_sign_test_matches_python(spark, sf_dir):
 
 def test_breusch_pagan_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_breusch_pagan"].build(spark, sf_dir).collect()[0]
-    li = _pq(sf_dir, "lineitem")
+    li = read_pq(sf_dir, "lineitem")
     x = li.l_quantity.to_numpy(dtype=float)
     y = (li.l_extendedprice * 100).round().to_numpy(dtype=float)
     n = len(x)
@@ -473,7 +470,7 @@ def test_breusch_pagan_matches_numpy(spark, sf_dir):
 
 def test_runs_up_down_matches_python(spark, sf_dir):
     got = REGISTRY["stat_runs_up_down"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     y = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate), "c": cents})

@@ -10,14 +10,11 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def _daily(sf_dir: str) -> pd.DataFrame:
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     return (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate).dt.normalize(), "c": cents})

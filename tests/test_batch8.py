@@ -10,19 +10,16 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_referential_integrity_matches_pandas(spark, sf_dir):
     got = {r["fk"]: r for r in
            REGISTRY["dq_referential_integrity"].build(spark, sf_dir).collect()}
-    li = _pq(sf_dir, "lineitem")
-    o = _pq(sf_dir, "orders")
-    c = _pq(sf_dir, "customer")
-    n = _pq(sf_dir, "nation")
+    li = read_pq(sf_dir, "lineitem")
+    o = read_pq(sf_dir, "orders")
+    c = read_pq(sf_dir, "customer")
+    n = read_pq(sf_dir, "nation")
     cases = [
         ("lineitem.l_orderkey -> orders", li.l_orderkey, set(o.o_orderkey)),
         ("orders.o_custkey -> customer", o.o_custkey, set(c.c_custkey)),
@@ -73,7 +70,7 @@ def test_lift_gains_matches_python(spark, sf_dir):
 
 def test_cochran_armitage_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_cochran_armitage"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     score = o.o_orderpriority.str[0].astype(int).to_numpy()
     suc = (o.o_totalprice > 250000).astype(int).to_numpy()
     nt, xt = len(score), int(suc.sum())
@@ -90,7 +87,7 @@ def test_cochran_armitage_matches_numpy(spark, sf_dir):
 
 def test_pacf_matches_numpy(spark, sf_dir):
     got = REGISTRY["ts_pacf_durbin"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     y = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate), "c": cents})

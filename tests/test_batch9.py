@@ -8,16 +8,13 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_dau_stickiness_matches_pandas(spark, sf_dir):
     got = {pd.Timestamp(r["day"]): r for r in
            REGISTRY["behavior_dau_stickiness"].build(spark, sf_dir).collect()}
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     du = (
         pd.DataFrame({"day": pd.to_datetime(e.ts).dt.normalize(), "u": e.user_id})
         .drop_duplicates()
@@ -37,7 +34,7 @@ def test_dau_stickiness_matches_pandas(spark, sf_dir):
 
 def test_time_to_convert_matches_numpy(spark, sf_dir):
     got = REGISTRY["funnel_time_to_convert"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     ts_us = pd.to_datetime(e.ts).astype("datetime64[ns]").astype("int64") // 1000
     df = pd.DataFrame({"u": e.user_id, "t": e.event_type, "us": ts_us})
     fv = df[df.t == "view"].groupby("u").us.min()
@@ -59,7 +56,7 @@ def test_time_to_convert_matches_numpy(spark, sf_dir):
 
 def test_partial_correlation_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_partial_correlation"].build(spark, sf_dir).collect()[0]
-    li = _pq(sf_dir, "lineitem")
+    li = read_pq(sf_dir, "lineitem")
     x = (li.l_extendedprice * 100).round().to_numpy(dtype=float)
     y = li.l_quantity.to_numpy(dtype=float)
     z = (li.l_discount * 100).round().to_numpy(dtype=float)

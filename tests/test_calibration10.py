@@ -21,6 +21,7 @@ from fractions import Fraction
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import assert_close_dp, query_pd
 
 Z_SEED = 101010
 
@@ -335,20 +336,6 @@ class TestCalibration10:
 # ==================================================== tier agreement
 
 
-def _q(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-def _close(got, ref, dp, msg=""):
-    assert abs(float(got) - float(ref)) <= 0.51 * 10**-dp + 5e-9 * max(
-        1.0, abs(float(ref))
-    ), (msg, got, ref)
-
-
 def _close_floor(got, ref, dp, msg=""):
     """Closeness under the FLOOR reporting grain (the round-8 Markov
     convention, behavior.py grain(): floor(x*10^dp)/10^dp — chosen over
@@ -363,18 +350,13 @@ def _close_floor(got, ref, dp, msg=""):
     assert r - 10**-dp - slack <= g <= r + slack, (msg, got, ref)
 
 
-@pytest.fixture(scope="module")
-def ev_pd(sf_dir):
-    return pd.read_parquet(f"{sf_dir}/events.parquet")
-
-
 class TestTierAgreement10:
-    def test_markov_absorption_vs_linear_solve(self, spark, sf_dir, ev_pd):
+    def test_markov_absorption_vs_linear_solve(self, spark, sf_dir, events_pd):
         """The registry query's Jacobi answer vs the exact fundamental-
         matrix solve on the kernel recomputed independently in pandas —
         no shared algebra with either engine."""
-        got = _q(spark, sf_dir, "behavior_markov_absorption").set_index("state")
-        e = ev_pd.sort_values(["user_id", "ts", "event_id"])
+        got = query_pd(spark, sf_dir, "behavior_markov_absorption").set_index("state")
+        e = events_pd.sort_values(["user_id", "ts", "event_id"])
         e["next"] = e.groupby("user_id")["event_type"].shift(-1)
         tr = e.dropna(subset=["next"]).groupby(["event_type", "next"]).size()
         outs = tr.groupby(level=0).sum()
@@ -389,9 +371,9 @@ class TestTierAgreement10:
             # residual is far below the reporting grain
             _close_floor(got.loc[s, "p_error_before_purchase"], ex[s], 6, s)
 
-    def test_markov_attribution_vs_linear_solve(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_markov_attribution").set_index("channel")
-        e = ev_pd.dropna(subset=["event_type", "ts"]).sort_values(
+    def test_markov_attribution_vs_linear_solve(self, spark, sf_dir, events_pd):
+        got = query_pd(spark, sf_dir, "behavior_markov_attribution").set_index("channel")
+        e = events_pd.dropna(subset=["event_type", "ts"]).sort_values(
             ["user_id", "ts", "event_id"]
         )
         rows = []
@@ -437,7 +419,7 @@ class TestTierAgreement10:
     def test_mcc(self, spark, sf_dir):
         import etl_file_sync_spark.queries.eval_face as EF
 
-        got = _q(spark, sf_dir, "eval_mcc").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_mcc").iloc[0]
         sdf = EF._scored(spark, sf_dir).toPandas()
         pred = sdf["score"].to_numpy(float) >= 0.5
         lab = sdf["label"].to_numpy(int) == 1
@@ -447,13 +429,13 @@ class TestTierAgreement10:
         tn = int(np.sum(~pred & ~lab))
         assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (tp, fp, fn, tn)
         r = float(np.corrcoef(pred.astype(float), lab.astype(float))[0, 1])
-        _close(got["mcc"], r, 6)
+        assert_close_dp(got["mcc"], r, 6)
         po = (tp + tn) / len(sdf)
         pe = ((tp + fp) * (tp + fn) + (fn + tn) * (fp + tn)) / len(sdf) ** 2
-        _close(got["cohen_kappa_binary"], (po - pe) / (1 - pe), 6)
+        assert_close_dp(got["cohen_kappa_binary"], (po - pe) / (1 - pe), 6)
 
     def test_largest_remainder(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "alloc_largest_remainder").sort_values("source")
+        got = query_pd(spark, sf_dir, "alloc_largest_remainder").sort_values("source")
         d = pd.read_parquet(f"{sf_dir}/documents.parquet")
         counts = d.groupby("source").size().sort_index()
         alloc = largest_remainder([int(v) for v in counts], 10_000)
@@ -466,9 +448,9 @@ class TestTierAgreement10:
             q = Fraction(10_000 * int(v), t)
             assert math.floor(q) <= a <= math.ceil(q)
 
-    def test_max_concurrency(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "ops_max_concurrency").set_index("event_type")
-        e = ev_pd.dropna(subset=["event_type", "ts"])
+    def test_max_concurrency(self, spark, sf_dir, events_pd):
+        got = query_pd(spark, sf_dir, "ops_max_concurrency").set_index("event_type")
+        e = events_pd.dropna(subset=["event_type", "ts"])
         us = e["ts"].astype("datetime64[ns]").astype("int64") // 1000
         for et in got.index:
             m = (e["event_type"] == et).to_numpy()
@@ -478,12 +460,12 @@ class TestTierAgreement10:
             assert got.loc[et, "max_concurrent"] == mx
             assert got.loc[et, "at_us"] == at
 
-    def test_entropy_profile(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "dq_entropy_profile").set_index("col")
+    def test_entropy_profile(self, spark, sf_dir, events_pd):
+        got = query_pd(spark, sf_dir, "dq_entropy_profile").set_index("col")
         d = pd.read_parquet(f"{sf_dir}/documents.parquet")
         cols = {
-            "events.event_type": ev_pd["event_type"],
-            "events.hour": ev_pd["ts"].dt.hour.astype(str),
+            "events.event_type": events_pd["event_type"],
+            "events.hour": events_pd["ts"].dt.hour.astype(str),
             "documents.lang": d["lang"],
             "documents.source": d["source"],
         }
@@ -493,5 +475,5 @@ class TestTierAgreement10:
             h = math.log(n) - float((c * np.log(c)).sum()) / n
             row = got.loc[name]
             assert (row["n"], row["n_distinct"]) == (int(n), len(c))
-            _close(row["entropy_nats"], h, 6, name)
-            _close(row["norm_entropy"], h / math.log(len(c)), 6, name)
+            assert_close_dp(row["entropy_nats"], h, 6, name)
+            assert_close_dp(row["norm_entropy"], h / math.log(len(c)), 6, name)

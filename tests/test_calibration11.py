@@ -21,22 +21,9 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import assert_close_dp, query_pd
 
 Z_SEED = 111111
-
-
-def _q(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-def _close(got, ref, dp, msg=""):
-    assert abs(float(got) - float(ref)) <= 0.51 * 10**-dp + 5e-9 * max(
-        1.0, abs(float(ref))
-    ), (msg, got, ref)
 
 
 def _cents(v) -> np.ndarray:
@@ -67,7 +54,7 @@ class TestTierAgreement11:
     # ------------------------------------------------ behavior face
 
     def test_event_regex(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_event_regex").iloc[0]
+        got = query_pd(spark, sf_dir, "behavior_event_regex").iloc[0]
         sym = {"view": "v", "click": "c", "purchase": "p", "signup": "s"}
         paths = [
             "".join(sym.get(t, "o") for t in g["event_type"])
@@ -83,7 +70,7 @@ class TestTierAgreement11:
         assert got["max_session_len"] == max(len(p) for p in paths)
 
     def test_inter_event_gaps(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_inter_event_gaps").set_index("event_type")
+        got = query_pd(spark, sf_dir, "behavior_inter_event_gaps").set_index("event_type")
         us = ev_pd["ts"].astype("datetime64[ns]").astype("int64") // 1000
         e = ev_pd.assign(us=us)
         e["gap"] = e.groupby("user_id")["us"].diff()
@@ -92,12 +79,12 @@ class TestTierAgreement11:
             v = gg["gap"].to_numpy(float)
             row = got.loc[et]
             assert row["n_gaps"] == len(v)
-            _close(row["med_gap_us"], np.percentile(v, 50), 4, et)
-            _close(row["p90_gap_us"], np.percentile(v, 90), 4, et)
+            assert_close_dp(row["med_gap_us"], np.percentile(v, 50), 4, et)
+            assert_close_dp(row["p90_gap_us"], np.percentile(v, 90), 4, et)
             assert row["max_gap_us"] == int(v.max())
 
     def test_last_touch_attribution(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_last_touch_attribution").set_index(
+        got = query_pd(spark, sf_dir, "behavior_last_touch_attribution").set_index(
             "touch_type"
         )
         agg: dict = {}
@@ -119,10 +106,10 @@ class TestTierAgreement11:
         assert set(got.index) == set(agg)
         for k, (n, c) in agg.items():
             assert got.loc[k, "n_purchases"] == n
-            _close(got.loc[k, "total_value"], c / 100.0, 2, k)
+            assert_close_dp(got.loc[k, "total_value"], c / 100.0, 2, k)
 
     def test_streak_islands(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_streak_islands")
+        got = query_pd(spark, sf_dir, "behavior_streak_islands")
         days = (
             ev_pd.assign(day=ev_pd["ts"].dt.normalize())[["user_id", "day"]]
             .drop_duplicates()
@@ -148,7 +135,7 @@ class TestTierAgreement11:
             )
 
     def test_top_paths(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_top_paths")
+        got = query_pd(spark, sf_dir, "behavior_top_paths")
         paths = (
             ev_pd.groupby("user_id")["event_type"]
             .apply(lambda s: ">".join(s.head(3)))
@@ -159,7 +146,7 @@ class TestTierAgreement11:
             assert (r["path"], r["n_users"]) == (p, n)
 
     def test_transition_matrix(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_transition_matrix").set_index(
+        got = query_pd(spark, sf_dir, "behavior_transition_matrix").set_index(
             ["from_type", "to_type"]
         )
         e = ev_pd.copy()
@@ -170,10 +157,10 @@ class TestTierAgreement11:
         for (f, t_), n in tr.items():
             row = got.loc[(f, t_)]
             assert row["n"] == n
-            _close(row["p"], n / outs[f], 4, (f, t_))
+            assert_close_dp(row["p"], n / outs[f], 4, (f, t_))
 
     def test_retention_cohorts(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "retention_cohorts").set_index(
+        got = query_pd(spark, sf_dir, "retention_cohorts").set_index(
             ["cohort_week", "week_offset"]
         )
         e = ev_pd.copy()
@@ -195,18 +182,18 @@ class TestTierAgreement11:
     def test_calibration_curve(self, spark, sf_dir):
         import etl_file_sync_spark.queries.eval_face as EF
 
-        got = _q(spark, sf_dir, "dq_calibration_curve").set_index("bucket")
+        got = query_pd(spark, sf_dir, "dq_calibration_curve").set_index("bucket")
         s = EF._scored(spark, sf_dir).toPandas()
         s["bucket"] = np.minimum(np.floor(s["score"] * 10), 9).astype(int)
         for b, g in s.groupby("bucket"):
             ten_k = np.floor(g["score"].to_numpy() * 10000 + 0.5).astype(np.int64)
             row = got.loc[b]
             assert row["n"] == len(g)
-            _close(row["mean_predicted"], ten_k.sum() / (10000.0 * len(g)), 6, b)
-            _close(row["observed_rate"], g["label"].mean(), 6, b)
+            assert_close_dp(row["mean_predicted"], ten_k.sum() / (10000.0 * len(g)), 6, b)
+            assert_close_dp(row["observed_rate"], g["label"].mean(), 6, b)
 
     def test_constraint_checks(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "dq_constraint_checks").set_index("check_name")
+        got = query_pd(spark, sf_dir, "dq_constraint_checks").set_index("check_name")
         li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")
         dup = ord_pd["o_orderkey"].value_counts()
         ref = {
@@ -225,7 +212,7 @@ class TestTierAgreement11:
             assert got.loc[k, "n_violations"] == v, k
 
     def test_histogram_equidepth(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "dq_histogram_equidepth").set_index("bucket")
+        got = query_pd(spark, sf_dir, "dq_histogram_equidepth").set_index("bucket")
         o = ord_pd.sort_values(["cents", "o_orderkey"]).reset_index(drop=True)
         n = len(o)
         base, extra = divmod(n, 10)
@@ -242,7 +229,7 @@ class TestTierAgreement11:
         assert got["n"].max() - got["n"].min() <= 1
 
     def test_key_skew(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "dq_key_skew")
+        got = query_pd(spark, sf_dir, "dq_key_skew")
         counts = ord_pd.groupby("o_custkey").size()
         total, nkeys = int(counts.sum()), len(counts)
         ref = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
@@ -253,7 +240,7 @@ class TestTierAgreement11:
             assert bool(r["is_skewed"]) == (c * nkeys > 10.0 * total)
 
     def test_profile_orders(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "dq_profile_orders").set_index("col_name")
+        got = query_pd(spark, sf_dir, "dq_profile_orders").set_index("col_name")
         for c in ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority", "o_orderdate"]:
             s = ord_pd[c]
             row = got.loc[c]
@@ -270,7 +257,7 @@ class TestTierAgreement11:
                 assert row["max_val"] == str(hi)
 
     def test_robust_outliers(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "dq_robust_outliers").set_index("doc_id")
+        got = query_pd(spark, sf_dir, "dq_robust_outliers").set_index("doc_id")
         d = pd.read_parquet(f"{sf_dir}/documents.parquet")
         for src, g in d.groupby("source"):
             med = pdisc_median(g["n_chars"].to_numpy())
@@ -286,7 +273,7 @@ class TestTierAgreement11:
     def test_precision_recall(self, spark, sf_dir):
         import etl_file_sync_spark.queries.eval_face as EF
 
-        got = _q(spark, sf_dir, "eval_precision_recall").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_precision_recall").iloc[0]
         s = EF._scored(spark, sf_dir).toPandas()
         pred = s["score"].to_numpy(float) >= 0.5
         lab = s["label"].to_numpy(int) == 1
@@ -295,13 +282,13 @@ class TestTierAgreement11:
         fn = int(np.sum(~pred & lab))
         tn = int(np.sum(~pred & ~lab))
         assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (tp, fp, fn, tn)
-        _close(got["precision"], tp / (tp + fp), 6)
-        _close(got["recall"], tp / (tp + fn), 6)
-        _close(got["f1"], 2 * tp / (2 * tp + fp + fn), 6)
-        _close(got["accuracy"], (tp + tn) / len(s), 6)
+        assert_close_dp(got["precision"], tp / (tp + fp), 6)
+        assert_close_dp(got["recall"], tp / (tp + fn), 6)
+        assert_close_dp(got["f1"], 2 * tp / (2 * tp + fp + fn), 6)
+        assert_close_dp(got["accuracy"], (tp + tn) / len(s), 6)
 
     def test_correlation_matrix(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "stat_correlation_matrix").set_index(
+        got = query_pd(spark, sf_dir, "stat_correlation_matrix").set_index(
             ["col_x", "col_y"]
         )
         li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")
@@ -317,7 +304,7 @@ class TestTierAgreement11:
                     0, 1
                 ]
             )
-            _close(got.loc[(a, b), "pearson_r"], r, 6, (a, b))
+            assert_close_dp(got.loc[(a, b), "pearson_r"], r, 6, (a, b))
 
     def test_correlation_recovery_mc(self):
         """Property: the query's two-pass centered co-moment spelling
@@ -334,7 +321,7 @@ class TestTierAgreement11:
         assert abs(r - rho) < 0.01
 
     def test_crosstab(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "stat_crosstab").set_index("o_orderstatus")
+        got = query_pd(spark, sf_dir, "stat_crosstab").set_index("o_orderstatus")
         ct = pd.crosstab(ord_pd["o_orderstatus"], ord_pd["o_orderpriority"])
         for status in got.index:
             for level, col in (("1-URGENT", "urgent"), ("5-LOW", "low")):
@@ -342,7 +329,7 @@ class TestTierAgreement11:
                 assert got.loc[status, col] == ref, (status, level)
 
     def test_decile_bands(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "stat_decile_bands").set_index("decile")
+        got = query_pd(spark, sf_dir, "stat_decile_bands").set_index("decile")
         spend = (
             ord_pd.groupby("o_custkey")["cents"].sum().reset_index()
             .sort_values(["cents", "o_custkey"]).reset_index(drop=True)
@@ -353,14 +340,14 @@ class TestTierAgreement11:
         for d, g in spend.groupby("decile"):
             row = got.loc[d]
             assert row["n_customers"] == len(g)
-            _close(row["min_spend"], g["cents"].min() / 100.0, 2, d)
-            _close(row["max_spend"], g["cents"].max() / 100.0, 2, d)
-            _close(row["total_spend"], g["cents"].sum() / 100.0, 2, d)
+            assert_close_dp(row["min_spend"], g["cents"].min() / 100.0, 2, d)
+            assert_close_dp(row["max_spend"], g["cents"].max() / 100.0, 2, d)
+            assert_close_dp(row["total_spend"], g["cents"].sum() / 100.0, 2, d)
 
     # ------------------------------------------------ time-series face
 
     def test_gapfill_interpolate(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "ts_gapfill_interpolate")
+        got = query_pd(spark, sf_dir, "ts_gapfill_interpolate")
         e = ev_pd[ev_pd["user_id"] < 30].copy()
         e["day"] = e["ts"].dt.normalize()
         # the bounded-gapfill contract: the spine is the DECLARED
@@ -409,10 +396,10 @@ class TestTierAgreement11:
             if filled is None:
                 assert pd.isna(r["filled_cents"])
             else:
-                _close(r["filled_cents"], filled, 2, (r["user_id"], r["day"]))
+                assert_close_dp(r["filled_cents"], filled, 2, (r["user_id"], r["day"]))
 
     def test_resample_interpolate(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "ts_resample_interpolate")
+        got = query_pd(spark, sf_dir, "ts_resample_interpolate")
         e = ev_pd[ev_pd["user_id"] % 10 == 0].copy()
         e["day"] = e["ts"].dt.normalize()
         daily = e.groupby(["user_id", "day"]).size()
@@ -437,10 +424,10 @@ class TestTierAgreement11:
         for _, r in got.iterrows():
             interp, val = rows[(r["user_id"], r["day"])]
             assert bool(r["interpolated"]) == interp
-            _close(r["value"], val, 6, (r["user_id"], r["day"]))
+            assert_close_dp(r["value"], val, 6, (r["user_id"], r["day"]))
 
     def test_seasonal_dow(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "ts_seasonal_dow").set_index("dow")
+        got = query_pd(spark, sf_dir, "ts_seasonal_dow").set_index("dow")
         o = ord_pd.copy()
         o["day"] = pd.to_datetime(o["o_orderdate"]).dt.normalize()
         daily = o.groupby("day")["cents"].sum()
@@ -451,8 +438,8 @@ class TestTierAgreement11:
             sel = daily[dows == d]
             row = got.loc[d]
             assert (row["n_days"], row["sum_cents"]) == (len(sel), int(sel.sum()))
-            _close(row["mean_cents"], sel.sum() / len(sel), 2, d)
-            _close(
+            assert_close_dp(row["mean_cents"], sel.sum() / len(sel), 2, d)
+            assert_close_dp(
                 row["seasonal_index"],
                 (int(sel.sum()) * total_days) / (len(sel) * total_cents),
                 6,

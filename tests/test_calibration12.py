@@ -18,6 +18,7 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import assert_close_dp, query_pd
 
 Z_SEED = 121212
 
@@ -148,20 +149,6 @@ class TestCalibration12:
 # ==================================================== tier agreement
 
 
-def _q(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-def _close(got, ref, dp, msg=""):
-    assert abs(float(got) - float(ref)) <= 0.51 * 10**-dp + 5e-9 * max(
-        1.0, abs(float(ref))
-    ), (msg, got, ref)
-
-
 def _cents(v) -> np.ndarray:
     return np.floor(np.asarray(v, float) * 100 + 0.5).astype(np.int64)
 
@@ -181,7 +168,7 @@ def ord_pd(sf_dir):
 
 class TestTierAgreement12:
     def test_corpus_bleu(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "eval_corpus_bleu").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_corpus_bleu").iloc[0]
         d = pd.read_parquet(f"{sf_dir}/documents.parquet")
         toks = {r.doc_id: [w for w in r.text.split(" ") if w] for r in d.itertuples()}
         pairs = []
@@ -193,12 +180,12 @@ class TestTierAgreement12:
         ref = bleu2_corpus(pairs)
         for k in ("c_len", "r_len", "clip1", "tot1", "clip2", "tot2"):
             assert got[k] == ref[k], k
-        _close(got["p1"], ref["p1"], 6)
-        _close(got["p2"], ref["p2"], 6)
-        _close(got["bleu2"], ref["bleu2"], 6)
+        assert_close_dp(got["p1"], ref["p1"], 6)
+        assert_close_dp(got["p2"], ref["p2"], 6)
+        assert_close_dp(got["bleu2"], ref["bleu2"], 6)
 
     def test_backtest_seasonal_naive(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "ts_backtest_seasonal_naive").iloc[0]
+        got = query_pd(spark, sf_dir, "ts_backtest_seasonal_naive").iloc[0]
         daily = (
             ord_pd.assign(day=pd.to_datetime(ord_pd["o_orderdate"]).dt.normalize())
             .groupby("day")["cents"]
@@ -206,13 +193,13 @@ class TestTierAgreement12:
         )
         ref = seasonal_naive_metrics(daily)
         assert got["n_evals"] == ref["n_evals"]
-        _close(got["mape"], ref["mape"], 6)
-        _close(got["smape"], ref["smape"], 6)
-        _close(got["bias_dollars"], ref["bias_dollars"], 4)
-        _close(got["rmse_dollars"], ref["rmse_dollars"], 4)
+        assert_close_dp(got["mape"], ref["mape"], 6)
+        assert_close_dp(got["smape"], ref["smape"], 6)
+        assert_close_dp(got["bias_dollars"], ref["bias_dollars"], 4)
+        assert_close_dp(got["rmse_dollars"], ref["rmse_dollars"], 4)
 
     def test_dau_stickiness(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_dau_stickiness").set_index("day")
+        got = query_pd(spark, sf_dir, "behavior_dau_stickiness").set_index("day")
         du = (
             ev_pd.assign(day=ev_pd["ts"].dt.normalize())[["day", "user_id"]]
             .drop_duplicates()
@@ -224,11 +211,11 @@ class TestTierAgreement12:
             ]["user_id"].nunique()
             row = got.loc[day]
             assert (row["dau"], row["wau"]) == (dau[day], wau)
-            _close(row["stickiness"], dau[day] / wau, 6, day)
+            assert_close_dp(row["stickiness"], dau[day] / wau, 6, day)
             assert 0 < row["stickiness"] <= 1.0  # defining bounds
 
     def test_new_vs_returning(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_new_vs_returning").set_index("day")
+        got = query_pd(spark, sf_dir, "behavior_new_vs_returning").set_index("day")
         du = (
             ev_pd.assign(day=ev_pd["ts"].dt.normalize())[["day", "user_id"]]
             .drop_duplicates()
@@ -240,13 +227,13 @@ class TestTierAgreement12:
             assert (row["dau"], row["new_users"], row["returning_users"]) == (
                 len(g), new, len(g) - new,
             )
-            _close(row["pct_new"], new / len(g), 6, day)
+            assert_close_dp(row["pct_new"], new / len(g), 6, day)
         # first day: everyone is new; total new users == distinct users
         assert got.iloc[0]["pct_new"] == pytest.approx(1.0)
         assert int(got["new_users"].sum()) == du["user_id"].nunique()
 
     def test_ltv_cohort_curves(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "behavior_ltv_cohort_curves")
+        got = query_pd(spark, sf_dir, "behavior_ltv_cohort_curves")
         p = ev_pd[ev_pd["event_type"] == "purchase"].copy()
         p["day"] = p["ts"].dt.normalize()
         p["c"] = _cents(p["value"].to_numpy())
@@ -260,7 +247,7 @@ class TestTierAgreement12:
         for _, r in got.iterrows():
             key = (r["cohort_day"], r["age_days"])
             assert r["n_users"] == sized[r["cohort_day"]]
-            _close(
+            assert_close_dp(
                 r["cum_rev_per_user"],
                 cum[key] / 100.0 / sized[r["cohort_day"]],
                 4,
@@ -272,7 +259,7 @@ class TestTierAgreement12:
             assert np.all(np.diff(v) >= -1e-9)
 
     def test_period_growth(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "ts_period_growth").set_index("month")
+        got = query_pd(spark, sf_dir, "ts_period_growth").set_index("month")
         o = ord_pd.assign(
             month=pd.to_datetime(ord_pd["o_orderdate"]).dt.to_period("M")
         )
@@ -283,12 +270,12 @@ class TestTierAgreement12:
             for off, col in ((1, "mom_pct"), (12, "yoy_pct")):
                 prev = m - off
                 if prev in rev.index:
-                    _close(row[col], (v - rev[prev]) * 100.0 / rev[prev], 4, (m, col))
+                    assert_close_dp(row[col], (v - rev[prev]) * 100.0 / rev[prev], 4, (m, col))
                 else:
                     assert pd.isna(row[col]), (m, col)
 
     def test_freshness_sla(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "dq_freshness_sla").set_index("event_type")
+        got = query_pd(spark, sf_dir, "dq_freshness_sla").set_index("event_type")
         us = ev_pd["ts"].astype("datetime64[ns]").astype("int64") // 1000
         e = ev_pd.assign(us=us)
         last = e.groupby("event_type")["us"].max()
@@ -344,7 +331,7 @@ class TestTierAgreement12:
             assert (r["n_keys"], r["n_missing"]) == (len(k2), miss2)
 
     def test_referential_integrity(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "dq_referential_integrity").set_index("fk")
+        got = query_pd(spark, sf_dir, "dq_referential_integrity").set_index("fk")
         li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")
         cu = pd.read_parquet(f"{sf_dir}/customer.parquet")
         na = pd.read_parquet(f"{sf_dir}/nation.parquet")
@@ -357,11 +344,11 @@ class TestTierAgreement12:
             orphans = int((~child.isin(parents)).sum())
             row = got.loc[fk]
             assert (row["child_rows"], row["orphan_rows"]) == (len(child), orphans)
-            _close(row["orphan_rate"], orphans / len(child), 6, fk)
+            assert_close_dp(row["orphan_rate"], orphans / len(child), 6, fk)
             assert bool(row["holds"]) == (orphans == 0)
 
     def test_functional_dependency(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "dq_functional_dependency").set_index("fd")
+        got = query_pd(spark, sf_dir, "dq_functional_dependency").set_index("fd")
         part = pd.read_parquet(f"{sf_dir}/part.parquet")
         cases = {
             "orders: o_orderkey -> o_orderstatus": (ord_pd, "o_orderkey", "o_orderstatus"),
@@ -374,4 +361,4 @@ class TestTierAgreement12:
             assert (row["n_keys"], row["n_violating"], row["max_dependents"]) == (
                 len(nd), int((nd > 1).sum()), int(nd.max()),
             )
-            _close(row["violation_rate"], (nd > 1).mean(), 6, fd)
+            assert_close_dp(row["violation_rate"], (nd > 1).mean(), 6, fd)

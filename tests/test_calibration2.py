@@ -14,6 +14,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from tests.conftest import query_pd
 from tests.test_calibration import (
     ALPHA,
     chi2_sf_even_df,
@@ -266,14 +267,6 @@ class TestCalibration2:
 # ==================================================== tier agreement
 
 
-def _spark_df(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
 @pytest.fixture(scope="module")
 def orders_pd(sf_dir):
     o = pd.read_parquet(f"{sf_dir}/orders.parquet")
@@ -282,14 +275,9 @@ def orders_pd(sf_dir):
     return o
 
 
-@pytest.fixture(scope="module")
-def events_pd(sf_dir):
-    return pd.read_parquet(f"{sf_dir}/events.parquet")
-
-
 class TestTierAgreement2:
     def test_mannwhitney(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_mannwhitney_u")
+        got = query_pd(spark, sf_dir, "stat_mannwhitney_u")
         a = got[got["variant"] == "A"].iloc[0]
         va = orders_pd.loc[orders_pd["o_custkey"] % 2 == 0, "o_totalprice"].to_numpy()
         vb = orders_pd.loc[orders_pd["o_custkey"] % 2 == 1, "o_totalprice"].to_numpy()
@@ -300,7 +288,7 @@ class TestTierAgreement2:
         assert abs(a["z_score"] - ref["z_a"]) < 1.1e-6
 
     def test_kruskal_wallis(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_kruskal_wallis").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_kruskal_wallis").iloc[0]
         groups = [
             g["o_totalprice"].to_numpy() for _, g in orders_pd.groupby("o_orderpriority")
         ]
@@ -310,7 +298,7 @@ class TestTierAgreement2:
         assert abs(got["h_tie_adj"] - ref["h_tie_adj"]) < 1.1e-6 * max(1.0, abs(ref["h_tie_adj"]))
 
     def test_ks_two_sample(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_ks_two_sample").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_ks_two_sample").iloc[0]
         va = orders_pd.loc[orders_pd["o_custkey"] % 2 == 0, "o_totalprice"].to_numpy()
         vb = orders_pd.loc[orders_pd["o_custkey"] % 2 == 1, "o_totalprice"].to_numpy()
         ref = ks_two_sample(va, vb)
@@ -319,7 +307,7 @@ class TestTierAgreement2:
         assert abs(got["at_value"] - ref["at_value"]) < 1e-9
 
     def test_variance_ratio(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "ts_variance_ratio").iloc[0]
+        got = query_pd(spark, sf_dir, "ts_variance_ratio").iloc[0]
         cents = orders_pd.groupby("day")["cents"].sum().sort_index().to_numpy()
         ref = variance_ratio(cents, q=7)
         assert got["n_diffs"] == ref["n_diffs"]
@@ -328,7 +316,7 @@ class TestTierAgreement2:
         assert abs(got["p_value"] - norm_sf_two_sided(round(ref["z_stat"], 4))) < 2e-6
 
     def test_pettitt(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "ts_pettitt_changepoint").iloc[0]
+        got = query_pd(spark, sf_dir, "ts_pettitt_changepoint").iloc[0]
         daily = orders_pd.groupby("day")["cents"].sum().sort_index()
         ref = pettitt(daily.to_numpy())
         assert got["n_days"] == ref["n_days"]
@@ -341,7 +329,7 @@ class TestTierAgreement2:
         assert abs(got["mean_after_cents"] - after.mean()) < 5.1e-5 * abs(after.mean())
 
     def test_two_prop_z(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_two_proportion_ztest").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_two_proportion_ztest").iloc[0]
         ev = events_pd
         conv = (
             pd.DataFrame(
@@ -361,7 +349,7 @@ class TestTierAgreement2:
         assert abs(got["z"] - ref["z"]) < 1.1e-6
 
     def test_logrank(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_logrank_test").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_logrank_test").iloc[0]
         ev = events_pd.copy()
         g = ev.groupby("user_id").agg(
             lo=("ts", "min"), hi=("ts", "max")
@@ -386,7 +374,7 @@ class TestTierAgreement2:
         assert abs(got["chi2"] - ref["chi2"]) < 1.1e-5
 
     def test_spearman(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_spearman_rank_corr").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_spearman_rank_corr").iloc[0]
         li = pd.read_parquet(
             f"{sf_dir}/lineitem.parquet", columns=["l_quantity", "l_extendedprice"]
         )
@@ -395,7 +383,7 @@ class TestTierAgreement2:
         assert abs(got["spearman_rho"] - ref["spearman_rho"]) < 1.1e-6
 
     def test_brown_forsythe(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_brown_forsythe").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_brown_forsythe").iloc[0]
 
         def query_median(g: np.ndarray) -> float:
             # the query's percentile convention: smallest value whose
@@ -411,7 +399,7 @@ class TestTierAgreement2:
         assert abs(got["f_stat"] - ref["f_stat"]) < 1.1e-6 * max(1.0, ref["f_stat"])
 
     def test_cvm(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_cvm_two_sample").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_cvm_two_sample").iloc[0]
         li = pd.read_parquet(
             f"{sf_dir}/lineitem.parquet", columns=["l_returnflag", "l_extendedprice"]
         )

@@ -16,6 +16,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from tests.conftest import query_pd
 from tests.test_calibration import ALPHA, chi2_sf_even_df, norm_sf_two_sided, rate_band
 
 Z_SEED = 424242
@@ -287,19 +288,6 @@ class TestCalibration3:
 # ==================================================== tier agreement
 
 
-def _spark_df(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-@pytest.fixture(scope="module")
-def events_pd(sf_dir):
-    return pd.read_parquet(f"{sf_dir}/events.parquet")
-
-
 @pytest.fixture(scope="module")
 def user_conv(events_pd):
     ev = events_pd
@@ -319,7 +307,7 @@ def user_conv(events_pd):
 
 class TestTierAgreement3:
     def test_fisher_exact(self, spark, sf_dir, user_conv):
-        got = _spark_df(spark, sf_dir, "stat_fisher_exact").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_fisher_exact").iloc[0]
         grp = user_conv.index.to_numpy() % 2
         a = int(user_conv[(grp == 1)].sum())
         b = int(np.sum(grp == 1)) - a
@@ -331,7 +319,7 @@ class TestTierAgreement3:
         assert abs(got["p_value"] - fisher_exact_two_sided(a, b, c, d)) < 2e-6
 
     def test_mcnemar_exact(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_mcnemar_exact").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_mcnemar_exact").iloc[0]
         ev = events_pd
         pur = ev["event_type"] == "purchase"
         per_user = pd.DataFrame(
@@ -348,7 +336,7 @@ class TestTierAgreement3:
         assert abs(got["p_value"] - mcnemar_exact(b, c)) < 2e-6
 
     def test_mantel_haenszel(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_mantel_haenszel").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_mantel_haenszel").iloc[0]
         o = pd.read_parquet(f"{sf_dir}/orders.parquet", columns=["o_custkey", "o_totalprice"])
         c = pd.read_parquet(f"{sf_dir}/customer.parquet", columns=["c_custkey", "c_nationkey"])
         n = pd.read_parquet(f"{sf_dir}/nation.parquet", columns=["n_nationkey", "n_regionkey"])
@@ -377,7 +365,7 @@ class TestTierAgreement3:
         assert abs(got["p_value"] - math.erfc(math.sqrt(round(ref["cmh_stat"], 4) / 2.0))) < 2e-6
 
     def test_anova_oneway(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_anova_oneway").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_anova_oneway").iloc[0]
         o = pd.read_parquet(f"{sf_dir}/orders.parquet", columns=["o_orderpriority", "o_totalprice"])
         o["cents"] = np.round(o["o_totalprice"] * 100).astype("int64")
         groups = [g["cents"].to_numpy(float) for _, g in o.groupby("o_orderpriority")]
@@ -387,7 +375,7 @@ class TestTierAgreement3:
         assert abs(got["f_stat"] - ref["f_stat"]) < 1.1e-6 * max(1.0, ref["f_stat"])
 
     def test_tost(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_tost_equivalence").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_tost_equivalence").iloc[0]
         ev = events_pd[events_pd["event_type"] == "purchase"]
         cents = np.round(ev["value"] * 100).astype("int64")
         a = cents[(ev["user_id"] % 2 == 0).to_numpy()].to_numpy(float)
@@ -411,7 +399,7 @@ class TestTierAgreement3:
         assert bool(got["equivalent"]) == (p_ref < 0.05)
 
     def test_msprt(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_msprt_sequential").sort_values("day").reset_index(drop=True)
+        got = query_pd(spark, sf_dir, "stat_msprt_sequential").sort_values("day").reset_index(drop=True)
         ev = events_pd.copy()
         ev["day"] = ev["ts"].dt.normalize()
         ev["variant"] = np.where(ev["user_id"] % 2 == 0, "A", "B")
@@ -433,7 +421,7 @@ class TestTierAgreement3:
         )
 
     def test_power_analysis(self, spark, sf_dir, user_conv):
-        got = _spark_df(spark, sf_dir, "stat_power_analysis").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_power_analysis").iloc[0]
         grp = user_conv.index.to_numpy() % 2
         n0 = int(np.sum(grp == 0))
         s0 = int(user_conv[grp == 0].sum())
@@ -446,7 +434,7 @@ class TestTierAgreement3:
         assert abs(got["mde_at_n"] - mde) < 1.1e-6
 
     def test_dunn_posthoc(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_dunn_posthoc").sort_values(
+        got = query_pd(spark, sf_dir, "stat_dunn_posthoc").sort_values(
             ["grp_a", "grp_b"]
         ).reset_index(drop=True)
         o = pd.read_parquet(f"{sf_dir}/orders.parquet", columns=["o_orderpriority", "o_totalprice"])

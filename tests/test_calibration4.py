@@ -28,6 +28,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import query_pd
 
 Z_SEED = 777
 
@@ -397,19 +398,6 @@ class TestCalibration4:
 # ==================================================== tier agreement
 
 
-def _spark_df(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-@pytest.fixture(scope="module")
-def events_pd(sf_dir):
-    return pd.read_parquet(f"{sf_dir}/events.parquet")
-
-
 @pytest.fixture(scope="module")
 def orders_pd(sf_dir):
     o = pd.read_parquet(f"{sf_dir}/orders.parquet")
@@ -420,7 +408,7 @@ def orders_pd(sf_dir):
 
 class TestTierAgreement4:
     def test_auc_hanley(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "eval_auc_hanley_ci").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_auc_hanley_ci").iloc[0]
         docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "lang", "text"])
         stop = {"the", "a", "and", "of", "to", "in", "is", "that"}
         rows = []
@@ -439,7 +427,7 @@ class TestTierAgreement4:
             assert abs(got[c] - ref[c]) < 1.1e-6, c
 
     def test_poisson_bootstrap(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_poisson_bootstrap_ci").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_poisson_bootstrap_ci").iloc[0]
         ev = events_pd[events_pd["event_type"] == "purchase"]
         ids = ev["event_id"].to_numpy()
         c = np.round(ev["value"].to_numpy() * 100).astype("int64")
@@ -450,7 +438,7 @@ class TestTierAgreement4:
         assert abs(got["ci_hi_cents"] - ref["ci_hi"]) < 5.1e-5 * ref["ci_hi"]
 
     def test_jackknife_ratio(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_jackknife_ratio").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_jackknife_ratio").iloc[0]
         o = pd.read_parquet(f"{sf_dir}/orders.parquet", columns=["o_custkey", "o_totalprice"])
         c = pd.read_parquet(f"{sf_dir}/customer.parquet", columns=["c_custkey", "c_nationkey"])
         n = pd.read_parquet(f"{sf_dir}/nation.parquet", columns=["n_nationkey", "n_name"])
@@ -467,7 +455,7 @@ class TestTierAgreement4:
         assert abs(got["jk_bias"] - ref["jk_bias"]) < 1.1e-5 * max(1.0, abs(ref["jk_bias"]))
 
     def test_capture_recapture(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_capture_recapture").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_capture_recapture").iloc[0]
         ev = events_pd[(events_pd["event_type"] == "purchase") & (events_pd["value"] > 150)]
         d = (ev["ts"].dt.normalize() - pd.Timestamp("1970-01-01")).dt.days
         u = pd.DataFrame({"user_id": ev["user_id"], "f1": (d % 2 == 0), "f2": (d % 2 == 1)})
@@ -480,7 +468,7 @@ class TestTierAgreement4:
         assert abs(got["chapman"] - ref["chapman"]) < 5.1e-5 * ref["chapman"]
 
     def test_negbin_fit(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_negbin_fit").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_negbin_fit").iloc[0]
         k = events_pd.groupby("user_id").size().to_numpy(float)
         ref = negbin_mom(k)
         assert got["n_users"] == ref["n_users"]
@@ -491,7 +479,7 @@ class TestTierAgreement4:
             assert abs(got["nb_p"] - ref["nb_p"]) < 1.1e-6
 
     def test_gumbel_fit(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_gumbel_max_fit").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_gumbel_max_fit").iloc[0]
         mx = orders_pd.groupby("day")["cents"].max().to_numpy(float)
         ref = gumbel_mom(mx)
         assert got["n_blocks"] == ref["n_blocks"]
@@ -502,7 +490,7 @@ class TestTierAgreement4:
         assert abs(got["p_exceed_observed_max"] - ref["p_exceed_observed_max"]) < 2e-6
 
     def test_theil_sen(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_theil_sen").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_theil_sen").iloc[0]
         daily = orders_pd.groupby("day")["cents"].sum().sort_index().iloc[:60]
         x = (daily.index - pd.Timestamp("1992-01-01")).days.to_numpy(float)
         ref = theil_sen(x, daily.to_numpy(float))
@@ -511,7 +499,7 @@ class TestTierAgreement4:
         assert abs(got["intercept_cents"] - ref["intercept"]) < 5.1e-5 * max(1.0, abs(ref["intercept"]))
 
     def test_ipw_ate(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_ipw_ate").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_ipw_ate").iloc[0]
         ev = events_pd
         ref = ipw_ate(
             ev["event_type"].to_numpy(),
@@ -523,7 +511,7 @@ class TestTierAgreement4:
             assert abs(got[c] - ref[c]) < 1.1e-6 * max(1.0, abs(ref[c])), c
 
     def test_cuped(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_cuped_adjustment").sort_values("variant").reset_index(drop=True)
+        got = query_pd(spark, sf_dir, "stat_cuped_adjustment").sort_values("variant").reset_index(drop=True)
         ev = events_pd.copy()
         ev["cents"] = np.round(ev["value"] * 100).astype("int64")
         dom = ev["ts"].dt.day
@@ -551,7 +539,7 @@ class TestTierAgreement4:
             )
 
     def test_bayes_ab(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_bayes_ab_beta").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_bayes_ab_beta").iloc[0]
         ev = events_pd
         conv = (
             pd.DataFrame(

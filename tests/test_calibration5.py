@@ -16,6 +16,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from tests.conftest import query_pd
 from tests.test_calibration import chi2_sf_even_df, rate_band
 
 Z_SEED = 99001
@@ -360,19 +361,6 @@ class TestCalibration5:
 # ==================================================== tier agreement
 
 
-def _spark_df(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-@pytest.fixture(scope="module")
-def events_pd(sf_dir):
-    return pd.read_parquet(f"{sf_dir}/events.parquet")
-
-
 @pytest.fixture(scope="module")
 def orders_pd(sf_dir):
     o = pd.read_parquet(f"{sf_dir}/orders.parquet")
@@ -382,7 +370,7 @@ def orders_pd(sf_dir):
 
 class TestTierAgreement5:
     def test_kaplan_meier(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_kaplan_meier").sort_values("dur_s").reset_index(drop=True)
+        got = query_pd(spark, sf_dir, "stat_kaplan_meier").sort_values("dur_s").reset_index(drop=True)
         g = events_pd.groupby("user_id").agg(lo=("ts", "min"), hi=("ts", "max"))
         dur = ((g["hi"] - g["lo"]).dt.total_seconds()).astype("int64").to_numpy()
         obs = (
@@ -395,7 +383,7 @@ class TestTierAgreement5:
         np.testing.assert_allclose(got["survival"], ref["survival"], atol=1.1e-6)
 
     def test_eb_shrinkage(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_eb_shrinkage").sort_values("custkey").reset_index(drop=True)
+        got = query_pd(spark, sf_dir, "stat_eb_shrinkage").sort_values("custkey").reset_index(drop=True)
         li = pd.read_parquet(f"{sf_dir}/lineitem.parquet", columns=["l_orderkey", "l_returnflag"])
         o = pd.read_parquet(f"{sf_dir}/orders.parquet", columns=["o_orderkey", "o_custkey"])
         j = li.merge(o, left_on="l_orderkey", right_on="o_orderkey")
@@ -410,7 +398,7 @@ class TestTierAgreement5:
         np.testing.assert_allclose(got["shrunk_rate"], ref["shrunk"][np.asarray(sel)], atol=1.1e-6)
 
     def test_partial_correlation(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_partial_correlation").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_partial_correlation").iloc[0]
         li = pd.read_parquet(
             f"{sf_dir}/lineitem.parquet",
             columns=["l_extendedprice", "l_quantity", "l_discount"],
@@ -426,7 +414,7 @@ class TestTierAgreement5:
         assert abs(got["partial_r_price_qty_given_disc"] - ref["partial"]) < 1.1e-6
 
     def test_stratified_att(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_propensity_stratified_att").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_propensity_stratified_att").iloc[0]
         ev = events_pd.copy()
         ev["cents"] = np.round(ev["value"] * 100).astype("int64")
         dom = ev["ts"].dt.day
@@ -448,7 +436,7 @@ class TestTierAgreement5:
         assert abs(got["att_cents"] - ref["att"]) < 5.1e-5 * max(1.0, abs(ref["att"]))
 
     def test_wasserstein(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_wasserstein_1d").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_wasserstein_1d").iloc[0]
         va = orders_pd.loc[orders_pd["o_custkey"] % 2 == 0, "o_totalprice"].to_numpy()
         vb = orders_pd.loc[orders_pd["o_custkey"] % 2 == 1, "o_totalprice"].to_numpy()
         w1 = wasserstein_cdf(va, vb)
@@ -458,7 +446,7 @@ class TestTierAgreement5:
         assert abs(got["w1_normalized"] - w1 / (rng.max() - rng.min())) < 1.1e-9
 
     def test_energy_distance(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_energy_distance").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_energy_distance").iloc[0]
         va = orders_pd.loc[orders_pd["o_custkey"] % 2 == 0, "o_totalprice"].to_numpy()
         vb = orders_pd.loc[orders_pd["o_custkey"] % 2 == 1, "o_totalprice"].to_numpy()
         d2 = energy_cdf(va, vb)
@@ -470,7 +458,7 @@ class TestTierAgreement5:
         assert abs(energy_brute(sub_a, sub_b) - energy_cdf(sub_a, sub_b)) < 1e-9
 
     def test_cliffs_delta(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "stat_cliffs_delta").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_cliffs_delta").iloc[0]
         ev = events_pd[events_pd["event_type"].isin(["purchase", "view"])]
         cents = np.round(ev["value"] * 100).astype("int64")
         a = cents[(ev["event_type"] == "purchase").to_numpy()].to_numpy(float)
@@ -487,7 +475,7 @@ class TestTierAgreement5:
         assert got["magnitude"] == exp_mag
 
     def test_cramers_v(self, spark, sf_dir, events_pd, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_cramers_v_matrix").set_index("pair")
+        got = query_pd(spark, sf_dir, "stat_cramers_v_matrix").set_index("pair")
         t1 = pd.crosstab(events_pd["user_id"] % 2, events_pd["event_type"]).to_numpy()
         t2 = pd.crosstab(orders_pd["o_orderstatus"], orders_pd["o_orderpriority"]).to_numpy()
         for pair, table in (("variant_x_event_type", t1), ("status_x_priority", t2)):
@@ -499,7 +487,7 @@ class TestTierAgreement5:
             assert abs(row["cramers_v"] - ref["v"]) < 1.1e-6
 
     def test_theil_index(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_theil_index").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_theil_index").iloc[0]
         o = pd.read_parquet(f"{sf_dir}/orders.parquet", columns=["o_custkey", "o_totalprice"])
         c = pd.read_parquet(f"{sf_dir}/customer.parquet", columns=["c_custkey", "c_nationkey"])
         n = pd.read_parquet(f"{sf_dir}/nation.parquet", columns=["n_nationkey", "n_regionkey"])
@@ -520,7 +508,7 @@ class TestTierAgreement5:
         assert abs(got["theil_within"] - ref["within"]) < 2.1e-6
 
     def test_js_divergence(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_js_divergence").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_js_divergence").iloc[0]
         docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["source", "text"])
         docs = docs[docs["source"].isin(["src0", "src1"])]
         from collections import Counter
@@ -539,7 +527,7 @@ class TestTierAgreement5:
         assert abs(got["jsd_nats"] - js_divergence(a, b)) < 1.1e-6
 
     def test_benford(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "dq_benford_digits").sort_values("digit").reset_index(drop=True)
+        got = query_pd(spark, sf_dir, "dq_benford_digits").sort_values("digit").reset_index(drop=True)
         cents = orders_pd.loc[orders_pd["o_totalprice"] > 0, "cents"].to_numpy()
         digits = np.array([int(str(int(v))[0]) for v in cents])
         n = len(digits)
@@ -555,7 +543,7 @@ class TestTierAgreement5:
             )
 
     def test_ece(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "eval_expected_calibration_error").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_expected_calibration_error").iloc[0]
         docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["lang", "text"])
         stop = {"the", "a", "and", "of", "to", "in", "is", "that"}
         scores, labels = [], []

@@ -16,6 +16,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import query_pd
 
 Z_SEED = 606060
 
@@ -217,19 +218,6 @@ class TestCalibration6:
 # ==================================================== tier agreement
 
 
-def _spark_df(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-@pytest.fixture(scope="module")
-def events_pd(sf_dir):
-    return pd.read_parquet(f"{sf_dir}/events.parquet")
-
-
 @pytest.fixture(scope="module")
 def doc_scores(sf_dir):
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["lang", "text"])
@@ -247,7 +235,7 @@ def doc_scores(sf_dir):
 
 class TestTierAgreement6:
     def test_pass_at_k(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "eval_pass_at_k").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_pass_at_k").iloc[0]
         ev = events_pd[events_pd["event_type"] == "purchase"]
         per = ev.groupby("user_id").agg(
             n=("value", "size"), c=("value", lambda s: int((s > 200).sum()))
@@ -261,7 +249,7 @@ class TestTierAgreement6:
         assert abs(got["pass_at_3"] - p3) < 1.1e-6
 
     def test_ndcg_topk(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "eval_ndcg_topk").set_index("nationkey")
+        got = query_pd(spark, sf_dir, "eval_ndcg_topk").set_index("nationkey")
         c = pd.read_parquet(
             f"{sf_dir}/customer.parquet", columns=["c_custkey", "c_nationkey", "c_acctbal"]
         )
@@ -279,7 +267,7 @@ class TestTierAgreement6:
                 assert abs(row["ndcg_10"] - dcg / idcg) < 1.1e-6
 
     def test_map_mrr(self, spark, sf_dir, events_pd):
-        got = _spark_df(spark, sf_dir, "eval_map_mrr").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_map_mrr").iloc[0]
         ev = events_pd.copy()
         ev["rel"] = (ev["event_type"] == "purchase").astype(int)
         aps, rrs = [], []
@@ -295,7 +283,7 @@ class TestTierAgreement6:
         assert abs(got["mrr"] - float(np.mean(rrs))) < 1.1e-6
 
     def test_brier_decomposition(self, spark, sf_dir, doc_scores):
-        got = _spark_df(spark, sf_dir, "eval_brier_decomposition").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_brier_decomposition").iloc[0]
         scores, labels = doc_scores
         ref = brier_decomposition(np.round(scores * 10000).astype(int), labels)
         assert got["n_docs"] == len(scores)
@@ -307,7 +295,7 @@ class TestTierAgreement6:
         assert abs(gap) <= 0.005 + 1e-12
 
     def test_lift_gains(self, spark, sf_dir, doc_scores):
-        got = _spark_df(spark, sf_dir, "eval_lift_gains").sort_values("bucket").reset_index(drop=True)
+        got = query_pd(spark, sf_dir, "eval_lift_gains").sort_values("bucket").reset_index(drop=True)
         scores, labels = doc_scores
         bucket = np.minimum(np.floor(scores * 10), 9).astype(int)
         df = pd.DataFrame({"b": bucket, "y": labels})
@@ -326,7 +314,7 @@ class TestTierAgreement6:
         assert abs(full["cum_lift"] - 1.0) < 1.1e-6
 
     def test_logloss_brier(self, spark, sf_dir, doc_scores):
-        got = _spark_df(spark, sf_dir, "eval_logloss_brier").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_logloss_brier").iloc[0]
         scores, labels = doc_scores
         p = np.clip(scores, 0.0001, 0.9999)
         ll = float(-np.mean(labels * np.log(p) + (1 - labels) * np.log(1 - p)))
@@ -337,7 +325,7 @@ class TestTierAgreement6:
 
     @pytest.mark.parametrize("name,adjust", [("stat_bh_fdr", "bh"), ("stat_holm_stepdown", "holm")])
     def test_bh_holm(self, spark, sf_dir, events_pd, name, adjust):
-        got = _spark_df(spark, sf_dir, name)
+        got = query_pd(spark, sf_dir, name)
         ev = events_pd.copy()
         ev["c"] = np.round(ev["value"] * 100).astype("int64")
         ev["hr"] = ev["ts"].dt.hour

@@ -16,6 +16,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import query_pd
 
 Z_SEED = 70707
 
@@ -196,14 +197,6 @@ class TestCalibration7:
 # ==================================================== tier agreement
 
 
-def _spark_df(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
 @pytest.fixture(scope="module")
 def orders_pd(sf_dir):
     o = pd.read_parquet(f"{sf_dir}/orders.parquet")
@@ -214,7 +207,7 @@ def orders_pd(sf_dir):
 
 class TestTierAgreement7:
     def test_page_hinkley(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "ts_page_hinkley").iloc[0]
+        got = query_pd(spark, sf_dir, "ts_page_hinkley").iloc[0]
         daily = orders_pd.groupby("day")["cents"].sum().sort_index()
         ref = page_hinkley(daily.to_numpy(float))
         assert got["n_days"] == len(daily)
@@ -226,7 +219,7 @@ class TestTierAgreement7:
             assert pd.Timestamp(got["first_alarm_day"]) == daily.index[ref["first_alarm"]]
 
     def test_cusum(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "ts_cusum_changepoint").iloc[0]
+        got = query_pd(spark, sf_dir, "ts_cusum_changepoint").iloc[0]
         daily = orders_pd.groupby("day")["cents"].sum().sort_index()
         y = daily.to_numpy(float)
         idx = cusum_argmax(y)
@@ -239,7 +232,7 @@ class TestTierAgreement7:
         )
 
     def test_gini(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "stat_gini_customer_spend").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_gini_customer_spend").iloc[0]
         spend = orders_pd.groupby("o_custkey")["cents"].sum()
         assert got["n_customers"] == len(spend)
         assert abs(got["gini"] - gini(spend.to_numpy())) < 1.1e-6
@@ -250,7 +243,7 @@ class TestTierAgreement7:
         assert abs(got["top10pct_share"] - top / float(sp["cents"].sum())) < 1.1e-6
 
     def test_hhi(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "stat_hhi_concentration").set_index("region")
+        got = query_pd(spark, sf_dir, "stat_hhi_concentration").set_index("region")
         li = pd.read_parquet(
             f"{sf_dir}/lineitem.parquet", columns=["l_suppkey", "l_extendedprice", "l_discount"]
         )
@@ -272,7 +265,7 @@ class TestTierAgreement7:
             assert abs(row["effective_n"] - ref["effective_n"]) < 5.1e-5 * ref["effective_n"]
 
     def test_powerlaw_fit(self, spark, sf_dir, orders_pd):
-        got = _spark_df(spark, sf_dir, "graph_powerlaw_fit").iloc[0]
+        got = query_pd(spark, sf_dir, "graph_powerlaw_fit").iloc[0]
         k = orders_pd.groupby("o_custkey").size().to_numpy(float)
         assert got["n_nodes"] == len(k)
         assert got["kmin"] == int(k.min()) and got["kmax"] == int(k.max())
@@ -284,7 +277,7 @@ class TestTierAgreement7:
         assert abs(got["alpha_mle_k1"] - naive) < 1.1e-6
 
     def test_zipf_fit(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "text_zipf_fit").iloc[0]
+        got = query_pd(spark, sf_dir, "text_zipf_fit").iloc[0]
         docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["text"])
         from collections import Counter
 
@@ -301,7 +294,7 @@ class TestTierAgreement7:
         assert abs(got["r2"] - ref["r2"]) < 1.1e-6
 
     def test_heaps_fit(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "text_heaps_law_fit").iloc[0]
+        got = query_pd(spark, sf_dir, "text_heaps_law_fit").iloc[0]
         docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["source", "text"])
         rows = []
         for src, grp in docs.groupby("source"):
@@ -316,7 +309,7 @@ class TestTierAgreement7:
         assert abs(got["r2"] - ref["r2"]) < 1.1e-6
 
     def test_k_anonymity(self, spark, sf_dir):
-        got = _spark_df(spark, sf_dir, "dq_k_anonymity").iloc[0]
+        got = query_pd(spark, sf_dir, "dq_k_anonymity").iloc[0]
         c = pd.read_parquet(f"{sf_dir}/customer.parquet", columns=["c_nationkey", "c_mktsegment"])
         k = c.groupby(["c_nationkey", "c_mktsegment"]).size()
         below = k[k < 5]

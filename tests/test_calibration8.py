@@ -24,6 +24,7 @@ from fractions import Fraction
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import assert_close_dp, query_pd
 
 Z_SEED = 80808
 
@@ -409,20 +410,6 @@ class TestCalibration8:
 # ==================================================== tier agreement
 
 
-def _q(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-def _close(got, ref, dp, msg=""):
-    assert abs(float(got) - float(ref)) <= 0.51 * 10**-dp + 5e-9 * max(
-        1.0, abs(float(ref))
-    ), (msg, got, ref)
-
-
 @pytest.fixture(scope="module")
 def ev_pd(sf_dir):
     e = pd.read_parquet(f"{sf_dir}/events.parquet")
@@ -439,19 +426,19 @@ def ord_pd(sf_dir):
 
 class TestTierAgreement8:
     def test_wilson_ci(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "stat_wilson_ci").set_index("event_type")
+        got = query_pd(spark, sf_dir, "stat_wilson_ci").set_index("event_type")
         for et, g in ev_pd.groupby("event_type"):
             n = len(g)
             s = int((g["value"] > 100).sum())
             lo, hi = wilson_ci(s, n)
             row = got.loc[et]
             assert (row["n"], row["s"]) == (n, s)
-            _close(row["p_hat"], s / n, 6, et)
-            _close(row["wilson_lo"], lo, 6, et)
-            _close(row["wilson_hi"], hi, 6, et)
+            assert_close_dp(row["p_hat"], s / n, 6, et)
+            assert_close_dp(row["wilson_lo"], lo, 6, et)
+            assert_close_dp(row["wilson_hi"], hi, 6, et)
 
     def test_nelson_aalen(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "stat_nelson_aalen").set_index("dur_s")
+        got = query_pd(spark, sf_dir, "stat_nelson_aalen").set_index("dur_s")
         us = ev_pd["ts"].astype("datetime64[ns]").astype("int64") // 1000
         u = pd.DataFrame({"user_id": ev_pd["user_id"], "us": us,
                           "err": (ev_pd["event_type"] == "error").astype(int)})
@@ -469,12 +456,12 @@ class TestTierAgreement8:
         for dur, r in ref.iterrows():
             row = got.loc[dur]
             assert (row["n_events"], row["n_at_risk"]) == (r["d"], r["n_risk"])
-            _close(row["cum_hazard"], r["H"], 6, dur)
-            _close(row["var_hazard"], r["V"], 6, dur)
-            _close(row["surv_na"], math.exp(-r["H"]), 6, dur)
+            assert_close_dp(row["cum_hazard"], r["H"], 6, dur)
+            assert_close_dp(row["var_hazard"], r["V"], 6, dur)
+            assert_close_dp(row["surv_na"], math.exp(-r["H"]), 6, dur)
 
     def test_permutation_test(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "stat_permutation_test").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_permutation_test").iloc[0]
         per = ev_pd.groupby("user_id")["cents"].sum()
         grp = per.index.to_numpy() % 2
         cents = per.to_numpy()
@@ -490,25 +477,25 @@ class TestTierAgreement8:
         ds = np.array(ds)
         ext = int(np.sum(np.abs(ds) >= abs(obs)))
         assert got["n_users"] == len(per)
-        _close(got["obs_diff_cents"], obs, 4)
+        assert_close_dp(got["obs_diff_cents"], obs, 4)
         assert got["n_perms"] == len(ds)
         assert got["n_extreme"] == ext
-        _close(got["p_value"], (1 + ext) / (1 + len(ds)), 6)
+        assert_close_dp(got["p_value"], (1 + ext) / (1 + len(ds)), 6)
 
     def test_welch_ttest(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "stat_ab_welch_ttest").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_ab_welch_ttest").iloc[0]
         p = ev_pd[ev_pd["event_type"] == "purchase"]
         a = p[p["user_id"] % 2 == 0]["value"].to_numpy()
         b = p[p["user_id"] % 2 == 1]["value"].to_numpy()
         t, df = welch_t(a, b)
         assert (got["n_a"], got["n_b"]) == (len(a), len(b))
-        _close(got["mean_a"], a.mean(), 4)
-        _close(got["mean_b"], b.mean(), 4)
-        _close(got["t_stat"], t, 4)
-        _close(got["df_welch"], df, 2)
+        assert_close_dp(got["mean_a"], a.mean(), 4)
+        assert_close_dp(got["mean_b"], b.mean(), 4)
+        assert_close_dp(got["t_stat"], t, 4)
+        assert_close_dp(got["df_welch"], df, 2)
 
     def test_chi_square_independence(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "stat_chi_square_independence")
+        got = query_pd(spark, sf_dir, "stat_chi_square_independence")
         v = np.where(ev_pd["user_id"] % 2 == 0, "A", "B")
         tab = pd.crosstab(v, ev_pd["event_type"])
         n = tab.to_numpy().sum()
@@ -516,11 +503,11 @@ class TestTierAgreement8:
             o = tab.loc[row["variant"], row["event_type"]]
             e = tab.loc[row["variant"]].sum() * tab[row["event_type"]].sum() / n
             assert row["observed"] == o
-            _close(row["expected"], e, 4)
-            _close(row["chi2_term"], (o - e) ** 2 / e, 6)
+            assert_close_dp(row["expected"], e, 4)
+            assert_close_dp(row["chi2_term"], (o - e) ** 2 / e, 6)
 
     def test_cohens_d(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "stat_cohens_d").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_cohens_d").iloc[0]
         per = ev_pd.groupby("user_id")["cents"].sum()
         c0 = per[per.index % 2 == 0].to_numpy(float)
         c1 = per[per.index % 2 == 1].to_numpy(float)
@@ -531,13 +518,13 @@ class TestTierAgreement8:
         d = (c1.mean() - c0.mean()) / sp
         big_n = len(c0) + len(c1)
         assert (got["n_ctrl"], got["n_treat"]) == (len(c0), len(c1))
-        _close(got["mean_ctrl_cents"], c0.mean(), 4)
-        _close(got["mean_treat_cents"], c1.mean(), 4)
-        _close(got["cohens_d"], d, 6)
-        _close(got["hedges_g"], d * (1 - 3.0 / (4 * big_n - 9)), 6)
+        assert_close_dp(got["mean_ctrl_cents"], c0.mean(), 4)
+        assert_close_dp(got["mean_treat_cents"], c1.mean(), 4)
+        assert_close_dp(got["cohens_d"], d, 6)
+        assert_close_dp(got["hedges_g"], d * (1 - 3.0 / (4 * big_n - 9)), 6)
 
     def test_diff_in_differences(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "stat_diff_in_differences").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_diff_in_differences").iloc[0]
         e = ev_pd.copy()
         e["pre"] = np.where(e["ts"].dt.day < 16, e["cents"], 0)
         e["post"] = np.where(e["ts"].dt.day >= 16, e["cents"], 0)
@@ -554,14 +541,14 @@ class TestTierAgreement8:
             + p0.var(ddof=1) / n0 + o0.var(ddof=1) / n0
         )
         assert (got["n_treat"], got["n_ctrl"]) == (n1, n0)
-        _close(got["pre_treat"], p1.mean(), 4)
-        _close(got["post_treat"], o1.mean(), 4)
-        _close(got["did_cents"], did, 4)
-        _close(got["se_cents"], se, 4)
-        _close(got["t_stat"], did / se, 6)
+        assert_close_dp(got["pre_treat"], p1.mean(), 4)
+        assert_close_dp(got["post_treat"], o1.mean(), 4)
+        assert_close_dp(got["did_cents"], did, 4)
+        assert_close_dp(got["se_cents"], se, 4)
+        assert_close_dp(got["t_stat"], did / se, 6)
 
     def test_mutual_information(self, spark, sf_dir, ev_pd):
-        got = _q(spark, sf_dir, "stat_mutual_information").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_mutual_information").iloc[0]
         # Spark dayofweek: 1=Sunday..7=Saturday; pandas dayofweek 0=Monday
         y = ((ev_pd["ts"].dt.dayofweek + 1) % 7) + 1
         tab = pd.crosstab(ev_pd["event_type"], y).to_numpy().astype(float)
@@ -577,13 +564,13 @@ class TestTierAgreement8:
         hy = -sum(p * math.log(p) for p in py if p > 0)
         assert got["n_cells"] == int((tab > 0).sum())
         assert got["n_events"] == int(n)
-        _close(got["mi_nats"], mi, 6)
-        _close(got["h_x"], hx, 6)
-        _close(got["h_y"], hy, 6)
-        _close(got["nmi"], mi / math.sqrt(hx * hy), 6)
+        assert_close_dp(got["mi_nats"], mi, 6)
+        assert_close_dp(got["h_x"], hx, 6)
+        assert_close_dp(got["h_y"], hy, 6)
+        assert_close_dp(got["nmi"], mi / math.sqrt(hx * hy), 6)
 
     def test_smd_balance(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "stat_smd_balance").set_index("stratum")
+        got = query_pd(spark, sf_dir, "stat_smd_balance").set_index("stratum")
         c = pd.read_parquet(f"{sf_dir}/customer.parquet")
         na = pd.read_parquet(f"{sf_dir}/nation.parquet")
         r = pd.read_parquet(f"{sf_dir}/region.parquet")
@@ -601,11 +588,11 @@ class TestTierAgreement8:
             )
             row = got.loc[stratum]
             assert (row["n_treated"], row["n_control"]) == (len(gt), len(gc))
-            _close(row["smd"], smd, 6, stratum)
+            assert_close_dp(row["smd"], smd, 6, stratum)
             assert row["balanced"] == (abs(smd) < 0.1)
 
     def test_linear_regression(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "stat_linear_regression").set_index("l_returnflag")
+        got = query_pd(spark, sf_dir, "stat_linear_regression").set_index("l_returnflag")
         li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")
         for flag, g in li.groupby("l_returnflag"):
             x = g["l_quantity"].to_numpy(float)
@@ -616,23 +603,23 @@ class TestTierAgreement8:
             syy = ((y - my) ** 2).sum()
             row = got.loc[flag]
             assert row["n"] == len(g)
-            _close(row["slope"], sxy / sxx, 6, flag)
-            _close(row["intercept"], my - sxy / sxx * mx, 4, flag)
-            _close(row["r2"], sxy * sxy / (sxx * syy), 6, flag)
+            assert_close_dp(row["slope"], sxy / sxx, 6, flag)
+            assert_close_dp(row["intercept"], my - sxy / sxx * mx, 4, flag)
+            assert_close_dp(row["r2"], sxy * sxy / (sxx * syy), 6, flag)
 
     def test_trimmed_mean(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "stat_trimmed_mean").iloc[0]
+        got = query_pd(spark, sf_dir, "stat_trimmed_mean").iloc[0]
         s = np.sort(ord_pd["cents"].to_numpy())
         n = len(s)
         cut = n // 10
         kept = s[cut : n - cut]
         assert (got["n"], got["trimmed_each_side"]) == (n, cut)
-        _close(got["trimmed_mean"], kept.sum() / (100.0 * len(kept)), 4)
-        _close(got["lower_bound"], kept.min() / 100.0, 2)
-        _close(got["upper_bound"], kept.max() / 100.0, 2)
+        assert_close_dp(got["trimmed_mean"], kept.sum() / (100.0 * len(kept)), 4)
+        assert_close_dp(got["lower_bound"], kept.min() / 100.0, 2)
+        assert_close_dp(got["upper_bound"], kept.max() / 100.0, 2)
 
     def test_winsorized_mean(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "stat_winsorized_mean").set_index("o_orderpriority")
+        got = query_pd(spark, sf_dir, "stat_winsorized_mean").set_index("o_orderpriority")
         for pri, g in ord_pd.groupby("o_orderpriority"):
             s = np.sort(g["cents"].to_numpy())
             n = len(s)
@@ -640,10 +627,10 @@ class TestTierAgreement8:
             hi = s[((n - 1) * 90) // 100]
             row = got.loc[pri]
             assert (row["n"], row["lo_cents"], row["hi_cents"]) == (n, lo, hi)
-            _close(row["winsor_mean_cents"], np.clip(s, lo, hi).mean(), 4, pri)
+            assert_close_dp(row["winsor_mean_cents"], np.clip(s, lo, hi).mean(), 4, pri)
 
     def test_conformal_interval(self, spark, sf_dir, ord_pd):
-        got = _q(spark, sf_dir, "eval_conformal_interval").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_conformal_interval").iloc[0]
         o = ord_pd
         train = o[o["o_orderkey"] % 4 == 0]
         model = train.groupby("o_orderpriority")["cents"].agg(["sum", "size"])
@@ -671,6 +658,6 @@ class TestTierAgreement8:
         assert (got["n_train"], got["n_cal"], got["n_test"]) == (
             len(train), n_cal, len(te),
         )
-        _close(got["q_resid_cents"], q, 4)
+        assert_close_dp(got["q_resid_cents"], q, 4)
         assert got["covered"] == cov
-        _close(got["coverage"], cov / len(te), 6)
+        assert_close_dp(got["coverage"], cov / len(te), 6)

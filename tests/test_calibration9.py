@@ -22,6 +22,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import assert_close_dp, query_pd
 
 Z_SEED = 90909
 
@@ -433,20 +434,6 @@ class TestCalibration9:
 # ==================================================== tier agreement
 
 
-def _q(spark, sf_dir, name) -> pd.DataFrame:
-    from etl_file_sync_spark.queries import REGISTRY
-
-    pdf = REGISTRY[name].build(spark, sf_dir).toPandas()
-    assert len(pdf) >= 1
-    return pdf
-
-
-def _close(got, ref, dp, msg=""):
-    assert abs(float(got) - float(ref)) <= 0.51 * 10**-dp + 5e-9 * max(
-        1.0, abs(float(ref))
-    ), (msg, got, ref)
-
-
 def _cents(v) -> np.ndarray:
     return np.floor(np.asarray(v, float) * 100 + 0.5).astype(np.int64)
 
@@ -469,17 +456,17 @@ def daily_type(sf_dir):
 
 class TestTierAgreement9:
     def test_ewma_daily(self, spark, sf_dir, daily_type):
-        got = _q(spark, sf_dir, "ts_ewma_daily")
+        got = query_pd(spark, sf_dir, "ts_ewma_daily")
         for et, s in daily_type.groupby(level=0):
             y = s.droplevel(0).sort_index().to_numpy(float)
             ref = ewma_recursive(y, 0.2) / 100.0
             sub = got[got["event_type"] == et].sort_values("day")
             assert len(sub) == len(y)
             for got_v, ref_v in zip(sub["ewma_value"], ref):
-                _close(got_v, ref_v, 2, et)
+                assert_close_dp(got_v, ref_v, 2, et)
 
     def test_rolling_zscore(self, spark, sf_dir, daily_type):
-        got = _q(spark, sf_dir, "ts_rolling_zscore")
+        got = query_pd(spark, sf_dir, "ts_rolling_zscore")
         for et, s in daily_type.groupby(level=0):
             y = s.droplevel(0).sort_index().to_numpy(float)
             sub = got[got["event_type"] == et].sort_values("day").reset_index(drop=True)
@@ -488,34 +475,34 @@ class TestTierAgreement9:
                 w = y[max(0, i - 6) : i + 1]
                 if len(w) >= 3 and w.std(ddof=1) > 0:
                     z = (y[i] - w.mean()) / w.std(ddof=1)
-                    _close(sub.loc[i, "z"], z, 4, (et, i))
+                    assert_close_dp(sub.loc[i, "z"], z, 4, (et, i))
                     assert bool(sub.loc[i, "is_anomaly"]) == (abs(z) > 2.0)
                 else:
                     assert pd.isna(sub.loc[i, "z"])
 
     def test_autocorrelation(self, spark, sf_dir, daily_rev):
-        got = _q(spark, sf_dir, "ts_autocorrelation").set_index("lag")
+        got = query_pd(spark, sf_dir, "ts_autocorrelation").set_index("lag")
         y = daily_rev.to_numpy(float)
         for lag in range(1, 8):
             n, r = acf_pairwise(y, lag)
             assert got.loc[lag, "n_pairs"] == n
-            _close(got.loc[lag, "acf"], r, 6, lag)
+            assert_close_dp(got.loc[lag, "acf"], r, 6, lag)
 
     def test_pacf_durbin(self, spark, sf_dir, daily_rev):
-        got = _q(spark, sf_dir, "ts_pacf_durbin").iloc[0]
+        got = query_pd(spark, sf_dir, "ts_pacf_durbin").iloc[0]
         y = daily_rev.to_numpy(float)
         r1, r2, r3 = (acf_global(y, k) for k in (1, 2, 3))
         dl = durbin_levinson([r1, r2, r3])
         assert got["n_days"] == len(y)
-        _close(got["acf1"], r1, 6)
-        _close(got["acf2"], r2, 6)
-        _close(got["acf3"], r3, 6)
-        _close(got["pacf1"], dl[0], 6)
-        _close(got["pacf2"], dl[1], 6)
-        _close(got["pacf3"], dl[2], 6)
+        assert_close_dp(got["acf1"], r1, 6)
+        assert_close_dp(got["acf2"], r2, 6)
+        assert_close_dp(got["acf3"], r3, 6)
+        assert_close_dp(got["pacf1"], dl[0], 6)
+        assert_close_dp(got["pacf2"], dl[1], 6)
+        assert_close_dp(got["pacf3"], dl[2], 6)
 
     def test_holt_linear(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "ts_holt_linear")
+        got = query_pd(spark, sf_dir, "ts_holt_linear")
         o = pd.read_parquet(f"{sf_dir}/orders.parquet")
         o["cents"] = _cents(o["o_totalprice"].to_numpy())
         m = (
@@ -530,13 +517,13 @@ class TestTierAgreement9:
         for k, (i, lv, b, f) in enumerate(fits):
             row = hist.loc[k]
             assert row["y_cents"] == int(y[i])
-            _close(row["level"], lv, 4, k)
-            _close(row["trend"], b, 4, k)
-            _close(row["fitted"], f, 4, k)
+            assert_close_dp(row["level"], lv, 4, k)
+            assert_close_dp(row["trend"], b, 4, k)
+            assert_close_dp(row["fitted"], f, 4, k)
         fc = got[got["horizon"] > 0].sort_values("horizon").reset_index(drop=True)
         assert len(fc) == 3
         for h in (1, 2, 3):
-            _close(fc.loc[h - 1, "fitted"], level + h * tr, 4, h)
+            assert_close_dp(fc.loc[h - 1, "fitted"], level + h * tr, 4, h)
             assert pd.isna(fc.loc[h - 1, "y_cents"])
         # forecast months continue the calendar
         last = m.index[-1].to_timestamp()
@@ -544,7 +531,7 @@ class TestTierAgreement9:
             assert fc.loc[h - 1, "month"] == last + pd.DateOffset(months=h)
 
     def test_holt_winters_weekly(self, spark, sf_dir, daily_rev):
-        got = _q(spark, sf_dir, "ts_holt_winters_weekly")
+        got = query_pd(spark, sf_dir, "ts_holt_winters_weekly")
         y = [float(v) for v in daily_rev.to_numpy()]
         days = daily_rev.index
         fits, level, tr, s = hw_seq(y)
@@ -557,15 +544,15 @@ class TestTierAgreement9:
             idx = 7 + off + k
             assert row["y_cents"] == int(y[idx])
             assert row["day"] == days[idx]
-            _close(row["fitted"], f, 4, k)
+            assert_close_dp(row["fitted"], f, 4, k)
         fc = got[got["horizon"] > 0].sort_values("horizon").reset_index(drop=True)
         assert len(fc) == 7
         for h in range(1, 8):
-            _close(fc.loc[h - 1, "fitted"], level + h * tr + s[h - 1], 4, h)
+            assert_close_dp(fc.loc[h - 1, "fitted"], level + h * tr + s[h - 1], 4, h)
             assert fc.loc[h - 1, "day"] == days[-1] + pd.Timedelta(days=h)
 
     def test_stl_decompose_dow(self, spark, sf_dir, daily_rev):
-        got = _q(spark, sf_dir, "ts_stl_decompose_dow").set_index("dow")
+        got = query_pd(spark, sf_dir, "ts_stl_decompose_dow").set_index("dow")
         y = daily_rev.to_numpy(float)
         days = daily_rev.index
         n = len(y)
@@ -577,12 +564,12 @@ class TestTierAgreement9:
             s_hat = (means[d] - grand) / 7
             row = got.loc[d]
             assert row["n_days"] == int((dows == d).sum())
-            _close(row["seasonal_cents"], s_hat, 4, d)
+            assert_close_dp(row["seasonal_cents"], s_hat, 4, d)
             resid = d7[dows == d] / 7 - s_hat
-            _close(row["resid_rms_cents"], math.sqrt((resid**2).mean()), 4, d)
+            assert_close_dp(row["resid_rms_cents"], math.sqrt((resid**2).mean()), 4, d)
 
     def test_population_stability(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "dq_population_stability").set_index("bucket")
+        got = query_pd(spark, sf_dir, "dq_population_stability").set_index("bucket")
         o = pd.read_parquet(f"{sf_dir}/orders.parquet")
         ep = pd.to_datetime(o["o_orderdate"]).astype("datetime64[ns]").astype("int64") / 1e9
         mid = (ep.min() + ep.max()) / 2
@@ -595,12 +582,12 @@ class TestTierAgreement9:
             pc = cur_n.get(b, np.nan) / cur_n.sum()
             pr = 0.0001 if pd.isna(pr) else pr
             pc = 0.0001 if pd.isna(pc) else pc
-            _close(got.loc[b, "p_ref"], pr, 6, b)
-            _close(got.loc[b, "p_cur"], pc, 6, b)
-            _close(got.loc[b, "psi_term"], (pc - pr) * math.log(pc / pr), 6, b)
+            assert_close_dp(got.loc[b, "p_ref"], pr, 6, b)
+            assert_close_dp(got.loc[b, "p_cur"], pc, 6, b)
+            assert_close_dp(got.loc[b, "psi_term"], (pc - pr) * math.log(pc / pr), 6, b)
 
     def test_isotonic_calibration(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "eval_isotonic_calibration").sort_values("bin")
+        got = query_pd(spark, sf_dir, "eval_isotonic_calibration").sort_values("bin")
         e = pd.read_parquet(f"{sf_dir}/events.parquet")
         b = pd.DataFrame(
             {
@@ -612,12 +599,12 @@ class TestTierAgreement9:
         assert list(got["bin"]) == list(b.index)
         for k, (_, row) in enumerate(got.iterrows()):
             assert (row["w"], row["s"]) == (b["w"].iloc[k], b["s"].iloc[k])
-            _close(row["raw_rate"], b["s"].iloc[k] / b["w"].iloc[k], 6, k)
-            _close(row["iso_rate"], iso[k], 6, k)
+            assert_close_dp(row["raw_rate"], b["s"].iloc[k] / b["w"].iloc[k], 6, k)
+            assert_close_dp(row["iso_rate"], iso[k], 6, k)
         assert np.all(np.diff(got["iso_rate"].to_numpy()) >= -1e-6)
 
     def test_cohens_kappa(self, spark, sf_dir):
-        got = _q(spark, sf_dir, "eval_cohens_kappa").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_cohens_kappa").iloc[0]
         d = pd.read_parquet(f"{sf_dir}/documents.parquet")
 
         def band(v):
@@ -634,9 +621,9 @@ class TestTierAgreement9:
         pb = b.value_counts(normalize=True)
         pe = float(sum(pa.get(k, 0) * pb.get(k, 0) for k in set(pa.index) | set(pb.index)))
         assert got["n_items"] == n
-        _close(got["p_observed"], po, 6)
-        _close(got["p_expected"], pe, 6)
-        _close(got["kappa"], (po - pe) / (1 - pe), 6)
+        assert_close_dp(got["p_observed"], po, 6)
+        assert_close_dp(got["p_expected"], pe, 6)
+        assert_close_dp(got["kappa"], (po - pe) / (1 - pe), 6)
 
     def test_auprc_blockwise(self, spark, sf_dir):
         """Pin eval_auprc to the blockwise-AP definition computed from
@@ -644,10 +631,10 @@ class TestTierAgreement9:
         registry's oracled scoring sibling conventions)."""
         import etl_file_sync_spark.queries.eval_face as EF
 
-        got = _q(spark, sf_dir, "eval_auprc").iloc[0]
+        got = query_pd(spark, sf_dir, "eval_auprc").iloc[0]
         sdf = EF._scored(spark, sf_dir).toPandas()
         ap = ap_blockwise(sdf["score"].to_numpy(float), sdf["label"].to_numpy(int))
         assert got["n_pos"] == int(sdf["label"].sum())
         assert got["n_neg"] == int((1 - sdf["label"]).sum())
-        _close(got["auprc"], ap, 6)
-        _close(got["baseline_precision"], sdf["label"].mean(), 6)
+        assert_close_dp(got["auprc"], ap, 6)
+        assert_close_dp(got["baseline_precision"], sdf["label"].mean(), 6)

@@ -14,15 +14,12 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_cliffs_delta_matches_bruteforce(spark, sf_dir):
     got = REGISTRY["stat_cliffs_delta"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     cents = (e.value * 100).round().astype("int64")
     x = cents[e.event_type == "purchase"].to_numpy()
     y = cents[e.event_type == "view"].to_numpy()
@@ -43,7 +40,7 @@ def test_cliffs_delta_matches_bruteforce(spark, sf_dir):
 
 def test_cvm_two_sample_matches_ecdf(spark, sf_dir):
     got = REGISTRY["stat_cvm_two_sample"].build(spark, sf_dir).collect()[0]
-    li = _pq(sf_dir, "lineitem")
+    li = read_pq(sf_dir, "lineitem")
     x = li.l_extendedprice[li.l_returnflag == "R"].to_numpy()
     y = li.l_extendedprice[li.l_returnflag == "N"].to_numpy()
     n, m = len(x), len(y)
@@ -62,7 +59,7 @@ def test_cvm_two_sample_matches_ecdf(spark, sf_dir):
 
 def test_energy_distance_matches_bruteforce(spark, sf_dir):
     got = REGISTRY["stat_energy_distance"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     x = o.o_totalprice[o.o_custkey % 2 == 0].to_numpy()
     y = o.o_totalprice[o.o_custkey % 2 == 1].to_numpy()
     exy = float(np.abs(x[:, None] - y[None, :]).mean())
@@ -79,10 +76,10 @@ def test_energy_distance_matches_bruteforce(spark, sf_dir):
 
 def test_mantel_haenszel_matches_pandas(spark, sf_dir):
     got = REGISTRY["stat_mantel_haenszel"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
-    c = _pq(sf_dir, "customer")
-    nn = _pq(sf_dir, "nation")
-    rr = _pq(sf_dir, "region")
+    o = read_pq(sf_dir, "orders")
+    c = read_pq(sf_dir, "customer")
+    nn = read_pq(sf_dir, "nation")
+    rr = read_pq(sf_dir, "region")
     df = (
         o.merge(c, left_on="o_custkey", right_on="c_custkey")
         .merge(nn, left_on="c_nationkey", right_on="n_nationkey")
@@ -117,7 +114,7 @@ def test_friedman_matches_pandas(spark, sf_dir):
         r["treatment"]: r
         for r in REGISTRY["stat_friedman_test"].build(spark, sf_dir).collect()
     }
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     cell = (
         pd.DataFrame(
@@ -155,7 +152,7 @@ def test_friedman_matches_pandas(spark, sf_dir):
 def test_dunn_posthoc_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_dunn_posthoc"].build(spark, sf_dir).collect()
     assert len(got) == 10  # C(5,2) pairs
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     v = o.o_totalprice.to_numpy()
     grp = o.o_orderpriority.to_numpy()
     ranks = pd.Series(v).rank(method="average").to_numpy()

@@ -15,14 +15,11 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def _conv_cells(sf_dir: str):
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     conv = (
         ((e.event_type == "purchase") & (e.value > 200))
         .groupby(e.user_id)
@@ -71,7 +68,7 @@ def test_bayes_ab_matches_grid_integration(spark, sf_dir):
 
 def test_welch_anova_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_welch_anova"].build(spark, sf_dir).collect()[0]
-    li = _pq(sf_dir, "lineitem")
+    li = read_pq(sf_dir, "lineitem")
     cents = (li.l_extendedprice * 100).round().astype("int64")
     groups = [g.to_numpy(dtype=float) for _, g in cents.groupby(li.l_returnflag)]
     k = len(groups)
@@ -92,9 +89,9 @@ def test_welch_anova_matches_numpy(spark, sf_dir):
 
 def test_jackknife_ratio_matches_python_loop(spark, sf_dir):
     got = REGISTRY["stat_jackknife_ratio"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
-    c = _pq(sf_dir, "customer")
-    n = _pq(sf_dir, "nation")
+    o = read_pq(sf_dir, "orders")
+    c = read_pq(sf_dir, "customer")
+    n = read_pq(sf_dir, "nation")
     df = o.merge(c, left_on="o_custkey", right_on="c_custkey").merge(
         n, left_on="c_nationkey", right_on="n_nationkey"
     )
@@ -127,9 +124,9 @@ def test_jackknife_ratio_accurate_under_offset(spark, tier_dir):
     tier = tier_dir("conditioning")
     got = REGISTRY["stat_jackknife_ratio"].build(spark, tier).collect()[0]
 
-    o = _pq(tier, "orders")
-    c = _pq(tier, "customer")
-    n = _pq(tier, "nation")
+    o = read_pq(tier, "orders")
+    c = read_pq(tier, "customer")
+    n = read_pq(tier, "nation")
     df = o.merge(c, left_on="o_custkey", right_on="c_custkey").merge(
         n, left_on="c_nationkey", right_on="n_nationkey"
     )
@@ -151,7 +148,7 @@ def test_jackknife_ratio_accurate_under_offset(spark, tier_dir):
 
 def test_ljung_box_matches_numpy(spark, sf_dir):
     got = REGISTRY["ts_ljung_box"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     daily = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate).dt.date, "c": cents})
@@ -214,10 +211,10 @@ def test_hhi_matches_pandas(spark, sf_dir):
         r["region"]: r
         for r in REGISTRY["stat_hhi_concentration"].build(spark, sf_dir).collect()
     }
-    li = _pq(sf_dir, "lineitem")
-    s = _pq(sf_dir, "supplier")
-    n = _pq(sf_dir, "nation")
-    r = _pq(sf_dir, "region")
+    li = read_pq(sf_dir, "lineitem")
+    s = read_pq(sf_dir, "supplier")
+    n = read_pq(sf_dir, "nation")
+    r = read_pq(sf_dir, "region")
     df = (
         li.merge(s, left_on="l_suppkey", right_on="s_suppkey")
         .merge(n, left_on="s_nationkey", right_on="n_nationkey")
@@ -240,7 +237,7 @@ def test_hhi_matches_pandas(spark, sf_dir):
 
 def test_cochran_q_matches_textbook(spark, sf_dir):
     got = REGISTRY["stat_cochran_q"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     flags = pd.DataFrame(
         {
             f"t{i}": ((e.event_type == "purchase") & (e.value > thr))
@@ -269,7 +266,7 @@ def test_cochran_q_matches_textbook(spark, sf_dir):
 
 def test_mcnemar_exact_matches_comb(spark, sf_dir):
     got = REGISTRY["stat_mcnemar_exact"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     hv = ((e.event_type == "purchase") & (e.value > 100)).groupby(e.user_id).max()
     freq = (e.event_type == "purchase").groupby(e.user_id).sum() > 15
     b = int((hv & ~freq).sum())
@@ -287,7 +284,7 @@ def test_mcnemar_exact_matches_comb(spark, sf_dir):
 
 def test_negbin_fit_matches_numpy_mom(spark, sf_dir):
     got = REGISTRY["stat_negbin_fit"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     k = e.groupby("user_id").size().to_numpy(dtype=float)
     m, v = k.mean(), k.var(ddof=1)
     assert got["n_users"] == len(k)
@@ -303,7 +300,7 @@ def test_negbin_fit_matches_numpy_mom(spark, sf_dir):
 
 def test_capture_recapture_matches_pandas(spark, sf_dir):
     got = REGISTRY["stat_capture_recapture"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     hv = e[(e.event_type == "purchase") & (e.value > 150)].copy()
     d = pd.to_datetime(hv.ts).dt.normalize()
     epoch_day = (d - pd.Timestamp("1970-01-01")).dt.days
@@ -325,8 +322,8 @@ def test_cramers_v_matches_numpy(spark, sf_dir):
         r["pair"]: r
         for r in REGISTRY["stat_cramers_v_matrix"].build(spark, sf_dir).collect()
     }
-    e = _pq(sf_dir, "events")
-    o = _pq(sf_dir, "orders")
+    e = read_pq(sf_dir, "events")
+    o = read_pq(sf_dir, "orders")
     for pair, (rser, cser) in {
         "variant_x_event_type": ((e.user_id % 2).astype(str), e.event_type),
         "status_x_priority": (o.o_orderstatus, o.o_orderpriority),
@@ -345,7 +342,7 @@ def test_cramers_v_matches_numpy(spark, sf_dir):
 
 def test_powerlaw_fit_matches_numpy(spark, sf_dir):
     got = REGISTRY["graph_powerlaw_fit"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     k = o.groupby("o_custkey").size().to_numpy(dtype=float)
     alpha_k1 = 1 + len(k) / np.log(2 * k).sum()
     tail = k[k >= 4]
@@ -364,7 +361,7 @@ def test_stl_decompose_matches_pandas(spark, sf_dir):
         r["dow"]: r
         for r in REGISTRY["ts_stl_decompose_dow"].build(spark, sf_dir).collect()
     }
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     daily = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate), "c": cents})
@@ -398,8 +395,8 @@ def test_functional_dependency_matches_pandas(spark, sf_dir):
         r["fd"]: r
         for r in REGISTRY["dq_functional_dependency"].build(spark, sf_dir).collect()
     }
-    o = _pq(sf_dir, "orders")
-    p = _pq(sf_dir, "part")
+    o = read_pq(sf_dir, "orders")
+    p = read_pq(sf_dir, "part")
     cases = {
         "orders: o_orderkey -> o_orderstatus": (o, "o_orderkey", "o_orderstatus"),
         "orders: o_custkey -> o_orderpriority": (o, "o_custkey", "o_orderpriority"),
@@ -418,7 +415,7 @@ def test_functional_dependency_matches_pandas(spark, sf_dir):
 
 def test_pass_at_k_matches_comb_definition(spark, sf_dir):
     got = REGISTRY["eval_pass_at_k"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     pur = e[e.event_type == "purchase"]
     g = pur.groupby("user_id").agg(
         n=("value", "size"), c=("value", lambda v: int((v > 200).sum()))
@@ -441,7 +438,7 @@ def test_pass_at_k_matches_comb_definition(spark, sf_dir):
 
 
 def _daily_rev(sf_dir):
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     return (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate), "c": cents})
@@ -476,7 +473,7 @@ def test_page_hinkley_matches_numpy(spark, sf_dir):
 
 def test_gumbel_fit_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_gumbel_max_fit"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     cents = (o.o_totalprice * 100).round().astype("int64")
     mx = (
         pd.DataFrame({"day": pd.to_datetime(o.o_orderdate).dt.date, "c": cents})
@@ -501,10 +498,10 @@ def test_gumbel_fit_matches_numpy(spark, sf_dir):
 
 def test_theil_index_matches_numpy(spark, sf_dir):
     got = REGISTRY["stat_theil_index"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
-    c = _pq(sf_dir, "customer")
-    nn = _pq(sf_dir, "nation")
-    rr = _pq(sf_dir, "region")
+    o = read_pq(sf_dir, "orders")
+    c = read_pq(sf_dir, "customer")
+    nn = read_pq(sf_dir, "nation")
+    rr = read_pq(sf_dir, "region")
     df = (
         o.merge(c, left_on="o_custkey", right_on="c_custkey")
         .merge(nn, left_on="c_nationkey", right_on="n_nationkey")

@@ -15,15 +15,12 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_wasserstein_matches_numpy_quantile_definition(spark, sf_dir):
     got = REGISTRY["stat_wasserstein_1d"].build(spark, sf_dir).collect()[0]
-    o = _pq(sf_dir, "orders")
+    o = read_pq(sf_dir, "orders")
     a = np.sort(o.loc[o.o_custkey % 2 == 0, "o_totalprice"].to_numpy())
     b = np.sort(o.loc[o.o_custkey % 2 == 1, "o_totalprice"].to_numpy())
     # independent definition: W1 = integral over u in (0,1) of
@@ -45,7 +42,7 @@ def test_wasserstein_matches_numpy_quantile_definition(spark, sf_dir):
 
 def test_cohens_kappa_matches_pandas_confusion(spark, sf_dir):
     got = REGISTRY["eval_cohens_kappa"].build(spark, sf_dir).collect()[0]
-    d = _pq(sf_dir, "documents")
+    d = read_pq(sf_dir, "documents")
 
     def band(x: int) -> str:
         return "short" if x < 250 else ("mid" if x < 360 else "long")
@@ -71,8 +68,8 @@ def test_cohens_kappa_matches_pandas_confusion(spark, sf_dir):
 
 def test_eb_shrinkage_matches_numpy_moments(spark, sf_dir):
     rows = REGISTRY["stat_eb_shrinkage"].build(spark, sf_dir).collect()
-    li = _pq(sf_dir, "lineitem")
-    o = _pq(sf_dir, "orders")
+    li = read_pq(sf_dir, "lineitem")
+    o = read_pq(sf_dir, "orders")
     j = li.merge(o, left_on="l_orderkey", right_on="o_orderkey")
     g = j.groupby("o_custkey").agg(
         n=("l_returnflag", "size"), x=("l_returnflag", lambda s: (s == "R").sum())
@@ -98,7 +95,7 @@ def test_eb_shrinkage_matches_numpy_moments(spark, sf_dir):
 
 def test_msprt_matches_numpy_and_p_is_always_valid_shape(spark, sf_dir):
     rows = REGISTRY["stat_msprt_sequential"].build(spark, sf_dir).collect()
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     e["day"] = e.ts.dt.floor("d")
     e["variant"] = np.where(e.user_id % 2 == 0, "A", "B")
     e["success"] = (e.event_type == "purchase").astype(int)
@@ -142,7 +139,7 @@ def test_msprt_matches_numpy_and_p_is_always_valid_shape(spark, sf_dir):
 
 def test_ipw_ate_matches_pandas_definition(spark, sf_dir):
     got = REGISTRY["stat_ipw_ate"].build(spark, sf_dir).collect()[0]
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     t_flag = (e.user_id % 2 == 0).astype(int)
     phat = t_flag.groupby(e.event_type).transform("mean")
     wy1 = t_flag * e.value / phat

@@ -14,15 +14,12 @@ import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def test_ltv_cohort_curves_match_pandas(spark, sf_dir):
     got = REGISTRY["behavior_ltv_cohort_curves"].build(spark, sf_dir).collect()
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     p = e[e.event_type == "purchase"].copy()
     p["day"] = pd.to_datetime(p.ts).dt.normalize()
     p["cents"] = (p.value * 100).round().astype("int64")
@@ -51,7 +48,7 @@ def test_neyman_allocation_matches_python(spark, sf_dir):
         r["source"]: r
         for r in REGISTRY["sample_neyman_allocation"].build(spark, sf_dir).collect()
     }
-    d = _pq(sf_dir, "documents")
+    d = read_pq(sf_dir, "documents")
     g = d.groupby("source").n_chars.agg(["size", "std"])
     wh = {s: round(int(r["size"]) * float(r["std"]) * 1000) for s, r in g.iterrows()}
     wt = sum(wh.values())
@@ -72,7 +69,7 @@ def test_neyman_allocation_matches_python(spark, sf_dir):
 
 def test_term_burstiness_matches_pandas(spark, sf_dir):
     got = REGISTRY["text_term_burstiness"].build(spark, sf_dir).collect()
-    d = _pq(sf_dir, "documents")
+    d = read_pq(sf_dir, "documents")
     n_docs = len(d)
     counts: dict[str, dict[int, int]] = defaultdict(lambda: defaultdict(int))
     for doc_id, text in zip(d.doc_id, d.text):
@@ -100,7 +97,7 @@ def test_term_burstiness_matches_pandas(spark, sf_dir):
 
 def test_adamic_adar_matches_python(spark, sf_dir):
     got = REGISTRY["graph_adamic_adar"].build(spark, sf_dir).collect()
-    li = _pq(sf_dir, "lineitem")
+    li = read_pq(sf_dir, "lineitem")
     co: dict[tuple[int, int], int] = defaultdict(int)
     for _, grp in li.groupby("l_orderkey"):
         parts = sorted(grp.l_partkey)
@@ -141,7 +138,7 @@ def test_lang_diversity_matches_numpy(spark, sf_dir):
         r["source"]: r
         for r in REGISTRY["corpus_lang_diversity"].build(spark, sf_dir).collect()
     }
-    d = _pq(sf_dir, "documents")
+    d = read_pq(sf_dir, "documents")
     for src, grp in d.groupby("source"):
         p = grp.lang.value_counts(normalize=True).to_numpy()
         r = got[src]

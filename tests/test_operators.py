@@ -70,8 +70,8 @@ def test_exact_dedup_keeps_min_id(spark):
     df = spark.createDataFrame(
         [(1, "same text"), (2, "same text"), (3, "other")], "doc_id long, text string"
     )
-    kept = {r.doc_id for r in D.dedup_exact(df).collect()}
-    assert kept == {1, 3}
+    kept = {(r.keep_id, r.n_copies) for r in D.exact_dedup_groups(df).collect()}
+    assert kept == {(1, 2), (3, 1)}
 
 
 def test_ivf_recall_vs_bruteforce(spark, sf_dir):
@@ -373,29 +373,6 @@ def test_pack_sequences_bucket_invariant_and_correct(spark):
         n = (i * 37) % 90 + 1
         assert a[i] == (n, cum // 64, cum % 64, max((cum + n - 1) // 64, cum // 64))
         cum += n
-
-
-def test_hashed_embedding_invariants(spark, docs):
-    import math
-
-    from etl_file_sync_spark.operators.embed import hashed_embedding
-
-    emb = hashed_embedding(docs.limit(100), dim=32)
-    rows = emb.select("doc_id", "embedding").collect()
-    assert all(len(r.embedding) == 32 for r in rows)
-    for r in rows[:20]:
-        norm = math.sqrt(sum(v * v for v in r.embedding))
-        assert abs(norm - 1.0) < 1e-9 or norm < 1e-6  # unit norm (or empty doc)
-    # identical texts embed identically; near-identical texts are close
-    df = spark.createDataFrame(
-        [(1, "a b c d e f"), (2, "a b c d e f"), (3, "x y z w q v")],
-        "doc_id long, text string",
-    )
-    e = {r.doc_id: r.embedding for r in hashed_embedding(df, dim=16).collect()}
-    assert e[1] == e[2]
-    cos_dup = sum(a * b for a, b in zip(e[1], e[2]))
-    cos_diff = sum(a * b for a, b in zip(e[1], e[3]))
-    assert cos_dup > 0.999 and cos_diff < 0.9
 
 
 def test_freq_items_superset_of_true_heavy_hitters(spark, sf_dir):

@@ -5,13 +5,15 @@ plan is shuffle-free."""
 
 from __future__ import annotations
 
-from etl_file_sync_spark.plans import (
+from etl_file_sync_spark.queries import REGISTRY
+from tests.plan_util import (
     count_exchanges,
+    full_plan,
     join_strategies,
+    physical_plan,
     pushed_filters,
     read_schema_columns,
 )
-from etl_file_sync_spark.queries import REGISTRY
 
 
 def test_q01_pushdown_and_pruning(spark, sf_dir):
@@ -51,8 +53,6 @@ def test_pipeline_transform_is_shuffle_free(spark, sf_dir):
 
 
 def test_topn_avoids_full_sort(spark, sf_dir):
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["sort_topn_global"].build(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, "global LIMIT+ORDER BY should not plan a full sort"
 
@@ -61,8 +61,6 @@ def test_q02_window_min_no_driver_roundtrip(spark, sf_dir):
     """The correlated min subquery must plan as a window over the grouped
     supply frame: broadcast dims, bounded shuffle count, top-k via
     TakeOrderedAndProject — no driver materialization anywhere."""
-    from etl_file_sync_spark.plans import physical_plan
-
     df = REGISTRY["q02_min_cost_supplier"].build(spark, sf_dir)
     plan = physical_plan(df)
     assert "Window" in plan
@@ -84,8 +82,6 @@ def test_q08_single_fact_shuffle(spark, sf_dir):
 def test_q20_semi_join_chain(spark, sf_dir):
     """Doubly-nested IN compiles to semi joins, not inner joins that
     would duplicate supplier rows."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["q20_potential_promotion"].build(spark, sf_dir))
     assert "LeftSemi" in plan
 
@@ -93,8 +89,6 @@ def test_q20_semi_join_chain(spark, sf_dir):
 def test_weighted_sample_is_topk_with_pushdown(spark, sf_dir):
     """Weighted priority sampling must be a single pushed-filter scan +
     TakeOrderedAndProject — a global Sort here would be the 100 TB bug."""
-    from etl_file_sync_spark.plans import physical_plan
-
     spark.catalog.clearCache()  # a cached documents table would replace the parquet scan
     df = REGISTRY["sample_weighted_priority"].build(spark, sf_dir)
     plan = physical_plan(df)
@@ -106,8 +100,6 @@ def test_weighted_sample_is_topk_with_pushdown(spark, sf_dir):
 def test_span_stats_never_cartesian(spark, sf_dir):
     """Span dedup must stay equi-join shaped (shared-span semi join) —
     no BroadcastNestedLoop/Cartesian anywhere in the plan."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["dedup_span_stats"].build(spark, sf_dir))
     assert "Cartesian" not in plan and "NestedLoop" not in plan
 
@@ -115,8 +107,6 @@ def test_span_stats_never_cartesian(spark, sf_dir):
 def test_funnel_pushes_event_type_filters(spark, sf_dir):
     """Each funnel stage scans only its event type via a pushed filter
     and joins per-user aggregates, never raw-event self-joins."""
-    from etl_file_sync_spark.plans import physical_plan
-
     spark.catalog.clearCache()
     df = REGISTRY["funnel_user_conversion"].build(spark, sf_dir)
     plan = physical_plan(df)
@@ -131,8 +121,6 @@ def test_bigram_novelty_partial_agg_no_window(spark, sf_dir):
     aggregated groupBys (map-side combine + AQE skew-splittable join),
     never a COUNT window over the raw bigram key (no combine, hot
     "of the"-class bigrams become single-task stragglers at scale)."""
-    from etl_file_sync_spark.plans import full_plan
-
     plan = full_plan(REGISTRY["text_bigram_novelty"].build(spark, sf_dir))
     assert "partial_count" in plan, "corpus counts must map-side combine"
     assert "Window" not in plan, "bigram counting must not use a window"
@@ -142,8 +130,6 @@ def test_rank_stats_windows_are_bucket_partitioned(spark, sf_dir):
     """Mann-Whitney / KS ranks must come from the two-phase bucketed
     plan: every Window node is PARTITIONED BY the rank bucket — a bare
     Window.orderBy would funnel the whole table through one task."""
-    from etl_file_sync_spark.plans import physical_plan
-
     for name in ("stat_mannwhitney_u", "stat_ks_two_sample"):
         plan = physical_plan(REGISTRY[name].build(spark, sf_dir))
         win_lines = [l for l in plan.splitlines() if "Window" in l and "windowspecdefinition" in l]
@@ -156,8 +142,6 @@ def test_mba_pairs_join_never_cartesian(spark, sf_dir):
     """The basket self-join must be an equi-join on the order key (one
     co-partitioned shuffle, bounded per-order fan-out) — a cartesian or
     broadcast-nested-loop pair space would be quadratic in the table."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["mba_pair_lift"].build(spark, sf_dir))
     assert "CartesianProduct" not in plan
     js = join_strategies(REGISTRY["mba_pair_lift"].build(spark, sf_dir))
@@ -172,7 +156,6 @@ def test_kmeans_assign_is_narrow_map_plus_one_agg(spark, sf_dir):
     aggregation exchange (plus AQE coalesce bookkeeping) — no join or
     pre-assignment shuffle of the embedding table."""
     df = REGISTRY["cluster_kmeans_assign"].build(spark, sf_dir)
-    from etl_file_sync_spark.plans import physical_plan
 
     plan = physical_plan(df)
     assert "MapInPandas" in plan
@@ -183,8 +166,6 @@ def test_kmeans_assign_is_narrow_map_plus_one_agg(spark, sf_dir):
 def test_kruskal_wallis_windows_are_bucket_partitioned(spark, sf_dir):
     """Kruskal-Wallis rides the same two-phase rank plan as
     Mann-Whitney: every window node partitions by the rank bucket."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["stat_kruskal_wallis"].build(spark, sf_dir))
     win_lines = [l for l in plan.splitlines() if "Window" in l and "windowspecdefinition" in l]
     assert win_lines, "expected a bucketed window in the plan"
@@ -195,8 +176,6 @@ def test_kruskal_wallis_windows_are_bucket_partitioned(spark, sf_dir):
 def test_js_divergence_partial_aggregates(spark, sf_dir):
     """Term counting for the divergence must map-side combine (hot
     stopword terms would otherwise concentrate in single tasks)."""
-    from etl_file_sync_spark.plans import full_plan
-
     plan = full_plan(REGISTRY["stat_js_divergence"].build(spark, sf_dir))
     assert "partial_count" in plan or "partial_sum" in plan
     assert "Window" not in plan
@@ -261,7 +240,7 @@ def test_dynamic_partition_pruning_injects(spark, sf_dir, tmp_path):
         [("F", "keep"), ("O", "drop"), ("P", "drop")], "st string, tag string"
     ).filter(F.col("tag") == "keep")  # the selective predicate DPP requires
     j = fact.join(dim, fact.o_orderstatus == dim.st).groupBy("st").count()
-    plan = j._jdf.queryExecution().toString()
+    plan = full_plan(j)
     assert "dynamicpruning" in plan.lower(), "dynamic partition pruning did not inject"
     scan_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert any("dynamicpruning" in l.lower() for l in plan.splitlines() if "Filter" in l or "PartitionFilters" in l)
@@ -305,8 +284,6 @@ def test_phash_neardup_never_cartesian(spark, sf_dir):
     (LSH posture): no CartesianProduct / BroadcastNestedLoopJoin
     anywhere in the candidate generation, and the narrow map that
     computes hashes appears once per band branch at most."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["multimodal_phash_neardup"].build(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
@@ -316,8 +293,6 @@ def test_gopher_rules_is_narrow_scan(spark, sf_dir):
     """Quality gating is a pure map: the only exchange in the plan is
     the final presentation sort; the parquet scan prunes to the three
     referenced columns."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["text_gopher_rules"].build(spark, sf_dir))
     assert plan.count("Exchange") <= 2, "expected only the ORDER BY exchange(s)"
     read = plan[plan.index("ReadSchema") :][:200] if "ReadSchema" in plan else ""
@@ -328,8 +303,6 @@ def test_bh_fdr_single_fact_aggregation(spark, sf_dir):
     """The 120-cell hypothesis frame is built by ONE partial-aggregated
     pass over events (plus the 1-row totals branch); the BH window runs
     over the aggregate, never the fact rows."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["stat_bh_fdr"].build(spark, sf_dir))
     assert "partial_count" in plan or "HashAggregate" in plan
     assert "CartesianProduct" not in plan or "BroadcastExchange" in plan
@@ -340,8 +313,6 @@ def test_decision_cumulatives_are_bucket_partitioned(spark, sf_dir):
     must run on the two-phase bucketed plan: every Window node in their
     plans is PARTITIONED BY the rank bucket (for the grouped sweep-line,
     bucket + group key) — never a bare global orderBy."""
-    from etl_file_sync_spark.plans import physical_plan
-
     for name in ("ops_max_concurrency", "stat_kaplan_meier", "ops_skyline_pareto"):
         plan = physical_plan(REGISTRY[name].build(spark, sf_dir))
         win_lines = [
@@ -356,8 +327,6 @@ def test_int8_quant_is_shuffle_free_narrow_map(spark, sf_dir):
     """Quantization is a pure per-row projection: zero exchanges except
     the presentation sort, no Python UDF (JVM higher-order functions
     only), and the scan prunes the unused label column."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["embed_int8_quant"].build(spark, sf_dir))
     assert plan.count("Exchange") <= 2, "expected only the ORDER BY exchange(s)"
     assert "Python" not in plan, "must stay JVM-side (no Arrow/Python eval)"
@@ -369,8 +338,6 @@ def test_corpus_bleu_never_cartesian_over_data(spark, sf_dir):
     """The n-gram clip joins are keyed equi-joins on (doc, ngram); the
     only nested-loop joins are the three 1-row summary frames at the
     end."""
-    from etl_file_sync_spark.plans import physical_plan
-
     df = REGISTRY["eval_corpus_bleu"].build(spark, sf_dir)
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
@@ -383,8 +350,6 @@ def test_permutation_fanout_is_user_grain(spark, sf_dir):
     never raw events: exactly one scan of the events parquet feeds the
     whole plan (the per-user reduction), and the perm dimension joins
     as a broadcast."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["stat_permutation_test"].build(spark, sf_dir))
     assert plan.count("events.parquet") <= 2, "events must be scanned once (+cache reuse)"
     assert "CartesianProduct" not in plan
@@ -395,7 +360,6 @@ def test_cms_sketch_probe_is_broadcast(spark, sf_dir):
     the vocabulary never shuffles to meet the sketch."""
     plan_js = join_strategies(REGISTRY["sketch_count_min"].build(spark, sf_dir))
     assert plan_js["broadcast_hash"] >= 1
-    from etl_file_sync_spark.plans import physical_plan
 
     plan = physical_plan(REGISTRY["sketch_count_min"].build(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -412,8 +376,6 @@ def test_rfm_rankings_are_bucket_partitioned(spark, sf_dir):
     """RFM's three global rankings and the conformal residual ranking
     must use the two-phase bucketed row_number — no bare global-order
     window over the customer/residual frames."""
-    from etl_file_sync_spark.plans import physical_plan
-
     for name in ("agg_rfm_segments", "eval_conformal_interval", "stat_winsorized_mean"):
         plan = physical_plan(REGISTRY[name].build(spark, sf_dir))
         win_lines = [
@@ -427,8 +389,6 @@ def test_rouge_python_eval_runs_after_pair_join(spark, sf_dir):
     """The ROUGE DP's Arrow Python stage must consume the PAIR frame
     (post-join), not the raw documents scan — the Python-side work is
     bounded by the 40-token cap per pair."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["eval_rouge_l"].build(spark, sf_dir))
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan or "PythonMapInArrow" in plan
     join_pos = plan.find("Join")
@@ -441,8 +401,6 @@ def test_round5_rank_ops_are_bucket_partitioned(spark, sf_dir):
     distance, Dunn, weighted median, Mood, AUPRC) must keep every
     row-grain window bucket-partitioned — the Friedman/Pettitt/daily
     windows are calendar/block-bounded by construction and excluded."""
-    from etl_file_sync_spark.plans import physical_plan
-
     for name in (
         "stat_cliffs_delta",
         "stat_cvm_two_sample",
@@ -463,8 +421,6 @@ def test_round5_rank_ops_are_bucket_partitioned(spark, sf_dir):
 def test_adamic_adar_removes_edges_with_anti_join(spark, sf_dir):
     """Existing edges must be excluded via LeftAnti (never a collected
     edge list) and the output must be a global TakeOrdered top-k."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["graph_adamic_adar"].build(spark, sf_dir))
     assert "LeftAnti" in plan
     assert "TakeOrderedAndProject" in plan
@@ -473,8 +429,6 @@ def test_adamic_adar_removes_edges_with_anti_join(spark, sf_dir):
 def test_rec_item_cosine_broadcasts_frequency_dims(spark, sf_dir):
     """The item-frequency joins are vocabulary-sized and must broadcast;
     output is a global TakeOrdered top-20."""
-    from etl_file_sync_spark.plans import join_strategies, physical_plan
-
     df = REGISTRY["rec_item_cosine"].build(spark, sf_dir)
     js = join_strategies(df)
     assert js["broadcast_hash"] >= 2  # fa + fb frequency dims
@@ -485,8 +439,6 @@ def test_key_gaps_successor_is_equi_join_not_global_lead(spark, sf_dir):
     """dq_key_gaps pairs successors through the rn = rn+1 equi-join on
     the bucketed dense rank; no unpartitioned window may touch the
     full key column."""
-    from etl_file_sync_spark.plans import physical_plan
-
     plan = physical_plan(REGISTRY["dq_key_gaps"].build(spark, sf_dir))
     win_lines = [
         l for l in plan.splitlines() if "Window" in l and "windowspecdefinition" in l

@@ -62,7 +62,9 @@ def test_no_cache_outlives_the_call(spark):
     for call in calls:
         before = _persisted(spark)
         call()
-        assert _persisted(spark) == before
+        # subset, not equality: the context cleaner may unpersist an
+        # earlier test's garbage-collected cache while the call runs
+        assert _persisted(spark) <= before
 
 
 @pytest.mark.parametrize("fn", sorted(_TOPK))

@@ -8,18 +8,14 @@ import json
 import math
 from collections import defaultdict
 
-import pandas as pd
 import pytest
 
 from etl_file_sync_spark.queries import REGISTRY
-
-
-def _pq(sf_dir: str, name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+from tests.conftest import read_pq
 
 
 def _user_items(sf_dir: str) -> set[tuple[int, int]]:
-    e = _pq(sf_dir, "events")
+    e = read_pq(sf_dir, "events")
     v = e[e.event_type == "view"]
     return {
         (int(u), int(json.loads(p)["k"]))
@@ -60,7 +56,7 @@ def test_auprc_matches_blockwise_ap(spark, sf_dir):
 
 def test_key_gaps_match_python(spark, sf_dir):
     got = REGISTRY["dq_key_gaps"].build(spark, sf_dir).collect()
-    keys = sorted(set(_pq(sf_dir, "orders").o_orderkey.astype(int)))
+    keys = sorted(set(read_pq(sf_dir, "orders").o_orderkey.astype(int)))
     n_missing = keys[-1] - keys[0] + 1 - len(keys)
     gaps = [
         (a + 1, b - 1, b - a - 1)

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_file_sync_spark.operators.merge import merge_upsert, merge_with_deletes, scd2_apply
+from etl_file_sync_spark.operators.merge import merge_upsert, scd2_apply
 from etl_file_sync_spark.operators.skew import salted_join, two_phase_agg
 
 
@@ -42,14 +42,6 @@ def test_merge_upsert(spark):
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
-def test_merge_with_deletes(spark):
-    target = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, v string")
-    ups = spark.createDataFrame([(2, "B")], "k long, v string")
-    dels = spark.createDataFrame([(1,)], "k long")
-    got = {(r.k, r.v) for r in merge_with_deletes(target, ups, dels, "k").collect()}
-    assert got == {(2, "B"), (3, "c")}
-
-
 def test_merge_schema_mismatch_raises(spark):
     t = spark.createDataFrame([(1, "a")], "k long, v string")
     s = spark.createDataFrame([(1,)], "k long")
@@ -80,7 +72,7 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
     must contain ZERO shuffle exchanges — the 100 TB fact-fact join
     strategy (pay the shuffle once at ingest, never again)."""
     from etl_file_sync_spark.catalog import load_table
-    from etl_file_sync_spark.plans import count_exchanges
+    from tests.plan_util import count_exchanges
 
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast

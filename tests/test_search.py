@@ -1,5 +1,5 @@
 """Invariant tests for the full-text search operators (operators/search.py):
-postings completeness, BM25 ordering behavior, TF-IDF zero-idf terms."""
+postings completeness and BM25 ordering behavior."""
 
 from __future__ import annotations
 
@@ -26,11 +26,6 @@ def test_postings_tf_sums_to_token_count(toy_docs):
     assert total_tf == n_tokens == 20
 
 
-def test_doc_lengths(toy_docs):
-    dl = {r.id: r.dl for r in S.doc_lengths(toy_docs).collect()}
-    assert dl == {0: 5, 1: 5, 2: 5, 3: 5}
-
-
 def test_bm25_ranks_higher_tf_first_and_excludes_nonmatching(toy_docs):
     top = S.bm25_topk(toy_docs, ["spark"], k=10).collect()
     ids = [r.doc_id for r in top]
@@ -48,13 +43,3 @@ def test_bm25_scores_decrease_with_rank(toy_docs):
     scores = [r.bm25 for r in sorted(top, key=lambda r: r.rnk)]
     assert scores == sorted(scores, reverse=True)
 
-
-def test_tfidf_everywhere_term_scores_zero(toy_docs):
-    # 'filler' appears in all 4 docs -> idf = ln(4/4) = 0 -> tfidf 0,
-    # so it can never be the top keyword where any rarer term exists
-    out = S.tfidf_top_terms(toy_docs, per_doc=1).collect()
-    by_doc = {r.doc_id: r for r in out}
-    assert by_doc[0].term == "spark" and by_doc[0].tfidf > 0
-    assert by_doc[3].term == "merge"  # df=1 beats spark's df=3
-    # doc 2 has only the zero-idf term; its top keyword scores 0.0
-    assert by_doc[2].tfidf == 0.0

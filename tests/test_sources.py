@@ -1,84 +1,8 @@
-"""Source/sink coverage: every supported format round-trips, partitioned
-writes produce a pruning-capable layout, binaryFile ingests opaque
-payloads, gated formats fail loudly."""
+"""The ``events_replay`` streaming Python Data Source
+(sources/replay_stream_source.py): offset-tracked micro-batches and the
+recovery slice."""
 
 from __future__ import annotations
-
-import pytest
-
-from etl_file_sync_spark.catalog import load_table
-from etl_file_sync_spark.plans import full_plan  # noqa: F401  (import check)
-from etl_file_sync_spark.sources import read_any, read_binary_files, write_any
-
-
-@pytest.fixture(scope="module")
-def nation(spark, sf_dir):
-    return load_table(spark, sf_dir, "nation")
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "orc", "csv", "json"])
-def test_format_roundtrip(spark, nation, tmp_path, fmt):
-    path = str(tmp_path / fmt)
-    write_any(nation, path, fmt)
-    schema = "n_nationkey INT, n_name STRING, n_regionkey INT" if fmt in ("csv", "json") else None
-    back = read_any(spark, path, fmt, schema=schema)
-    orig = {(r.n_nationkey, r.n_name, r.n_regionkey) for r in nation.collect()}
-    got = {(r.n_nationkey, r.n_name, r.n_regionkey) for r in back.collect()}
-    assert got == orig
-
-
-def test_text_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([("line one",), ("line two",)], "value string")
-    path = str(tmp_path / "txt")
-    write_any(df, path, "text")
-    assert {r.value for r in read_any(spark, path, "text").collect()} == {"line one", "line two"}
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    """Hive-layout write + partition-filter read: the scan must touch only
-    the selected partition (PartitionFilters in the plan, not a full scan)."""
-    from etl_file_sync_spark.plans import full_plan
-
-    orders = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_by_status")
-    write_any(orders, path, "parquet", partition_by=["o_orderstatus"])
-    back = read_any(spark, path, "parquet").filter("o_orderstatus = 'F'")
-    plan = full_plan(back)
-    assert "PartitionFilters" in plan and "o_orderstatus" in plan.split("PartitionFilters", 1)[1][:200]
-    n_f = orders.filter("o_orderstatus = 'F'").count()
-    assert back.count() == n_f
-
-
-def test_binary_file_ingest(spark, tmp_path):
-    (tmp_path / "blob1.bin").write_bytes(b"\x01\x02\x03")
-    (tmp_path / "blob2.bin").write_bytes(b"\x04")
-    (tmp_path / "skip.txt").write_text("no")
-    df = read_binary_files(spark, str(tmp_path), glob="*.bin")
-    rows = {r.path.split("/")[-1]: bytes(r.content) for r in df.collect()}
-    assert rows == {"blob1.bin": b"\x01\x02\x03", "blob2.bin": b"\x04"}
-    assert df.schema["length"].dataType.typeName() == "long"
-
-
-def test_gated_formats_fail_loudly(spark, nation, tmp_path):
-    with pytest.raises(NotImplementedError, match="delta"):
-        read_any(spark, str(tmp_path), "delta")
-    with pytest.raises(NotImplementedError, match="jdbc"):
-        write_any(nation, str(tmp_path / "x"), "jdbc")
-    with pytest.raises(ValueError, match="unknown format"):
-        read_any(spark, str(tmp_path), "sequencefile")
-
-
-def test_xml_roundtrip(spark, nation, tmp_path):
-    """Spark 4 ships the (formerly external) XML source built-in."""
-    path = str(tmp_path / "nation_xml")
-    write_any(nation, path, "xml")
-    back = read_any(spark, path, "xml").select(*nation.columns)
-    assert sorted(r.n_name for r in back.collect()) == sorted(
-        r.n_name for r in nation.collect()
-    )
-
-
-# --- streaming Python Data Source: events_replay -----------------------
 
 
 def test_events_replay_source_serves_three_offset_tracked_batches(spark, sf_dir):
