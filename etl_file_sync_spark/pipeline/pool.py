@@ -19,12 +19,17 @@ pool.py:44-320), implemented fresh:
   (pool.py:260-306); under Spark that means ONE pool per (server,
   executor python worker), reused across tasks and micro-batches — the
   Spark analogue of the reference's per-consumer-process pool.
+- connections ACK a `1xx` preliminary reply at once (QuickAckFTP): a
+  server that writes `150` and then `226` as two small segments would
+  otherwise hold `226` under Nagle until the client's delayed ACK of
+  `150` fires, a fixed ~40 ms stall on every RETR and STOR.
 """
 
 from __future__ import annotations
 
 import os
 import queue
+import socket
 import threading
 from ftplib import FTP
 from typing import Callable
@@ -37,6 +42,18 @@ DEFAULT_CONNECT_TIMEOUT = float(os.environ.get("FTP_CONNECT_TIMEOUT", "30.0"))
 
 class PoolTimeoutError(TimeoutError):
     pass
+
+
+class QuickAckFTP(FTP):
+    """ftplib.FTP that ACKs a preliminary (1xx) reply immediately, so the
+    server's completion reply is not held back behind a delayed ACK.
+    Nothing visible changes on the protocol level."""
+
+    def getresp(self) -> str:
+        resp = super().getresp()
+        if resp[:1] == "1" and hasattr(socket, "TCP_QUICKACK"):
+            self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK, 1)
+        return resp
 
 
 class FTPConnectionPool:
@@ -122,7 +139,7 @@ class FTPConnectionPool:
                 pass
 
     def _connect(self) -> FTP:
-        conn = FTP()
+        conn = QuickAckFTP()
         conn.connect(self._host, self._port, timeout=self._connect_timeout)
         conn.login(self._username, self._password)
         conn.set_pasv(self._passive)

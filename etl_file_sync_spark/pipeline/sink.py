@@ -12,6 +12,12 @@ inherently per-file I/O); handlers and FTP pools are per-executor
 singletons reused across batches. Temp staging mirrors
 consumer.py:139-186 (download → upload through a local temp file, always
 deleted in finally).
+
+A manifest batch makes ONE eager checkpoint: the status rows and the
+pre-transfer DLQ rows in one frame. The status sink and the DLQ sink both
+read only that checkpoint, so a batch and its two writes run four Spark
+jobs (servers broadcast, checkpoint, two writes) and neither write reads
+or parses the input again.
 """
 
 from __future__ import annotations
@@ -116,18 +122,24 @@ def run_manifest_batch(
     The same transform functions serve streaming foreachBatch — this IS
     the foreachBatch body, usable standalone for manifest-driven runs.
 
-    The transfer stage is side-effecting, so its result is MATERIALIZED
-    exactly once (eager localCheckpoint): every downstream consumer
-    (status sink, DLQ derivation, counts) reads the checkpointed rows
-    instead of re-running the downloads/uploads per action.
+    The transfer stage is side-effecting, so it runs exactly once, under
+    ONE eager localCheckpoint per batch that holds the status rows and
+    the pre-transfer DLQ rows together (status NULL). Both returned
+    frames read only that checkpoint: writing or counting them never
+    re-runs a download/upload, nor re-reads and re-parses the input.
     """
     split: SplitResult = split_valid_dlq(raw, servers)
-    status = run_transfers(split.valid, staging_dir, skip_if_exists).localCheckpoint(eager=True)
-    transfer_failures = status.filter("status = 'error'").selectExpr(
-        "to_json(named_struct('job_id', job_id, 'src_path', src_path, 'dst_path', dst_path)) AS original_message",
-        "error",
+    rows = (
+        run_transfers(split.valid, staging_dir, skip_if_exists)
+        .selectExpr(
+            "*",
+            "to_json(named_struct('job_id', job_id, 'src_path', src_path, 'dst_path', dst_path)) AS original_message",
+        )
+        .unionByName(split.dlq, allowMissingColumns=True)
+        .localCheckpoint(eager=True)
     )
-    dlq = dlq_envelope(split.dlq.unionByName(transfer_failures))
+    status = rows.where("status IS NOT NULL").drop("original_message")
+    dlq = dlq_envelope(rows.where("status IS NULL OR status = 'error'"))
     return status, dlq
 
 
@@ -177,9 +189,9 @@ def foreach_batch_factory(
 
         status, dlq = run_manifest_batch(batch_df, servers, staging_dir, skip_if_exists)
         status.write.mode("append").parquet(status_dir)
-        # DLQ feeds two sinks ⇒ materialize once, not one recompute per sink
-        dlq = dlq.localCheckpoint(eager=True)
         if dlq_writer is not None:
+            # two DLQ sinks: pin one envelope timestamp for both
+            dlq = dlq.localCheckpoint(eager=True)
             try:
                 dlq_writer(dlq)
             except Exception:

@@ -1,6 +1,8 @@
 """Pure DataFrame transforms: parse → validate → enrich → split.
 
-This is rows 2-4 of SURVEY.md §2.1 as one declarative plan:
+This is rows 2-4 of SURVEY.md §2.1 as one declarative plan, built by ONE
+``spark.sql`` call (built as a chain of ``F.*``/``withColumn``/``join``
+calls it costs one py4j round trip per step, over a thousand per batch):
 - JSON parse with PERMISSIVE semantics (extra fields ignored, malformed →
   null struct) — matches reference leniency (message.py:93-97) with the
   required-field strictness re-added as an explicit predicate
@@ -17,6 +19,7 @@ partitions.
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -36,81 +39,92 @@ class SplitResult:
     dlq: DataFrame  # (original_message, error) — raw payload preserved
 
 
-def parse_jobs(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """raw value:string → parsed job columns + error classification.
+# `error` follows the reference's order: malformed JSON first (ValueError,
+# message.py:68-71; from_json yields a struct of nulls for it, so the
+# payload shape is re-checked), then required fields (message.py:88-91),
+# then the two server lookups.
+#
+# Reference parity for `original_message`: BOTH parse failures and
+# required-field failures raise ValueError inside from_json
+# (message.py:68-71, :88-91) before any job object exists, so the
+# consumer wraps the RAW text for both (consumer.py:126-134 →
+# _send_raw_to_dlq, :198-209). Only post-parse failures (unknown server,
+# transfer errors) carry the parsed job dict (consumer.py:188-196).
+#
+# Each server row joins as ONE struct column: a valid-row plan and a
+# DLQ-row plan over the same batch then prune the dimension to the same
+# two columns and share one broadcast.
+_SPLIT_SQL = """
+WITH servers AS (SELECT hostname, struct(*) AS srv FROM {servers}),
+parsed AS (
+  SELECT {{value}} AS value, from_json({{value}}, {{schema}}) AS j,
+         get_json_object({{value}}, '$') IS NOT NULL AS is_json_obj
+  FROM {{raw}}
+),
+classified AS (
+  SELECT /*+ BROADCAST(s, d) */
+         coalesce(j.job_id, uuid()) AS job_id,
+         j.source.path AS src_path,
+         j.destination.path AS dst_path,
+         {servers_cols},
+         CASE WHEN NOT is_json_obj THEN {{err_parse}}
+              WHEN j.source.hostname IS NULL OR j.source.path IS NULL
+                OR j.destination.hostname IS NULL OR j.destination.path IS NULL
+                THEN {{err_missing}}
+              WHEN s.srv IS NULL THEN {{err_unknown_src}}
+              WHEN d.srv IS NULL THEN {{err_unknown_dst}}
+         END AS error,
+         value, j
+  FROM parsed
+  LEFT JOIN servers s ON upper(j.source.hostname) = s.hostname
+  LEFT JOIN servers d ON upper(j.destination.hostname) = d.hostname
+)
+SELECT *,
+       CASE WHEN error IN ({{err_parse}}, {{err_missing}})
+            THEN to_json(named_struct('raw', value))
+            ELSE to_json(j) END AS original_message
+FROM classified
+"""
 
-    Keeps the original payload through the transform (SURVEY.md §7.4 risk
-    5 — the DLQ needs the raw text for unparseable rows, mirroring
-    _send_raw_to_dlq, consumer.py:198-209).
-    """
-    j = F.from_json(F.col(value_col), JOB_SCHEMA)
-    parsed = raw.withColumn("j", j)
-    # from_json returns a struct of nulls for malformed input; "all four
-    # leaves null" distinguishes garbage from a JSON object missing fields
-    # only when the object had none of them — match reference order:
-    # malformed JSON first (ValueError, message.py:68-71), then required
-    # fields (message.py:88-91). We detect true parse failure by
-    # re-checking the payload shape.
-    is_json_obj = F.get_json_object(F.col(value_col), "$") .isNotNull()
-    leaf = parsed["j"]
-    ok = (
-        leaf["source"]["hostname"].isNotNull()
-        & leaf["source"]["path"].isNotNull()
-        & leaf["destination"]["hostname"].isNotNull()
-        & leaf["destination"]["path"].isNotNull()
-    )
-    return parsed.withColumn(
-        "parse_error",
-        F.when(~is_json_obj, F.lit(ERR_PARSE)).when(~ok, F.lit(ERR_MISSING)),
-    ).withColumn("job_id", F.coalesce(leaf["job_id"], F.expr("uuid()")))
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def split_valid_dlq(raw: DataFrame, servers: DataFrame, value_col: str = "value") -> SplitResult:
     """Full classify/enrich/split. `servers` is the config dimension
     (hostname,type,host,port,username,password,base_path)."""
-    parsed = parse_jobs(raw, value_col)
-
-    src_srv = servers.select(*[F.col(c).alias(f"src_{c}") for c in servers.columns])
-    dst_srv = servers.select(*[F.col(c).alias(f"dst_{c}") for c in servers.columns])
-
-    enriched = (
-        parsed.join(
-            F.broadcast(src_srv),
-            F.upper(F.col("j.source.hostname")) == F.col("src_hostname"),
-            "left",
-        ).join(
-            F.broadcast(dst_srv),
-            F.upper(F.col("j.destination.hostname")) == F.col("dst_hostname"),
-            "left",
+    servers_cols = ", ".join(
+        f"{side}.srv.{_ident(c)} AS {_ident(f'{prefix}_{c}')}"
+        for side, prefix in (("s", "src"), ("d", "dst"))
+        for c in servers.columns
+    )
+    # `servers` is read through a GLOBAL temporary view: a foreachBatch
+    # frame lives in the stream's own session, which does not see the
+    # temp views of the session that built `servers`.
+    spark = raw.sparkSession
+    view = f"etl_servers_{uuid.uuid4().hex}"
+    servers.createGlobalTempView(view)
+    try:
+        classified = spark.sql(
+            _SPLIT_SQL.format(
+                servers=f"{_ident(spark.conf.get('spark.sql.globalTempDatabase'))}.{view}",
+                servers_cols=servers_cols,
+            ),
+            raw=raw,
+            value=F.col(value_col),
+            schema=JOB_SCHEMA.simpleString(),
+            err_parse=ERR_PARSE,
+            err_missing=ERR_MISSING,
+            err_unknown_src=ERR_UNKNOWN_SRC,
+            err_unknown_dst=ERR_UNKNOWN_DST,
         )
+    finally:
+        spark.catalog.dropGlobalTempView(view)
+    return SplitResult(
+        valid=classified.where("error IS NULL").drop("error", "value", "j", "original_message"),
+        dlq=classified.where("error IS NOT NULL").select("original_message", "error"),
     )
-    error = F.coalesce(
-        F.col("parse_error"),
-        F.when(F.col("src_hostname").isNull(), F.lit(ERR_UNKNOWN_SRC)),
-        F.when(F.col("dst_hostname").isNull(), F.lit(ERR_UNKNOWN_DST)),
-    )
-    classified = enriched.withColumn("error", error)
-
-    valid = classified.filter(F.col("error").isNull()).select(
-        "job_id",
-        F.col("j.source.path").alias("src_path"),
-        F.col("j.destination.path").alias("dst_path"),
-        *[c for c in classified.columns if c.startswith(("src_", "dst_")) and c not in ("src_path", "dst_path")],
-    )
-    # Reference parity: BOTH parse failures and required-field failures
-    # raise ValueError inside from_json (message.py:68-71, :88-91) before
-    # any job object exists, so the consumer wraps the RAW text for both
-    # (consumer.py:126-134 → _send_raw_to_dlq, :198-209). Only
-    # post-parse failures (unknown server, transfer errors) carry the
-    # parsed job dict (consumer.py:188-196).
-    original = F.when(
-        (F.col("error") == ERR_PARSE) | (F.col("error") == ERR_MISSING),
-        F.to_json(F.struct(F.col(value_col).alias("raw"))),
-    ).otherwise(F.to_json(F.col("j")))
-    dlq = classified.filter(F.col("error").isNotNull()).select(
-        original.alias("original_message"), F.col("error")
-    )
-    return SplitResult(valid=valid, dlq=dlq)
 
 
 def dlq_envelope(dlq: DataFrame) -> DataFrame:

@@ -105,6 +105,21 @@ def assert_close_dp(got, ref, dp, msg=""):
     ), (msg, got, ref)
 
 
+def assert_same_as(old, new) -> None:
+    """DataFrame ``new`` holds the same rows as ``old``: the same columns
+    in the same order and the same collected rows once both are sorted
+    (the collect-both-and-compare pattern of SNIPPETS [1]). For proving a
+    rewrite changes no output."""
+    assert old.columns == new.columns, f"columns differ: {old.columns} vs {new.columns}"
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=lambda t: [(v is None, str(v)) for v in t])
+
+    a, b = rows(old), rows(new)
+    assert len(a) == len(b), f"row counts differ: {len(a)} vs {len(b)}"
+    assert a == b, next(f"first differing row {i}: {x} vs {y}" for i, (x, y) in enumerate(zip(a, b)) if x != y)
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Canonicalize a result frame the way the driver compares: columns
     sorted by name, rows sorted by all columns, floats rounded."""

@@ -7,6 +7,8 @@ ftp→local / local→ftp flows."""
 from __future__ import annotations
 
 import json
+import os
+import time
 
 import pytest
 
@@ -59,6 +61,29 @@ def test_pool_reuses_connections_across_transfers(ftp_server, tmp_path):
         h.download("/a.bin", str(tmp_path / f"a{i}"))
     # 6 sequential transfers over a pooled connection: 1 socket, not 6
     assert srv.connect_count == 1
+
+
+def test_sequential_transfers_do_not_wait_out_delayed_ack(ftp_server, tmp_path):
+    """MiniFTPServer writes `150` and `226` as two segments without
+    TCP_NODELAY, like the benchmark's server: unless the client ACKs the
+    `150` at once, Nagle holds the `226` until the client's delayed-ACK
+    timer fires, ~40 ms per transfer whatever its size (about 1.8 s for
+    these 40 transfers)."""
+    srv, root = ftp_server
+    payload = os.urandom(1024)
+    (root / "small.bin").write_bytes(payload)
+    local_in = tmp_path / "small.bin"
+    local_in.write_bytes(payload)
+    h = FTPTransfer(_cfg(srv))
+    h.download("/small.bin", str(tmp_path / "warm"))  # connect + login, untimed
+    t0 = time.perf_counter()
+    for i in range(20):
+        h.download("/small.bin", str(tmp_path / f"d{i}"))
+    for i in range(20):
+        h.upload(str(local_in), f"/up/u{i}.bin")
+    elapsed = time.perf_counter() - t0
+    assert (root / "up" / "u19.bin").read_bytes() == payload
+    assert elapsed < 0.4, f"40 sequential 1 KiB transfers took {elapsed:.2f} s"
 
 
 def test_pipeline_ftp_to_local_and_back(spark, ftp_server, tmp_path):

@@ -17,7 +17,25 @@ from etl_file_sync_spark.operators.asof import asof_join
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents").cache()
+    df = load_table(spark, sf_dir, "documents").cache()
+    yield df
+    df.unpersist()
+
+
+@pytest.fixture()
+def cache():
+    """``cache(df)`` is ``df.cache()``, unpersisted when the test ends:
+    a cache left behind is dropped by the context cleaner at some later
+    point, in the middle of an unrelated test."""
+    frames = []
+
+    def put(df):
+        frames.append(df.cache())
+        return frames[-1]
+
+    yield put
+    for df in frames:
+        df.unpersist()
 
 
 def test_minhash_recall_vs_exact_jaccard(spark, docs):
@@ -74,8 +92,8 @@ def test_exact_dedup_keeps_min_id(spark):
     assert kept == {(1, 2), (3, 1)}
 
 
-def test_ivf_recall_vs_bruteforce(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings").cache()
+def test_ivf_recall_vs_bruteforce(spark, sf_dir, cache):
+    emb = cache(load_table(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") % 40 == 0)
     brute = {(r.query_id, r.neighbor_id) for r in S.cosine_topk(emb, q, k=5).collect()}
     ivf = {(r.query_id, r.neighbor_id) for r in S.ivf_topk(emb, q, k=5, every=50, nprobe=3).collect()}
@@ -99,7 +117,7 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     assert wide_recall >= 0.95, f"kmeans+nprobe=8 recall {wide_recall}"
 
 
-def test_ivf_kmeans_recall_on_clustered_corpus(spark, sf_dir):
+def test_ivf_kmeans_recall_on_clustered_corpus(spark, sf_dir, cache):
     """On data with real cluster structure (planted jittered twins) the
     k-means IVF hits ≥0.95 recall@1 at nprobe=3/10 — the regime IVF is
     for. (The uniform sf embeddings have no structure to exploit, which
@@ -110,7 +128,7 @@ def test_ivf_kmeans_recall_on_clustered_corpus(spark, sf_dir):
         (F.col("vec_id") + 100000).alias("vec_id"),
         F.transform("embedding", lambda x: x + F.sin(x * 37.0) * 0.1).alias("embedding"),
     )
-    corpus = e.unionByName(jit).cache()
+    corpus = cache(e.unionByName(jit))
     q = e.filter(F.col("vec_id") % 10 == 0)
     brute = {(r.query_id, r.neighbor_id) for r in S.cosine_topk(corpus, q, k=1).collect()}
     ivf = {
@@ -132,13 +150,13 @@ def test_cosine_topk_query_side_guard(spark, sf_dir):
     assert S.cosine_topk(emb, q, k=1, max_queries=10).count() > 0
 
 
-def test_embedding_blockpair_gemm_exact_and_block_invariant(spark, sf_dir):
+def test_embedding_blockpair_gemm_exact_and_block_invariant(spark, sf_dir, cache):
     """The distributed block-pair GEMM must (a) reproduce numpy all-pairs
     ground truth and (b) give an identical answer for any block count —
     the partitioning is a physical choice, never a semantic one."""
     import numpy as np
 
-    emb = load_table(spark, sf_dir, "embeddings").cache()
+    emb = cache(load_table(spark, sf_dir, "embeddings"))
     base = {(r.id_a, r.id_b): r.cosine for r in D.embedding_dup_pairs(emb, threshold=0.45).collect()}
     alt = {(r.id_a, r.id_b): r.cosine for r in D.embedding_dup_pairs(emb, threshold=0.45, blocks=3).collect()}
     assert base == alt and base
@@ -157,7 +175,7 @@ def test_embedding_blockpair_gemm_exact_and_block_invariant(spark, sf_dir):
     assert base == truth
 
 
-def test_srp_near_dup_recall_and_precision(spark, sf_dir):
+def test_srp_near_dup_recall_and_precision(spark, sf_dir, cache):
     """SRP-LSH candidates + exact verify: plant jittered near-copies of
     every vector (cosine ≈ 0.97-0.999), assert recall ≥ 0.95 against the
     exact block-GEMM verifier and precision 1.0 (verify step is exact)."""
@@ -170,7 +188,7 @@ def test_srp_near_dup_recall_and_precision(spark, sf_dir):
             lambda x: x + F.sin(x * 37.0) * 0.1,  # deterministic ~0.97+ cosine perturbation
         ).alias("embedding"),
     )
-    both = e.unionByName(jitter).cache()
+    both = cache(e.unionByName(jitter))
     exact = {(r.id_a, r.id_b): r.cosine for r in D.embedding_dup_pairs(both, threshold=0.9).collect()}
     srp = {(r.id_a, r.id_b): r.cosine for r in D.srp_near_dup_pairs(both, threshold=0.9).collect()}
     assert exact, "planted jitter pairs must clear the 0.9 threshold"
@@ -187,14 +205,12 @@ def test_srp_plan_has_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
-def test_fuzzy_blocked_matches_allpairs_and_no_cartesian(spark, sf_dir):
+def test_fuzzy_blocked_matches_allpairs_and_no_cartesian(spark, sf_dir, cache):
     """Deletion-neighborhood blocking is COMPLETE for edit distance <= 1:
     the blocked result must equal the exhaustive all-pairs result, and
     the plan must contain no cartesian product."""
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("name"))
-        .cache()
+    c = cache(
+        load_table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("id"), F.col("c_name").alias("name"))
     )
     blocked = D.fuzzy_blocked_pairs(c, "id", "name")
     got = {(r.id_a, r.id_b): r.edit_dist for r in blocked.collect()}
@@ -465,10 +481,10 @@ def test_paragraph_dup_stats_planted(spark):
     assert got[2].tokens_removed == 40 and got[2].dup_frac == 1.0
 
 
-def test_pq_recall_vs_brute_force(spark, sf_dir):
+def test_pq_recall_vs_brute_force(spark, sf_dir, cache):
     from etl_file_sync_spark.operators import pq as PQ
 
-    e = load_table(spark, sf_dir, "embeddings").cache()
+    e = cache(load_table(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") % 40 == 0)
     brute = {(r.query_id, r.neighbor_id) for r in S.cosine_topk(e, q, k=5).collect()}
     approx = {(r.query_id, r.neighbor_id) for r in PQ.pq_topk(e, q, k=5).collect()}

@@ -30,7 +30,9 @@ def _queries(corpus):
 
 
 def _persisted(spark):
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    """Persisted RDDs: id → description (RDD class, id and call site)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k): rdds.get(k).toString() for k in rdds.keySet().toArray()}
 
 
 @pytest.mark.parametrize("fn", sorted(_TOPK))
@@ -62,9 +64,11 @@ def test_no_cache_outlives_the_call(spark):
     for call in calls:
         before = _persisted(spark)
         call()
-        # subset, not equality: the context cleaner may unpersist an
-        # earlier test's garbage-collected cache while the call runs
-        assert _persisted(spark) <= before
+        after = _persisted(spark)
+        assert after == before, {
+            "unpersisted": [before[i] for i in before.keys() - after.keys()],
+            "left persisted": [after[i] for i in after.keys() - before.keys()],
+        }
 
 
 @pytest.mark.parametrize("fn", sorted(_TOPK))

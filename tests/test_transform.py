@@ -3,6 +3,7 @@ reference's consumer-routing test matrix (tests/test_consumer.py:126-277)."""
 
 from __future__ import annotations
 
+import gc
 import json
 
 from pyspark.sql import functions as F
@@ -84,3 +85,23 @@ def test_scalar_json_is_missing_field_not_parse_error(spark):
     # fails — classification must be missing_field, not parse_error.
     res = split_valid_dlq(mk_raw(spark, ["5"]), servers_dataframe(spark, SERVERS))
     assert res.dlq.collect()[0].error.startswith("missing_field")
+
+
+def test_split_builds_its_plan_in_few_py4j_round_trips(spark, monkeypatch):
+    """One split_valid_dlq call makes at most 150 py4j round trips: the
+    plan is one SQL statement, not a chain of F.*/withColumn/join calls
+    that cost one round trip each (over 1,100 per call)."""
+    raw = mk_raw(spark, [good()])
+    servers = servers_dataframe(spark, SERVERS)
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    gc.collect()  # drop earlier tests' garbage JVM references first
+    monkeypatch.setattr(client, "send_command", counting)
+    split_valid_dlq(raw, servers)
+    monkeypatch.undo()
+    assert len(sent) <= 150, f"{len(sent)} py4j round trips"
