@@ -36,9 +36,6 @@ class BaseTransfer(ABC):
     @abstractmethod
     def upload(self, local_path: str, remote_path: str) -> None: ...
 
-    def close(self) -> None:  # optional hook
-        pass
-
 
 class TransferFactory:
     """Type-keyed handler registry — the engine's plugin point, mirroring
@@ -58,10 +55,6 @@ class TransferFactory:
             supported = ", ".join(sorted(cls._registry))
             raise ValueError(f"unsupported transfer type {config.type!r}; supported: {supported}")
         return handler(config)
-
-    @classmethod
-    def supported_types(cls) -> list[str]:
-        return sorted(cls._registry)
 
 
 class LocalTransfer(BaseTransfer):
@@ -91,7 +84,7 @@ class LocalTransfer(BaseTransfer):
         os.makedirs(os.path.dirname(dst) or ".", exist_ok=True)
         # atomic publish: copy to a temp name in the destination dir, then
         # os.replace — a task killed mid-copy never leaves a truncated dst,
-        # so the skip_if_exists retry guard can trust mere existence.
+        # and a retried or replayed copy just publishes the same bytes again.
         tmp = f"{dst}.etl-tmp-{os.getpid()}-{id(self):x}"
         try:
             shutil.copy2(local_path, tmp)

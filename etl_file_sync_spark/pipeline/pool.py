@@ -7,14 +7,9 @@ pool.py:44-320), implemented fresh:
   TimeoutError (pool.py:88-160).
 - return = requeue, or close when pool is full (pool.py:162-182).
 - stale connections are detected by NOOP on borrow and replaced
-  (pool.py:212-227); idle_timeout is accepted-but-unenforced BY DEFAULT,
-  exactly as the reference (pool.py:59,76 — no eviction loop exists
-  there either). Opt-in extension (r4 verdict #7, DEVIATIONS.md):
-  `evict_idle=True` (or FTP_POOL_EVICT_IDLE=1) enforces idle_timeout —
-  expired idle connections are closed at borrow time, by an explicit
-  evict_idle_connections() call, and by a daemon sweeper thread — so a
-  long-lived executor does not hold server slots open between waves.
-  Default behavior is bit-identical to the reference.
+  (pool.py:212-227). Idle connections are never evicted: the reference
+  stores an idle_timeout but enforces it nowhere (pool.py:59,76), so this
+  pool does not take one.
 - manager is a process-wide singleton with double-checked locking
   (pool.py:260-306); under Spark that means ONE pool per (server,
   executor python worker), reused across tasks and micro-batches — the
@@ -31,12 +26,12 @@ import os
 import queue
 import socket
 import threading
+import time
 from ftplib import FTP
 from typing import Callable
 
 DEFAULT_POOL_SIZE = int(os.environ.get("FTP_POOL_SIZE", "4"))
 DEFAULT_MAX_WAIT = float(os.environ.get("FTP_POOL_MAX_WAIT", "30.0"))
-DEFAULT_IDLE_TIMEOUT = float(os.environ.get("FTP_POOL_IDLE_TIMEOUT", "300.0"))
 DEFAULT_CONNECT_TIMEOUT = float(os.environ.get("FTP_CONNECT_TIMEOUT", "30.0"))
 
 
@@ -67,76 +62,20 @@ class FTPConnectionPool:
         password: str,
         pool_size: int = DEFAULT_POOL_SIZE,
         max_wait: float = DEFAULT_MAX_WAIT,
-        idle_timeout: float = DEFAULT_IDLE_TIMEOUT,
         connect_timeout: float = DEFAULT_CONNECT_TIMEOUT,
         passive_mode: bool = True,
         factory: Callable[[], FTP] | None = None,
-        evict_idle: bool | None = None,
-        clock: Callable[[], float] | None = None,
     ) -> None:
-        import time
-
         self._host, self._port = host, port
         self._username, self._password = username, password
         self._pool_size = pool_size
         self._max_wait = max_wait
-        # stored-unenforced by default (reference parity); enforced only
-        # when evict_idle is opted into
-        self.idle_timeout = idle_timeout
         self._connect_timeout = connect_timeout
         self._passive = passive_mode
         self._factory = factory or self._connect
-        self._idle: queue.Queue = queue.Queue()  # entries: (conn, returned_at)
+        self._idle: queue.Queue = queue.Queue()
         self._created = 0
         self._lock = threading.Lock()
-        self._clock = clock or time.monotonic
-        if evict_idle is None:
-            evict_idle = os.environ.get("FTP_POOL_EVICT_IDLE", "") not in ("", "0", "false")
-        self._evict_idle = bool(evict_idle)
-        self._closed = False
-        if self._evict_idle:
-            sweeper = threading.Thread(
-                target=self._sweep_loop, name=f"ftp-pool-evict-{host}:{port}", daemon=True
-            )
-            sweeper.start()
-
-    def _expired(self, returned_at: float) -> bool:
-        return self._evict_idle and (self._clock() - returned_at) > self.idle_timeout
-
-    def evict_idle_connections(self) -> int:
-        """Close idle connections older than idle_timeout (no-op unless
-        evict_idle). Non-expired entries are requeued with their original
-        timestamps. Returns the number evicted."""
-        if not self._evict_idle:
-            return 0
-        keep, evicted = [], 0
-        while True:
-            try:
-                conn, returned_at = self._idle.get_nowait()
-            except queue.Empty:
-                break
-            if self._expired(returned_at):
-                self._close_quietly(conn)
-                with self._lock:
-                    self._created -= 1
-                evicted += 1
-            else:
-                keep.append((conn, returned_at))
-        for item in keep:
-            self._idle.put(item)
-        return evicted
-
-    def _sweep_loop(self) -> None:  # pragma: no cover - timing loop; the
-        # eviction logic it drives is covered by tests/test_pool.py
-        import time
-
-        interval = max(min(self.idle_timeout / 2.0, 30.0), 0.05)
-        while not self._closed:
-            time.sleep(interval)
-            try:
-                self.evict_idle_connections()
-            except Exception:
-                pass
 
     def _connect(self) -> FTP:
         conn = QuickAckFTP()
@@ -168,15 +107,13 @@ class FTPConnectionPool:
         deadline = None
         while True:
             try:
-                conn, returned_at = self._idle.get_nowait()
+                conn = self._idle.get_nowait()
             except queue.Empty:
                 conn = None
             if conn is not None:
-                if not self._expired(returned_at) and self._is_alive(conn):
+                if self._is_alive(conn):
                     return conn
-                self._close_quietly(conn)
-                with self._lock:
-                    self._created -= 1
+                self.discard(conn)
                 continue
             with self._lock:
                 if self._created < self._pool_size:
@@ -192,8 +129,6 @@ class FTPConnectionPool:
                         self._created -= 1
                     raise
             # at capacity: block for a returned connection
-            import time
-
             if deadline is None:
                 deadline = time.monotonic() + self._max_wait
             remaining = deadline - time.monotonic()
@@ -202,20 +137,18 @@ class FTPConnectionPool:
                     f"no connection available for {self._host}:{self._port} within {self._max_wait}s"
                 )
             try:
-                conn, returned_at = self._idle.get(timeout=remaining)
+                conn = self._idle.get(timeout=remaining)
             except queue.Empty:
                 raise PoolTimeoutError(
                     f"no connection available for {self._host}:{self._port} within {self._max_wait}s"
                 ) from None
-            if not self._expired(returned_at) and self._is_alive(conn):
+            if self._is_alive(conn):
                 return conn
-            self._close_quietly(conn)
-            with self._lock:
-                self._created -= 1
+            self.discard(conn)
             # loop back: capacity freed, we may create fresh
 
     def return_connection(self, conn: FTP) -> None:
-        self._idle.put((conn, self._clock()))
+        self._idle.put(conn)
 
     def discard(self, conn: FTP) -> None:
         """Close a borrowed connection instead of re-pooling it — for
@@ -227,15 +160,12 @@ class FTPConnectionPool:
             self._created -= 1
 
     def close_all(self) -> None:
-        self._closed = True  # stops the sweeper (if any) at its next tick
         while True:
             try:
-                conn, _returned_at = self._idle.get_nowait()
+                conn = self._idle.get_nowait()
             except queue.Empty:
                 break
-            self._close_quietly(conn)
-            with self._lock:
-                self._created -= 1
+            self.discard(conn)
 
 
 class FTPPoolManager:
@@ -256,14 +186,14 @@ class FTPPoolManager:
                     cls._instance = cls()
         return cls._instance
 
-    def get_pool(self, host: str, port: int, username: str, password: str, **kw) -> FTPConnectionPool:
+    def get_pool(self, host: str, port: int, username: str, password: str) -> FTPConnectionPool:
         key = f"{host}:{port}:{username}"
         pool = self._pools.get(key)
         if pool is None:
             with self._lock:
                 pool = self._pools.get(key)
                 if pool is None:
-                    pool = FTPConnectionPool(host, port, username, password, **kw)
+                    pool = FTPConnectionPool(host, port, username, password)
                     self._pools[key] = pool
         return pool
 

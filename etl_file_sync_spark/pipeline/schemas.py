@@ -47,7 +47,7 @@ SERVER_SCHEMA = T.StructType(
 STATUS_SCHEMA = T.StructType(
     [
         T.StructField("job_id", T.StringType()),
-        T.StructField("status", T.StringType()),  # 'ok' | 'error'
+        T.StructField("status", T.StringType()),  # 'ok' | 'error'; NULL: failed classification
         T.StructField("error", T.StringType()),
         T.StructField("src_path", T.StringType()),
         T.StructField("dst_path", T.StringType()),

@@ -6,18 +6,20 @@ this reproduces the reference's commit-even-on-failure delivery contract
 (consumer.py:136-137) with checkpoint-backed at-least-once semantics
 (SURVEY.md §2.1 row 11).
 
-Execution shape: mapInPandas over the enriched job frame. Each Arrow
+Execution shape: mapInPandas over the classified job frame. Each Arrow
 batch is processed row-wise INSIDE the executor (the transfer itself is
 inherently per-file I/O); handlers and FTP pools are per-executor
 singletons reused across batches. Temp staging mirrors
 consumer.py:139-186 (download → upload through a local temp file, always
-deleted in finally).
+deleted in finally). A row that failed classification passes through as
+a status-NULL row and touches no server.
 
-A manifest batch makes ONE eager checkpoint: the status rows and the
-pre-transfer DLQ rows in one frame. The status sink and the DLQ sink both
-read only that checkpoint, so a batch and its two writes run four Spark
-jobs (servers broadcast, checkpoint, two writes) and neither write reads
-or parses the input again.
+A manifest batch is ONE pass, as the reference handles each message once
+(consumer.py:53-60): classify → transfer → one eager checkpoint, which the
+status sink and the DLQ sink both read. The checkpoint and each write run
+one task per input split, the input is scanned once, and a batch with its
+two writes runs four Spark jobs (servers broadcast, checkpoint, two
+writes).
 """
 
 from __future__ import annotations
@@ -29,11 +31,15 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from etl_file_sync_spark.pipeline.config import ServerConfig
-from etl_file_sync_spark.pipeline.handlers import LocalTransfer, TransferFactory
+from etl_file_sync_spark.pipeline.handlers import TransferFactory
 from etl_file_sync_spark.pipeline.schemas import STATUS_SCHEMA
-from etl_file_sync_spark.pipeline.transform import SplitResult, dlq_envelope, split_valid_dlq
+from etl_file_sync_spark.pipeline.transform import classify_jobs, dlq_envelope
+
+# the status row plus the DLQ payload the job carries if it fails
+_ROW_SCHEMA = T.StructType([*STATUS_SCHEMA.fields, T.StructField("original_message", T.StringType())])
 
 
 def _config_from_row(row: pd.Series, prefix: str) -> ServerConfig:
@@ -48,39 +54,31 @@ def _config_from_row(row: pd.Series, prefix: str) -> ServerConfig:
     )
 
 
-def _execute_one(row: pd.Series, staging_dir: str, skip_if_exists: bool = False) -> dict:
-    """One job: temp file → download → upload → cleanup (finally).
+def _execute_one(row: pd.Series, staging_dir: str) -> dict:
+    """One job: temp file → download → upload → cleanup (finally). A row
+    whose classification already failed returns status NULL untouched."""
 
-    skip_if_exists short-circuits local destinations that already exist —
-    the idempotency guard for task retries (SURVEY.md §7.4 risk 1; the
-    reference's STOR overwrite makes retries idempotent for FTP already).
-    """
-    tmp = os.path.join(staging_dir, f"etl-{uuid.uuid4().hex}")
-
-    def status(error: str | None = None) -> dict:
+    def status(state: str | None, error: str | None = None) -> dict:
         return {
             "job_id": row["job_id"],
-            "status": "ok" if error is None else "error",
+            "status": state,
             "error": error,
             "src_path": row["src_path"],
             "dst_path": row["dst_path"],
+            "original_message": row["original_message"],
         }
 
+    if pd.notna(row["error"]):
+        return status(None, row["error"])
+    tmp = os.path.join(staging_dir, f"etl-{uuid.uuid4().hex}")
     try:
         src = TransferFactory.create(_config_from_row(row, "src"))
         dst = TransferFactory.create(_config_from_row(row, "dst"))
-        if (
-            skip_if_exists
-            and row["dst_type"] == "local"
-            and isinstance(dst, LocalTransfer)
-            and os.path.exists(dst._resolve(row["dst_path"]))
-        ):
-            return status()
         src.download(row["src_path"], tmp)
         dst.upload(tmp, row["dst_path"])
-        return status()
+        return status("ok")
     except Exception as exc:  # error → status row, never a task failure
-        return status(f"{type(exc).__name__}: {exc}")
+        return status("error", f"{type(exc).__name__}: {exc}")
     finally:
         try:
             if os.path.exists(tmp):
@@ -89,10 +87,9 @@ def _execute_one(row: pd.Series, staging_dir: str, skip_if_exists: bool = False)
             pass
 
 
-def run_transfers(
-    valid: DataFrame, staging_dir: str | None = None, skip_if_exists: bool = False
-) -> DataFrame:
-    """Execute transfers for the enriched job frame; returns status rows.
+def run_transfers(jobs: DataFrame, staging_dir: str | None = None) -> DataFrame:
+    """Execute the transfers of a ``classify_jobs`` frame (or its valid
+    projection); returns its status rows with ``original_message``.
 
     Arrow-batched; per-executor handler/pool reuse; parallelism = input
     partitions (repartition upstream to set transfer concurrency — the
@@ -104,18 +101,13 @@ def run_transfers(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield pd.DataFrame(
-                [_execute_one(row, staging, skip_if_exists) for _, row in pdf.iterrows()]
-            )
+            yield pd.DataFrame([_execute_one(row, staging) for _, row in pdf.iterrows()])
 
-    return valid.mapInPandas(run, schema=STATUS_SCHEMA)
+    return jobs.mapInPandas(run, schema=_ROW_SCHEMA)
 
 
 def run_manifest_batch(
-    raw: DataFrame,
-    servers: DataFrame,
-    staging_dir: str | None = None,
-    skip_if_exists: bool = False,
+    raw: DataFrame, servers: DataFrame, staging_dir: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Batch-mode pipeline: raw value:string frame → (status, dlq-envelope).
 
@@ -123,21 +115,11 @@ def run_manifest_batch(
     the foreachBatch body, usable standalone for manifest-driven runs.
 
     The transfer stage is side-effecting, so it runs exactly once, under
-    ONE eager localCheckpoint per batch that holds the status rows and
-    the pre-transfer DLQ rows together (status NULL). Both returned
-    frames read only that checkpoint: writing or counting them never
-    re-runs a download/upload, nor re-reads and re-parses the input.
+    ONE eager localCheckpoint per batch. Both returned frames read only
+    that checkpoint: writing or counting them never re-runs a
+    download/upload, nor re-reads and re-parses the input.
     """
-    split: SplitResult = split_valid_dlq(raw, servers)
-    rows = (
-        run_transfers(split.valid, staging_dir, skip_if_exists)
-        .selectExpr(
-            "*",
-            "to_json(named_struct('job_id', job_id, 'src_path', src_path, 'dst_path', dst_path)) AS original_message",
-        )
-        .unionByName(split.dlq, allowMissingColumns=True)
-        .localCheckpoint(eager=True)
-    )
+    rows = run_transfers(classify_jobs(raw, servers), staging_dir).localCheckpoint(eager=True)
     status = rows.where("status IS NOT NULL").drop("original_message")
     dlq = dlq_envelope(rows.where("status IS NULL OR status = 'error'"))
     return status, dlq
@@ -170,7 +152,6 @@ def foreach_batch_factory(
     dlq_dir: str,
     status_dir: str,
     staging_dir: str | None = None,
-    skip_if_exists: bool = False,
     dlq_writer=None,
 ):
     """foreachBatch body for the streaming pipeline: execute transfers,
@@ -181,13 +162,14 @@ def foreach_batch_factory(
     operational record. Each DLQ-sink failure is swallowed independently
     (logged, never fails the batch — consumer.py:224-225 parity), so a
     dead broker can't take down the parquet trail or vice versa.
-    Checkpointing upstream gives at-least-once; skip_if_exists makes
-    replayed batches idempotent on local sinks."""
+    Checkpointing upstream gives at-least-once; a replayed batch copies
+    its files again, which is idempotent: local uploads publish through
+    os.replace and FTP STOR overwrites."""
 
     def body(batch_df: DataFrame, epoch_id: int) -> None:
         import logging
 
-        status, dlq = run_manifest_batch(batch_df, servers, staging_dir, skip_if_exists)
+        status, dlq = run_manifest_batch(batch_df, servers, staging_dir)
         status.write.mode("append").parquet(status_dir)
         if dlq_writer is not None:
             # two DLQ sinks: pin one envelope timestamp for both

@@ -1,4 +1,4 @@
-"""Pure DataFrame transforms: parse → validate → enrich → split.
+"""Pure DataFrame transforms: parse → validate → enrich → classify.
 
 This is rows 2-4 of SURVEY.md §2.1 as one declarative plan, built by ONE
 ``spark.sql`` call (built as a chain of ``F.*``/``withColumn``/``join``
@@ -11,6 +11,13 @@ calls it costs one py4j round trip per step, over a thousand per batch):
 - server enrichment as a broadcast hash join on upper(hostname) ×2
   (config.py:92-130's lookup, :104 case-insensitivity); unknown server ⇒
   DLQ, not crash (tests/test_consumer.py:210-225).
+
+``classify_jobs`` keeps every input row, the way the reference handles
+each message once (consumer.py:53-60): the transfer columns, the
+classification ``error`` (NULL for a job that passed) and the DLQ payload
+``original_message``. For a job that passed, that payload is the one its
+transfer failure carries, so every DLQ payload format is decided here.
+``split_valid_dlq`` is its two projections.
 
 The whole plan is shuffle-free: from_json/validity are narrow, both
 enrichment joins broadcast — at 100 TB this scales linearly with input
@@ -35,7 +42,7 @@ ERR_UNKNOWN_DST = "unknown_server: destination hostname not configured"
 
 @dataclass
 class SplitResult:
-    valid: DataFrame  # enriched jobs ready for transfer
+    valid: DataFrame  # enriched jobs ready for transfer (error IS NULL)
     dlq: DataFrame  # (original_message, error) — raw payload preserved
 
 
@@ -48,17 +55,17 @@ class SplitResult:
 # required-field failures raise ValueError inside from_json
 # (message.py:68-71, :88-91) before any job object exists, so the
 # consumer wraps the RAW text for both (consumer.py:126-134 →
-# _send_raw_to_dlq, :198-209). Only post-parse failures (unknown server,
-# transfer errors) carry the parsed job dict (consumer.py:188-196).
+# _send_raw_to_dlq, :198-209). Only post-parse failures carry a job:
+# an unknown server the parsed job dict, a transfer error the job's id
+# and paths (consumer.py:188-196).
 #
-# Each server row joins as ONE struct column: a valid-row plan and a
-# DLQ-row plan over the same batch then prune the dimension to the same
-# two columns and share one broadcast.
-_SPLIT_SQL = """
+# Each server row joins as ONE struct column, so the dimension is pruned
+# to the columns a plan reads and broadcast once.
+_CLASSIFY_SQL = """
 WITH servers AS (SELECT hostname, struct(*) AS srv FROM {servers}),
 parsed AS (
-  SELECT {{value}} AS value, from_json({{value}}, {{schema}}) AS j,
-         get_json_object({{value}}, '$') IS NOT NULL AS is_json_obj
+  SELECT value, from_json(value, {{schema}}) AS j,
+         get_json_object(value, '$') IS NOT NULL AS is_json_obj
   FROM {{raw}}
 ),
 classified AS (
@@ -79,10 +86,12 @@ classified AS (
   LEFT JOIN servers s ON upper(j.source.hostname) = s.hostname
   LEFT JOIN servers d ON upper(j.destination.hostname) = d.hostname
 )
-SELECT *,
+SELECT * EXCEPT (value, j),
        CASE WHEN error IN ({{err_parse}}, {{err_missing}})
-            THEN to_json(named_struct('raw', value))
-            ELSE to_json(j) END AS original_message
+              THEN to_json(named_struct('raw', value))
+            WHEN error IS NOT NULL THEN to_json(j)
+            ELSE to_json(named_struct('job_id', job_id, 'src_path', src_path, 'dst_path', dst_path))
+       END AS original_message
 FROM classified
 """
 
@@ -91,9 +100,11 @@ def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def split_valid_dlq(raw: DataFrame, servers: DataFrame, value_col: str = "value") -> SplitResult:
-    """Full classify/enrich/split. `servers` is the config dimension
-    (hostname,type,host,port,username,password,base_path)."""
+def classify_jobs(raw: DataFrame, servers: DataFrame) -> DataFrame:
+    """Parse, validate and enrich a raw ``value:string`` frame, one row per
+    input row: job_id, src_path, dst_path, the src_*/dst_* columns of
+    ``servers`` (the config dimension: hostname, type, host, port,
+    username, password, base_path), ``error`` and ``original_message``."""
     servers_cols = ", ".join(
         f"{side}.srv.{_ident(c)} AS {_ident(f'{prefix}_{c}')}"
         for side, prefix in (("s", "src"), ("d", "dst"))
@@ -106,13 +117,12 @@ def split_valid_dlq(raw: DataFrame, servers: DataFrame, value_col: str = "value"
     view = f"etl_servers_{uuid.uuid4().hex}"
     servers.createGlobalTempView(view)
     try:
-        classified = spark.sql(
-            _SPLIT_SQL.format(
+        return spark.sql(
+            _CLASSIFY_SQL.format(
                 servers=f"{_ident(spark.conf.get('spark.sql.globalTempDatabase'))}.{view}",
                 servers_cols=servers_cols,
             ),
             raw=raw,
-            value=F.col(value_col),
             schema=JOB_SCHEMA.simpleString(),
             err_parse=ERR_PARSE,
             err_missing=ERR_MISSING,
@@ -121,9 +131,15 @@ def split_valid_dlq(raw: DataFrame, servers: DataFrame, value_col: str = "value"
         )
     finally:
         spark.catalog.dropGlobalTempView(view)
+
+
+def split_valid_dlq(raw: DataFrame, servers: DataFrame) -> SplitResult:
+    """The two projections of ``classify_jobs``: the jobs to transfer and
+    the (original_message, error) rows that go to the DLQ."""
+    jobs = classify_jobs(raw, servers)
     return SplitResult(
-        valid=classified.where("error IS NULL").drop("error", "value", "j", "original_message"),
-        dlq=classified.where("error IS NOT NULL").select("original_message", "error"),
+        valid=jobs.where("error IS NULL"),
+        dlq=jobs.where("error IS NOT NULL").select("original_message", "error"),
     )
 
 

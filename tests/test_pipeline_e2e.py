@@ -10,7 +10,7 @@ import uuid
 
 from etl_file_sync_spark.pipeline.config import ServerConfig, servers_dataframe
 from etl_file_sync_spark.pipeline.sink import foreach_batch_factory, run_manifest_batch, run_transfers
-from etl_file_sync_spark.pipeline.transform import dlq_envelope, split_valid_dlq
+from etl_file_sync_spark.pipeline.transform import classify_jobs, dlq_envelope, split_valid_dlq
 from tests.conftest import assert_same_as
 from tests.plan_util import physical_plan
 
@@ -52,23 +52,23 @@ def test_manifest_batch_byte_identical(spark, tmp_path):
 
 def test_manifest_batch_failure_goes_to_dlq_not_task_failure(spark, tmp_path):
     files, servers, jobs = _setup(tmp_path, n=2)
-    jobs.append(
-        json.dumps(
-            {
-                "job_id": "missing",
-                "source": {"hostname": "S", "path": str(tmp_path / "nope.bin")},
-                "destination": {"hostname": "D", "path": str(tmp_path / "dst" / "nope.bin")},
-            }
-        )
-    )
+    for job_id in ("missing", None):  # None: the job's id is generated
+        job = {
+            "source": {"hostname": "S", "path": str(tmp_path / f"nope-{job_id}.bin")},
+            "destination": {"hostname": "D", "path": str(tmp_path / "dst" / f"nope-{job_id}.bin")},
+        }
+        jobs.append(json.dumps({"job_id": job_id, **job} if job_id else job))
     raw = spark.createDataFrame([(j,) for j in jobs], "value string")
     status, dlq = run_manifest_batch(raw, servers_dataframe(spark, servers), staging_dir=str(tmp_path))
     assert status.filter("status = 'ok'").count() == 2
-    assert status.filter("status = 'error'").count() == 1
+    failed = {(r.job_id, r.src_path, r.dst_path) for r in status.filter("status = 'error'").collect()}
     envs = [json.loads(r.value) for r in dlq.collect()]
-    assert len(envs) == 1 and "FileNotFoundError" in envs[0]["error"]
-    # job context preserved in the DLQ payload (test_e2e.py:151-202 contract)
-    assert json.loads(envs[0]["original_message"])["job_id"] == "missing"
+    assert len(envs) == 2 and all("FileNotFoundError" in e["error"] for e in envs)
+    # job context preserved in the DLQ payload (test_e2e.py:151-202
+    # contract), a generated id the same as in the job's status row
+    payloads = [json.loads(e["original_message"]) for e in envs]
+    assert {(p["job_id"], p["src_path"], p["dst_path"]) for p in payloads} == failed
+    assert sorted(len(j) for j, _, _ in failed) == [len("missing"), 36]
 
 
 def test_streaming_pipeline_checkpointed(spark, tmp_path):
@@ -145,24 +145,16 @@ def test_checkpoint_recovery_across_restarts(spark, tmp_path):
 
 
 def test_skip_if_exists_idempotency(spark, tmp_path):
-    """Retry idempotency: a second run with skip_if_exists leaves existing
-    destinations untouched (no re-copy) and still reports ok."""
-    from etl_file_sync_spark.pipeline.transform import split_valid_dlq
-    from etl_file_sync_spark.pipeline.sink import run_transfers
-
+    """Retry idempotency: a rerun copies again and overwrites whatever the
+    destination holds (reference STOR semantics), so a replayed batch
+    converges to the source bytes."""
     files, servers, jobs = _setup(tmp_path, n=2)
     raw = spark.createDataFrame([(j,) for j in jobs], "value string")
-    sdf = servers_dataframe(spark, servers)
-    split = split_valid_dlq(raw, sdf)
+    split = split_valid_dlq(raw, servers_dataframe(spark, servers))
     assert run_transfers(split.valid, str(tmp_path)).filter("status='ok'").count() == 2
-    # tamper with a destination; the skipping rerun must NOT overwrite it
     tampered = tmp_path / "dst" / "f0.bin"
     tampered.write_bytes(b"tampered")
-    status = run_transfers(split.valid, str(tmp_path), skip_if_exists=True)
-    assert status.filter("status='ok'").count() == 2
-    assert tampered.read_bytes() == b"tampered"
-    # without the flag, the rerun overwrites (reference STOR semantics)
-    run_transfers(split.valid, str(tmp_path)).collect()
+    assert run_transfers(split.valid, str(tmp_path)).filter("status='ok'").count() == 2
     assert tampered.read_bytes() == files["f0.bin"]
 
 
@@ -218,7 +210,7 @@ def test_manifest_batch_same_rows_as_its_public_pieces(spark, tmp_path):
     raw = spark.createDataFrame([(j,) for j in jobs], "value string")
     sdf = servers_dataframe(spark, servers)
     split = split_valid_dlq(raw, sdf)
-    status_old = run_transfers(split.valid, str(tmp_path)).localCheckpoint(eager=True)
+    status_old = run_transfers(split.valid, str(tmp_path)).drop("original_message").localCheckpoint(eager=True)
     failures = status_old.filter("status = 'error'").selectExpr(
         "to_json(named_struct('job_id', job_id, 'src_path', src_path, 'dst_path', dst_path)) AS original_message",
         "error",
@@ -233,29 +225,38 @@ def test_manifest_batch_same_rows_as_its_public_pieces(spark, tmp_path):
 
 def test_manifest_batch_job_budget_and_dlq_reads_only_the_checkpoint(spark, tmp_path):
     """A manifest batch and its two writes run at most 4 Spark jobs (the
-    servers broadcast, the one checkpoint, two writes), and the DLQ frame
-    neither re-reads nor re-parses the input."""
+    servers broadcast, the one checkpoint, two writes). Over an n-split
+    manifest the checkpoint and each write run at most n tasks, the
+    checkpointed plan scans the input once, and the DLQ frame neither
+    re-reads nor re-parses the input."""
     _files, servers, jobs = _mixed_batch(tmp_path)
     manifest = tmp_path / "manifest"
     manifest.mkdir()
-    (manifest / "part0.jsonl").write_text("\n".join(jobs) + "\n")
+    n_splits = 3
+    for p in range(n_splits):
+        (manifest / f"part{p}.jsonl").write_text("\n".join(jobs[p::n_splits]) + "\n")
+    sdf = servers_dataframe(spark, servers)
     sc = spark.sparkContext
     group = f"manifest-budget-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "manifest batch job budget")
     try:
-        status, dlq = run_manifest_batch(
-            spark.read.text(str(manifest)), servers_dataframe(spark, servers), staging_dir=str(tmp_path)
-        )
+        status, dlq = run_manifest_batch(spark.read.text(str(manifest)), sdf, staging_dir=str(tmp_path))
         status.write.parquet(str(tmp_path / "status"))
         dlq.write.parquet(str(tmp_path / "dlq"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 4, f"{n_jobs} Spark jobs for one manifest batch"
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    assert len(job_ids) <= 4, f"{len(job_ids)} Spark jobs for one manifest batch"
+    stages = [tracker.getStageInfo(s) for j in job_ids for s in tracker.getJobInfo(j).stageIds]
+    sinks = [s for s in stages if s.name.startswith(("localCheckpoint at", "parquet at"))]
+    assert len(sinks) == 3 and all(s.numTasks <= n_splits for s in sinks), [(s.name, s.numTasks) for s in stages]
     assert spark.read.parquet(str(tmp_path / "dlq")).count() == 4
     plan = physical_plan(dlq)
     assert "FileScan" not in plan and "from_json" not in plan, plan
+    checkpointed = physical_plan(run_transfers(classify_jobs(spark.read.text(str(manifest)), sdf)))
+    assert checkpointed.count("FileScan") == 1, checkpointed
 
 
 def test_parse_and_field_failures_keep_raw_payload(spark):
@@ -285,8 +286,8 @@ def test_chaos_multi_restart_converges(spark, tmp_path):
     destination tree byte-identical, every job reporting ok, DLQ empty.
     Status is an at-least-once operational trail (a batch whose crash
     landed after its side effects replays on restart), so the assertion
-    is set-equality + >=1 ok per job, with skip_if_exists making the
-    destination writes idempotent. Extends
+    is set-equality + >=1 ok per job; a replayed copy rewrites the same
+    bytes, so the destination writes are idempotent. Extends
     test_checkpoint_recovery_across_restarts (one clean restart) to
     repeated UNCLEAN restarts."""
     files, servers, jobs = _setup(tmp_path, n=10)
@@ -300,7 +301,6 @@ def test_chaos_multi_restart_converges(spark, tmp_path):
         dlq_dir=str(tmp_path / "dlq"),
         status_dir=str(tmp_path / "status"),
         staging_dir=str(tmp_path),
-        skip_if_exists=True,  # idempotent destination writes under replay
     )
 
     # crash schedule: epoch -> phase ("before" = crash with no side

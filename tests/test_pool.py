@@ -122,84 +122,3 @@ def test_manager_singleton_per_key():
     p2 = m1.get_pool("hostA", 21, "u", "pw")
     p3 = m1.get_pool("hostB", 21, "u", "pw")
     assert p1 is p2 and p1 is not p3
-
-
-def mk_evicting_pool(size=2, idle_timeout=10.0, evict_idle=True):
-    created = []
-    now = [0.0]
-
-    def factory():
-        c = FakeConn()
-        created.append(c)
-        return c
-
-    p = FTPConnectionPool(
-        "h", 21, "u", "p",
-        pool_size=size,
-        max_wait=0.3,
-        idle_timeout=idle_timeout,
-        factory=factory,
-        evict_idle=evict_idle,
-        clock=lambda: now[0],
-    )
-    return p, created, now
-
-
-def test_idle_eviction_default_off_is_reference_parity():
-    """Without the opt-in flag, idle_timeout stays stored-unenforced —
-    a connection idle far past the timeout is still reused (exactly the
-    reference's behavior, DEVIATIONS.md #4)."""
-    p, created, now = mk_evicting_pool(idle_timeout=10.0, evict_idle=False)
-    c1 = p.borrow()
-    p.return_connection(c1)
-    now[0] += 10_000.0
-    assert p.borrow() is c1 and len(created) == 1
-    assert p.evict_idle_connections() == 0  # explicit call is a no-op too
-
-
-def test_idle_eviction_on_borrow_when_opted_in():
-    p, created, now = mk_evicting_pool(idle_timeout=10.0)
-    c1 = p.borrow()
-    p.return_connection(c1)
-    now[0] += 11.0
-    c2 = p.borrow()  # expired on borrow: closed, fresh one created
-    assert c2 is not c1 and c1.closed and len(created) == 2
-    p.return_connection(c2)
-    now[0] += 9.0
-    assert p.borrow() is c2  # within timeout: still reused
-
-
-def test_explicit_evict_closes_only_expired_and_frees_capacity():
-    p, created, now = mk_evicting_pool(size=2, idle_timeout=10.0)
-    c1, c2 = p.borrow(), p.borrow()
-    p.return_connection(c1)
-    now[0] += 11.0
-    p.return_connection(c2)  # c1 now 11s idle, c2 fresh
-    assert p.evict_idle_connections() == 1
-    assert c1.closed and not c2.closed
-    # capacity freed: a new borrow beyond c2 creates instead of timing out
-    got = {p.borrow(), p.borrow()}
-    assert c2 in got and len(created) == 3
-
-
-def test_sweeper_thread_evicts_without_explicit_call():
-    """With evict_idle on and a real clock, the daemon sweeper alone
-    (interval = idle_timeout/2, floored at 50ms) closes an expired idle
-    connection — no borrow or explicit evict call needed."""
-    created = []
-
-    def factory():
-        c = FakeConn()
-        created.append(c)
-        return c
-
-    p = FTPConnectionPool(
-        "h", 21, "u", "p", pool_size=1, idle_timeout=0.2, factory=factory, evict_idle=True
-    )
-    conn = p.borrow()
-    p.return_connection(conn)
-    deadline = time.monotonic() + 5.0
-    while not conn.closed and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert conn.closed, "sweeper did not evict the expired connection within 5s"
-    p.close_all()
