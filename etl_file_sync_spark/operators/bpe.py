@@ -16,23 +16,18 @@ to the vocabulary — merge-count scaling, measured in SCALE.md, is what
 a production 30k–50k-merge run pays, with ZERO Spark jobs after the
 single corpus pass.
 
-(The previous shape — one Spark job + driver collect() per merge rule —
-is kept as `bpe_train_distributed` for the case where the distinct-word
-frame genuinely exceeds driver memory; `bpe_train` guards the collect
-with `max_vocab` and points there. At 30k+ merges the distributed loop
-is per-job-overhead-bound, which is exactly why it is the fallback and
-not the default.)
+`bpe_train` guards the collect with `max_vocab`: a distinct-word frame
+too large for driver memory fails loudly instead of OOMing the driver.
 
-Training is deterministic in both spellings: the argmax pair breaks
-ties lexicographically, and training stops early when no pair occurs
-at least twice.
+Training is deterministic: the argmax pair breaks ties
+lexicographically, and training stops early when no pair occurs at
+least twice.
 
 The reference (`/root/reference/`) has no analytics surface (SURVEY.md
 §2.2); this extends the engine-only LLM-data face. No SQL oracle exists
 for iterative merge training — correctness is pinned by an exact
-pure-Python reimplementation in tests/test_bpe.py (both spellings must
-reproduce its rule list bit-for-bit, at num_merges=1000 for the
-driver-local default).
+pure-Python reimplementation in tests/test_bpe.py (the trainer must
+reproduce its rule list bit-for-bit, at num_merges=1000).
 """
 
 from __future__ import annotations
@@ -40,7 +35,7 @@ from __future__ import annotations
 import heapq
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_file_sync_spark.localrel import local_rows_df
@@ -171,99 +166,18 @@ def bpe_train(
     Spark jobs per merge, so 30k production merges cost the same single
     cluster pass as 20. ``max_vocab`` guards the collect: a corpus whose
     distinct-word count exceeds it (20M types ≈ a few GB of driver heap;
-    100 TB of natural text is ~1M) raises with a pointer to
-    bpe_train_distributed rather than silently OOMing the driver.
+    100 TB of natural text is ~1M) raises rather than silently OOMing
+    the driver.
     """
     spark = df.sparkSession
     wc = word_count_frame(df, text_col)
     collected = wc.limit(max_vocab + 1).collect()
     if len(collected) > max_vocab:
         raise ValueError(
-            f"distinct-word count exceeds max_vocab={max_vocab}; "
-            "use bpe_train_distributed (per-merge Spark jobs) or raise max_vocab"
+            f"distinct-word count exceeds max_vocab={max_vocab}: the merge loop "
+            "runs on the driver; raise max_vocab if the driver heap holds the vocabulary"
         )
     rules = train_rules_local(((r["word"], r["cnt"]) for r in collected), num_merges)
-    schema = "step int, left string, right string, merged string, pair_count bigint"
-    return local_rows_df(spark, [tuple(r) for r in rules], schema)
-
-
-def _initial_symbols(wc: DataFrame) -> DataFrame:
-    """Split each word into single-character symbols + end-of-word mark."""
-    chars = F.filter(F.split(F.col("word"), ""), lambda c: c != "")
-    return wc.select(
-        F.concat(chars, F.array(F.lit(END))).alias("syms"),
-        "cnt",
-    )
-
-
-def _pair_counts(syms: DataFrame) -> DataFrame:
-    """Adjacent-pair totals over the symbol frame (map-side combined)."""
-    pairs = F.expr(
-        "transform(slice(syms, 1, size(syms) - 1), (s, i) -> struct(s AS l, syms[i + 1] AS r))"
-    )
-    return (
-        syms.select(F.explode(pairs).alias("p"), "cnt")
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.sum("cnt").cast("bigint").alias("n"))
-    )
-
-
-def _merge_pair(syms: DataFrame, left: str, right: str) -> DataFrame:
-    """Left-to-right greedy merge of (left,right) in every symbol array —
-    a pure-JVM aggregate() fold, no Python in the loop."""
-    l, r = F.lit(left), F.lit(right)
-    merged = F.aggregate(
-        F.col("syms"),
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == l) & (x == r),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.concat(l, r))),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-    return syms.select(merged.alias("syms"), "cnt")
-
-
-def bpe_train_distributed(
-    df: DataFrame, num_merges: int = 20, text_col: str = "text"
-) -> DataFrame:
-    """Fallback trainer for a vocabulary too large to collect: one Spark
-    job + 1-row driver pull PER merge rule, each iteration over the
-    distinct-word symbol frame. Same rules, bit-for-bit, as bpe_train —
-    but per-job overhead (not data volume) dominates at production merge
-    counts, which is why the driver-local spelling is the default."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    wc = word_count_frame(df, text_col)
-    # localCheckpoint TRUNCATES the logical plan each generation (the
-    # frame becomes a LogicalRDD). Without it the k-th generation's plan
-    # nests k merge folds, and CollapseProject inlines the multiply-
-    # referenced `syms` column into each reference — an exponentially
-    # sized expression tree that OOMs plan stringification long before
-    # execution. Each generation is eagerly materialized, so the
-    # PREVIOUS generation's checkpoint blocks are dead the moment the
-    # next exists — unpersist them (else ~num_merges vocab-sized RDDs
-    # accumulate in the block manager per call). Foreign cached RDDs
-    # (operator caches, other checkpoints) are snapshotted first and
-    # never touched.
-    foreign = {k for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _drop_stale_generations() -> None:
-        jmap = sc._jsc.getPersistentRDDs()
-        ours = sorted(k for k in jmap.keySet().toArray() if k not in foreign)
-        for rdd_id in ours[:-1]:  # keep only the newest generation
-            jmap.get(rdd_id).unpersist(False)
-
-    syms = _initial_symbols(wc).localCheckpoint(eager=True)
-    rules: list[Row] = []
-    for step in range(1, num_merges + 1):
-        top = _pair_counts(syms).orderBy(F.desc("n"), "l", "r").limit(1).collect()
-        if not top or top[0]["n"] < 2:
-            break
-        l, r, n = top[0]["l"], top[0]["r"], int(top[0]["n"])
-        rules.append(Row(step=step, left=l, right=r, merged=l + r, pair_count=n))
-        syms = _merge_pair(syms, l, r).localCheckpoint(eager=True)
-        _drop_stale_generations()
-    _drop_stale_generations()
     schema = "step int, left string, right string, merged string, pair_count bigint"
     return local_rows_df(spark, [tuple(r) for r in rules], schema)
 
@@ -284,8 +198,8 @@ def bpe_tokenize(
     BPE token counts whose ratio is the tokenizer's compression.
 
     Chained JVM merge folds would express this declaratively, but 20
-    nested aggregate() lambdas hit the same exponential CollapseProject
-    inlining bpe_train_distributed dodges with localCheckpoint — and
+    nested aggregate() lambdas hit an exponential CollapseProject
+    inlining that only a localCheckpoint per merge avoids — and
     checkpointing the full corpus 20 times is exactly the anti-pattern.
     The Python applier is the idiomatic escape hatch here (SURVEY.md
     §7.3: custom semantics -> mapInPandas).

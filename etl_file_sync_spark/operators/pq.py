@@ -25,10 +25,9 @@ Distributed shape (same posture as operators/similarity.py):
   frame is the only thing cached, and only for the call. Deterministic:
   codeword init is the id-ordered seed, ties break to the lowest
   codeword id, partial sums reduce in sorted order.
-- ENCODE: one narrow mapInPandas pass (a GEMM per subspace per batch)
-  emitting (id, codes ARRAY<INT>).
-- SEARCH: broadcast the per-query LUTs, one narrow pass over the codes
-  emitting each batch's top-`shortlist` per query (per-partition heaps —
+- ENCODE + SEARCH: broadcast the per-query LUTs, one narrow pass that
+  encodes each batch (a GEMM per subspace) and emits its top-`shortlist`
+  per query (per-partition heaps —
   the TakeOrdered shape), then ONE exact-cosine rerank join on the tiny
   shortlist, shared by pq_topk and ivfpq_topk. Recall comes from the
   rerank; PQ only has to get the true neighbors into the shortlist.
@@ -75,8 +74,8 @@ def _normalized_matrix_stream(df: DataFrame, id_col: str, vec_col: str) -> DataF
 def _make_pq_codes():
     """PQ codes of already-normalized vectors: per-subspace argmin of
     squared distance to the codewords (ties -> lowest codeword id).
-    The single spelling shared by pq_encode and the fused scan passes
-    in pq_topk/ivfpq_topk — fusing must not fork the arithmetic.
+    The single spelling the fused scan passes of pq_topk and
+    ivfpq_topk share — fusing must not fork the arithmetic.
 
     Defined inside a factory so the function's qualname contains
     '<locals>' and cloudpickle serializes it BY VALUE into the Arrow
@@ -131,7 +130,7 @@ def _train(v: DataFrame, n: int, seed_rows: list, m: int, k: int, iters: int) ->
     the sample. The bounded training frame is cached for the Lloyd
     rounds only: uncached, each round re-scans and re-filters the corpus."""
     if not seed_rows:
-        raise ValueError("pq_train: no usable vectors to train on")
+        raise ValueError("pq: no usable vectors to train the codebooks on")
     if n > MAX_TRAIN:
         v = v.filter(F.pmod(F.xxhash64(F.col("id")), F.lit(-(-n // MAX_TRAIN))) == 0)
     v = v.cache()
@@ -187,53 +186,6 @@ def _train(v: DataFrame, n: int, seed_rows: list, m: int, k: int, iters: int) ->
         return C
     finally:
         v.unpersist()
-
-
-def pq_train(
-    df: DataFrame,
-    m: int = 16,
-    k: int = 32,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Train per-subspace codebooks; returns C with shape (m, k, d//m).
-
-    Init: the k id-smallest vectors' subvectors (deterministic). Each
-    Lloyd round is one Arrow pass emitting per-(subspace, codeword)
-    partial sums — aggregate metadata, not data, reaches the driver.
-    Training sees a hash-sample of at most ~MAX_TRAIN vectors; the
-    ENCODE/scan passes remain the only full-data work.
-    """
-    v = _normalized_matrix_stream(df, id_col, vec_col)
-    n, seed_rows = _open(v, k)
-    return _train(v, n, seed_rows, m, k, iters)
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode vectors to PQ codes: (id, v, codes ARRAY<INT>). Keeps the
-    (normalized) vector column for downstream exact rerank; a pure
-    serving index would drop it and carry only the M ints."""
-    spark = df.sparkSession
-    bC = spark.sparkContext.broadcast(codebooks)
-
-    def enc(batches):
-        Cm = bC.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            codes = _pq_codes(V, Cm)
-            yield pd.DataFrame({"id": pdf["id"].values, "v": list(V), "codes": list(codes)})
-
-    v = _normalized_matrix_stream(df, id_col, vec_col)
-    return v.mapInPandas(enc, "id bigint, v array<double>, codes array<int>")
 
 
 def _open_ann(name, corpus, queries, m, kcent, iters, id_col, vec_col, max_queries, cents=None):
@@ -316,7 +268,7 @@ def pq_topk(
     top_b = shortlist
 
     # ONE fused Arrow pass: encode + LUT-score + per-batch shortlist.
-    # The old shape chained TWO mapInPandas stages (pq_encode, then adc
+    # The old shape chained TWO mapInPandas stages (encode, then adc
     # over its output), shipping each vector's 512 B float payload
     # across the JVM<->Python boundary twice and its codes once more;
     # fused, the payload crosses once and only shortlist rows come back

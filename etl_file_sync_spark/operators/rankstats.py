@@ -30,6 +30,13 @@ The input is cached because the boundary probe, the offsets branch and
 the final window all read it; callers/bench own ``clearCache()``, the
 same lifecycle convention as the dedup shingle caches.
 
+The rank-test pieces the statistics faces share sit on top:
+:func:`midranked` and :func:`group_rank_sums` (midranks of a
+pre-aggregated count frame, via :func:`avg_ranks`), :func:`tie_sum`
+(the tie-correction numerator) and :func:`window_midrank`, a plain
+window midrank for frames that are bounded by construction (blocks, a
+calendar series), never row-grain data.
+
 The reference pipeline has no analytics surface (SURVEY.md §2.2); this
 is engine-only scale infrastructure.
 """
@@ -249,3 +256,41 @@ def avg_ranks(
         "avg_rank",
         F.col(f"cum_{count_col}") + (F.col(count_col) + F.lit(1)) / F.lit(2.0),
     ).drop(f"cum_{count_col}")
+
+
+def midranked(g: DataFrame, value_col: str) -> tuple[DataFrame, DataFrame]:
+    """Midranks of a pre-aggregated ``(..., value, c)`` count frame:
+    returns the ``(value, cnt)`` frame of per-value totals (tie
+    corrections read it) and ``g`` with each row's ``avg_rank``."""
+    vals = g.groupBy(value_col).agg(F.sum("c").cast("bigint").alias("cnt"))
+    ranked = avg_ranks(vals, value_col, "cnt")
+    return vals, g.join(ranked.select(value_col, "avg_rank"), value_col)
+
+
+def group_rank_sums(g: DataFrame, group_col: str) -> tuple[DataFrame, DataFrame]:
+    """Rank sums of a ``(group, v, c)`` count frame: returns the
+    ``(v, cnt)`` frame and per group its size ``n`` and midrank sum
+    ``rank_sum`` (half-integers, exact in any summation order)."""
+    vals, r = midranked(g, "v")
+    return vals, r.groupBy(group_col).agg(
+        F.sum("c").cast("bigint").alias("n"),
+        F.sum(F.col("c") * F.col("avg_rank")).alias("rank_sum"),
+    )
+
+
+def tie_sum() -> Column:
+    """Aggregate over a ``(v, cnt)`` frame: sum(t^3 - t) over the tie
+    sizes, the numerator of the rank-test tie corrections."""
+    return F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt")).cast("double")
+
+
+def window_midrank(value_col: str, *partition_cols: str) -> Column:
+    """Midrank of ``value_col`` within its window partition:
+    #(<= v) - #(= v) + (#(= v) + 1) / 2. Meant for bounded partitions
+    (blocks, a calendar series), never row-grain data."""
+    w_leq = Window.partitionBy(*partition_cols).orderBy(value_col).rangeBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cnt_leq = F.count(F.lit(1)).over(w_leq)
+    cnt_eq = F.count(F.lit(1)).over(Window.partitionBy(*partition_cols, value_col))
+    return (cnt_leq - cnt_eq) + (cnt_eq + 1) / F.lit(2.0)

@@ -61,9 +61,3 @@ def snapshot_diff(
     )
     return joined.select(*keys, status.alias("status"))
 
-
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """(status, n) rollup of a snapshot_diff frame — the one-line audit
-    record a sync job logs per wave. Partial-aggregated groupBy on a
-    4-value key: map-side combine reduces it to 4 rows per partition."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n"))

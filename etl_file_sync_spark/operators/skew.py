@@ -1,81 +1,16 @@
-"""Skew-handling join operators for 100 TB scale.
+"""Key-skew diagnostics for joins and aggregations at 100 TB scale.
 
-AQE's skew-join split handles most cases at runtime
-(spark.sql.adaptive.skewJoin.enabled, on in session.py); explicit salting
-remains necessary when ONE key dominates so heavily that even split
-partitions bottleneck, or when the skewed side feeds an aggregation.
-
-salted_join: replicate the small side R times, scatter the big side's hot
-keys across R salt buckets — turns one straggler task into R even tasks
-at the cost of R× the (broadcastable) small side.
-
-two_phase_agg: partial agg on (key, salt) then final agg on key — the
-classic hot-key aggregation fix; Spark's partial aggregation already does
-this for algebraic aggregates, so this helper exists for the cases that
-defeat it (exact distinct counts per hot key).
+The engine's skew handling is AQE's runtime skew-join split
+(spark.sql.adaptive.skewJoin.enabled, on in session.get_spark), and
+Spark's partial aggregation already combines hot keys map-side for
+algebraic aggregates. What remains is knowing WHICH keys are hot:
+key_skew_report ranks a prospective key's heaviest values.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join big⋈small on `key` with the big side salted.
-
-    The small side is exploded ×salt_buckets and broadcast; the big side
-    gets a deterministic salt from a hash of its full row spread, so hot
-    keys distribute across salt_buckets tasks. Output columns = big's
-    columns + small's non-key columns (like df.join(small, key)).
-
-    Only inner/left joins are supported: with the small side replicated,
-    a right/full outer join would emit every unmatched small-side row
-    once PER SALT BUCKET.
-    """
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(f"salted_join supports inner/left joins, not {how!r}")
-    # pmod, not abs(...)%n: abs(Long.MIN_VALUE) is a no-op, so the abs
-    # form can yield a negative salt that matches no replicated bucket
-    # (row silently dropped on inner join, unenriched on left).
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt_buckets)).alias("_salt")
-    big_s = big.withColumn("_salt", salt)
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)).cast("array<bigint>"))
-    )
-    out = big_s.join(F.broadcast(small_s), [key, "_salt"], how)
-    return out.drop("_salt")
-
-
-def two_phase_agg(
-    df: DataFrame,
-    key: str,
-    agg_col: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Exact count + distinct-count per key via salted two-phase shuffle.
-
-    Phase 1 shuffles on (key, salt) — hot keys split across buckets;
-    phase 2 merges the per-salt partials. distinct counts merge exactly
-    because phase 1 keeps per-salt distinct sets disjoint only after
-    salting BY THE VALUE (same value → same salt), which also dedups.
-    Returns (key, n_rows, n_distinct).
-    """
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(agg_col)), F.lit(salt_buckets)))
-    phase1 = salted.groupBy(key, "_salt").agg(
-        F.count(F.lit(1)).alias("_n"), F.countDistinct(agg_col).alias("_nd")
-    )
-    # same value always lands in the same salt bucket ⇒ per-bucket distinct
-    # sets are disjoint across buckets and sum exactly.
-    return phase1.groupBy(key).agg(
-        F.sum("_n").alias("n_rows"), F.sum("_nd").alias("n_distinct")
-    )
 
 
 def key_skew_report(
@@ -84,7 +19,7 @@ def key_skew_report(
     """Per-key skew diagnostic for a prospective join/groupBy key: the
     `top` heaviest keys with their row counts, share of total (×1e6,
     integer-exact), and a flag when the key exceeds `skew_factor`× the
-    mean key load — the keys a salted_join or AQE skew split must absorb.
+    mean key load — the keys an AQE skew split must absorb.
 
     One partial-agg groupBy + a global top-k (TakeOrderedAndProject);
     totals ride along as a broadcast scalar, so the report costs one

@@ -33,6 +33,7 @@ from etl_file_sync_spark.operators.rankstats import (
     grouped_bucketed_cumsum,
 )
 from etl_file_sync_spark.operators.similarity import vec_ok
+from etl_file_sync_spark.queries.inputs import int8_codes, monthly_cents, user_lifetimes
 from etl_file_sync_spark.queries.registry import register, t
 
 _SEATS = 10_000  # sampling budget allocated across sources
@@ -196,6 +197,26 @@ def ops_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
+def _risk_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per distinct user lifetime ``dur_s``: subjects ``c``, observed
+    deaths ``d`` and the risk set ``n_risk`` (users whose lifetime is
+    at least ``dur_s``), from an EXCLUSIVE bucketed prefix sum over the
+    (duration, counts) frame — exact integers, no single-partition
+    window."""
+    g = user_lifetimes(spark, sf_dir).groupBy(F.col("dur_s").cast("bigint").alias("dur_s")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("c"),
+        F.sum("obs").cast("bigint").alias("d"),
+    )
+    tot = g.agg(F.sum("c").cast("bigint").alias("n"))
+    cum = bucketed_cumsums(g, "dur_s", ["c"], inclusive=False)
+    return cum.crossJoin(F.broadcast(tot)).select(  # 1-row totals dimension
+        "dur_s",
+        "c",
+        "d",
+        (F.col("n") - F.col("cum_c")).alias("n_risk"),
+    )
+
+
 @register(
     "stat_kaplan_meier",
     """
@@ -254,25 +275,7 @@ def stat_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from that duration on, avoiding ln(0) (Spark null vs DuckDB -inf).
     No single-partition window anywhere: both cumulatives are the
     two-phase bucketed plan from operators/rankstats.py."""
-    ev = t(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.expr(
-            "(max(unix_micros(ts)) - min(unix_micros(ts))) div 1000000"
-        ).alias("dur_s"),
-        F.max(F.when(F.col("event_type") == "error", 1).otherwise(0))
-        .cast("bigint")
-        .alias("obs"),
-    )
-    g = u.groupBy(F.col("dur_s").cast("bigint").alias("dur_s")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("c"),
-        F.sum("obs").cast("bigint").alias("d"),
-    )
-    tot = g.agg(F.sum("c").cast("bigint").alias("n"))
-    cum = bucketed_cumsums(g, "dur_s", ["c"], inclusive=False)
-    cum = cum.crossJoin(F.broadcast(tot)).withColumn(  # 1-row totals dimension
-        "n_risk", F.col("n") - F.col("cum_c")
-    )
-    fac = cum.select(
+    fac = _risk_sets(spark, sf_dir).select(
         "dur_s",
         "c",
         "d",
@@ -550,18 +553,7 @@ def embed_int8_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     amax = F.array_max(F.transform(F.col("v"), F.abs))
     m = e.select("vec_id", "v", amax.alias("amax"))
     scale = F.col("amax") / F.lit(127.0)
-    qv = F.when(
-        F.col("amax") == 0,
-        F.transform(F.col("v"), lambda x: F.lit(0).cast("bigint")),
-    ).otherwise(
-        F.transform(
-            F.col("v"),
-            lambda x: F.greatest(
-                F.lit(-127).cast("bigint"),
-                F.least(F.lit(127).cast("bigint"), F.floor(x / scale + F.lit(0.5))),
-            ),
-        )
-    )
+    qv = int8_codes(scale)
     q = m.select("vec_id", "v", "amax", qv.alias("qv"))
     err = F.zip_with(
         F.col("v"),
@@ -669,13 +661,7 @@ def ts_period_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-joins are broadcast-trivial; the heavy lifting is the one
     groupBy over orders. Single division before each round(4)."""
     m = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.trunc(F.col("o_orderdate").cast("date"), "month").alias("month"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("rev_cents")
-        )
+        monthly_cents(spark, sf_dir, "rev_cents")
         # calendar-bounded (~80 rows) but consumed by three branches
         # (base + prior-month + prior-year sides): cache so the orders
         # scan runs once, not 3x
@@ -749,36 +735,15 @@ def ts_period_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distributed-rank",
 )
 def stat_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nelson-Aalen cumulative hazard over the same user-lifetime frame
-    as stat_kaplan_meier: H(t) = sum d/n over event times <= t, its
-    standard variance estimator sum d/n², and the Fleming-Harrington
+    """Nelson-Aalen cumulative hazard over _risk_sets, which
+    stat_kaplan_meier also reads: H(t) = sum d/n over event times <= t,
+    its standard variance estimator sum d/n², and the Fleming-Harrington
     survival exp(-H). At-risk counts are the exact-integer EXCLUSIVE
     bucketed prefix sums; the hazard terms are one division each and
     accumulate on the INCLUSIVE bucketed plan — the KM accepted-risk
     envelope (bucketed vs sequential double association + exp/ln libm
     ulps) under round(6)."""
-    ev = t(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.expr(
-            "(max(unix_micros(ts)) - min(unix_micros(ts))) div 1000000"
-        ).alias("dur_s"),
-        F.max(F.when(F.col("event_type") == "error", 1).otherwise(0))
-        .cast("bigint")
-        .alias("obs"),
-    )
-    g = u.groupBy(F.col("dur_s").cast("bigint").alias("dur_s")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("c"),
-        F.sum("obs").cast("bigint").alias("d"),
-    )
-    tot = g.agg(F.sum("c").cast("bigint").alias("n"))
-    cum = bucketed_cumsums(g, "dur_s", ["c"], inclusive=False)
-    risk = cum.crossJoin(F.broadcast(tot)).select(  # 1-row totals dimension
-        "dur_s",
-        "c",
-        "d",
-        (F.col("n") - F.col("cum_c")).alias("n_risk"),
-    )
-    terms = risk.select(
+    terms = _risk_sets(spark, sf_dir).select(
         "dur_s",
         "d",
         "n_risk",

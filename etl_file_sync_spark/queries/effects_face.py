@@ -34,17 +34,42 @@ from etl_file_sync_spark.localrel import local_rows_df
 from etl_file_sync_spark.operators.pvalues import (
     chi2_sf_df1,
     chi2_sf_df4,
+    erfc_as_sql,
+    normal_sf_signed,
+    normal_sf_signed_sql,
     normal_two_sided_p,
 )
-from etl_file_sync_spark.operators.rankstats import avg_ranks, bucketed_cumsums
+from etl_file_sync_spark.operators.rankstats import (
+    bucketed_cumsums,
+    group_rank_sums,
+    tie_sum,
+    window_midrank,
+)
+from etl_file_sync_spark.queries.inputs import (
+    daily_cents,
+    order_month,
+    orders_with_region,
+    revenue_cents,
+    value_counts,
+    variant_prices,
+)
 from etl_file_sync_spark.queries.registry import register, t
 
-# DuckDB restatement of operators/pvalues.py erf_as on a column named
-# xx (|z|/sqrt(2) or sqrt(x/2)); yields the two-sided p / chi2_1 tail.
-_SQL_ERFC = (
-    "((((1.061405429 * tt - 1.453152027) * tt + 1.421413741) * tt"
-    " - 0.284496736) * tt + 0.254829592) * tt * exp(-xx * xx)"
-)
+# 1 - erf_as on a column named xx (|z|/sqrt(2) or sqrt(x/2)) with
+# tt = 1/(1 + 0.3275911 xx): the oracles' two-sided p / chi2_1 tail.
+_SQL_ERFC = erfc_as_sql("tt", "xx")
+
+
+def _block_midranks(cell: DataFrame) -> DataFrame:
+    """Midrank ``rk`` of each treatment ``trt``'s revenue ``y`` within
+    its monthly block ``blk``, over the complete blocks only (all five
+    treatments observed). The windows are partitioned by block, so
+    each holds five rows."""
+    complete = cell.groupBy("blk").agg(F.count(F.lit(1)).alias("k")).where(
+        F.col("k") == 5
+    )
+    cells = cell.join(F.broadcast(complete.select("blk")), "blk")
+    return cells.select("blk", "trt", window_midrank("y", "blk").alias("rk"))
 
 
 @register(
@@ -109,16 +134,7 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
     )
     g = s.groupBy("variant", "v").agg(F.count(F.lit(1)).alias("c"))
-    vals = g.groupBy("v").agg(F.sum("c").cast("bigint").alias("cnt"))
-    ranked = avg_ranks(vals, "v", "cnt")
-    agg = (
-        g.join(ranked.select("v", "avg_rank"), "v")
-        .groupBy("variant")
-        .agg(
-            F.sum("c").cast("bigint").alias("n"),
-            F.sum(F.col("c") * F.col("avg_rank")).alias("rank_sum"),
-        )
-    )
+    _, agg = group_rank_sums(g, "variant")
     pvt = agg.agg(
         F.max(F.when(F.col("variant") == "P", F.col("n"))).alias("na"),
         F.max(F.when(F.col("variant") == "V", F.col("n"))).alias("nb"),
@@ -192,10 +208,7 @@ def stat_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = t(spark, sf_dir, "lineitem").where(
         F.col("l_returnflag").isin("R", "N")
     ).select(F.col("l_returnflag").alias("variant"), F.col("l_extendedprice").alias("v"))
-    g = s.groupBy("v").agg(
-        F.sum(F.when(F.col("variant") == "R", 1).otherwise(0)).cast("bigint").alias("ca"),
-        F.sum(F.when(F.col("variant") == "N", 1).otherwise(0)).cast("bigint").alias("cb"),
-    )
+    g = value_counts(s, "R", "N")
     tot = g.agg(
         F.sum("ca").cast("bigint").alias("na"), F.sum("cb").cast("bigint").alias("nb")
     )
@@ -283,16 +296,7 @@ def stat_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     both do. Also emits the Szekely-Rizzo test statistic
     nm/(n+m) * E and E|X-Y| itself. Doubles fold in the documented
     summation-order ulp class under the emitted roundings."""
-    s = t(spark, sf_dir, "orders").where(
-        F.col("o_totalprice").isNotNull()  # observed values only
-    ).select(
-        F.when(F.col("o_custkey") % 2 == 0, "A").otherwise("B").alias("variant"),
-        F.col("o_totalprice").alias("v"),
-    )
-    g = s.groupBy("v").agg(
-        F.sum(F.when(F.col("variant") == "A", 1).otherwise(0)).cast("bigint").alias("ca"),
-        F.sum(F.when(F.col("variant") == "B", 1).otherwise(0)).cast("bigint").alias("cb"),
-    )
+    g = value_counts(variant_prices(spark, sf_dir), "A", "B")
     tot = g.agg(
         F.sum("ca").cast("bigint").alias("na"), F.sum("cb").cast("bigint").alias("nb")
     )
@@ -384,17 +388,8 @@ def stat_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the closed-form erf spelling (operators/pvalues.py), evaluated
     on the 4-decimal-rounded statistic so both engines see the same
     input. The stratified sibling of stat_chi_square_independence."""
-    o = t(spark, sf_dir, "orders")
     x = (
-        o.join(t(spark, sf_dir, "customer"), o.o_custkey == F.col("c_custkey"))
-        .join(
-            F.broadcast(t(spark, sf_dir, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t(spark, sf_dir, "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
+        orders_with_region(spark, sf_dir)
         .select(
             F.col("r_name").alias("stratum"),
             F.when(F.col("o_custkey") % 2 == 0, 1).otherwise(0).alias("exposed"),
@@ -504,28 +499,12 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority").isin(pris))
         .groupBy(
-            F.trunc(F.col("o_orderdate").cast("date"), "month").alias("blk"),
+            order_month("blk"),
             F.col("o_orderpriority").alias("trt"),
         )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y")
-        )
+        .agg(revenue_cents().alias("y"))
     )
-    complete = cell.groupBy("blk").agg(F.count(F.lit(1)).alias("k")).where(
-        F.col("k") == 5
-    )
-    cells = cell.join(F.broadcast(complete.select("blk")), "blk")
-    w_leq = W.partitionBy("blk").orderBy("y").rangeBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    w_eq = W.partitionBy("blk", "y")
-    cnt_leq = F.count(F.lit(1)).over(w_leq)
-    cnt_eq = F.count(F.lit(1)).over(w_eq)
-    r = cells.select(
-        "blk", "trt", ((cnt_leq - cnt_eq) + (cnt_eq + 1) / F.lit(2.0)).alias("rk")
-    )
+    r = _block_midranks(cell)
     pertrt = r.groupBy("trt").agg(
         F.sum("rk").alias("rank_sum"),
         F.sum(F.col("rk") * F.col("rk")).alias("rank_sq"),
@@ -626,23 +605,11 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-value-bounded but consumed by the value vocabulary AND the
     # per-group rank join: cache so the orders scan runs once
     g = s.groupBy("grp", "v").agg(F.count(F.lit(1)).alias("c")).cache()
-    vals = g.groupBy("v").agg(F.sum("c").cast("bigint").alias("cnt"))
-    ranked = avg_ranks(vals, "v", "cnt")
-    pg = (
-        g.join(ranked.select("v", "avg_rank"), "v")
-        .groupBy("grp")
-        .agg(
-            F.sum("c").cast("bigint").alias("n"),
-            F.sum(F.col("c") * F.col("avg_rank")).alias("r"),
-        )
-    ).cache()  # k rows; consumed by tot AND both sides of the pairwise
+    vals, pg = group_rank_sums(g, "grp")
+    pg = pg.cache()  # k rows; consumed by tot AND both sides of the pairwise
     # join — uncached, the midrank window join above it executed three
     # times (the round-8 probe's 50-Exchange plan)
-    ties = vals.agg(
-        F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
-        .cast("double")
-        .alias("tie_sum")
-    )
+    ties = vals.agg(tie_sum().alias("tie_sum"))
     tot = (
         pg.agg(
             F.sum("n").cast("bigint").alias("ntot"),
@@ -651,10 +618,10 @@ def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(ties))  # 1-row tie dimension
     )
     a = pg.select(
-        F.col("grp").alias("grp_a"), F.col("n").alias("na"), F.col("r").alias("ra")
+        F.col("grp").alias("grp_a"), F.col("n").alias("na"), F.col("rank_sum").alias("ra")
     )
     b = pg.select(
-        F.col("grp").alias("grp_b"), F.col("n").alias("nb"), F.col("r").alias("rb")
+        F.col("grp").alias("grp_b"), F.col("n").alias("nb"), F.col("rank_sum").alias("rb")
     )
     sigma2 = (
         F.col("ntot") * (F.col("ntot") + 1) / 12.0
@@ -735,14 +702,7 @@ def stat_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stat_spearman_rank_corr) instead, which is why that operator rides
     the bucketed rank machinery."""
     daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("rev"),
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        )
+        daily_cents(spark, sf_dir, "rev", F.count(F.lit(1)).cast("bigint").alias("n_orders"))
         # calendar-bounded but consumed by three branches (count dim +
         # both pair sides): cache so the orders scan runs once, not 3x
         .cache()
@@ -1028,17 +988,8 @@ def stat_smd_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-(stratum, arm) moments are exact integer folds (DECIMAL squares
     — cents squared overflow BIGINT); the verdict compares the
     unrounded double identically in both engines."""
-    o = t(spark, sf_dir, "orders")
     x = (
-        o.join(t(spark, sf_dir, "customer"), o.o_custkey == F.col("c_custkey"))
-        .join(
-            F.broadcast(t(spark, sf_dir, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t(spark, sf_dir, "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
+        orders_with_region(spark, sf_dir)
         .select(
             F.col("r_name").alias("stratum"),
             F.when(F.col("o_custkey") % 2 == 0, 1).otherwise(0).alias("treated"),
@@ -1070,19 +1021,6 @@ def stat_smd_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.abs(smd), 6).alias("abs_smd"),
         (F.abs(smd) < 0.1).alias("balanced"),
     ).orderBy("stratum")
-
-
-# one-sided upper tail on a signed column named zz: 0.5*(1 - sign*erf)
-def _sql_sf(zz: str) -> str:
-    return (
-        f"0.5 * (1 - (CASE WHEN {zz} >= 0 THEN 1.0 ELSE -1.0 END)"
-        f" * (1 - ((((1.061405429 * (1/(1+0.3275911*abs({zz})/sqrt(2.0)))"
-        f" - 1.453152027) * (1/(1+0.3275911*abs({zz})/sqrt(2.0)))"
-        f" + 1.421413741) * (1/(1+0.3275911*abs({zz})/sqrt(2.0)))"
-        f" - 0.284496736) * (1/(1+0.3275911*abs({zz})/sqrt(2.0)))"
-        f" + 0.254829592) * (1/(1+0.3275911*abs({zz})/sqrt(2.0)))"
-        f" * exp(-(abs({zz})/sqrt(2.0)) * (abs({zz})/sqrt(2.0)))))"
-    )
 
 
 _TOST_MARGIN = 500.0  # equivalence margin, cents
@@ -1122,9 +1060,9 @@ _TOST_MARGIN = 500.0  # equivalence margin, cents
     SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
            round(diff, 4) AS mean_diff_cents, round(se, 4) AS se_cents,
            z_lower, z_upper,
-           round(greatest({_sql_sf('z_lower')}, {_sql_sf('z_upper')}), 6)
+           round(greatest({normal_sf_signed_sql('z_lower')}, {normal_sf_signed_sql('z_upper')}), 6)
              AS p_tost,
-           greatest({_sql_sf('z_lower')}, {_sql_sf('z_upper')}) < 0.05
+           greatest({normal_sf_signed_sql('z_lower')}, {normal_sf_signed_sql('z_upper')}) < 0.05
              AS equivalent
     FROM z
     """,
@@ -1142,8 +1080,6 @@ def stat_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SIGNED closed-form normal SF (operators/pvalues.py
     normal_sf_signed) on the 4-decimal-rounded z's; the verdict
     compares the unrounded max identically in both engines."""
-    from etl_file_sync_spark.operators.pvalues import normal_sf_signed
-
     s = t(spark, sf_dir, "events").where(F.col("event_type") == "purchase").select(
         F.when(F.col("user_id") % 2 == 0, "A").otherwise("B").alias("variant"),
         F.round(F.col("value") * 100).cast("bigint").alias("c"),
@@ -1353,17 +1289,8 @@ def stat_g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     r x c with df = (r-1)(c-1) != 4 (Bowker/Ljung-Box convention).
     Cell counts and margins are exact integers folded over the
     enum-bounded contingency frame."""
-    o = t(spark, sf_dir, "orders")
     x = (
-        o.join(t(spark, sf_dir, "customer"), o.o_custkey == F.col("c_custkey"))
-        .join(
-            F.broadcast(t(spark, sf_dir, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t(spark, sf_dir, "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
+        orders_with_region(spark, sf_dir)
         .groupBy(
             F.col("r_name").alias("region"),
             F.when(F.col("o_custkey") % 2 == 0, "even").otherwise("odd").alias("arm"),
@@ -1551,7 +1478,8 @@ def stat_bowker_symmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page's trend test for an ORDERED alternative across the five
-    priorities (monthly blocks, same frame as stat_friedman_test):
+    priorities (monthly blocks ranked by _block_midranks, as in
+    stat_friedman_test):
     L = sum_j s_j R_j with the priority's leading digit as the a-priori
     ordering score; z = (L - b k(k+1)^2/4) / sqrt(b k^2 (k+1)(k^2-1)
     / 144) (k=5 pinned by the complete-block filter; midranks for the
@@ -1563,28 +1491,12 @@ def stat_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = (
         t(spark, sf_dir, "orders")
         .groupBy(
-            F.trunc(F.col("o_orderdate").cast("date"), "month").alias("blk"),
+            order_month("blk"),
             F.substring("o_orderpriority", 1, 1).cast("bigint").alias("trt"),
         )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y")
-        )
+        .agg(revenue_cents().alias("y"))
     )
-    complete = cell.groupBy("blk").agg(F.count(F.lit(1)).alias("k")).where(
-        F.col("k") == 5
-    )
-    cells = cell.join(F.broadcast(complete.select("blk")), "blk")
-    w_leq = W.partitionBy("blk").orderBy("y").rangeBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    w_eq = W.partitionBy("blk", "y")
-    cnt_leq = F.count(F.lit(1)).over(w_leq)
-    cnt_eq = F.count(F.lit(1)).over(w_eq)
-    r = cells.select(
-        "blk", "trt", ((cnt_leq - cnt_eq) + (cnt_eq + 1) / F.lit(2.0)).alias("rk")
-    )
+    r = _block_midranks(cell)
     pertrt = r.groupBy("trt").agg(
         F.sum("rk").alias("rank_sum"), F.count(F.lit(1)).cast("bigint").alias("b")
     )
@@ -1663,13 +1575,7 @@ def stat_sign_test_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(pos,neg)+1-term driver fold mirrored by the oracle's ordered
     window fold)."""
     daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        daily_cents(spark, sf_dir, "cents")
         .cache()  # 2 consumers (both pair sides): one orders scan
     )
     a = daily.select("day", F.col("cents").alias("ca"))
@@ -1862,15 +1768,7 @@ def stat_runs_up_down(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins on the calendar-bounded frame (the runs count joins
     each retained sign to its NEXT retained sign, so dropped ties
     don't split runs); exact integer counts feed the rounded z."""
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir, "cents")
     r = daily.select(
         "cents", F.row_number().over(W.orderBy("day")).cast("bigint").alias("rn")
     )

@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_file_sync_spark.operators import text as X
-from etl_file_sync_spark.operators.rankstats import avg_ranks, bucketed_cumsums
+from etl_file_sync_spark.operators.rankstats import bucketed_cumsums, midranked
+from etl_file_sync_spark.queries.inputs import orders_with_region
 from etl_file_sync_spark.queries.registry import register, t
 
 _STOPLIST_SQL = "['the','a','and','of','to','in','is','that']"
@@ -62,6 +63,33 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _label_rank_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row: positives ``np``, negatives ``nn`` and the positives'
+    midrank sum ``rp`` of the scored frame, ranked over the DISTINCT
+    score values by the bucketed two-phase plan."""
+    g = _scored(spark, sf_dir).groupBy("score", "label").agg(F.count(F.lit(1)).alias("c"))
+    _, r = midranked(g, "score")
+    pos = F.col("label") == 1
+    return r.agg(
+        F.sum(F.when(pos, F.col("c")).otherwise(0)).cast("bigint").alias("np"),
+        F.sum(F.when(F.col("label") == 0, F.col("c")).otherwise(0)).cast("bigint").alias("nn"),
+        F.sum(F.when(pos, F.col("c") * F.col("avg_rank")).otherwise(0.0)).alias("rp"),
+    )
+
+
+def _confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The confusion matrix (tp, fp, fn, tn) of the quality filter at
+    threshold 0.5 against the lang=en label, in one aggregation pass."""
+    pred = F.col("score") >= 0.5
+    pos = F.col("label") == 1
+    return _scored(spark, sf_dir).agg(
+        F.sum((pred & pos).cast("int")).cast("bigint").alias("tp"),
+        F.sum((pred & ~pos).cast("int")).cast("bigint").alias("fp"),
+        F.sum((~pred & pos).cast("int")).cast("bigint").alias("fn"),
+        F.sum((~pred & ~pos).cast("int")).cast("bigint").alias("tn"),
+    )
+
+
 @register(
     "eval_roc_auc",
     f"""
@@ -96,21 +124,13 @@ def eval_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucketed two-phase plan over DISTINCT score values — at any
     corpus scale the window only ever sees the quantized score
     vocabulary, never rows."""
-    s = _scored(spark, sf_dir)
-    g = s.groupBy("score", "label").agg(F.count(F.lit(1)).alias("c"))
-    vals = g.groupBy("score").agg(F.sum("c").cast("bigint").alias("cnt"))
-    ranked = avg_ranks(vals, "score", "cnt")
-    agg = g.join(ranked.select("score", "avg_rank"), "score").agg(
-        F.sum(F.when(F.col("label") == 1, F.col("c")).otherwise(0)).cast("bigint").alias("n_pos"),
-        F.sum(F.when(F.col("label") == 0, F.col("c")).otherwise(0)).cast("bigint").alias("n_neg"),
-        F.sum(F.when(F.col("label") == 1, F.col("c") * F.col("avg_rank")).otherwise(0.0)).alias("r_pos"),
-    )
+    agg = _label_rank_sums(spark, sf_dir)
     return agg.select(
-        "n_pos",
-        "n_neg",
+        F.col("np").alias("n_pos"),
+        F.col("nn").alias("n_neg"),
         F.round(
-            (F.col("r_pos") - F.col("n_pos") * (F.col("n_pos") + 1) / F.lit(2.0))
-            / (F.col("n_pos") * F.lit(1.0) * F.col("n_neg")),
+            (F.col("rp") - F.col("np") * (F.col("np") + 1) / F.lit(2.0))
+            / (F.col("np") * F.lit(1.0) * F.col("nn")),
             6,
         ).alias("auc"),
     )
@@ -142,15 +162,7 @@ def eval_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality filter at threshold 0.5 against the lang=en label — one
     combiner-friendly aggregation pass; the threshold compares the
     4-decimal-quantized score so both engines make identical calls."""
-    s = _scored(spark, sf_dir)
-    pred = F.col("score") >= 0.5
-    pos = F.col("label") == 1
-    cm = s.agg(
-        F.sum((pred & pos).cast("int")).cast("bigint").alias("tp"),
-        F.sum((pred & ~pos).cast("int")).cast("bigint").alias("fp"),
-        F.sum((~pred & pos).cast("int")).cast("bigint").alias("fn"),
-        F.sum((~pred & ~pos).cast("int")).cast("bigint").alias("tn"),
-    )
+    cm = _confusion(spark, sf_dir)
     return cm.select(
         "tp",
         "fp",
@@ -812,21 +824,7 @@ def eval_auc_hanley_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     SE^2 = (A(1-A) + (n+-1)(Q1-A^2) + (n--1)(Q2-A^2)) / (n+ n-) with
     Q1 = A/(2-A), Q2 = 2A^2/(1+A). The 1.96 critical value is the
     explicit double literal 1.959963984540054 in both engines."""
-    s = _scored(spark, sf_dir)
-    g = s.groupBy("score", "label").agg(F.count(F.lit(1)).alias("c"))
-    vals = g.groupBy("score").agg(F.sum("c").cast("bigint").alias("cnt"))
-    ranked = avg_ranks(vals, "score", "cnt")
-    agg = g.join(ranked.select("score", "avg_rank"), "score").agg(
-        F.sum(F.when(F.col("label") == 1, F.col("c")).otherwise(0))
-        .cast("bigint")
-        .alias("np"),
-        F.sum(F.when(F.col("label") == 0, F.col("c")).otherwise(0))
-        .cast("bigint")
-        .alias("nn"),
-        F.sum(
-            F.when(F.col("label") == 1, F.col("c") * F.col("avg_rank")).otherwise(0.0)
-        ).alias("rp"),
-    )
+    agg = _label_rank_sums(spark, sf_dir)
     a = (F.col("rp") - F.col("np") * (F.col("np") + 1) / F.lit(2.0)) / (
         F.col("np") * 1.0 * F.col("nn")
     )
@@ -1037,15 +1035,7 @@ def eval_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric for imbalanced gates). One confusion-matrix pass; the
     product tp*tn is split across two sqrt factors so the doubles
     never overflow, spelled identically in both engines."""
-    s = _scored(spark, sf_dir)
-    pred = F.col("score") >= 0.5
-    pos = F.col("label") == 1
-    cm = s.agg(
-        F.sum((pred & pos).cast("int")).cast("bigint").alias("tp"),
-        F.sum((pred & ~pos).cast("int")).cast("bigint").alias("fp"),
-        F.sum((~pred & pos).cast("int")).cast("bigint").alias("fn"),
-        F.sum((~pred & ~pos).cast("int")).cast("bigint").alias("tn"),
-    )
+    cm = _confusion(spark, sf_dir)
     tp, fp, fn, tn = (F.col(c) for c in ("tp", "fp", "fn", "tn"))
     mcc = (
         (tp * 1.0 * tn - fp * 1.0 * fn)
@@ -1144,17 +1134,8 @@ def ml_split_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature over the long frame; every probability is an exact integer
     ratio, pure-split children contribute exactly zero entropy by the
     explicit guard, identical in both engines)."""
-    o = t(spark, sf_dir, "orders")
     base = (
-        o.join(t(spark, sf_dir, "customer"), o.o_custkey == F.col("c_custkey"))
-        .join(
-            F.broadcast(t(spark, sf_dir, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t(spark, sf_dir, "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
+        orders_with_region(spark, sf_dir)
         .select(
             F.col("o_orderpriority").alias("priority"),
             F.col("r_name").alias("region"),

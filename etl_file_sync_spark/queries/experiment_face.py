@@ -24,6 +24,14 @@ from pyspark.sql import functions as F
 from etl_file_sync_spark.localrel import local_rows_df
 
 from etl_file_sync_spark.operators.rankstats import bucketed_cumsums
+from etl_file_sync_spark.queries.inputs import (
+    conversion_cells,
+    monthly_cents,
+    to_cents,
+    user_conversions,
+    user_lifetimes,
+    user_pre_post_cents,
+)
 from etl_file_sync_spark.queries.registry import register, t
 
 
@@ -33,25 +41,21 @@ def _md5_bucket(expr, mod: int):
     return F.conv(F.substring(F.md5(expr), 1, 8), 16, 10).cast("bigint") % mod
 
 
+def _user_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per ``user_id``: the user's total event value in exact
+    integer ``cents``."""
+    return t(spark, sf_dir, "events").groupBy("user_id").agg(
+        F.sum(to_cents("value")).cast("bigint").alias("cents")
+    )
+
+
 def _user_lifetimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user (dur_s, obs, grp): lifetime seconds, death-observed flag
     (ever hit 'error'), and the even/odd-user A/B split."""
-    return (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.expr("(max(unix_micros(ts)) - min(unix_micros(ts))) div 1000000").alias(
-                "dur_s"
-            ),
-            F.max(F.when(F.col("event_type") == "error", 1).otherwise(0))
-            .cast("bigint")
-            .alias("obs"),
-        )
-        .select(
-            F.col("dur_s").cast("bigint").alias("dur_s"),
-            "obs",
-            (F.col("user_id") % 2).cast("bigint").alias("grp"),
-        )
+    return user_lifetimes(spark, sf_dir).select(
+        F.col("dur_s").cast("bigint").alias("dur_s"),
+        "obs",
+        (F.col("user_id") % 2).cast("bigint").alias("grp"),
     )
 
 
@@ -210,30 +214,7 @@ def stat_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is IEEE correctly-rounded — no accepted risk. One groupBy over the
     user-grain frame; the per-user reduction is the only corpus-scale
     pass."""
-    u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 200), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("conv")
-        )
-        .select((F.col("user_id") % 2).cast("bigint").alias("grp"), "conv")
-    )
-    g = u.agg(
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("bigint").alias("n_a"),
-        F.sum(F.when(F.col("grp") == 0, F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("s_a"),
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("bigint").alias("n_b"),
-        F.sum(F.when(F.col("grp") == 1, F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("s_b"),
-    )
+    g = conversion_cells(spark, sf_dir).withColumnsRenamed({"c_a": "s_a", "c_b": "s_b"})
     pa = F.col("s_a") * 1.0 / F.col("n_a")
     pb = F.col("s_b") * 1.0 / F.col("n_b")
     pp = (F.col("s_a") + F.col("s_b")) * 1.0 / (F.col("n_a") + F.col("n_b"))
@@ -298,19 +279,8 @@ def stat_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mean_y - theta*(mean_x - global mean_x)) and the achievable
     variance reduction rho². The per-user reduction is the only
     corpus-scale pass; everything after runs on the user-grain frame."""
-    ev = t(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
-    pre = F.dayofmonth("ts") < 16
     u = (
-        ev.groupBy("user_id")
-        .agg(
-            F.coalesce(F.sum(F.when(pre, cents).otherwise(0)), F.lit(0))
-            .cast("bigint")
-            .alias("x"),
-            F.coalesce(F.sum(F.when(~pre, cents).otherwise(0)), F.lit(0))
-            .cast("bigint")
-            .alias("y"),
-        )
+        user_pre_post_cents(spark, sf_dir, "x", "y")
         .select((F.col("user_id") % 2).cast("bigint").alias("grp"), "x", "y")
     )
     uc = u.cache()  # moments + per-variant sums reuse the user frame
@@ -688,13 +658,7 @@ def stat_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integers; the single division and sqrt make z bit-exact
     across engines."""
     m = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.trunc(F.col("o_orderdate").cast("date"), "month").alias("month"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        monthly_cents(spark, sf_dir, "cents")
         .cache()  # bounded frame reused by pairs / count / ties
     )
     a = m.select(F.col("month").alias("ma"), F.col("cents").alias("xa"))
@@ -804,13 +768,7 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     in events. Degenerate one-sided relabelings (a side with zero
     users) are excluded in both engines."""
     u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        _user_cents(spark, sf_dir)
         .select("user_id", (F.col("user_id") % 2).cast("bigint").alias("grp"), "cents")
         .cache()  # observed diff + 200-perm fan-out reuse the user frame
     )
@@ -918,25 +876,8 @@ def stat_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact across engines except ceil at an exact-integer boundary
     (same class as the round() grain). One groupBy over the user
     frame."""
-    u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 200), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("conv")
-        )
-        .select((F.col("user_id") % 2).cast("bigint").alias("grp"), "conv")
-    )
-    g = u.agg(
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("bigint").alias("n0"),
-        F.sum(F.when(F.col("grp") == 0, F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("s0"),
+    g = conversion_cells(spark, sf_dir).select(
+        F.col("n_a").alias("n0"), F.col("c_a").alias("s0")
     )
     p0 = F.col("s0") * 1.0 / F.col("n0")
     p1 = F.least(F.lit(1.0), p0 * F.lit(1.1))
@@ -1009,19 +950,8 @@ def stat_propensity_stratified_att(spark: SparkSession, sf_dir: str) -> DataFram
     divisions; the 5-term weighted sum rounds at 4 (the double-sum
     envelope). Corpus-scale work: one groupBy to the user grain and
     one ranking pass."""
-    ev = t(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
-    pre = F.dayofmonth("ts") < 16
     u = (
-        ev.groupBy("user_id")
-        .agg(
-            F.coalesce(F.sum(F.when(pre, cents).otherwise(0)), F.lit(0))
-            .cast("bigint")
-            .alias("x"),
-            F.coalesce(F.sum(F.when(~pre, cents).otherwise(0)), F.lit(0))
-            .cast("bigint")
-            .alias("y"),
-        )
+        user_pre_post_cents(spark, sf_dir, "x", "y")
         .select(
             "user_id",
             (F.col("user_id") % 2).cast("bigint").alias("treat"),
@@ -1115,13 +1045,7 @@ def stat_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly rounded — bit-exact across engines. One groupBy to the
     user grain, one 1-row reduction."""
     u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        _user_cents(spark, sf_dir)
         .select((F.col("user_id") % 2).cast("bigint").alias("grp"), "cents")
     )
     g = u.agg(
@@ -1221,15 +1145,7 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat_mann_kendall's direction test."""
     from pyspark.sql import Window as W
 
-    m = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.trunc(F.col("o_orderdate").cast("date"), "month").alias("month"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    m = monthly_cents(spark, sf_dir, "cents")
     tot = m.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tot"),
         F.sum("cents").cast("bigint").alias("s_tot"),
@@ -1478,20 +1394,7 @@ def stat_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     normal approximation is exact in that regime."""
     import math
 
-    u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 200), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("conv")
-        )
-        .select((F.col("user_id") % 2).cast("bigint").alias("grp"), "conv")
-    )
+    u = user_conversions(spark, sf_dir)
     cells = u.agg(
         F.sum(F.when((F.col("grp") == 1) & (F.col("conv") == 1), 1).otherwise(0))
         .cast("bigint")

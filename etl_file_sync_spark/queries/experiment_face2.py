@@ -34,36 +34,15 @@ from pyspark.sql import functions as F
 
 from etl_file_sync_spark.localrel import local_rows_df
 
+from etl_file_sync_spark.queries.inputs import (
+    conversion_cells,
+    daily_cents,
+    orders_with_nation,
+    orders_with_region,
+    purchased_over,
+    revenue_cents,
+)
 from etl_file_sync_spark.queries.registry import register, t
-
-
-def _conversion_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed per-user reduction to the 2x2 conversion cells of the
-    even/odd-user split: (n_a, c_a, n_b, c_b) as exact BIGINTs."""
-    u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 200), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("conv")
-        )
-        .select((F.col("user_id") % 2).cast("bigint").alias("grp"), "conv")
-    )
-    return u.agg(
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("bigint").alias("n_a"),
-        F.sum(F.when(F.col("grp") == 0, F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("c_a"),
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("bigint").alias("n_b"),
-        F.sum(F.when(F.col("grp") == 1, F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("c_b"),
-    )
 
 
 _CELLS_SQL = """
@@ -144,7 +123,7 @@ def stat_bayes_ab_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sum gets long the normal approximation it converges to
     (stat_two_proportion_ztest) is already exact for decision
     purposes."""
-    cells = _conversion_cells(spark, sf_dir)
+    cells = conversion_cells(spark, sf_dir)
     row = cells.collect()[0]  # 2x2 metadata pull (Fisher-exact pattern)
     if row["n_a"] is None:  # empty input: the oracle's sum-generate
         # machinery over NULL cells collapses to zero rows — match it
@@ -346,20 +325,10 @@ def stat_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude, so it is both numerically stable and cross-engine
     deterministic under round(6). Caught by the tools/tiers.py conditioning tier."""
     g = (
-        t(spark, sf_dir, "orders")
-        .join(
-            t(spark, sf_dir, "customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t(spark, sf_dir, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
+        orders_with_nation(spark, sf_dir)
         .groupBy(F.col("n_name").alias("grp"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("x"),
+            revenue_cents().alias("x"),
             F.count(F.lit(1)).cast("bigint").alias("y"),
         )
     )
@@ -454,13 +423,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        daily_cents(spark, sf_dir, "cents")
         # calendar-bounded but consumed by FOUR branches (rank frame,
         # moments pass, and the mean dim inside it): cache so the
         # orders scan runs once, not 4x
@@ -749,13 +712,7 @@ def stat_mcnemar_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 100), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("high_value"),
+            purchased_over(100).alias("high_value"),
             F.when(
                 F.count(F.when(F.col("event_type") == "purchase", 1)) > 15, 1
             )
@@ -1252,25 +1209,9 @@ def stat_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order ulp class under round(6)) and the 5-row region
     frame, with the 1-row totals broadcast back."""
     x = (
-        t(spark, sf_dir, "orders")
-        .join(
-            t(spark, sf_dir, "customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t(spark, sf_dir, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t(spark, sf_dir, "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
+        orders_with_region(spark, sf_dir)
         .groupBy("c_custkey", F.col("r_name").alias("region"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        .agg(revenue_cents().alias("cents"))
         # customer-grain but consumed by the totals pass, the entropy
         # fold, and the region decomposition: cache so the 4-table join
         # runs once, not 3x (MEMORY_AND_DISK spills safely at scale)

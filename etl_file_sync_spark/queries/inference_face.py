@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from etl_file_sync_spark.operators.rankstats import bucketed_cumsums
+from etl_file_sync_spark.queries.inputs import value_counts, variant_prices
 from etl_file_sync_spark.queries.registry import register, t
 
 
@@ -78,16 +79,7 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     predecessor-value (lag) pass is needed at all; no single-partition
     window ever touches the 150k-distinct-price frame. The oracle
     restates the same algebra with a naive global window."""
-    s = t(spark, sf_dir, "orders").where(
-        F.col("o_totalprice").isNotNull()  # observed values only
-    ).select(
-        F.when(F.col("o_custkey") % 2 == 0, "A").otherwise("B").alias("variant"),
-        F.col("o_totalprice").alias("v"),
-    )
-    g = s.groupBy("v").agg(
-        F.sum(F.when(F.col("variant") == "A", 1).otherwise(0)).cast("bigint").alias("ca"),
-        F.sum(F.when(F.col("variant") == "B", 1).otherwise(0)).cast("bigint").alias("cb"),
-    )
+    g = value_counts(variant_prices(spark, sf_dir), "A", "B")
     tot = g.agg(
         F.sum("ca").cast("bigint").alias("na"),
         F.sum("cb").cast("bigint").alias("nb"),

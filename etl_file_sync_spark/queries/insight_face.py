@@ -15,7 +15,7 @@ checked against a recursive-CTE dynamic program in the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_file_sync_spark.localrel import sql_double
@@ -24,6 +24,7 @@ from etl_file_sync_spark.operators.rankstats import (
     bucketed_row_numbers,
     grouped_bucketed_cumsum,
 )
+from etl_file_sync_spark.queries.inputs import int8_codes, revenue_cents, user_pre_post_cents
 from etl_file_sync_spark.queries.registry import register, t
 
 _BIN_W = 8.0  # isotonic: value-axis bin width
@@ -341,20 +342,8 @@ def stat_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Σy² − (Σy)²/n)/(n−1) — exact integer Σy and Σy², single
     divisions, identical spelling both engines). One corpus-scale
     groupBy to the user grain; everything after is a 2-row frame."""
-    ev = t(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
-    pre = F.dayofmonth("ts") < 16
-    u = (
-        ev.groupBy("user_id")
-        .agg(
-            F.coalesce(F.sum(F.when(pre, cents).otherwise(0)), F.lit(0))
-            .cast("bigint")
-            .alias("pre"),
-            F.coalesce(F.sum(F.when(~pre, cents).otherwise(0)), F.lit(0))
-            .cast("bigint")
-            .alias("post"),
-        )
-        .select((F.col("user_id") % 2).cast("bigint").alias("grp"), "pre", "post")
+    u = user_pre_post_cents(spark, sf_dir, "pre", "post").select(
+        (F.col("user_id") % 2).cast("bigint").alias("grp"), "pre", "post"
     )
     # squared per-user cents wrap BIGINT at scale (1e8-cent users squared,
     # summed over 1e9 users ~ 1e25): accumulate the squares in exact
@@ -558,8 +547,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
             F.count(F.lit(1)).cast("bigint").alias("f"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
+            revenue_cents()
             .alias("m"),
         )
         .crossJoin(F.broadcast(maxd))  # 1-row max-date dimension
@@ -721,6 +709,18 @@ _KMV_K = 256
 _TWO60 = float(1 << 60)
 
 
+def _trigrams() -> Column:
+    """The word trigrams ('a b c') of the token array ``tk``; none when
+    it holds fewer than three tokens."""
+    return F.when(F.size("tk") < 3, F.array().cast("array<string>")).otherwise(
+        F.expr(
+            "transform(sequence(1, size(tk) - 2),"
+            " i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1),"
+            " ' ', element_at(tk, i + 2)))"
+        )
+    )
+
+
 @register(
     "sketch_kmv_distinct",
     f"""
@@ -768,17 +768,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.filter(F.split(F.col("text"), " "), lambda x: F.length(x) > 0).alias("tk")
     )
     tri = toks.select(
-        F.explode(
-            F.when(
-                F.size("tk") < 3, F.array().cast("array<string>")
-            ).otherwise(
-                F.expr(
-                    "transform(sequence(1, size(tk) - 2),"
-                    " i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1),"
-                    " ' ', element_at(tk, i + 2)))"
-                )
-            )
-        ).alias("g")
+        F.explode(_trigrams()).alias("g")
     ).distinct()
     h = tri.select(
         F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint").alias("th")
@@ -991,15 +981,7 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tri = toks.select(
         (F.col("doc_id") % 2).alias("side"),
-        F.explode(
-            F.when(F.size("tk") < 3, F.array().cast("array<string>")).otherwise(
-                F.expr(
-                    "transform(sequence(1, size(tk) - 2),"
-                    " i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1),"
-                    " ' ', element_at(tk, i + 2)))"
-                )
-            )
-        ).alias("g"),
+        F.explode(_trigrams()).alias("g"),
     ).distinct()
     h = tri.groupBy("g").agg(
         F.max(F.when(F.col("side") == 0, 1).otherwise(0)).cast("bigint").alias("in_a"),
@@ -1211,17 +1193,7 @@ def sim_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     amax = F.array_max(F.transform(F.col("v"), F.abs))
     m = e.select("vec_id", "v", amax.alias("amax"))
     scale = F.col("amax") / F.lit(127.0)
-    qv = F.when(
-        F.col("amax") == 0, F.transform(F.col("v"), lambda x: F.lit(0).cast("bigint"))
-    ).otherwise(
-        F.transform(
-            F.col("v"),
-            lambda x: F.greatest(
-                F.lit(-127).cast("bigint"),
-                F.least(F.lit(127).cast("bigint"), F.floor(x / scale + F.lit(0.5))),
-            ),
-        )
-    )
+    qv = int8_codes(scale)
     dv = F.transform(qv, lambda qq: qq * scale)
     nm = (
         m.select("vec_id", dv.alias("dv"))

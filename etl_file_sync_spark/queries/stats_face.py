@@ -17,7 +17,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_file_sync_spark.operators.rankstats import avg_ranks, bucketed_cumsums
+from etl_file_sync_spark.operators.pvalues import normal_two_sided_p
+from etl_file_sync_spark.operators.rankstats import (
+    avg_ranks,
+    bucketed_cumsums,
+    group_rank_sums,
+    tie_sum,
+)
+from etl_file_sync_spark.queries.inputs import revenue_cents, value_counts, variant_prices
 from etl_file_sync_spark.queries.registry import register, t
 
 
@@ -63,23 +70,9 @@ def stat_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a global single-partition window. Midranks are halves, so
     rank sums are binary-exact in any summation order and the oracle's
     naive global-window spelling matches bit-for-bit."""
-    s = t(spark, sf_dir, "orders").where(
-        F.col("o_totalprice").isNotNull()  # observed values only
-    ).select(
-        F.when(F.col("o_custkey") % 2 == 0, "A").otherwise("B").alias("variant"),
-        F.col("o_totalprice").alias("v"),
-    )
+    s = variant_prices(spark, sf_dir)
     g = s.groupBy("variant", "v").agg(F.count(F.lit(1)).alias("c")).cache()  # 2 consumers: one orders scan
-    vals = g.groupBy("v").agg(F.sum("c").cast("bigint").alias("cnt"))
-    ranked = avg_ranks(vals, "v", "cnt")
-    agg = (
-        g.join(ranked.select("v", "avg_rank"), "v")
-        .groupBy("variant")
-        .agg(
-            F.sum("c").cast("bigint").alias("n"),
-            F.sum(F.col("c") * F.col("avg_rank")).alias("rank_sum"),
-        )
-    )
+    _, agg = group_rank_sums(g, "variant")
     # total n from the CACHED (variant, value, count) frame, not from
     # `agg` — agg's lineage includes the midrank window join, and a
     # second consumer would execute that whole subtree again just to
@@ -149,16 +142,7 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens once at the end. The cumulative counts use the bucketed
     two-phase plan over the distinct values — no single-partition
     window over data."""
-    s = t(spark, sf_dir, "orders").where(
-        F.col("o_totalprice").isNotNull()  # observed values only
-    ).select(
-        F.when(F.col("o_custkey") % 2 == 0, "A").otherwise("B").alias("variant"),
-        F.col("o_totalprice").alias("v"),
-    )
-    g = s.groupBy("v").agg(
-        F.sum(F.when(F.col("variant") == "A", 1).otherwise(0)).cast("bigint").alias("ca"),
-        F.sum(F.when(F.col("variant") == "B", 1).otherwise(0)).cast("bigint").alias("cb"),
-    )
+    g = value_counts(variant_prices(spark, sf_dir), "A", "B")
     cum = bucketed_cumsums(g, "v", ["ca", "cb"], inclusive=True)
     tot = g.agg(
         F.sum("ca").cast("bigint").alias("na"), F.sum("cb").cast("bigint").alias("nb")
@@ -625,26 +609,13 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("grp"), F.col("o_totalprice").alias("v")
     )
     g = s.groupBy("grp", "v").agg(F.count(F.lit(1)).alias("c")).cache()  # 2 consumers: one orders scan
-    vals = g.groupBy("v").agg(F.sum("c").cast("bigint").alias("cnt"))
-    ranked = avg_ranks(vals, "v", "cnt")
-    pg = (
-        g.join(ranked.select("v", "avg_rank"), "v")
-        .groupBy("grp")
-        .agg(
-            F.sum("c").cast("bigint").alias("n"),
-            F.sum(F.col("c") * F.col("avg_rank")).alias("r"),
-        )
-    )
+    vals, pg = group_rank_sums(g, "grp")
     tot = pg.agg(
         F.sum("n").cast("bigint").alias("ntot"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(F.col("r") * F.col("r") / F.col("n")).alias("s2"),
+        F.sum(F.col("rank_sum") * F.col("rank_sum") / F.col("n")).alias("s2"),
     )
-    ties = vals.agg(
-        F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
-        .cast("double")
-        .alias("tsum")
-    )
+    ties = vals.agg(tie_sum().alias("tsum"))
     h = 12.0 / (F.col("ntot") * (F.col("ntot") + F.lit(1.0))) * F.col("s2") - 3 * (
         F.col("ntot") + 1
     )
@@ -750,6 +721,53 @@ def stat_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cell_p_values(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 120 event_type x hour-of-day z-tests that stat_bh_fdr and
+    stat_holm_stepdown correct: per cell its size ``n_g``, the z of its
+    mean against the global mean rounded to 4 decimals, the two-sided
+    normal ``p_value`` (operators/pvalues.py) of that ROUNDED z, so
+    both engines evaluate exp() on bit-identical input, its rank ``rk``
+    by (p_value, event_type, hr) and the number of cells ``m``. Sums
+    are exact integer cents, the squared-cents sum accumulates in exact
+    DECIMAL (it wraps BIGINT at 100 TB), and the rank windows run over
+    the aggregate-sized cell frame, not rows."""
+    from pyspark.sql import Window as W
+
+    cents = t(spark, sf_dir, "events").select(
+        "event_type",
+        F.hour("ts").alias("hr"),
+        F.round(F.col("value") * 100).cast("bigint").alias("c"),
+    )
+    g = cents.groupBy("event_type", "hr").agg(
+        F.count(F.lit(1)).alias("n_g"), F.sum("c").alias("s_g")
+    )
+    tot = cents.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("c").alias("s"),
+        F.sum(F.col("c").cast("decimal(18,0)") * F.col("c").cast("decimal(18,0)"))
+        .cast("double")
+        .alias("ss"),
+    )
+    z = g.crossJoin(F.broadcast(tot)).select(  # 1-row totals dimension
+        "event_type", "hr", "n_g",
+        F.round(
+            (F.col("s_g") * 1.0 / F.col("n_g") - F.col("s") * 1.0 / F.col("n"))
+            * F.sqrt(F.col("n_g"))
+            / F.sqrt(
+                (F.col("ss") - F.col("s").cast("double") * F.col("s") / F.col("n"))
+                / (F.col("n") - 1)
+            ),
+            4,
+        ).alias("z_stat"),
+    )
+    p = z.withColumn("p_value", F.round(normal_two_sided_p(F.col("z_stat")), 6))
+    return p.select(
+        "*",
+        F.row_number().over(W.orderBy("p_value", "event_type", "hr")).cast("bigint").alias("rk"),
+        F.count(F.lit(1)).over(W.partitionBy()).cast("bigint").alias("m"),
+    )
+
+
 @register(
     "stat_bh_fdr",
     """
@@ -801,61 +819,16 @@ def stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini–Hochberg FDR control over 120 simultaneous z-tests
     (event_type × hour-of-day cell mean vs the global mean) — the
     multiple-testing correction an experimentation platform applies to
-    any metric scan. Sums are exact integer cents (one division before
-    each round); the normal tail is the Abramowitz–Stegun 7.1.26 erf
-    polynomial, restated identically in the oracle, fed the ROUNDED z so
-    both engines evaluate exp() on bit-identical input (residual risk is
+    any metric scan. The cells, their p-values and p-ranks come from
+    _cell_p_values; the normal tail is the Abramowitz–Stegun 7.1.26 erf
+    polynomial, restated identically in the oracle (residual risk is
     one exp ulp under round-6 — the repo's accepted posture). The BH
     step-up is a reverse cumulative min window over the p-ranked cells:
     the hypothesis frame is aggregate-sized (cells, not rows), so the
-    unpartitioned window is bounded regardless of corpus scale; the
-    squared-cents sum accumulates in exact DECIMAL so it cannot wrap
-    BIGINT at any corpus size."""
+    unpartitioned window is bounded regardless of corpus scale."""
     from pyspark.sql import Window as W
 
-    e = t(spark, sf_dir, "events")
-    cents = e.select(
-        "event_type",
-        F.hour("ts").alias("hr"),
-        F.round(F.col("value") * 100).cast("bigint").alias("c"),
-    )
-    g = cents.groupBy("event_type", "hr").agg(
-        F.count(F.lit(1)).alias("n_g"), F.sum("c").alias("s_g")
-    )
-    tot = cents.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("c").alias("s"),
-        # squared row-grain cents wrap BIGINT at 100 TB row counts:
-        # exact DECIMAL accumulation, one cast into the double algebra
-        F.sum(F.col("c").cast("decimal(18,0)") * F.col("c").cast("decimal(18,0)"))
-        .cast("double")
-        .alias("ss"),
-    )
-    z = g.crossJoin(F.broadcast(tot)).select(
-        "event_type", "hr", "n_g",
-        F.round(
-            (F.col("s_g") * 1.0 / F.col("n_g") - F.col("s") * 1.0 / F.col("n"))
-            * F.sqrt(F.col("n_g"))
-            / F.sqrt(
-                (F.col("ss") - F.col("s").cast("double") * F.col("s") / F.col("n"))
-                / (F.col("n") - 1)
-            ),
-            4,
-        ).alias("z_stat"),
-    )
-    xx = F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    tt = 1 / (1 + 0.3275911 * xx)
-    poly = ((((1.061405429 * tt - 1.453152027) * tt + 1.421413741) * tt - 0.284496736) * tt + 0.254829592) * tt
-    p = z.select(
-        "event_type", "hr", "n_g", "z_stat",
-        F.round(1 - (1 - poly * F.exp(-xx * xx)), 6).alias("p_value"),
-    )
-    wr = W.orderBy("p_value", "event_type", "hr")
-    ranked = p.select(
-        "*",
-        F.row_number().over(wr).cast("bigint").alias("rk"),
-        F.count(F.lit(1)).over(W.partitionBy()).cast("bigint").alias("m"),
-    )
+    ranked = _cell_p_values(spark, sf_dir)
     wmin = W.orderBy(F.col("rk").desc()).rowsBetween(W.unboundedPreceding, 0)
     p_bh = F.round(F.least(F.min(F.col("p_value") * F.col("m") / F.col("rk")).over(wmin), F.lit(1.0)), 6)
     return ranked.select(
@@ -916,7 +889,7 @@ def stat_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = t(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast("bigint").alias("cents")
+        revenue_cents().alias("cents")
     )
     head = daily.select(
         F.datediff("day", F.lit("1992-01-01")).alias("x"),
@@ -1097,59 +1070,11 @@ def stat_holm_stepdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjusted p at rank i is the running MAX of (m-j+1)*p_(j) for j<=i,
     clipped at 1 — monotone by construction, so a rejection at rank i
     implies rejections at all smaller ranks (asserted in tests). The
-    p-value machinery (exact integer moments, rounded z into the
-    Abramowitz-Stegun erf polynomial) is identical to the BH query; the
+    cells and p-values are _cell_p_values, shared with stat_bh_fdr; the
     step-down window runs over the aggregate-sized 120-cell frame."""
     from pyspark.sql import Window as W
 
-    e = t(spark, sf_dir, "events")
-    cents = e.select(
-        "event_type",
-        F.hour("ts").alias("hr"),
-        F.round(F.col("value") * 100).cast("bigint").alias("c"),
-    )
-    g = cents.groupBy("event_type", "hr").agg(
-        F.count(F.lit(1)).alias("n_g"), F.sum("c").alias("s_g")
-    )
-    tot = cents.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("c").alias("s"),
-        # DECIMAL squares, as in stat_bh_fdr: BIGINT wraps at 100 TB
-        F.sum(F.col("c").cast("decimal(18,0)") * F.col("c").cast("decimal(18,0)"))
-        .cast("double")
-        .alias("ss"),
-    )
-    z = g.crossJoin(F.broadcast(tot)).select(  # 1-row totals dimension
-        "event_type",
-        "hr",
-        F.round(
-            (F.col("s_g") * 1.0 / F.col("n_g") - F.col("s") * 1.0 / F.col("n"))
-            * F.sqrt(F.col("n_g"))
-            / F.sqrt(
-                (F.col("ss") - F.col("s").cast("double") * F.col("s") / F.col("n"))
-                / (F.col("n") - 1)
-            ),
-            4,
-        ).alias("z_stat"),
-    )
-    xx = F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    tt = 1 / (1 + 0.3275911 * xx)
-    poly = (
-        (((1.061405429 * tt - 1.453152027) * tt + 1.421413741) * tt - 0.284496736) * tt
-        + 0.254829592
-    ) * tt
-    p = z.select(
-        "event_type",
-        "hr",
-        "z_stat",
-        F.round(1 - (1 - poly * F.exp(-xx * xx)), 6).alias("p_value"),
-    )
-    wr = W.orderBy("p_value", "event_type", "hr")
-    ranked = p.select(
-        "*",
-        F.row_number().over(wr).cast("bigint").alias("rk"),
-        F.count(F.lit(1)).over(W.partitionBy()).cast("bigint").alias("m"),
-    )
+    ranked = _cell_p_values(spark, sf_dir)
     # step-down: running max over ascending rank (aggregate-sized frame)
     wh = W.orderBy("rk").rowsBetween(W.unboundedPreceding, 0)
     holm = F.round(

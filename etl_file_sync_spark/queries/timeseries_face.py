@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from etl_file_sync_spark.localrel import local_rows_df
 
 from etl_file_sync_spark.operators import timeseries as TS
+from etl_file_sync_spark.operators.rankstats import window_midrank
+from etl_file_sync_spark.queries.inputs import daily_cents, monthly_cents, revenue_cents
 from etl_file_sync_spark.queries.registry import register, t
 
 _DAILY_TYPE = """
@@ -21,6 +23,12 @@ _DAILY_TYPE = """
       FROM events GROUP BY event_type, CAST(ts AS DATE)
     )
 """
+
+
+def _observed_daily(spark: SparkSession, sf_dir: str, out_col: str) -> DataFrame:
+    """Daily revenue cents without the unobserved (all-NULL) days: the
+    series every daily statistic here runs on."""
+    return daily_cents(spark, sf_dir, out_col).where(F.col(out_col).isNotNull())
 
 
 @register(
@@ -227,12 +235,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass centered algebra."""
     from pyspark.sql import Window as W
 
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast("bigint").alias("cents"))
-        .where(F.col("cents").isNotNull())  # unobserved days leave the series
-    )
+    daily = _observed_daily(spark, sf_dir, "cents")
     r = daily.withColumn("rn", F.row_number().over(W.orderBy("day")))
     lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag"))
     a = r.select(F.col("rn").alias("rn_a"), F.col("cents").alias("x"))
@@ -296,10 +299,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast("bigint").alias("cents"))
-        .where(F.col("cents").isNotNull())  # unobserved days leave the series
+        _observed_daily(spark, sf_dir, "cents")
         .cache()  # 2 consumers (totals + cumulative branch): one orders scan
     )
     tot = daily.agg(
@@ -375,7 +375,7 @@ def ts_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     dayofweek−1)."""
     o = t(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast("bigint").alias("cents")
+        revenue_cents().alias("cents")
     ).where(F.col("cents").isNotNull()).cache()  # 2 consumers (totals + day-of-week branch): one orders scan
     tot = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("total_days"),
@@ -485,13 +485,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(4). Fitted is the one-step-ahead prediction l+b; forecasts
     carry horizon 1..3."""
     m = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.trunc(F.col("o_orderdate").cast("date"), "month").alias("month"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y")
-        )
+        monthly_cents(spark, sf_dir, "y")
         .where(F.col("y").isNotNull())  # unobserved months leave the series
     )
     rows = sorted(m.collect(), key=lambda r: r["month"])  # calendar-bounded pull
@@ -599,16 +593,7 @@ def ts_stl_decompose_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily frame — a few thousand rows at any corpus scale."""
     from pyspark.sql import Window as W
 
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-        .where(F.col("cents").isNotNull())  # unobserved days leave the series
-    )
+    daily = _observed_daily(spark, sf_dir, "cents")
     r = daily.withColumn("rn", F.row_number().over(W.orderBy("day"))).withColumn(
         "n", F.count(F.lit(1)).over(W.partitionBy())
     )
@@ -714,16 +699,7 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     All windows run on the calendar-bounded daily frame."""
     from pyspark.sql import Window as W
 
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-        .where(F.col("cents").isNotNull())  # unobserved days leave the series
-    )
+    daily = _observed_daily(spark, sf_dir, "cents")
     w = W.orderBy("day")
     r = daily.withColumn("rn", F.row_number().over(w).cast("bigint")).withColumn(
         "s_t", F.sum("cents").over(w).cast("bigint")
@@ -846,16 +822,7 @@ def ts_holt_winters_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     days plus horizons 1..7."""
     import datetime
 
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y")
-        )
-        .where(F.col("y").isNotNull())  # unobserved days leave the series
-    )
+    daily = _observed_daily(spark, sf_dir, "y")
     rows = sorted(daily.collect(), key=lambda r: r["day"])  # calendar-bounded
     a, bb, g, p = _HW_A, _HW_B, _HW_G, _HW_P
     n = len(rows)
@@ -953,16 +920,7 @@ def ts_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp-aligned."""
     from pyspark.sql import Window as W
 
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-        .where(F.col("cents").isNotNull())  # unobserved days leave the series
-    )
+    daily = _observed_daily(spark, sf_dir, "cents")
     r = daily.withColumn(
         "rn", F.row_number().over(W.orderBy("day")).cast("bigint")
     )
@@ -1076,28 +1034,17 @@ def ts_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-        .where(F.col("cents").isNotNull())  # unobserved days leave the series
+        _observed_daily(spark, sf_dir, "cents")
         # calendar-bounded but consumed by two branches (count dim +
         # rank frame): cache so the orders scan runs once
         .cache()
     )
     n = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    w_leq = W.orderBy("cents").rangeBetween(W.unboundedPreceding, W.currentRow)
-    w_eq = W.partitionBy("cents")
-    cnt_leq = F.count(F.lit(1)).over(w_leq)
-    cnt_eq = F.count(F.lit(1)).over(w_eq)
     r = daily.select(
         "day",
         "cents",
         F.row_number().over(W.orderBy("day")).cast("bigint").alias("t"),
-        ((cnt_leq - cnt_eq) + (cnt_eq + 1) / F.lit(2.0)).alias("rk"),
+        window_midrank("cents").alias("rk"),
     )
     u = (
         r.crossJoin(F.broadcast(n))
@@ -1190,14 +1137,7 @@ def ts_backtest_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no window at all); errors are exact integer differences before
     the final divisions."""
     daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-        .where(F.col("cents").isNotNull())  # unobserved days leave the series
+        _observed_daily(spark, sf_dir, "cents")
         # calendar-bounded (~2.4k rows) but consumed THREE times below
         # (actual branch, lag branch, max-day dimension) — cache so the
         # corpus-scale orders groupBy scan runs once, not 3x
@@ -1283,16 +1223,7 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer folds (DECIMAL squares) before the double algebra."""
     from pyspark.sql import Window as W
 
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-        .where(F.col("cents").isNotNull())  # unobserved days leave the series
-    )
+    daily = _observed_daily(spark, sf_dir, "cents")
     r = daily.select(
         "cents", F.row_number().over(W.orderBy("day")).cast("bigint").alias("rn")
     )

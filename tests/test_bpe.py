@@ -1,9 +1,8 @@
-"""BPE merge training vs an exact pure-Python reimplementation: both
-trainers — the default (one corpus pass -> driver-local incremental
-merge loop) and the distributed fallback (one Spark job per merge) —
-must reproduce the reference algorithm's rule list bit-for-bit,
-including lexicographic tie-breaks and the early stop below count 2,
-at production merge budgets (num_merges=1000)."""
+"""BPE merge training vs an exact pure-Python reimplementation: the
+trainer (one corpus pass -> driver-local incremental merge loop) must
+reproduce the reference algorithm's rule list bit-for-bit, including
+lexicographic tie-breaks and the early stop below count 2, at
+production merge budgets (num_merges=1000)."""
 
 from __future__ import annotations
 
@@ -13,7 +12,6 @@ from collections import Counter
 from etl_file_sync_spark.operators.bpe import (
     END,
     bpe_train,
-    bpe_train_distributed,
     train_rules_local,
     word_count_frame,
 )
@@ -95,29 +93,6 @@ def test_bpe_thousand_merges_bit_identical():
     assert len(got) == 1000
 
 
-def test_bpe_distributed_fallback_matches_local(spark):
-    """The per-merge-Spark-job fallback must learn the identical rule
-    list, and must not leak checkpoint generations: after training, at
-    most ONE trainer-created RDD may remain persisted (the stale-
-    generation unpersist), not one per merge step."""
-    sc = spark.sparkContext
-    text = "low lower lowest newer newest wider widest low lower newer"
-    df = spark.createDataFrame([(text,)], "text string")
-    wc: dict[str, int] = {}
-    for w in text.split(" "):
-        wc[w] = wc.get(w, 0) + 1
-    expected = python_bpe(wc, 10)
-    before = {k for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    got = [
-        (r.step, r.left, r.right, r.merged, r.pair_count)
-        for r in bpe_train_distributed(df, num_merges=10).orderBy("step").collect()
-    ]
-    after = {k for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    assert got == expected
-    assert got == train_rules_local(list(wc.items()), 10)
-    assert len(after - before) <= 1, "stale checkpoint generations leaked"
-
-
 def python_tokenize_count(word: str, rules) -> int:
     syms = list(word) + [END]
     for l, r in rules:
@@ -163,8 +138,8 @@ def test_bpe_tokenize_counts_merged_end_marker(spark):
 def test_bpe_property_random_corpora(spark):
     """Hypothesis-style sweep without per-example Spark jobs: a batch of
     adversarial corpora (repeats, overlaps, single chars, shared
-    prefixes/suffixes) each trained distributed and checked against the
-    pure-Python reference rule-for-rule."""
+    prefixes/suffixes) each trained and checked against the pure-Python
+    reference rule-for-rule."""
     corpora = [
         "ab ab ab ba",
         "aaaa aaaa aa",
@@ -190,10 +165,10 @@ def test_bpe_property_random_corpora(spark):
 
 
 def test_bpe_train_max_vocab_guard(spark):
-    """A vocabulary larger than max_vocab must fail loudly with a
-    pointer to the distributed fallback, not OOM the driver."""
+    """A vocabulary larger than max_vocab must fail loudly, naming the
+    limit, not OOM the driver."""
     import pytest
 
     df = spark.createDataFrame([("a b c d e f",)], "text string")
-    with pytest.raises(ValueError, match="bpe_train_distributed"):
+    with pytest.raises(ValueError, match="exceeds max_vocab=3: the merge loop runs on the driver"):
         bpe_train(df, num_merges=2, max_vocab=3)

@@ -6,18 +6,21 @@ CLI/streaming service (``pipeline/run.py``) and the benchmark
 class or constant of the package that none of them reaches exists only
 for tests or tools, and belongs in ``tests/`` or nowhere.
 
-The scan is by name: an undecorated top-level definition is reached when
-its name appears as a word in one of the entry point files, or in the
-package source outside its own lines and outside every definition that
-is itself unreached (package ``__init__`` re-exports do not count).
-Decorated definitions (registered queries, UDFs) are reached through
-their decorator. No Spark session is needed.
+The scan is by name, over code only: an undecorated top-level definition
+is reached when its name is used as an identifier in one of the entry
+point files, or in the package source outside its own lines and outside
+every definition that is itself unreached. A use is a ``Name``, an
+``Attribute``, an imported name or alias, or a string constant that is
+exactly an identifier (a ``getattr`` or registry key); a word in a
+comment, a docstring or an error message is not a use, and package
+``__init__`` re-exports do not count. Decorated definitions (registered
+queries, UDFs) are reached through their decorator. No Spark session is
+needed.
 """
 
 from __future__ import annotations
 
 import ast
-import re
 from pathlib import Path
 
 import pytest
@@ -26,7 +29,6 @@ pytestmark = pytest.mark.unit
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "etl_file_sync_spark"
-WORD = re.compile(r"\w+")
 ENTRY_FILES = [ROOT / "bench.py", ROOT / "__spark_entry__.py", *sorted((ROOT / "perfbench").rglob("*.py"))]
 
 # name -> why it stays although no entry point reaches it.
@@ -34,6 +36,8 @@ ALLOWED = {
     "py_num_str_int": "pure-Python reference model of the numeric-string grammar that the "
     "property tests compare num_str_int/num_int_sql against; shares TRIM_RE/NUM_RE with the engine",
     "DEFAULT_SF_DIR": "deployment path setting: the default data directory of the catalog",
+    "jaro_winkler_py": "pure-Python reference model of Jaro-Winkler that the bit-level "
+    "tests compare the engine's JW kernels against",
 }
 
 
@@ -51,16 +55,25 @@ def _definitions(tree: ast.Module):
                     yield t.id, node.lineno, node.end_lineno
 
 
-def _searchable_lines(path: Path, tree: ast.Module) -> list[str]:
-    """Source lines of a package module, with an ``__init__``'s
-    re-export imports blanked out."""
-    lines = path.read_text().splitlines()
-    if path.name == "__init__.py":
-        for node in tree.body:
-            if isinstance(node, ast.ImportFrom):
-                for i in range(node.lineno - 1, node.end_lineno):
-                    lines[i] = ""
-    return lines
+def _identifier_uses(nodes):
+    """(identifier, line) of each use in code under ``nodes``: names,
+    attributes, imported names and their aliases, and string constants
+    that are exactly an identifier."""
+    stack = list(nodes)
+    while stack:
+        node = stack.pop()
+        stack.extend(ast.iter_child_nodes(node))
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.end_lineno
+        elif isinstance(node, ast.alias):
+            for name in filter(None, (node.name, node.asname)):
+                for part in name.split("."):
+                    yield part, node.lineno
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if node.value.isidentifier():
+                yield node.value, node.lineno
 
 
 def unreached() -> list[str]:
@@ -68,15 +81,16 @@ def unreached() -> list[str]:
 
     A use inside a definition that is itself unreached does not count,
     so the scan repeats until the unreached set stops growing."""
-    entry_words = set(WORD.findall("\n".join(p.read_text() for p in ENTRY_FILES)))
+    entry_words = {w for p in ENTRY_FILES for w, _ in _identifier_uses([ast.parse(p.read_text())])}
     defs = []  # (path, name, lo, hi)
     uses: dict[str, list[tuple[Path, int]]] = {}
     for path in sorted(PACKAGE.rglob("*.py")):
         tree = ast.parse(path.read_text())
         defs += [(path, *d) for d in _definitions(tree)]
-        for i, line in enumerate(_searchable_lines(path, tree), 1):
-            for w in set(WORD.findall(line)):
-                uses.setdefault(w, []).append((path, i))
+        # an __init__'s re-export imports are no use
+        code = [n for n in tree.body if path.name != "__init__.py" or not isinstance(n, ast.ImportFrom)]
+        for w, i in _identifier_uses(code):
+            uses.setdefault(w, []).append((path, i))
     dead: set[tuple] = set()
     while True:
         # a definition's own lines, and the lines of definitions already

@@ -492,13 +492,35 @@ def test_pq_recall_vs_brute_force(spark, sf_dir, cache):
     assert recall >= 0.95, f"PQ recall {recall}"
 
 
-def test_pq_codes_compress_and_roundtrip_shape(spark, sf_dir):
+def pq_encode(df, codebooks):
+    """Encode vectors to PQ codes: (id, v, codes ARRAY<INT>), with the
+    same code spelling as pq_topk's fused scan."""
+    import numpy as np
+
     from etl_file_sync_spark.operators import pq as PQ
 
+    bC = df.sparkSession.sparkContext.broadcast(codebooks)
+
+    def enc(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = np.array(pdf["v"].tolist(), dtype=np.float64)
+            V = V / np.linalg.norm(V, axis=1, keepdims=True)
+            codes = PQ._pq_codes(V, bC.value)
+            yield pd.DataFrame({"id": pdf["id"].values, "v": list(V), "codes": list(codes)})
+
+    v = PQ._normalized_matrix_stream(df, "vec_id", "embedding")
+    return v.mapInPandas(enc, "id bigint, v array<double>, codes array<int>")
+
+
+def test_pq_codes_compress_and_roundtrip_shape(spark, sf_dir):
+    from tests.test_pq import pq_train
+
     e = load_table(spark, sf_dir, "embeddings")
-    C = PQ.pq_train(e, m=16, k=32, iters=2)
+    C = pq_train(e, m=16, k=32, iters=2)
     assert C.shape == (16, 32, 4)
-    codes = PQ.pq_encode(e, C)
+    codes = pq_encode(e, C)
     row = codes.first()
     assert len(row.codes) == 16 and all(0 <= c < 32 for c in row.codes)
     assert codes.count() == e.count()

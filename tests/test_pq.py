@@ -8,11 +8,20 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from etl_file_sync_spark.operators.pq import ivfpq_topk, pq_topk, pq_train
+from etl_file_sync_spark.operators import pq as PQ
+from etl_file_sync_spark.operators.pq import ivfpq_topk, pq_topk
 from etl_file_sync_spark.operators.similarity import cosine_topk
 
 _TOPK = {"pq_topk": pq_topk, "ivfpq_topk": ivfpq_topk}
 
+
+
+def pq_train(df, m: int, k: int, iters: int) -> np.ndarray:
+    """Train per-subspace codebooks alone, the way pq_topk does before
+    its scan; returns C with shape (m, k, d//m)."""
+    v = PQ._normalized_matrix_stream(df, "vec_id", "embedding")
+    n, seed_rows = PQ._open(v, k)
+    return PQ._train(v, n, seed_rows, m, k, iters)
 
 def _corpus(spark, n=300, dim=64):
     """`n` random vectors; among the `vec_id % 40 == 0` queries, 40 is a

@@ -2,7 +2,16 @@
 
 from __future__ import annotations
 
-from etl_file_sync_spark.operators.reconcile import diff_summary, snapshot_diff
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from etl_file_sync_spark.operators.reconcile import snapshot_diff
+
+
+def diff_summary(diff: DataFrame) -> DataFrame:
+    """(status, n) rollup of a snapshot_diff frame — the one-line audit
+    record a sync job logs per wave."""
+    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
 
 
 def test_snapshot_diff_statuses(spark):

@@ -1,5 +1,5 @@
-"""Tests for the scale operators: salted joins, two-phase aggregation,
-MERGE emulation, SCD2, and bucketed co-located joins."""
+"""Tests for the scale operators: MERGE emulation, SCD2, and bucketed
+co-located joins."""
 
 from __future__ import annotations
 
@@ -7,32 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_file_sync_spark.operators.merge import merge_upsert, scd2_apply
-from etl_file_sync_spark.operators.skew import salted_join, two_phase_agg
-
-
-def test_salted_join_matches_plain_join(spark):
-    # heavy skew: 90% of rows share key 1
-    big = spark.range(1000).select(
-        F.when(F.col("id") < 900, 1).otherwise(F.col("id")).alias("k"), F.col("id").alias("v")
-    )
-    small = spark.createDataFrame([(1, "hot"), (950, "cold")], "k long, label string")
-    plain = {(r.k, r.v, r.label) for r in big.join(small, "k").collect()}
-    salted = {(r.k, r.v, r.label) for r in salted_join(big, small, "k").collect()}
-    assert salted == plain and len(plain) == 901
-
-
-def test_two_phase_agg_exact(spark):
-    df = spark.range(2000).select(
-        (F.col("id") % 3).alias("k"), (F.col("id") % 7).alias("v")
-    )
-    expected = {
-        (r.k, r.n_rows, r.n_distinct)
-        for r in df.groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.countDistinct("v").alias("n_distinct"))
-        .collect()
-    }
-    got = {(r.k, r.n_rows, r.n_distinct) for r in two_phase_agg(df, "k", "v").collect()}
-    assert got == expected
 
 
 def test_merge_upsert(spark):
@@ -279,15 +253,6 @@ def test_scd2_new_keys_and_multi_change(spark):
         (1, "x3", "2021-06-01", None),          # only one current row for key 1
         (9, "new", "2021-03-01", None),         # brand-new key inserted
     }
-
-
-def test_salted_join_rejects_outer(spark):
-    from etl_file_sync_spark.operators.skew import salted_join
-
-    big = spark.range(10).selectExpr("id AS k", "id AS v")
-    small = spark.createDataFrame([(1, "a")], "k long, lbl string")
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_join(big, small, "k", how="full")
 
 
 def test_expand_pairs_cap_bounds_mega_cluster(spark):
