@@ -26,12 +26,12 @@ def asof_join(
     left_time: str,
     right_time: str,
     right_vals: list[str],
-    strict: bool = False,
     direction: str = "backward",
     tolerance=None,
 ) -> DataFrame:
     """For each left row, attach the matching right row's `right_vals`
-    per `direction` (null when no match). `tolerance` (a Column-
+    per `direction` (null when no match). A right row at the left row's
+    own time matches in every direction. `tolerance` (a Column-
     compatible duration in the time column's own units, e.g.
     F.expr("INTERVAL 5 MINUTES") for timestamps or a plain number for
     numeric times) discards matches whose |gap| exceeds it.
@@ -67,18 +67,18 @@ def asof_join(
             r_tagged = r_tagged.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
     unioned = l_tagged.select(r_tagged.columns).unionByName(r_tagged.select(r_tagged.columns))
 
-    # _side: left=1, right=0. Non-strict backward: a right row at equal
-    # _t IS visible => right sorts before left at ties (ascending
-    # _side). Strict: right sorts after left. Forward mirrors.
+    # _side: left=1, right=0. A right row at equal _t IS visible, so
+    # backward sorts right before left at ties (ascending _side) and
+    # forward mirrors it.
     carry = [f"_rv_{c}" for c in right_vals] + (["_rt"] if need_rt else [])
 
     def _carried(frame, back: bool, suffix: str):
         if back:
-            order = [F.col("_t").asc(), (1 - F.col("_side")) if strict else F.col("_side")]
+            order = [F.col("_t").asc(), F.col("_side")]
             w = W.partitionBy(on).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
             agg = lambda c: F.last(c, ignorenulls=True).over(w)  # noqa: E731
         else:
-            order = [F.col("_t").asc(), (F.col("_side")) if strict else (1 - F.col("_side"))]
+            order = [F.col("_t").asc(), 1 - F.col("_side")]
             w = W.partitionBy(on).orderBy(*order).rowsBetween(0, W.unboundedFollowing)
             agg = lambda c: F.first(c, ignorenulls=True).over(w)  # noqa: E731
         for c in carry:

@@ -43,10 +43,11 @@ from etl_file_sync_spark.localrel import local_rows_df
 END = "</w>"
 
 
-def word_count_frame(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, cnt): the one corpus-scale pass, map-side combined."""
+def word_count_frame(df: DataFrame) -> DataFrame:
+    """(word, cnt) over the text column: the one corpus-scale pass,
+    map-side combined."""
     return (
-        df.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        df.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
@@ -154,7 +155,6 @@ def train_rules_local(
 def bpe_train(
     df: DataFrame,
     num_merges: int = 20,
-    text_col: str = "text",
     max_vocab: int = 20_000_000,
 ) -> DataFrame:
     """Learn ``num_merges`` BPE merge rules; returns a small DataFrame
@@ -170,7 +170,7 @@ def bpe_train(
     the driver.
     """
     spark = df.sparkSession
-    wc = word_count_frame(df, text_col)
+    wc = word_count_frame(df)
     collected = wc.limit(max_vocab + 1).collect()
     if len(collected) > max_vocab:
         raise ValueError(
@@ -182,19 +182,14 @@ def bpe_train(
     return local_rows_df(spark, [tuple(r) for r in rules], schema)
 
 
-def bpe_tokenize(
-    df: DataFrame,
-    rules: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_tokenize(df: DataFrame, rules: list[tuple[str, str]]) -> DataFrame:
     """Apply learned merge rules to every document — the corpus-scale
     half of BPE (training is a vocabulary-bounded driver loop; APPLYING
     the tokenizer is the embarrassingly parallel pass a 100 TB corpus
     actually pays for). One Arrow-batched mapInPandas stage with the
     (tiny) rule list broadcast; each batch memoizes word→token-count so
     repeated words (Zipf: most of the corpus) tokenize once per batch.
-    Returns (id_col, n_ws_tokens, n_bpe_tokens) — the whitespace and
+    Returns (doc_id, n_ws_tokens, n_bpe_tokens) — the whitespace and
     BPE token counts whose ratio is the tokenizer's compression.
 
     Chained JVM merge folds would express this declaratively, but 20
@@ -240,6 +235,6 @@ def bpe_tokenize(
                 {"id": pdf["id"].values, "n_ws_tokens": ws_counts, "n_bpe_tokens": bpe_counts}
             )
 
-    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
+    src = df.select(F.col("doc_id").alias("id"), F.col("text").alias("t"))
     out = src.mapInPandas(apply_rules, "id bigint, n_ws_tokens bigint, n_bpe_tokens bigint")
-    return out.withColumnRenamed("id", id_col)
+    return out.withColumnRenamed("id", "doc_id")

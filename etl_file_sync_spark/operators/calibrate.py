@@ -80,15 +80,13 @@ def choose_lsh_params(
 def estimate_candidates(
     df: DataFrame,
     plan: LSHPlan,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     sample_pct: int = 10,
-    n_grams: int = 3,
     hash_fn: str = "xxhash",
 ) -> LSHPlan:
-    """Run the banding on a deterministic hash-sample and extrapolate the
-    candidate-pair count to the full corpus (pairs scale ~quadratically
-    with corpus size at fixed duplication rate). hash_fn seeds both the
+    """Run the banding on the 3-shingle signatures of a deterministic
+    hash-sample of the documents and extrapolate the candidate-pair count
+    to the full corpus (pairs scale ~quadratically with corpus size at
+    fixed duplication rate). hash_fn seeds both the
     sample and the signatures ('md5' makes the whole estimate
     reproducible by any engine — the registry query's oracle recomputes
     it in DuckDB)."""
@@ -97,8 +95,8 @@ def estimate_candidates(
     from etl_file_sync_spark.operators.dedup import minhash_lsh_candidates, minhash_signatures
     from etl_file_sync_spark.operators.text import hash_sample
 
-    sample = hash_sample(df, id_col, sample_pct, hash_fn=hash_fn)
-    sig = minhash_signatures(sample, id_col, text_col, n_grams, plan.num_perm, hash_fn=hash_fn)
+    sample = hash_sample(df, "doc_id", sample_pct, hash_fn=hash_fn)
+    sig = minhash_signatures(sample, plan.num_perm, hash_fn=hash_fn)
     n_cand = minhash_lsh_candidates(sig, plan.bands, plan.rows_per_band).count()
     scale = (100.0 / sample_pct) ** 2
     return replace(plan, est_candidate_pairs=int(n_cand * scale))

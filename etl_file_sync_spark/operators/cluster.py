@@ -85,16 +85,14 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     )
 
 
-def dedup_clusters(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Collapse near-dup pairs into clusters; return df with a
-    `cluster_id` (min reachable id; singletons keep their own id) and
+    `cluster_id` (min reachable doc_id; singletons keep their own id) and
     `is_canonical` (the cluster survivor)."""
-    comp = connected_components(pairs).withColumnRenamed("id", id_col)
-    out = df.join(comp, id_col, "left").withColumn(
-        "cluster_id", F.coalesce("component", F.col(id_col))
+    comp = connected_components(pairs).withColumnRenamed("id", "doc_id")
+    out = df.join(comp, "doc_id", "left").withColumn(
+        "cluster_id", F.coalesce("component", F.col("doc_id"))
     )
     return out.drop("component").withColumn(
-        "is_canonical", F.col(id_col) == F.col("cluster_id")
+        "is_canonical", F.col("doc_id") == F.col("cluster_id")
     )

@@ -88,12 +88,11 @@ def _verify(
     return cand.withColumn(name, score).filter(keep).select("id_a", "id_b", *extra, out)
 
 
-def _token_windows(
-    df: DataFrame, id_col: str, text_col: str, width: int, last: Column, stride: int = 1
-) -> tuple[DataFrame, Column]:
-    """(base, windows): ``base`` is (id, _toks) with the space-split token
-    array, ``windows`` the array of ``width``-token strings starting every
-    ``stride`` tokens, window starts 0..``last`` (a Column over ``_toks``).
+def _token_windows(df: DataFrame, width: int, last: Column, stride: int = 1) -> tuple[DataFrame, Column]:
+    """(base, windows): ``base`` is (id, _toks) with the doc_id and the
+    space-split token array of the text, ``windows`` the array of
+    ``width``-token strings starting every ``stride`` tokens, window
+    starts 0..``last`` (a Column over ``_toks``).
 
     The token array is materialized in its own projection BEFORE the
     per-window lambda: an expression referenced inside a higher-order
@@ -104,7 +103,7 @@ def _token_windows(
     million-token web page would take days). CollapseProject keeps the
     boundary because the alias is non-cheap and multiply referenced.
     """
-    base = df.select(F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("_toks"))
+    base = df.select(F.col("doc_id").alias("id"), F.split(F.col("text"), " ").alias("_toks"))
     toks = F.col("_toks")
     windows = F.transform(
         F.sequence(F.lit(0), last),
@@ -114,28 +113,33 @@ def _token_windows(
     return base, windows
 
 
-def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Group exact duplicates by content digest; keep the min id as canonical.
 
     Returns (keep_id, n_copies) — one row per distinct content.
     """
     return (
-        df.select(F.col(id_col), F.sha2(normalize_text(text_col), 256).alias("digest"))
+        df.select(F.col("doc_id"), F.sha2(normalize_text("text"), 256).alias("digest"))
         .groupBy("digest")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
         .select("keep_id", "n_copies")
     )
 
 
-def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
+def shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle)."""
-    base, grams = _token_windows(df, id_col, text_col, n, F.greatest(F.size("_toks") - n, F.lit(0)))
+    base, grams = _token_windows(df, n, F.greatest(F.size("_toks") - n, F.lit(0)))
     return base.select("id", F.explode(F.array_distinct(grams)).alias("shingle")).where(
         F.length("shingle") > 0
     )
 
 
-def jaccard_oracle_ctes(threshold: float, max_df_frac: float = 0.5) -> str:
+# Stop-shingle cut of jaccard_pairs and its oracle: the document
+# frequency above which a shingle is dropped.
+MAX_DF_FRAC = 0.5
+
+
+def jaccard_oracle_ctes(threshold: float) -> str:
     """DuckDB CTE chain restating ``jaccard_pairs`` INCLUDING its
     stop-shingle cut — the one oracle spelling every jaccard-derived
     oracle composes (ends in ``jpairs(id_a, id_b, jaccard)``).
@@ -147,7 +151,7 @@ def jaccard_oracle_ctes(threshold: float, max_df_frac: float = 0.5) -> str:
     the hot shingles while a cut-less oracle builds a near-complete
     pair graph — wrong AND quadratic (its recursive consumers then
     enumerate walks over a clique). Mirrors jaccard_pairs exactly:
-    df counted per distinct (doc, shingle) against max_df_frac * ALL
+    df counted per distinct (doc, shingle) against MAX_DF_FRAC * ALL
     documents (strict >), per-doc sizes counted AFTER the cut."""
     return f"""d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     sh_all AS (
@@ -157,7 +161,7 @@ def jaccard_oracle_ctes(threshold: float, max_df_frac: float = 0.5) -> str:
     ),
     hot AS (
       SELECT s FROM sh_all GROUP BY s
-      HAVING count(*) > {max_df_frac} * (SELECT count(*) FROM documents)
+      HAVING count(*) > {MAX_DF_FRAC} * (SELECT count(*) FROM documents)
     ),
     sh AS (SELECT id, s FROM sh_all WHERE s NOT IN (SELECT s FROM hot)),
     sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
@@ -173,11 +177,9 @@ def jaccard_oracle_ctes(threshold: float, max_df_frac: float = 0.5) -> str:
     )"""
 
 
-def _shingle_overlap(
-    df: DataFrame, id_col: str, text_col: str, n: int, max_df_frac: float | None
-) -> tuple[DataFrame, DataFrame]:
+def _shingle_overlap(df: DataFrame, max_df_frac: float | None) -> tuple[DataFrame, DataFrame]:
     """(common, sizes): ``common`` is (id_a, id_b, n_common) — the shared
-    hashed-shingle count of every doc pair with at least one shared
+    hashed-3-shingle count of every doc pair with at least one shared
     shingle, from one self-join on the shingle — and ``sizes`` is (id, n)
     per-doc shingle counts. Shingles in more than ``max_df_frac`` of all
     docs are cut first (None: no cut); sizes count after the cut.
@@ -200,7 +202,7 @@ def _shingle_overlap(
     # bigints instead of ~20-byte strings. A within-doc or cross-doc
     # collision would perturb one pair's intersection count; at 2^64
     # key space that is a ~1e-11 event corpus-wide.
-    sh = shingles(df, id_col, text_col, n).select("id", F.xxhash64("shingle").alias("shingle"))
+    sh = shingles(df).select("id", F.xxhash64("shingle").alias("shingle"))
     # Cache BEFORE the stop-shingle cut: the hot-set scan, the per-doc
     # sizes, and both self-join sides all replay from this one explode
     # pass; caching after the cut would recompute the explode for the
@@ -221,31 +223,23 @@ def _shingle_overlap(
     return _self_pairs(sh, ["shingle"], count_as="n_common"), sizes
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df_frac: float | None = 0.5,
-) -> DataFrame:
-    """All candidate pairs with shingle-Jaccard >= threshold (id_a < id_b).
+def jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """All candidate pairs with 3-shingle Jaccard >= threshold (id_a < id_b).
 
     Exact verifier: join on shared shingles, count common, divide by union
     size. Output: (id_a, id_b, jaccard). At scale, feed this only LSH
     candidates (see minhash_lsh_candidates); with a selective shingle space
     the shared-shingle join is itself the pruning step.
 
-    Stop-shingle cut: shingles present in more than `max_df_frac` of all
+    Stop-shingle cut: shingles present in more than MAX_DF_FRAC of all
     docs (boilerplate headers, license blurbs) are dropped BEFORE the
     self-join — a hot shingle shared by f docs contributes f² join rows,
     so one boilerplate line repeated corpus-wide turns the join quadratic.
     Jaccard is then computed over the retained shingle universe (per-doc
     sizes counted after the cut — standard stopword-removal semantics).
-    At small SF no shingle crosses a 0.5 df, so the cut is a no-op there;
-    pass None to disable.
+    At small SF no shingle crosses a 0.5 df, so the cut is a no-op there.
     """
-    common, sizes = _shingle_overlap(df, id_col, text_col, n, max_df_frac)
+    common, sizes = _shingle_overlap(df, MAX_DF_FRAC)
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     return _verify(common, sizes, "jaccard", jac, F.col("jaccard") >= threshold, 4)
 
@@ -497,15 +491,9 @@ def fuzzy_jw_blocked_pairs(
     return _dist1_pairs(df, id_col, name_col, "jw", jw, F.col("jw") >= threshold)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    hash_fn: str = "xxhash",
-) -> DataFrame:
-    """MinHash signatures: num_perm seeded min-hashes per doc.
+def minhash_signatures(df: DataFrame, num_perm: int = 64, hash_fn: str = "xxhash") -> DataFrame:
+    """MinHash signatures: num_perm seeded min-hashes of each doc's
+    3-shingles.
 
     One explode + one groupBy(id) with num_perm min() aggregates — a single
     shuffle on the doc id, partial-aggregated map-side. Returns
@@ -516,7 +504,7 @@ def minhash_signatures(
     standardized, so signatures are reproducible by ANY engine and the
     whole MinHash→LSH pipeline becomes value-exact oracle-checkable).
     """
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df)
     # one F.expr per permutation (not nested Column ops): the 64-perm
     # Column spelling cost ~500+ py4j round trips per build; the SQL
     # strings parse to the identical expressions (xxhash64 with an INT
@@ -576,56 +564,15 @@ def exact_collapse(df: DataFrame, id_col: str, key) -> tuple[DataFrame, DataFram
     return reps, membership
 
 
-def expand_pairs(
-    pairs: DataFrame,
-    membership: DataFrame,
-    score_col: str,
-    exact_score,
-    max_group_pairs: int | None = None,
-) -> DataFrame:
+def expand_pairs(pairs: DataFrame, membership: DataFrame, score_col: str, exact_score) -> DataFrame:
     """Inverse of exact_collapse for pair outputs: map representative
     pairs back to all member pairs, and emit intra-cluster pairs (the
     byte-identical ones) with the exact-match score. Pair identity
     (id_a < id_b) is preserved; no pair is emitted twice because each id
     belongs to exactly one cluster.
-
-    max_group_pairs caps the quadratic blow-up: full expansion of a
-    k-member cluster costs C(k,2) intra pairs (and k·m cross pairs
-    against an m-member cluster) — a pathological 10⁶-copy cluster
-    (think: 10⁶ crawls of an empty page) would emit ~5·10¹¹ rows from
-    one group. With the cap set, clusters whose intra-pair count would
-    exceed it switch to REPRESENTATIVE form: intra pairs become the
-    (rep, member) star (k−1 rows — the same dedup decision, since every
-    member is an exact copy of the rep), and cross pairs keep only the
-    representative. Below the cap the pair contract is unchanged.
-    None (default) expands everything.
     """
-    if max_group_pairs is not None:
-        import math
-
-        # largest k with C(k,2) <= max_group_pairs
-        size_cutoff = (1 + math.isqrt(1 + 8 * max_group_pairs)) // 2
-        sized = membership.join(
-            membership.groupBy("_rep").agg(F.count(F.lit(1)).alias("_k")), "_rep"
-        )
-        small = sized.filter(F.col("_k") <= size_cutoff).select("_rep", "_member")
-        big = sized.filter(F.col("_k") > size_cutoff)
-        # cross expansion: capped clusters participate via their rep only
-        cross_members = small.unionByName(
-            big.select("_rep", F.col("_rep").alias("_member")).distinct()
-        )
-        # intra for capped clusters: the (rep, member) star — rep is the
-        # min id, so id_a < id_b holds by construction
-        star = big.filter(F.col("_member") != F.col("_rep")).select(
-            F.col("_rep").alias("id_a"),
-            F.col("_member").alias("id_b"),
-            F.lit(exact_score).cast("double").alias(score_col),
-        )
-    else:
-        small = cross_members = membership
-        star = None
-    ma = cross_members.select(F.col("_rep").alias("id_a"), F.col("_member").alias("_a"))
-    mb = cross_members.select(F.col("_rep").alias("id_b"), F.col("_member").alias("_b"))
+    ma = membership.select(F.col("_rep").alias("id_a"), F.col("_member").alias("_a"))
+    mb = membership.select(F.col("_rep").alias("id_b"), F.col("_member").alias("_b"))
     cross = (
         pairs.join(ma, "id_a")
         .join(mb, "id_b")
@@ -635,7 +582,7 @@ def expand_pairs(
             F.col(score_col),
         )
     )
-    x, y = small.alias("x"), small.alias("y")
+    x, y = membership.alias("x"), membership.alias("y")
     intra = x.join(
         y, (F.col("x._rep") == F.col("y._rep")) & (F.col("x._member") < F.col("y._member"))
     ).select(
@@ -643,8 +590,7 @@ def expand_pairs(
         F.col("y._member").alias("id_b"),
         F.lit(exact_score).cast("double").alias(score_col),
     )
-    out = cross.unionByName(intra)
-    return out.unionByName(star) if star is not None else out
+    return cross.unionByName(intra)
 
 
 def _collapsed(
@@ -654,7 +600,6 @@ def _collapsed(
     content: Column,
     core,
     score_col: str,
-    max_group_pairs: int | None,
     checkpoint: bool = False,
 ) -> DataFrame:
     """exact_collapse → ``core`` → expand_pairs: run the pair pipeline
@@ -664,46 +609,27 @@ def _collapsed(
     is output-invariant: identical content pairs at exactly 1.0 either
     way, but costs linear instead of quadratic·bands on exact-dup
     clusters. ``checkpoint`` truncates the reps and membership lineage
-    (see srp_near_dup_pairs); max_group_pairs bounds the re-expansion of
-    pathological exact-dup clusters (see expand_pairs)."""
+    (see srp_near_dup_pairs)."""
     singleton = F.concat(F.lit("_s"), F.col(id_col).cast("string"))
     key = F.when(ok, F.sha2(content, 256)).otherwise(singleton)
     reps, membership = exact_collapse(df, id_col, key)
     if checkpoint:
         reps = reps.localCheckpoint(eager=True)
         membership = membership.localCheckpoint(eager=True)
-    return expand_pairs(core(reps), membership, score_col, 1.0, max_group_pairs)
+    return expand_pairs(core(reps), membership, score_col, 1.0)
 
 
-def _minhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    num_perm: int,
-    bands: int,
-    threshold: float,
-    hash_fn: str,
-) -> DataFrame:
-    """minhash_dedup_pairs without the exact collapse."""
-    sig = minhash_signatures(df, id_col, text_col, n, num_perm, hash_fn).cache()
-    cand = minhash_lsh_candidates(sig, bands, num_perm // bands)
+def _minhash_pairs(df: DataFrame, threshold: float, hash_fn: str) -> DataFrame:
+    """minhash_dedup_pairs without the exact collapse: 64 permutations
+    in 16 bands of 4 rows."""
+    sig = minhash_signatures(df, 64, hash_fn).cache()
+    cand = minhash_lsh_candidates(sig, 16, 4)
     agree = F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    est = F.size(agree) / F.lit(num_perm)
+    est = F.size(agree) / F.lit(64)
     return _verify(cand, sig, "est_jaccard", est, F.col("est_jaccard") >= threshold, 4)
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    hash_fn: str = "xxhash",
-    max_group_pairs: int | None = None,
-) -> DataFrame:
+def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.5, hash_fn: str = "xxhash") -> DataFrame:
     """Full MinHash near-dup pipeline: exact-collapse → signatures → LSH
     candidates → signature-similarity estimate filter. Returns
     (id_a, id_b, est_jaccard).
@@ -711,45 +637,37 @@ def minhash_dedup_pairs(
     The collapse pre-groups byte-identical texts (sha2 digest) and runs
     LSH on unique texts only (identical texts have identical signatures,
     so their pairs score exactly 1.0 either way). Null/empty texts have
-    no shingles and never pair, so they stay singletons. max_group_pairs
-    bounds the re-expansion of pathological exact-dup clusters (see
-    expand_pairs).
+    no shingles and never pair, so they stay singletons.
     """
-    ok = F.length(F.coalesce(F.col(text_col), F.lit(""))) > 0
+    ok = F.length(F.coalesce(F.col("text"), F.lit(""))) > 0
     return _collapsed(
         df,
-        id_col,
+        "doc_id",
         ok,
-        F.col(text_col),
-        lambda reps: _minhash_pairs(reps, id_col, text_col, n, num_perm, bands, threshold, hash_fn),
+        F.col("text"),
+        lambda reps: _minhash_pairs(reps, threshold, hash_fn),
         "est_jaccard",
-        max_group_pairs,
     )
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 64,
-    hash_fn: str = "xxhash",
-) -> DataFrame:
+def simhash(df: DataFrame, hash_fn: str = "xxhash") -> DataFrame:
     """SimHash over word tokens (majority vote per bit of token hashes).
 
-    Computed as one explode + one groupBy(id) with `bits` signed-count
-    aggregates — all JVM bit-ops, partial-aggregated. Returns
+    Computed as one explode + one groupBy(id) with one signed-count
+    aggregate per bit — all JVM bit-ops, partial-aggregated. Returns
     (id, simhash BIGINT).
 
     hash_fn: 'xxhash' (default, 64-bit, engine-internal values) or 'md5'
     (60-bit token hash from the first 15 hex chars — standardized, so
-    any engine reproduces the exact simhash; bits is forced to 60 to
-    stay inside signed-64 range in every engine's integer parser).
+    any engine reproduces the exact simhash; 60 bits stay inside signed-64
+    range in every engine's integer parser).
     """
-    toks = df.select(F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), " ")).alias("tok"))
+    toks = df.select(F.col("doc_id").alias("id"), F.explode(F.split(F.col("text"), " ")).alias("tok"))
     if hash_fn == "xxhash":
+        bits = 64
         h = toks.withColumn("th", F.xxhash64("tok"))
     elif hash_fn == "md5":
-        bits = min(bits, 60)
+        bits = 60
         h = toks.withColumn(
             "th", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint")
         )
@@ -799,13 +717,7 @@ def simhash_near_pairs(sim_df: DataFrame, max_hamming: int = 3) -> DataFrame:
     return _verify(cand, None, "hamming", hamming, F.col("hamming") <= max_hamming)
 
 
-def embedding_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    blocks: int = 8,
-) -> DataFrame:
+def embedding_dup_pairs(df: DataFrame, threshold: float = 0.9, blocks: int = 8) -> DataFrame:
     """Embedding near-dup pairs: cosine >= threshold (id_a < id_b). EXACT.
 
     Distributed block-pair GEMM — no driver materialization: vectors are
@@ -826,10 +738,10 @@ def embedding_dup_pairs(
     import numpy as np
     import pandas as pd
 
-    v = df.where(vec_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).alias("blk"),
+    v = df.where(vec_ok(F.col("embedding"))).select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(blocks)).alias("blk"),
     )
     # role a: this vector's block is the LOWER block of the pair
     a_rep = v.select(
@@ -875,16 +787,15 @@ def embedding_dup_pairs(
     return out.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
 
 
-def srp_signatures(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 192,
-    seed: int = 7,
-) -> DataFrame:
+# SRP-LSH layout of srp_near_dup_pairs: SRP_PLANES sign bits from a
+# plane matrix seeded with SRP_SEED, banded SRP_BANDS ways.
+SRP_PLANES, SRP_BANDS, SRP_SEED = 192, 16, 7
+
+
+def srp_signatures(df: DataFrame) -> DataFrame:
     """Signed-random-projection bit signatures for cosine LSH.
 
-    A (dim × n_planes) Gaussian plane matrix is generated deterministically
+    A (dim × SRP_PLANES) Gaussian plane matrix is generated deterministically
     on the driver (tiny) and broadcast; each Arrow batch does ONE GEMM
     against it and emits the sign bits. Returns (id, sig ARRAY<BIGINT>)
     with one 0/1 element per plane — the same layout minhash_lsh_candidates
@@ -896,12 +807,12 @@ def srp_signatures(
     import numpy as np
     import pandas as pd
 
-    df = df.where(vec_ok(F.col(vec_col)))  # NULL vectors carry no geometry
-    probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    df = df.where(vec_ok(F.col("embedding")))  # NULL vectors carry no geometry
+    probe = df.select(F.size(F.col("embedding")).alias("d")).first()
     if probe is None:  # empty corpus
         return df.sparkSession.createDataFrame([], "id long, sig array<bigint>")
     dim = probe["d"]
-    planes = np.random.default_rng(seed).standard_normal((dim, n_planes))
+    planes = np.random.default_rng(SRP_SEED).standard_normal((dim, SRP_PLANES))
     b_planes = df.sparkSession.sparkContext.broadcast(planes)
 
     def sign_bits(batches):
@@ -910,16 +821,14 @@ def srp_signatures(
             if len(pdf) == 0:
                 continue
             V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            bits = (V @ P >= 0).astype(np.int64)  # (batch, n_planes)
+            bits = (V @ P >= 0).astype(np.int64)  # (batch, SRP_PLANES)
             yield pd.DataFrame({"id": pdf["id"].values, "sig": list(bits)})
 
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    v = df.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     return v.mapInPandas(sign_bits, "id long, sig array<bigint>")
 
 
-def _srp_pairs(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float, n_planes: int, bands: int, seed: int
-) -> DataFrame:
+def _srp_pairs(df: DataFrame, threshold: float) -> DataFrame:
     """srp_near_dup_pairs without the exact collapse."""
     from etl_file_sync_spark.operators.similarity import cosine_expr
 
@@ -927,39 +836,29 @@ def _srp_pairs(
     # checkpointing runs the SRP GEMM once instead of once per side
     # (measured interleaved: 6.1 -> 4.7 s min-of-4 with the collapse
     # checkpoints; outputs frame-equal)
-    sig = srp_signatures(df, id_col, vec_col, n_planes, seed).localCheckpoint(eager=True)
-    cand = minhash_lsh_candidates(sig, bands, n_planes // bands)
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    sig = srp_signatures(df).localCheckpoint(eager=True)
+    cand = minhash_lsh_candidates(sig, SRP_BANDS, SRP_PLANES // SRP_BANDS)
+    v = df.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v"))
     cos = cosine_expr(F.col("v_a"), F.col("v_b"))
     return _verify(cand, v, "cosine", cos, F.col("cosine") >= threshold, 4)
 
 
-def srp_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    n_planes: int = 192,
-    bands: int = 16,
-    seed: int = 7,
-    max_group_pairs: int | None = None,
-) -> DataFrame:
+def srp_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding near-dup pairs via SRP-LSH candidates + exact verify.
 
     The 100 TB path: bit signatures → band bucket equi-join (shuffles on
     (band, band_hash), never the O(n²) pair space) → exact cosine on the
     candidates only (JVM zip_with fold — the candidate set is tiny).
-    Approximate-recall by nature (tuned ≥0.99 at threshold 0.9 with the
-    defaults: 16 bands × 12 bits); use embedding_dup_pairs when the
+    Approximate-recall by nature (tuned ≥0.99 at threshold 0.9 with
+    16 bands × 12 bits); use embedding_dup_pairs when the
     threshold sits inside the background cosine bulk.
 
     Byte-identical vectors are collapsed first (grouped on a digest of
     the raw array) so replicas cost one signature instead of colliding
     in every band; identical vectors pair at cosine exactly 1.0. Zero-
     norm vectors have null cosine (never pair) and stay singletons.
-    max_group_pairs bounds the re-expansion (see expand_pairs).
     """
-    vd = F.col(vec_col).cast("array<double>")
+    vd = F.col("embedding").cast("array<double>")
     norm_sq = F.aggregate(vd, F.lit(0.0), lambda a, x: a + x * x)
     # checkpoint (the r6 phash lesson): reps feeds THREE consumers (the
     # signature GEMM and both exact-verify sides) and membership three
@@ -971,32 +870,31 @@ def srp_near_dup_pairs(
     # lineage without an exchange.
     return _collapsed(
         df,
-        id_col,
+        "vec_id",
         norm_sq > 0,
-        F.concat_ws(",", F.col(vec_col).cast("array<string>")),
-        lambda reps: _srp_pairs(reps, id_col, vec_col, threshold, n_planes, bands, seed),
+        F.concat_ws(",", F.col("embedding").cast("array<string>")),
+        lambda reps: _srp_pairs(reps, threshold),
         "cosine",
-        max_group_pairs,
         checkpoint=True,
     )
 
 
-def paragraph_segments(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", seg_tokens: int = 20
-) -> DataFrame:
-    """Fixed-width token segments ("paragraphs") per document:
+# Token width of a paragraph_segments segment.
+SEG_TOKENS = 20
+
+
+def paragraph_segments(df: DataFrame) -> DataFrame:
+    """Fixed-width SEG_TOKENS-token segments ("paragraphs") per document:
     (id, seg_idx, seg). Only complete segments are emitted — the ragged
     tail is never dedup material. Built with slice() over the token
     array (no per-token explode; one array op per row, then one explode
     per segment; see _token_windows)."""
-    n_segs = F.floor(F.size("_toks") / seg_tokens).cast("int")
-    base, segs = _token_windows(df, id_col, text_col, seg_tokens, n_segs - 1, stride=seg_tokens)
+    n_segs = F.floor(F.size("_toks") / SEG_TOKENS).cast("int")
+    base, segs = _token_windows(df, SEG_TOKENS, n_segs - 1, stride=SEG_TOKENS)
     return base.where(n_segs > 0).select("id", F.posexplode(segs).alias("seg_idx", "seg"))
 
 
-def paragraph_dup_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", seg_tokens: int = 20
-) -> DataFrame:
+def paragraph_dup_stats(df: DataFrame) -> DataFrame:
     """Per-document segment-level dedup audit — the CCNet/RefinedWeb-style
     paragraph dedup pass at fixed token grain. The FIRST occurrence of
     each segment text (ordered by (id, seg_idx)) is canonical; later
@@ -1012,7 +910,7 @@ def paragraph_dup_stats(
     """
     from pyspark.sql import Window as W
 
-    segs = paragraph_segments(df, id_col, text_col, seg_tokens)
+    segs = paragraph_segments(df)
     w = W.partitionBy("seg").orderBy("id", "seg_idx")
     flagged = segs.withColumn("dup", F.row_number().over(w) > 1)
     return (
@@ -1025,15 +923,13 @@ def paragraph_dup_stats(
             "id",
             "n_segs",
             "n_dup_segs",
-            (F.col("n_dup_segs") * seg_tokens).alias("tokens_removed"),
+            (F.col("n_dup_segs") * SEG_TOKENS).alias("tokens_removed"),
             F.round(F.col("n_dup_segs") / F.col("n_segs"), 4).alias("dup_frac"),
         )
     )
 
 
-def ngram_span_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", window: int = 8
-) -> DataFrame:
+def ngram_span_stats(df: DataFrame, window: int = 8) -> DataFrame:
     """Cross-document substring-duplication audit (the span-level exact
     dedup of "Deduplicating Training Data Makes Language Models Better",
     Lee et al. 2022, re-expressed relationally): every `window`-token
@@ -1049,7 +945,7 @@ def ngram_span_stats(
     is value-exact oracle-checkable; a 100 TB run would hash spans to
     bigints first (see _shingle_overlap) and accept the ~1e-11 collision.
     """
-    base, spans = _token_windows(df, id_col, text_col, window, F.size("_toks") - window)
+    base, spans = _token_windows(df, window, F.size("_toks") - window)
     occ = (
         base.where(F.size("_toks") >= window)
         .select("id", F.explode(spans).alias("span"))
@@ -1069,7 +965,7 @@ def ngram_span_stats(
     )
     totals = occ.groupBy("id").agg(F.count(F.lit(1)).alias("n_windows"))
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.select(F.col("doc_id").alias("id"))
         .join(totals, "id", "left")
         .join(dup, "id", "left")
         .select(
@@ -1086,14 +982,8 @@ def ngram_span_stats(
     )
 
 
-def containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Directional shingle containment |A∩B| / |A| — catches quotes,
+def containment_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Directional 3-shingle containment |A∩B| / |A| — catches quotes,
     excerpts, and test-set contamination that symmetric Jaccard misses
     (a 50-token quote inside a 5000-token doc has tiny Jaccard but
     containment ≈ 1 in the quote's direction).
@@ -1104,26 +994,20 @@ def containment_pairs(
     jaccard_pairs (one hashed-shingle self-join, never all-pairs), but
     without the stop-shingle cut.
     """
-    common, sizes = _shingle_overlap(df, id_col, text_col, n, None)
+    common, sizes = _shingle_overlap(df, None)
     cont = F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))
     keep = F.col("containment") >= threshold
     return _verify(common, sizes, "containment", cont, keep, 4, ["n_common"])
 
 
-def semantic_dedup_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.45,
-    sign_bits: int = 4,
-) -> DataFrame:
+def semantic_dedup_buckets(df: DataFrame) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023) with a
     DETERMINISTIC blocking key: vectors are bucketed by the sign pattern
-    of their first `sign_bits` coordinates (the zero-cost stand-in for
+    of their first 4 coordinates (the zero-cost stand-in for
     the paper's k-means cell assignment — same contract: candidates are
     compared only within a cluster), pairwise exact cosine runs inside
     each bucket only, and a vector is DROPPED when some same-bucket
-    vector with a SMALLER id is within `threshold` cosine (min-id
+    vector with a SMALLER id is within 0.45 cosine (min-id
     survivor rule — greedy, order-deterministic, and exactly restatable
     in SQL, which keeps the whole operator value-oracle-checkable —
     unlike seeded k-means).
@@ -1131,26 +1015,26 @@ def semantic_dedup_buckets(
     Returns (id, bucket, status 'keep'|'drop') for every input vector.
 
     Scale shape: the bucket equi-join bounds pair work at O(Σ b²) over
-    bucket sizes — at 100 TB raise `sign_bits` (k buckets = 2^bits) the
-    same way SemDeDup raises k; the join/cosine/aggregation are all JVM
+    bucket sizes — at 100 TB raise the sign-bit count (k buckets =
+    2^bits) the same way SemDeDup raises k; the join/cosine/aggregation are all JVM
     expressions (zip_with / aggregate), no Python, no cross join.
     """
     bucket = F.concat_ws(
-        "", *[(F.col(vec_col)[i] > 0).cast("int").cast("string") for i in range(sign_bits)]
+        "", *[(F.col("embedding")[i] > 0).cast("int").cast("string") for i in range(4)]
     )
     # NULL vectors carry no semantics to compare — dropped up front,
     # matching the engine-wide embedding-op posture (and the oracle's
     # embedding IS NOT NULL guard)
-    df = df.where(vec_ok(F.col(vec_col)))
+    df = df.where(vec_ok(F.col("embedding")))
     # Norm is computed ONCE per vector here — recomputing it per pair
     # would re-run a 64-element aggregate 2× for every candidate pair.
     v = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
         bucket.alias("bucket"),
         F.sqrt(
             F.aggregate(
-                F.col(vec_col).cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x
+                F.col("embedding").cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x
             )
         ).alias("nrm"),
     )
@@ -1162,7 +1046,7 @@ def semantic_dedup_buckets(
     cos = dot / (F.col("nrm_a") * F.col("nrm_b"))
     cand = _self_pairs(v, ["bucket"], carry=("v", "nrm"))
     dominated = (
-        _verify(cand, None, "cos", cos, F.col("cos") >= threshold)
+        _verify(cand, None, "cos", cos, F.col("cos") >= 0.45)
         .select(F.col("id_b").alias("id"))
         .distinct()
     )

@@ -27,9 +27,7 @@ from pyspark.sql import functions as F
 _WEIGHT_SCALE = 1_000_000
 
 
-def temperature_mixture_rates(
-    df: DataFrame, strata_col: str, budget: int, id_col: str = "doc_id"
-) -> DataFrame:
+def temperature_mixture_rates(df: DataFrame, strata_col: str, budget: int) -> DataFrame:
     """Per-stratum sampling rates for a temperature-0.5 target mixture.
 
     Classic multi-source rebalancing (cf. multilingual-LM sampling with
@@ -60,20 +58,18 @@ def temperature_mixture_rates(
     )
 
 
-def temperature_mixture_sample(
-    df: DataFrame, strata_col: str, budget: int, id_col: str = "doc_id"
-) -> DataFrame:
+def temperature_mixture_sample(df: DataFrame, strata_col: str, budget: int) -> DataFrame:
     """Deterministically sample ``df`` toward the temperature mixture.
 
-    A row survives iff the first 8 hex chars of md5(stratum:id), read as
+    A row survives iff the first 8 hex chars of md5(stratum:doc_id), read as
     an integer, fall under rate·2³² — the same portable-selection idiom
     as :func:`etl_file_sync_spark.operators.text.md5_stratified_sample`.
     The rates frame is tiny (one row per stratum) and broadcast; the
     corpus itself is a single filter scan, shuffle-free.
     """
-    rates = temperature_mixture_rates(df, strata_col, budget, id_col)
+    rates = temperature_mixture_rates(df, strata_col, budget)
     bucket = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.col(strata_col), F.col(id_col).cast("string"))), 1, 8),
+        F.substring(F.md5(F.concat_ws(":", F.col(strata_col), F.col("doc_id").cast("string"))), 1, 8),
         16,
         10,
     ).cast("bigint")
@@ -82,9 +78,7 @@ def temperature_mixture_sample(
     )
 
 
-def bigram_novelty(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def bigram_novelty(df: DataFrame) -> DataFrame:
     """Score each document by how common its word bigrams are corpus-wide.
 
     The CCNet/Gopher-style novelty signal without the float LM: for every
@@ -107,7 +101,7 @@ def bigram_novelty(
     # token array materialized before the per-position lambda —
     # element_at(split(text), i) inside it would re-split the whole
     # text per position, O(len^2) chars per doc (see dedup._token_windows)
-    base = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
+    base = df.select(F.col("doc_id"), F.split(F.col("text"), " ").alias("_w"))
     words = F.col("_w")
     bigrams = F.when(
         F.size(words) >= 2,
@@ -116,16 +110,16 @@ def bigram_novelty(
             lambda i: F.concat_ws(" ", F.element_at(words, i + 1), F.element_at(words, i + 2)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    occ = base.select(F.col(id_col), F.explode(bigrams).alias("bigram"))
+    occ = base.select(F.col("doc_id"), F.explode(bigrams).alias("bigram"))
     # cached: the corpus-count branch and the join branch both consume
     # this frame — without it the explode + partial agg runs twice.
     # Cache lifecycle is the caller's (dedup._shingle_overlap contract); a
     # 100 TB run would checkpoint instead.
-    doc_bg = occ.groupBy(id_col, "bigram").agg(F.count(F.lit(1)).alias("n_occ")).cache()
+    doc_bg = occ.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("n_occ")).cache()
     corpus = doc_bg.groupBy("bigram").agg(F.sum("n_occ").alias("bg_count"))
     scored = (
         doc_bg.join(corpus, "bigram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("n_occ").alias("n_bigrams"),
             F.sum(F.col("n_occ") * F.col("bg_count")).alias("freq_sum"),
@@ -134,10 +128,10 @@ def bigram_novelty(
         )
     )
     return (
-        df.select(id_col)
-        .join(scored, id_col, "left")
+        df.select("doc_id")
+        .join(scored, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
             F.coalesce("freq_sum", F.lit(0)).cast("long").alias("freq_sum"),
             F.coalesce("n_hapax", F.lit(0)).cast("long").alias("n_hapax"),
@@ -145,14 +139,9 @@ def bigram_novelty(
     )
 
 
-def domain_cap(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    domain_col: str = "source",
-    cap: int = 10,
-) -> DataFrame:
-    """Per-domain document cap — the standard curation guard against one
-    crawl domain dominating the mixture. Keeps at most `cap` docs per
+def domain_cap(df: DataFrame, cap: int = 10) -> DataFrame:
+    """Per-domain (``source``) document cap — the standard curation
+    guard against one crawl domain dominating the mixture. Keeps at most `cap` docs per
     domain, chosen by md5-priority (engine-independent, reproducible,
     and unbiased w.r.t. document content).
 
@@ -164,20 +153,14 @@ def domain_cap(
     """
     from pyspark.sql import Window as W
 
-    pri = F.md5(F.col(id_col).cast("string"))
-    rn = F.row_number().over(W.partitionBy(domain_col).orderBy(pri, F.col(id_col)))
+    pri = F.md5(F.col("doc_id").cast("string"))
+    rn = F.row_number().over(W.partitionBy("source").orderBy(pri, F.col("doc_id")))
     return df.withColumn("_rn", rn).filter(F.col("_rn") <= cap).drop("_rn")
 
 
-def entity_event_cap(
-    df: DataFrame,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    cap: int = 100,
-) -> DataFrame:
-    """Per-entity event admission cap — the bot/hot-entity guard run
-    BEFORE per-entity sequence analytics. Keeps each entity's FIRST
+def entity_event_cap(df: DataFrame, cap: int = 100) -> DataFrame:
+    """Per-entity (``user_id``) event admission cap — the
+    bot/hot-entity guard run BEFORE per-entity sequence analytics. Keeps each entity's FIRST
     `cap` events in event-time order (ties broken by the event id, so
     the kept set is deterministic and engine-independent); events
     without an event time cannot participate in time-ordered admission
@@ -195,10 +178,10 @@ def entity_event_cap(
     from pyspark.sql import Window as W
 
     rn = F.row_number().over(
-        W.partitionBy(entity_col).orderBy(F.col(ts_col), F.col(id_col))
+        W.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     )
     return (
-        df.where(F.col(ts_col).isNotNull())
+        df.where(F.col("ts").isNotNull())
         .withColumn("_rn", rn)
         .filter(F.col("_rn") <= cap)
         .drop("_rn")
@@ -210,10 +193,9 @@ def weighted_priority_sample(
     id_col: str = "doc_id",
     weight_col: str = "n_chars",
     k: int = 100,
-    seed: str = "w",
 ) -> DataFrame:
     """Weighted sampling without replacement via priority keys: each row
-    draws a reproducible md5 uniform u and gets priority u/weight;
+    draws a reproducible md5 uniform u of "<id>:w" and gets priority u/weight;
     the k smallest priorities win, so heavier rows win more often
     (priority sampling, Duffield et al.). md5 keeps the draw
     engine-independent; 13 hex chars = 52 bits so u is exact in a
@@ -224,7 +206,7 @@ def weighted_priority_sample(
     heaps then one k-row merge on the driver, never a full sort.
     """
     u = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))), 1, 13),
+        F.substring(F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit("w"))), 1, 13),
         16,
         10,
     ).cast("bigint")

@@ -35,22 +35,19 @@ from pyspark.sql import functions as F
 
 from etl_file_sync_spark.localrel import local_rows_df, sql_double
 
+# Newton steps per fit, and the L2 diagonal added to each Hessian.
+ITERS, RIDGE = 8, 1e-8
 
-def logistic_irls(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    iters: int = 8,
-    ridge: float = 1e-8,
-):
+
+def logistic_irls(df: DataFrame, feature_cols: list[str], label_col: str):
     """Fit logistic regression; returns the coefficient vector as a
     numpy array ordered (intercept, *feature_cols).
 
-    `ridge` adds a small L2 diagonal to the Hessian — numeric insurance
+    RIDGE adds a small L2 diagonal to the Hessian — numeric insurance
     against separable data (where the MLE diverges), not regularization
-    in any tuned sense. Iteration count is fixed (deterministic plan
-    structure); IRLS on well-scaled features converges to ~1e-10 well
-    inside 8 steps.
+    in any tuned sense. Iteration count is fixed at ITERS (deterministic
+    plan structure); IRLS on well-scaled features converges to ~1e-10
+    well inside 8 steps.
     """
     import numpy as np
 
@@ -71,7 +68,7 @@ def logistic_irls(
     xs = ["CAST(1.0 AS DOUBLE)"] + [f"`{c}`" for c in feature_cols]
     beta = np.zeros(k)
     try:
-        for _ in range(iters):
+        for _ in range(ITERS):
             # one F.expr per aggregate (the nested-Column spelling cost
             # ~300 py4j round trips per step x 8 steps of driver time);
             # the strings parse to the same doubles algebra, with beta
@@ -96,27 +93,21 @@ def logistic_irls(
             for i in range(k):
                 for j in range(i, k):
                     H[i, j] = H[j, i] = row[f"h{i}_{j}"]
-            H += ridge * np.eye(k)
+            H += RIDGE * np.eye(k)
             beta = beta + np.linalg.solve(H, G)
     finally:
         proj.unpersist()
     return beta
 
 
-def logistic_irls_frame(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    iters: int = 8,
-    ridge: float = 1e-8,
-) -> DataFrame:
+def logistic_irls_frame(df: DataFrame, feature_cols: list[str], label_col: str) -> DataFrame:
     """logistic_irls as a small (term, weight) DataFrame, intercept
     first then feature_cols order — the learned-model artifact a
     pipeline persists and with_logistic_quality-style inference maps
     back over the corpus."""
     import math
 
-    beta = logistic_irls(df, feature_cols, label_col, iters=iters, ridge=ridge)
+    beta = logistic_irls(df, feature_cols, label_col)
 
     def _w(x: float):
         # undefined fit (empty/all-NULL input) -> NULL weights, never NaN

@@ -32,36 +32,36 @@ from pyspark.sql import functions as F
 FEATURE_SCHEMA = "doc_id BIGINT, media_type STRING, byte_len BIGINT, feature ARRAY<DOUBLE>"
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Materialize a binary media column from text (deterministic stand-in
     for real image/audio bytes) with typed metadata — pure JVM expressions."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.lit("text/plain").alias("media_type"),
         payload.alias("payload"),
         F.struct(
             F.length(payload).cast("bigint").alias("byte_len"),
-            F.sha2(F.col(text_col), 256).alias("sha256"),
+            F.sha2(F.col("text"), 256).alias("sha256"),
             F.lit(None).cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),
         ).alias("meta"),
     )
 
 
-def decode_stub(payload: bytes, dim: int = 8) -> list[float]:
+def decode_stub(payload: bytes) -> list[float]:
     """STUB for the real media decode/feature-extract step.
 
     A real deployment would decode with pillow/torchaudio/ffmpeg here;
     those libs are absent, so we derive a deterministic fake feature from
-    the payload digest. Raise NotImplementedError for media types we would
-    never fake (video frame sampling).
+    the payload digest (its first 8 bytes). Raise NotImplementedError
+    for media types we would never fake (video frame sampling).
     """
     digest = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in digest[:dim]]
+    return [b / 255.0 for b in digest[:8]]
 
 
-def extract_features(df: DataFrame, dim: int = 8, batch_hint: int = 1024) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     The mapInPandas iterator sees whole Arrow batches — the same shape a
@@ -80,7 +80,7 @@ def extract_features(df: DataFrame, dim: int = 8, batch_hint: int = 1024) -> Dat
                         lambda p: len(p) if p is not None else None
                     ),
                     "feature": pdf["payload"].map(
-                        lambda p: decode_stub(bytes(p), dim) if p is not None else None
+                        lambda p: decode_stub(bytes(p)) if p is not None else None
                     ),
                 }
             )
@@ -114,11 +114,11 @@ def _le16(pos: int):
     return hi * 256 + lo
 
 
-def sniff_media_type(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def sniff_media_type(df: DataFrame) -> DataFrame:
     """Magic-number sniffing — adds `sniffed_type` from the leading bytes
     (the format column a 100 TB media lake derives once at ingest)."""
-    p = F.col(payload_col)
-    head = lambda n: F.expr(f"substring({payload_col}, 1, {n})")  # noqa: E731
+    p = F.col("payload")
+    head = lambda n: F.expr(f"substring(payload, 1, {n})")  # noqa: E731
     return df.withColumn(
         "sniffed_type",
         F.when(head(8) == F.lit(_PNG_SIG), "image/png")
@@ -128,10 +128,9 @@ def sniff_media_type(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
-def parse_png_gif_dims(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def parse_png_gif_dims(df: DataFrame) -> DataFrame:
     """Adds (width, height) parsed JVM-side for PNG/GIF payloads; null for
     formats that need the iterative JPEG walker."""
-    assert payload_col == "payload", "parsers address the column by name"
     is_png = F.expr("substring(payload, 1, 8)") == F.lit(_PNG_SIG)
     is_gif = F.expr("substring(payload, 1, 4)") == F.lit(b"GIF8")
     return df.withColumn(
@@ -139,7 +138,7 @@ def parse_png_gif_dims(df: DataFrame, payload_col: str = "payload") -> DataFrame
     ).withColumn("height", F.when(is_png, _be32(21)).when(is_gif, _le16(9)))
 
 
-def jpeg_dims(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def jpeg_dims(df: DataFrame) -> DataFrame:
     """JPEG SOF marker walk (Arrow-batched): skip variable-length segments
     until an SOF0-SOF3 frame header, read (height, width) from it. Adds
     (width, height); null when no SOF marker is found."""
@@ -164,7 +163,7 @@ def jpeg_dims(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            dims = pdf[payload_col].map(lambda p: walk(bytes(p)))
+            dims = pdf["payload"].map(lambda p: walk(bytes(p)))
             pdf = pdf.copy()
             pdf["width"] = dims.map(lambda t: t[0]).astype("Int32")
             pdf["height"] = dims.map(lambda t: t[1]).astype("Int32")
@@ -428,7 +427,7 @@ PIXEL_STATS_SCHEMA = (
 )
 
 
-def image_pixel_stats(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def image_pixel_stats(df: DataFrame) -> DataFrame:
     """Arrow-batched REAL pixel decode + per-channel statistics over a
     binary image column: (width, height, per-channel byte sums, and the
     top-row red sum — the row-order canary: a decoder that forgets the
@@ -445,7 +444,7 @@ def image_pixel_stats(df: DataFrame, id_col: str = "doc_id", payload_col: str = 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "width", "height", "sum_r", "sum_g", "sum_b", "top_row_sum_r")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 img = decode_image(bytes(payload))
                 out["doc_id"].append(doc_id)
                 if img is None:
@@ -490,7 +489,7 @@ def synth_pixel_image(doc_id: int, width: int, height: int, fmt: str) -> bytes:
     return encode_ppm(img)
 
 
-def attach_pixel_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_pixel_payload(df: DataFrame) -> DataFrame:
     """Fixture builder: (doc_id) → (doc_id, fmt, payload) with a
     deterministic BMP / PPM / PNG / GIF image per row (id % 4 picks the
     format), sized 5+id%13 × 3+id%5 so BMP row padding is exercised
@@ -502,7 +501,7 @@ def attach_pixel_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].astype("int64")
+            ids = pdf["doc_id"].astype("int64")
             fmts = [_FMTS[i % 4] for i in ids]
             payloads = [
                 synth_pixel_image(int(i), 5 + int(i) % 13, 3 + int(i) % 5, f)
@@ -510,7 +509,7 @@ def attach_pixel_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ]
             yield pd.DataFrame({"doc_id": ids, "fmt": fmts, "payload": payloads})
 
-    return df.select(id_col).mapInPandas(run, schema="doc_id BIGINT, fmt STRING, payload BINARY")
+    return df.select("doc_id").mapInPandas(run, schema="doc_id BIGINT, fmt STRING, payload BINARY")
 
 
 def synth_png(width, height):
@@ -750,7 +749,7 @@ def decode_gif(buf: bytes):
     return np.ascontiguousarray(img)
 
 
-def attach_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_jpeg_payload(df: DataFrame) -> DataFrame:
     """Fixture builder: (doc_id) → (doc_id, payload) with a spec-valid
     flat-color baseline JPEG per row — w = 8·(1+id%3), h = 8·(1+id%2),
     (Y, Cb, Cr) = (7id, 11id, 13id) mod 256 — whose decode is
@@ -759,7 +758,7 @@ def attach_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].astype("int64")
+            ids = pdf["doc_id"].astype("int64")
             payloads = [
                 encode_flat_jpeg(
                     8 * (1 + int(i) % 3),
@@ -772,22 +771,21 @@ def attach_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ]
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
-    return df.select(id_col).mapInPandas(run, schema="doc_id BIGINT, payload BINARY")
+    return df.select("doc_id").mapInPandas(run, schema="doc_id BIGINT, payload BINARY")
 
 
 # --- audio: WAV (RIFF/PCM) codec ---------------------------------------
 
 
-def encode_wav(samples, sample_rate: int = 16000, channels: int = 1) -> bytes:
-    """Encode int16 PCM samples as a canonical RIFF/WAVE file (fmt +
-    data chunks). `samples` is a 1-D (mono) or (N, channels) array."""
+def encode_wav(samples, sample_rate: int = 16000) -> bytes:
+    """Encode int16 mono PCM samples as a canonical RIFF/WAVE file (fmt +
+    data chunks)."""
     import struct
 
     import numpy as np
 
-    arr = np.asarray(samples, dtype=np.int16).reshape(-1, channels)
-    data = arr.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, channels, sample_rate, sample_rate * channels * 2, channels * 2, 16)
+    data = np.asarray(samples, dtype=np.int16).tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt + b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
@@ -829,7 +827,7 @@ AUDIO_STATS_SCHEMA = (
 )
 
 
-def audio_sample_stats(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def audio_sample_stats(df: DataFrame) -> DataFrame:
     """Arrow-batched REAL audio decode + loudness statistics over a
     binary WAV column: sample rate, channel count, total samples,
     sum(|s|) (the L1 loudness integral), peak |s|, and the signed DC sum
@@ -840,7 +838,7 @@ def audio_sample_stats(df: DataFrame, id_col: str = "doc_id", payload_col: str =
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "sample_rate", "channels", "n_samples", "sum_abs", "peak", "dc_sum")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 dec = decode_wav(bytes(payload))
                 out["doc_id"].append(doc_id)
                 if dec is None:
@@ -860,33 +858,33 @@ def audio_sample_stats(df: DataFrame, id_col: str = "doc_id", payload_col: str =
     return df.mapInPandas(run, schema=AUDIO_STATS_SCHEMA)
 
 
-def attach_wav_payload(df: DataFrame, id_col: str = "doc_id", n_samples: int = 480) -> DataFrame:
-    """Fixture builder: deterministic mono PCM per doc — sample i is
-    ((doc_id·31 + i·7) mod 65536) − 32768, sample rate 8000 + 1000·(id%4)
+def attach_wav_payload(df: DataFrame) -> DataFrame:
+    """Fixture builder: 480 deterministic mono PCM samples per doc —
+    sample i is ((doc_id·31 + i·7) mod 65536) − 32768, sample rate 8000 + 1000·(id%4)
     — every stat is exact integer arithmetic an oracle can restate."""
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].astype("int64")
+            ids = pdf["doc_id"].astype("int64")
             payloads = []
             for i in ids:
-                idx = np.arange(n_samples, dtype=np.int64)
+                idx = np.arange(480, dtype=np.int64)
                 samples = ((int(i) * 31 + idx * 7) % 65536) - 32768
                 payloads.append(encode_wav(samples.astype(np.int16), sample_rate=8000 + 1000 * (int(i) % 4)))
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
-    return df.select(id_col).mapInPandas(run, schema="doc_id BIGINT, payload BINARY")
+    return df.select("doc_id").mapInPandas(run, schema="doc_id BIGINT, payload BINARY")
 
 
 # --- video: MJPEG-in-AVI frame sampling --------------------------------
 
 
-def encode_mjpeg_avi(frames: list[bytes], width: int, height: int, fps: int = 10) -> bytes:
+def encode_mjpeg_avi(frames: list[bytes], width: int, height: int) -> bytes:
     """Minimal spec-shaped AVI (RIFF) wrapping MJPEG frames: LIST hdrl
     with an avih main header, LIST movi with one '00dc' chunk per JPEG
-    frame (odd sizes padded). Enough structure that a real RIFF walker
-    must skip the header list to find the frames."""
+    frame (odd sizes padded), at 10 frames per second. Enough structure
+    that a real RIFF walker must skip the header list to find the frames."""
     import struct
 
     def chunk(tag: bytes, body: bytes) -> bytes:
@@ -895,7 +893,7 @@ def encode_mjpeg_avi(frames: list[bytes], width: int, height: int, fps: int = 10
 
     avih = struct.pack(
         "<IIIIIIIIIIIIII",
-        1000000 // fps, 0, 0, 0x10, len(frames), 0, 1, 0, width, height, 0, 0, 0, 0,
+        1000000 // 10, 0, 0, 0x10, len(frames), 0, 1, 0, width, height, 0, 0, 0, 0,
     )
     hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih))
     movi = chunk(b"LIST", b"movi" + b"".join(chunk(b"00dc", f) for f in frames))
@@ -935,7 +933,7 @@ VIDEO_FRAME_SCHEMA = (
 )
 
 
-def frame_sample(df: DataFrame, every_n: int = 10, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
     """REAL video frame sampling for MJPEG-in-AVI payloads: RIFF walk →
     every `every_n`-th '00dc' frame → baseline JPEG decode
     (operators/jpeg.py) → per-frame channel sums. Each sampled frame is
@@ -950,7 +948,7 @@ def frame_sample(df: DataFrame, every_n: int = 10, id_col: str = "doc_id", paylo
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "frame_idx", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 frames = parse_avi_frames(bytes(payload))
                 if frames is None:
                     raise NotImplementedError(
@@ -976,7 +974,7 @@ def frame_sample(df: DataFrame, every_n: int = 10, id_col: str = "doc_id", paylo
     return df.mapInPandas(run, schema=VIDEO_FRAME_SCHEMA)
 
 
-def attach_mjpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_mjpeg_payload(df: DataFrame) -> DataFrame:
     """Fixture builder: per doc an MJPEG AVI of 4+id%3 flat-color 16×8
     frames, frame k colored (Y,Cb,Cr) = ((7id+17k), (11id+5k),
     (13id+3k)) mod 256 — every sampled frame's channel sums are exact
@@ -985,7 +983,7 @@ def attach_mjpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].astype("int64")
+            ids = pdf["doc_id"].astype("int64")
             payloads = []
             for i in ids:
                 i = int(i)
@@ -996,11 +994,11 @@ def attach_mjpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 payloads.append(encode_mjpeg_avi(frames, 16, 8))
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
-    return df.select(id_col).mapInPandas(run, schema="doc_id BIGINT, payload BINARY")
+    return df.select("doc_id").mapInPandas(run, schema="doc_id BIGINT, payload BINARY")
 
 
-def synth_quad_image(doc_id: int, width: int = 16, height: int = 16) -> bytes:
-    """Deterministic near-dup image family as a real PNG: the red
+def synth_quad_image(doc_id: int) -> bytes:
+    """Deterministic near-dup image family as a real 16x16 PNG: the red
     channel is a group-specific quadratic pattern (group = id % 8)
     plus a SPARSE per-document perturbation (variant = id // 8 shifts
     ~7 of 256 pixels), so documents in the same group are visually
@@ -1018,32 +1016,32 @@ def synth_quad_image(doc_id: int, width: int = 16, height: int = 16) -> bytes:
     import numpy as np
 
     g, k = doc_id % 8, doc_id // 8
-    xs = np.arange(width, dtype=np.int64)[None, :]
-    ys = np.arange(height, dtype=np.int64)[:, None]
+    xs = np.arange(16, dtype=np.int64)[None, :]
+    ys = np.arange(16, dtype=np.int64)[:, None]
     pert = np.where((5 * xs + 3 * ys) % 37 == 0, 11 * k, 0)
     r = ((2 + g) * xs * xs + (3 + 2 * g) * ys * ys + g * xs * ys + pert) % 256
     img = np.stack([r, (r + 85) % 256, (r + 170) % 256], axis=-1).astype("uint8")
     return encode_png(img)
 
 
-def attach_quad_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_quad_payload(df: DataFrame) -> DataFrame:
     """Fixture builder: (doc_id) → (doc_id, payload) with the quadratic
     near-dup PNG family of synth_quad_image. Arrow-batched."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].astype("int64")
+            ids = pdf["doc_id"].astype("int64")
             yield pd.DataFrame(
                 {"doc_id": ids, "payload": [synth_quad_image(int(i)) for i in ids]}
             )
 
-    return df.select(id_col).mapInPandas(run, schema="doc_id BIGINT, payload BINARY")
+    return df.select("doc_id").mapInPandas(run, schema="doc_id BIGINT, payload BINARY")
 
 
 AHASH_SCHEMA = "doc_id BIGINT, band0 BIGINT, band1 BIGINT, band2 BIGINT, band3 BIGINT"
 
 
-def image_ahash_bands(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def image_ahash_bands(df: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) over a binary image column,
     emitted as four 16-bit band keys for LSH-style banded pair search.
 
@@ -1064,7 +1062,7 @@ def image_ahash_bands(df: DataFrame, id_col: str = "doc_id", payload_col: str = 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "band0", "band1", "band2", "band3")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 out["doc_id"].append(doc_id)
                 img = None if payload is None else decode_image(bytes(payload))
                 if img is None or img.shape[0] != 16 or img.shape[1] != 16:

@@ -26,12 +26,12 @@ from pyspark.sql import functions as F
 from etl_file_sync_spark.operators.similarity import vec_ok
 
 
-def covariance_moments(df: DataFrame, vec_col: str = "embedding") -> tuple[int, np.ndarray, np.ndarray]:
-    """Exact (n, mean, sample covariance) of the vector column in one
+def covariance_moments(df: DataFrame) -> tuple[int, np.ndarray, np.ndarray]:
+    """Exact (n, mean, sample covariance) of the embedding column in one
     distributed pass. Returns driver-side numpy arrays (d,) and (d, d)."""
-    v = df.where(vec_ok(F.col(vec_col))).select(
+    v = df.where(vec_ok(F.col("embedding"))).select(
         F.spark_partition_id().alias("pid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
 
     def partials(batches):
@@ -65,12 +65,12 @@ def covariance_moments(df: DataFrame, vec_col: str = "embedding") -> tuple[int, 
     return n, m, cov
 
 
-def pca_fit(df: DataFrame, k: int, vec_col: str = "embedding"):
+def pca_fit(df: DataFrame, k: int):
     """Top-k principal components from the exact covariance: returns
     (mean (d,), components (k, d), explained_variance (k,), total_var).
     Sign convention: each component's largest-|coordinate| entry is
     made positive, so the fit is reproducible across runs."""
-    _n, m, cov = covariance_moments(df, vec_col)
+    _n, m, cov = covariance_moments(df)
     evals, evecs = np.linalg.eigh(cov)  # ascending
     order = np.argsort(evals)[::-1][:k]
     comps = evecs[:, order].T  # (k, d)
@@ -81,36 +81,31 @@ def pca_fit(df: DataFrame, k: int, vec_col: str = "embedding"):
     return m, comps, evals[order], float(evals.sum())
 
 
-def pca_project(
-    df: DataFrame,
-    mean: np.ndarray,
-    components: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pcs",
-) -> DataFrame:
-    """Map-only projection pass: (x - mean) @ components.T as an
-    array<double> column. Broadcast the (k, d) matrix; never shuffles."""
+def pca_project(df: DataFrame, mean: np.ndarray, components: np.ndarray) -> DataFrame:
+    """Map-only projection pass: (embedding - mean) @ components.T as the
+    array<double> column ``pcs``, in place of ``embedding``. Broadcast
+    the (k, d) matrix; never shuffles."""
     spark = df.sparkSession
     bM = spark.sparkContext.broadcast((mean, components))
     cols = df.columns
 
-    df = df.where(vec_ok(F.col(vec_col)))  # aggregate-style NULL drop
+    df = df.where(vec_ok(F.col("embedding")))  # aggregate-style NULL drop
 
     def project(batches):
         m, C = bM.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             P = (V - m) @ C.T
-            out = pdf.drop(columns=[vec_col])
-            out[out_col] = list(P)
+            out = pdf.drop(columns=["embedding"])
+            out["pcs"] = list(P)
             yield out
 
     keep = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in df.schema.fields
-        if f.name != vec_col
+        if f.name != "embedding"
     )
-    out = df.select(*cols).mapInPandas(project, f"{keep}, {out_col} array<double>")
+    out = df.select(*cols).mapInPandas(project, f"{keep}, pcs array<double>")
     return out

@@ -13,7 +13,7 @@ Distributed shape (same posture as operators/similarity.py):
 - OPEN: ONE driver collect over a union of small branches fetches
   everything a build starts from — the usable-corpus count, the k
   id-smallest usable vectors (the codebook seed), up to
-  max_queries + 1 usable query vectors and, for ivfpq_topk, the
+  MAX_QUERIES + 1 usable query vectors and, for ivfpq_topk, the
   centroid rows. Either side empty ⇒ the empty top-k frame, before any
   training. Locally every driver action pays a ~200 ms scheduling
   floor at any data size, so the opening actions are fused, not
@@ -26,7 +26,7 @@ Distributed shape (same posture as operators/similarity.py):
   codeword init is the id-ordered seed, ties break to the lowest
   codeword id, partial sums reduce in sorted order.
 - ENCODE + SEARCH: broadcast the per-query LUTs, one narrow pass that
-  encodes each batch (a GEMM per subspace) and emits its top-`shortlist`
+  encodes each batch (a GEMM per subspace) and emits its top-SHORTLIST
   per query (per-partition heaps —
   the TakeOrdered shape), then ONE exact-cosine rerank join on the tiny
   shortlist, shared by pq_topk and ivfpq_topk. Recall comes from the
@@ -51,7 +51,6 @@ from etl_file_sync_spark.operators.similarity import (
     QuerySideTooLarge,
     _normalized_centroids,
     cosine_expr,
-    kmeans_centroids,
     make_centroids,
     vec_ok,
 )
@@ -60,6 +59,14 @@ from etl_file_sync_spark.operators.similarity import (
 # FAISS practice; DEVIATIONS.md r3): k-means converges on a bounded
 # sample, so training cost stays constant at any corpus size.
 MAX_TRAIN = 20_000
+
+# The search settings: M subspaces of KCENT codewords each, trained with
+# ITERS Lloyd rounds, and a rerank SHORTLIST per query. The query side
+# is bounded like cosine_topk's (QuerySideTooLarge past MAX_QUERIES).
+# ivfpq_topk's cells are every EVERY-th vector, NPROBE probed per query.
+M, KCENT, ITERS, SHORTLIST = 16, 32, 3, 100
+MAX_QUERIES = 10_000
+EVERY, NPROBE = 50, 3
 
 _TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double, nn_rank int"
 
@@ -188,40 +195,40 @@ def _train(v: DataFrame, n: int, seed_rows: list, m: int, k: int, iters: int) ->
         v.unpersist()
 
 
-def _open_ann(name, corpus, queries, m, kcent, iters, id_col, vec_col, max_queries, cents=None):
+def _open_ann(name, corpus, queries, cents=None):
     """Open a pq_topk/ivfpq_topk build with one driver action, then train.
     Returns None when the corpus or the query side has no usable vector
     (ANN is undefined), else (normalized corpus stream, codebooks, query
     ids, normalized query matrix, (centroid ids, normalized centroid
     matrix) or None)."""
-    v = _normalized_matrix_stream(corpus, id_col, vec_col)
-    usable_q = queries.where(vec_ok(F.col(vec_col))).limit(max_queries + 1)
-    branches = [_branch(usable_q, 2, F.col(id_col), F.col(vec_col))]
+    v = _normalized_matrix_stream(corpus, "vec_id", "embedding")
+    usable_q = queries.where(vec_ok(F.col("embedding"))).limit(MAX_QUERIES + 1)
+    branches = [_branch(usable_q, 2, F.col("vec_id"), F.col("embedding"))]
     if cents is not None:
         branches.append(_branch(cents, 3, F.col("centroid_id"), F.col("cv")))
-    n, seed_rows, qrows, *cent_rows = _open(v, kcent, *branches)
+    n, seed_rows, qrows, *cent_rows = _open(v, KCENT, *branches)
     if n == 0 or not qrows:
         return None
-    if len(qrows) > max_queries:
-        raise QuerySideTooLarge(f"{name} query side exceeds max_queries={max_queries}")
-    C = _train(v, n, seed_rows, m, kcent, iters)
+    if len(qrows) > MAX_QUERIES:
+        raise QuerySideTooLarge(f"{name} query side exceeds max_queries={MAX_QUERIES}")
+    C = _train(v, n, seed_rows, M, KCENT, ITERS)
     qids = np.array([r.id for r in qrows], dtype=np.int64)
     Q = np.array([list(r.v) for r in qrows], dtype=np.float64)
     cmat = _normalized_centroids([(r.id, r.v) for r in cent_rows[0]]) if cent_rows else None
     return v, C, qids, Q / np.linalg.norm(Q, axis=1, keepdims=True), cmat
 
 
-def _shortlist_rerank(scored, corpus, queries, k, shortlist, id_col, vec_col) -> DataFrame:
-    """The shared tail: keep each query's top-`shortlist` candidates by
+def _shortlist_rerank(scored, corpus, queries, k) -> DataFrame:
+    """The shared tail: keep each query's top-SHORTLIST candidates by
     pq_score, then rerank only those with exact cosine."""
     w = W.partitionBy("query_id").orderBy(F.col("pq_score").desc(), F.col("neighbor_id"))
     short = (
         scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= shortlist)
+        .filter(F.col("r") <= SHORTLIST)
         .select("query_id", "neighbor_id")
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv"))
-    nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("nv"))
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("qv"))
+    nv = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").cast("array<double>").alias("nv"))
     rer = (
         short.join(F.broadcast(qv), "query_id")
         .join(nv, "neighbor_id")
@@ -235,29 +242,18 @@ def _shortlist_rerank(scored, corpus, queries, k, shortlist, id_col, vec_col) ->
     )
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    shortlist: int = 100,
-    m: int = 16,
-    kcent: int = 32,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 10_000,
-) -> DataFrame:
+def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """PQ-ADC top-k with exact rerank: LUT-score every corpus code,
-    keep each batch's top-`shortlist` per query, rerank the global
+    keep each batch's top-SHORTLIST per query, rerank the global
     shortlist with exact cosine. Returns (query_id, neighbor_id,
     cosine, nn_rank) — same contract as cosine_topk/ivf_topk.
 
     Query side is small BY CONTRACT (broadcast LUTs), enforced like
-    cosine_topk: at most `max_queries` usable query vectors; batch-scale
+    cosine_topk: at most MAX_QUERIES usable query vectors; batch-scale
     query sets would partition the LUT frame.
     """
     spark = corpus.sparkSession
-    opened = _open_ann("pq_topk", corpus, queries, m, kcent, iters, id_col, vec_col, max_queries)
+    opened = _open_ann("pq_topk", corpus, queries)
     if opened is None:
         return spark.createDataFrame([], _TOPK_SCHEMA)
     v, C, qids, Q, _ = opened
@@ -265,7 +261,6 @@ def pq_topk(
     # ADC lookup tables: (n_queries, m, k) inner products
     lut = np.einsum("qms,mks->qmk", Q.reshape(len(Q), mm, ss), C)
     blut = spark.sparkContext.broadcast((qids, lut, C))
-    top_b = shortlist
 
     # ONE fused Arrow pass: encode + LUT-score + per-batch shortlist.
     # The old shape chained TWO mapInPandas stages (encode, then adc
@@ -288,7 +283,7 @@ def pq_topk(
             scores = np.zeros((nq, n))
             for j in range(L.shape[1]):
                 scores += L[:, j, :][:, codes_m[:, j]]
-            take = min(top_b, n)
+            take = min(SHORTLIST, n)
             idx = np.argpartition(-scores, take - 1, axis=1)[:, :take]
             nid = pdf["id"].values
             yield pd.DataFrame(
@@ -301,31 +296,16 @@ def pq_topk(
 
     scored = v.mapInPandas(enc_adc, "query_id long, neighbor_id long, pq_score double")
     return _shortlist_rerank(
-        scored.filter(F.col("query_id") != F.col("neighbor_id")),
-        corpus, queries, k, shortlist, id_col, vec_col,
+        scored.filter(F.col("query_id") != F.col("neighbor_id")), corpus, queries, k
     )
 
 
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    every: int = 50,
-    nprobe: int = 3,
-    shortlist: int = 100,
-    m: int = 16,
-    kcent: int = 32,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 10_000,
-    kmeans_iters: int = 0,
-) -> DataFrame:
+def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """IVF+PQ: the billion-scale serving composition — coarse cells
     prune the scan (IVF), PQ codes compress what remains, ADC scores
     only (query, probed-cell vector) pairs, and a small exact rerank
     restores true cosines. Per query the work is
-    O(nprobe · avg_cell · m) table lookups instead of O(n · d) floats.
+    O(NPROBE · avg_cell · M) table lookups instead of O(n · d) floats.
 
     At 100 TB the corpus is written partitioned by centroid_id with a
     codes column; probing prunes partitions at scan time and the raw
@@ -335,15 +315,10 @@ def ivfpq_topk(
     contract as cosine_topk / ivf_topk / pq_topk.
     """
     spark = corpus.sparkSession
-    if kmeans_iters > 0:
-        cents = kmeans_centroids(corpus, every, kmeans_iters, id_col, vec_col)
-    else:
-        cents = make_centroids(corpus, every, id_col, vec_col)
+    cents = make_centroids(corpus, EVERY)
     # the centroid rows ride in the opening collect; the assign pass and
     # the probe selection below share the one matrix
-    opened = _open_ann(
-        "ivfpq_topk", corpus, queries, m, kcent, iters, id_col, vec_col, max_queries, cents
-    )
+    opened = _open_ann("ivfpq_topk", corpus, queries, cents)
     if opened is None:
         return spark.createDataFrame([], _TOPK_SCHEMA)
     v, C, qids, Q, (cids, Cn) = opened
@@ -359,7 +334,7 @@ def ivfpq_topk(
     # raw vectors from `corpus`, never from this pass. (At 100 TB the
     # corpus is WRITTEN partitioned by centroid_id instead — docstring.)
     if len(cids) == 0:
-        # no centroids (no id divisible by `every`): nothing assignable,
+        # no centroids (no id divisible by EVERY): nothing assignable,
         # same empty candidate set the ivf_assign path produced
         coded = spark.createDataFrame([], "id bigint, centroid_id bigint, codes array<int>")
     else:
@@ -384,7 +359,7 @@ def ivfpq_topk(
 
         coded = v.mapInPandas(assign_encode, "id bigint, centroid_id bigint, codes array<int>")
 
-    npr = min(nprobe, len(cids))
+    npr = min(NPROBE, len(cids))
     top_cells = np.argsort(-(Q @ Cn.T), axis=1, kind="stable")[:, :npr]  # (nq, npr)
     probes = local_rows_df(
         spark,
@@ -423,4 +398,4 @@ def ivfpq_topk(
     scored = cand.select("query_id", "id", "codes").mapInPandas(
         adc_pairs, "query_id long, neighbor_id long, pq_score double"
     )
-    return _shortlist_rerank(scored, corpus, queries, k, shortlist, id_col, vec_col)
+    return _shortlist_rerank(scored, corpus, queries, k)

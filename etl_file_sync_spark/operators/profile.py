@@ -2,9 +2,8 @@
 100 TB pipeline runs before anything else touches the data.
 
 profile_table: one aggregation pass over the whole table producing one
-row per column (null count, exact distinct, min/max as strings). The
-single wide agg keeps it one job regardless of column count; at scale
-swap exact distinct for approx_count_distinct.
+row per named column (null count, exact distinct, min/max as strings).
+The single wide agg keeps it one job regardless of column count.
 
 check_constraints: dbt-style declarative checks (not_null / unique /
 foreign_key / accepted_values) evaluated as counts of VIOLATIONS, so an
@@ -19,18 +18,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_table(df: DataFrame, columns: list[str] | None = None, exact: bool = True) -> DataFrame:
-    """One row per column: (column, n_rows, n_nulls, n_distinct, min_val,
-    max_val) — min/max cast to string for a uniform schema."""
-    cols = columns or df.columns
+def profile_table(df: DataFrame, columns: list[str]) -> DataFrame:
+    """One row per column of ``columns``: (column, n_rows, n_nulls,
+    n_distinct, min_val, max_val) — min/max cast to string for a uniform
+    schema."""
     aggs = [F.count(F.lit(1)).alias("_n")]
-    for i, c in enumerate(cols):
+    for i, c in enumerate(columns):
         col = F.col(c)
         aggs.append(F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"_c{i}_nulls"))
-        if exact:
-            aggs.append(F.countDistinct(col).alias(f"_c{i}_nd"))
-        else:
-            aggs.append(F.approx_count_distinct(col).alias(f"_c{i}_nd"))
+        aggs.append(F.countDistinct(col).alias(f"_c{i}_nd"))
         aggs.append(F.min(col).cast("string").alias(f"_c{i}_min"))
         aggs.append(F.max(col).cast("string").alias(f"_c{i}_max"))
     wide = df.agg(*aggs)
@@ -38,11 +34,11 @@ def profile_table(df: DataFrame, columns: list[str] | None = None, exact: bool =
     # quotes, keywords) never reach the SQL string — only the label literal
     stack_args = ", ".join(
         f"'{c.replace(chr(39), chr(39) * 2)}', _c{i}_nulls, _c{i}_nd, _c{i}_min, _c{i}_max"
-        for i, c in enumerate(cols)
+        for i, c in enumerate(columns)
     )
     return wide.selectExpr(
         "_n AS n_rows",
-        f"stack({len(cols)}, {stack_args}) AS (column, n_nulls, n_distinct, min_val, max_val)",
+        f"stack({len(columns)}, {stack_args}) AS (column, n_nulls, n_distinct, min_val, max_val)",
     ).select("column", "n_rows", "n_nulls", "n_distinct", "min_val", "max_val")
 
 

@@ -31,18 +31,19 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, term) token stream: whitespace split, empties dropped."""
+def tokens(df: DataFrame) -> DataFrame:
+    """(id, term) token stream of (doc_id, text): whitespace split,
+    empties dropped."""
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), " ")).alias("term"))
+        df.select(F.col("doc_id").alias("id"), F.explode(F.split(F.col("text"), " ")).alias("term"))
         .where(F.length("term") > 0)
     )
 
 
-def postings(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def postings(df: DataFrame) -> DataFrame:
     """Inverted-index postings: (term, id, tf). One explode + one
     partial-aggregated groupBy — the only wide op in the index build."""
-    return tokens(df, id_col, text_col).groupBy("term", "id").agg(F.count(F.lit(1)).alias("tf"))
+    return tokens(df).groupBy("term", "id").agg(F.count(F.lit(1)).alias("tf"))
 
 
 def term_doc_freq(post: DataFrame) -> DataFrame:
@@ -54,15 +55,12 @@ def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
     k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """BM25 top-k documents for a bag-of-words query.
 
     Lucene-style idf = ln(1 + (N - df + 0.5)/(df + 0.5));
-    tf term = tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl)).
+    tf term = tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl)), with
+    k1 = BM25_K1 and b = BM25_B.
 
     Execution shape — index-free for a bounded query-term set: one
     NARROW projection computes per-doc dl and per-query-term tf as JVM
@@ -89,7 +87,7 @@ def bm25_topk(
     terms = list(dict.fromkeys(query_terms))  # dup query terms must not double-count
     if not terms:
         raise ValueError("bm25_topk requires at least one query term")
-    arr = F.filter(F.split(F.col(text_col), " "), lambda x: F.length(x) > 0)
+    arr = F.filter(F.split(F.col("text"), " "), lambda x: F.length(x) > 0)
 
     def _tf(term: str):  # single-arg lambda: a 2-arg lambda would receive the array index
         return F.size(F.filter(arr, lambda x: x == F.lit(term)))
@@ -100,7 +98,7 @@ def bm25_topk(
     # unicode-poked tier introduced empty/whitespace-only documents)
     per_doc = (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.size(arr).alias("dl"),
             *[_tf(t).alias(f"tf_{i}") for i, t in enumerate(terms)],
         )
@@ -119,8 +117,8 @@ def bm25_topk(
         F.when(
             F.col(f"tf_{i}") > 0,
             F.log(F.lit(1.0) + (F.col("n_docs") - F.col(f"df_{i}") + 0.5) / (F.col(f"df_{i}") + 0.5))
-            * (F.col(f"tf_{i}") * (k1 + 1.0))
-            / (F.col(f"tf_{i}") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
+            * (F.col(f"tf_{i}") * (BM25_K1 + 1.0))
+            / (F.col(f"tf_{i}") + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))),
         ).otherwise(F.lit(0.0))
         for i in range(len(terms))
     ]
@@ -142,6 +140,6 @@ def bm25_topk(
         )
     )
     return top.select(
-        F.col("id").alias(id_col), F.round("score", 4).alias("bm25"), "rnk"
+        F.col("id").alias("doc_id"), F.round("score", 4).alias("bm25"), "rnk"
     )
 

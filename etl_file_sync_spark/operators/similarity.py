@@ -79,8 +79,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_queries: int = 10_000,
 ) -> DataFrame:
     """Brute-force cosine top-k: for each query vector the k nearest
@@ -106,8 +104,8 @@ def cosine_topk(
     # caller hands us a huge frame — the failure mode is an exception,
     # not a driver OOM.
     qrows = (
-        queries.where(vec_ok(F.col(vec_col)))  # NULL vectors have no neighbors
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
+        queries.where(vec_ok(F.col("embedding")))  # NULL vectors have no neighbors
+        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
         .limit(max_queries + 1)
         .collect()
     )
@@ -143,8 +141,8 @@ def cosine_topk(
             )
             yield out[out.query_id != out.neighbor_id]
 
-    c = corpus.where(vec_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("v")
+    c = corpus.where(vec_ok(F.col("embedding"))).select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("v")
     )
     scored = c.mapInPandas(score, "query_id long, neighbor_id long, cosine double")
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
@@ -177,8 +175,6 @@ def _normalized_centroids(rows):
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_decimals: int | None = None,
     with_score: bool = False,
     cmat: tuple[np.ndarray, np.ndarray] | None = None,
@@ -189,9 +185,9 @@ def ivf_assign(
     of (id vector, normalized centroid matrix). When given, ``centroids``
     is IGNORED entirely — the caller asserts cmat was collected from the
     same centroid frame (a cmat from a different frame would silently
-    produce wrong assignments). ivf_topk/ivfpq_topk need the same matrix
-    for their probe selection, so they collect once and pass it here —
-    one driver action instead of two identical collects.
+    produce wrong assignments). ivf_topk needs the same matrix for its
+    probe selection, so it collects once and passes it here — one
+    driver action instead of two identical collects.
 
     One Arrow-batched GEMM per batch against the broadcast normalized
     centroid matrix — a NARROW map stage, zero shuffle, BLAS throughput.
@@ -199,7 +195,7 @@ def ivf_assign(
     zip_with/aggregate cosine — pays n·k interpreted HOF evaluations and
     measured 60x worse at the 500k-row tier in SCALE.md.) Ties go to the
     lowest centroid_id (argmax picks the first maximum of the id-sorted
-    matrix). Returns (id_col, v, centroid_id).
+    matrix). Returns (vec_id, v, centroid_id).
 
     round_decimals quantizes the cosine BEFORE the argmax: two engines
     computing the same double-precision cosine agree to ~1e-14, so an
@@ -217,7 +213,7 @@ def ivf_assign(
 
     cids, Cn = cmat if cmat is not None else _centroid_matrix(centroids)
     if len(cids) == 0:  # empty centroid set: nothing assignable
-        schema = f"{id_col} bigint, v array<double>, centroid_id bigint"
+        schema = "vec_id bigint, v array<double>, centroid_id bigint"
         if with_score:
             schema += ", cos double"
         return df.sparkSession.createDataFrame([], schema)
@@ -239,29 +235,23 @@ def ivf_assign(
                 cols["cos"] = S[np.arange(len(best)), best]
             yield pd.DataFrame(cols)
 
-    v = df.where(vec_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    v = df.where(vec_ok(F.col("embedding"))).select(
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
     )
     schema = "id bigint, v array<double>, centroid_id bigint"
     if with_score:
         schema += ", cos double"
     out = v.mapInPandas(assign, schema)
-    return out.withColumnRenamed("id", id_col)
+    return out.withColumnRenamed("id", "vec_id")
 
 
-def assign_top2(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_decimals: int = 9,
-) -> DataFrame:
+def assign_top2(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest AND second-nearest centroid per vector — the inputs a
     simplified silhouette needs. Same broadcast-GEMM narrow map stage as
-    ivf_assign; cosines are quantized (round_decimals) before both
-    argmaxes so the (cos desc, centroid_id asc) selection is decided
-    identically in any engine. Returns (id_col, centroid_id, cos,
-    centroid_id_2nd, cos_2nd); requires >= 2 centroids.
+    ivf_assign; cosines are rounded to 9 decimals before both argmaxes
+    so the (cos desc, centroid_id asc) selection is decided identically
+    in any engine. Returns (vec_id, centroid_id, cos, centroid_id_2nd,
+    cos_2nd); requires >= 2 centroids.
     """
     import numpy as np
     import pandas as pd
@@ -273,7 +263,7 @@ def assign_top2(
         # here would abort whole-pipeline runs over degenerate extracts)
         return df.sparkSession.createDataFrame(
             [],
-            f"{id_col} bigint, centroid_id bigint, cos double,"
+            "vec_id bigint, centroid_id bigint, cos double,"
             " centroid_id_2nd bigint, cos_2nd double",
         )
     b = df.sparkSession.sparkContext.broadcast((cids, Cn))
@@ -285,7 +275,7 @@ def assign_top2(
                 continue
             V = np.array(pdf["v"].tolist(), dtype=np.float64)
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            S = np.round(Vn @ Cm.T, round_decimals)
+            S = np.round(Vn @ Cm.T, 9)
             rows = np.arange(len(S))
             best = np.argmax(S, axis=1)  # ties -> lowest centroid_id
             cos1 = S[rows, best]
@@ -301,114 +291,32 @@ def assign_top2(
                 }
             )
 
-    v = df.where(vec_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    v = df.where(vec_ok(F.col("embedding"))).select(
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
     )
     out = v.mapInPandas(
         assign,
         "id bigint, centroid_id bigint, cos double, centroid_id_2nd bigint, cos_2nd double",
     )
-    return out.withColumnRenamed("id", id_col)
+    return out.withColumnRenamed("id", "vec_id")
 
 
-def make_centroids(df: DataFrame, every: int = 50, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Deterministic centroid seed set: every Nth vector by id.
-
-    The k-means seed; `kmeans_centroids` refines it with Lloyd
-    iterations. Used bare it keeps the operator fully reproducible for
-    the correctness harness (no iteration, no float-order sensitivity).
+def make_centroids(df: DataFrame, every: int = 50) -> DataFrame:
+    """Deterministic centroid set: every Nth vector by id. No iteration
+    and no float-order sensitivity, so the IVF operators stay fully
+    reproducible for the correctness harness.
     """
     return (
-        df.filter((F.col(id_col) % every == 0) & vec_ok(F.col(vec_col)))
+        df.filter((F.col("vec_id") % every == 0) & vec_ok(F.col("embedding")))
         # integer `div`, not float `/`: the id is an exact multiple of
         # `every`, so integer division is exact at ANY magnitude, while
         # float division rounds above 2^53 and the engines' double->int
         # casts then disagree (trunc vs round-half-away) — extreme-id tier
         .select(
-            F.expr(f"{id_col} div {every}").cast("bigint").alias("centroid_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
+            F.expr(f"vec_id div {every}").cast("bigint").alias("centroid_id"),
+            F.col("embedding").cast("array<double>").alias("cv"),
         )
     )
-
-
-def kmeans_centroids(
-    df: DataFrame,
-    every: int = 50,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Spherical k-means (Lloyd) refinement of the stride seed set.
-
-    Distributed shape per iteration: broadcast the (k × dim) centroid
-    matrix, one Arrow-batched pass over the corpus emitting PARTIAL
-    per-centroid (count, sum-vector) rows — a map-side combine, so only
-    n_partitions·k tiny rows ever reach the driver (that is aggregate
-    metadata, not data; same posture as any .agg().collect()). The
-    corpus itself never shuffles and is never collected. New centroid =
-    re-normalized mean of its assigned normalized vectors; empty
-    clusters keep their previous centroid. Deterministic given the data
-    and seed set (argmin ties break to the lowest centroid_id; partial
-    sums are reduced in sorted-partition order on the driver).
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = df.sparkSession
-    seed = make_centroids(df, every, id_col, vec_col).collect()  # k rows — tiny by design
-    if not seed:  # degenerate corpus: no seeds, empty centroid frame
-        return spark.createDataFrame([], "centroid_id bigint, cv array<double>")
-    cids = np.array([r.centroid_id for r in seed], dtype=np.int64)
-    order = np.argsort(cids)
-    cids = cids[order]
-    C = np.array([list(r.cv) for r in seed], dtype=np.float64)[order]
-    C = C / np.linalg.norm(C, axis=1, keepdims=True)
-
-    v = df.where(vec_ok(F.col(vec_col))).select(
-        F.spark_partition_id().alias("pid"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-
-    for _ in range(max(0, iters)):
-        bC = spark.sparkContext.broadcast(C)
-
-        def partial_sums(batches):
-            Cm = bC.value
-            k, dim = Cm.shape
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.array(pdf["v"].tolist(), dtype=np.float64)
-                Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-                assign = np.argmax(Vn @ Cm.T, axis=1)  # ties -> lowest index
-                sums = np.zeros((k, dim))
-                np.add.at(sums, assign, Vn)
-                counts = np.bincount(assign, minlength=k)
-                nz = np.where(counts > 0)[0]
-                yield pd.DataFrame(
-                    {
-                        "pid": int(pdf["pid"].iloc[0]),
-                        "cidx": nz.astype(np.int64),
-                        "n": counts[nz].astype(np.int64),
-                        "s": list(sums[nz]),
-                    }
-                )
-
-        part = v.mapInPandas(partial_sums, "pid int, cidx long, n long, s array<double>").toPandas()
-        part = part.sort_values(["cidx", "pid"], kind="mergesort")  # fixed reduce order
-        newC = C.copy()
-        for cidx, grp in part.groupby("cidx", sort=True):
-            s = np.sum(np.array(grp["s"].tolist(), dtype=np.float64), axis=0)
-            norm = np.linalg.norm(s)
-            if norm > 0:
-                newC[int(cidx)] = s / norm
-        bC.destroy()
-        if np.allclose(newC, C, atol=1e-12):
-            C = newC
-            break
-        C = newC
-
-    out = pd.DataFrame({"centroid_id": cids, "cv": list(C)})
-    return spark.createDataFrame(out, schema="centroid_id bigint, cv array<double>")
 
 
 def ivf_topk(
@@ -417,30 +325,21 @@ def ivf_topk(
     k: int = 5,
     every: int = 50,
     nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    kmeans_iters: int = 0,
 ) -> DataFrame:
     """IVF approximate top-k: probe only the nprobe closest centroid
-    buckets per query. The corpus⋈bucket join is an equi-join on
+    buckets per query. The cells are the stride centroids of
+    make_centroids. The corpus⋈bucket join is an equi-join on
     centroid_id — at 100 TB the corpus would be written partitioned by
     centroid_id so probing prunes partitions at scan time.
 
-    kmeans_iters > 0 refines the stride seed with spherical-k-means
-    Lloyd rounds (better-balanced cells → higher recall per probe);
-    0 keeps the raw deterministic stride seed.
-
     Returns (query_id, neighbor_id, cosine, nn_rank).
     """
-    if kmeans_iters > 0:
-        cents = kmeans_centroids(corpus, every, kmeans_iters, id_col, vec_col)
-    else:
-        cents = make_centroids(corpus, every, id_col, vec_col)
+    cents = make_centroids(corpus, every)
     # collect the centroid matrix ONCE; the assign pass and the probe
     # selection below share it (one driver action, not two). cents has
     # exactly one consumer (this collect), so no cache (round-8 ADVICE).
     cmat = _centroid_matrix(cents)
-    assigned = ivf_assign(corpus, cents, id_col, vec_col, cmat=cmat)  # (vec_id, v, centroid_id)
+    assigned = ivf_assign(corpus, cents, cmat=cmat)  # (vec_id, v, centroid_id)
 
     # probe selection: same Arrow GEMM shape as ivf_assign, top-nprobe
     # cells per query (stable argsort keeps ties on the lower centroid_id)
@@ -468,19 +367,19 @@ def ivf_topk(
                 }
             )
 
-    q = queries.where(vec_ok(F.col(vec_col))).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
+    q = queries.where(vec_ok(F.col("embedding"))).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("qv")
     )
     probes = q.mapInPandas(probe, "query_id bigint, qv array<double>, centroid_id bigint")
 
     scored = (
         assigned.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("query_id") != F.col(id_col))
+        .filter(F.col("query_id") != F.col("vec_id"))
         .withColumn("cosine", cosine_expr(F.col("qv"), F.col("v")))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("nn_rank", F.row_number().over(w))
         .filter(F.col("nn_rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), F.round("cosine", 4).alias("cosine"), "nn_rank")
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), F.round("cosine", 4).alias("cosine"), "nn_rank")
     )

@@ -76,9 +76,9 @@ def normalize_text(col: Column | str) -> Column:
 NORM_SQL = ASCII_LOWER_SQL.format(x="trim(regexp_replace(text, '\\s+', ' ', 'g'), ' ')")
 
 
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_stats(df: DataFrame) -> DataFrame:
     """Add n_tokens / n_distinct_tokens / avg_token_len / ttr columns."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     return (
         df.withColumn("n_tokens", F.size(toks))
         .withColumn("n_distinct_tokens", F.size(F.array_distinct(toks)))
@@ -100,22 +100,22 @@ def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_SPLIT_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
-def with_bpe_token_estimate(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_bpe_token_estimate(df: DataFrame) -> DataFrame:
     """Add n_bpe_tokens: subword-budget estimate via a BPE-ish pretokenizer
     split (letter runs / digit runs / punctuation marks), the cheap stand-in
     for a real tokenizer when budgeting sequence lengths. Narrow JVM regex —
     no Python, no shuffle."""
     return df.withColumn(
         "n_bpe_tokens",
-        F.size(F.expr(f"regexp_extract_all({text_col}, '{BPE_SPLIT_RE}', 0)")),
+        F.size(F.expr(f"regexp_extract_all(text, '{BPE_SPLIT_RE}', 0)")),
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality score in [0,1]: length band + type-token ratio +
     stopword presence — the standard cheap pre-filter before expensive
     model-based scoring in LLM data pipelines."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     n = F.size(toks)
     ttr = F.size(F.array_distinct(toks)) / n
     stop_hits = F.size(F.array_intersect(F.array_distinct(toks), F.array(*[F.lit(w) for w in STOPWORDS])))
@@ -124,14 +124,14 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("quality_score", score)
 
 
-def with_lang_pred(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_lang_pred(df: DataFrame) -> DataFrame:
     """Heuristic language ID: argmax of stopword-profile hits.
 
     Ties resolve to the HIGHEST language code (deterministic — array_max
     over (hits, lang) structs compares hits first, then lang). Falls back
     to 'und' when no profile matches.
     """
-    dist = F.array_distinct(tokens(text_col))
+    dist = F.array_distinct(tokens("text"))
     scored = F.array(
         *[
             F.struct(
@@ -149,14 +149,14 @@ def with_lang_pred(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("lang_pred", F.coalesce(best["lang"], F.lit("und")))
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_fingerprint(df: DataFrame) -> DataFrame:
     """Deterministic document fingerprint: sha256 of the normalized text
     (cross-engine reproducible) plus a cheap 64-bit xxhash for joins."""
-    norm = normalize_text(text_col)
+    norm = normalize_text("text")
     return df.withColumn("fp_sha", F.sha2(norm, 256)).withColumn("fp_xx64", F.xxhash64(norm))
 
 
-def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document (public heuristics
     from the Gopher/MassiveText data-quality literature):
 
@@ -169,8 +169,8 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     and no key is hotter than the longest single document. Boilerplate-
     heavy docs (the ones dedup misses) light up on dup_*_frac.
     """
-    toks = F.filter(tokens(text_col), lambda w: F.length(w) > 0)
-    base = df.select(F.col(id_col).alias("id"), toks.alias("w"))
+    toks = F.filter(tokens("text"), lambda w: F.length(w) > 0)
+    base = df.select(F.col("doc_id").alias("id"), toks.alias("w"))
     grams = base.select(
         "id",
         F.explode(
@@ -201,7 +201,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         F.sum(F.when((F.col("kind") == "2") & (F.col("c") > 1), F.col("c"))).alias("dup_bg_c"),
     )
     return per_doc.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.col("n_words").cast("bigint").alias("n_words"),
         F.round(F.col("top_c") / F.col("n_words"), 4).alias("top_word_frac"),
         F.round(F.coalesce(F.col("dup_c"), F.lit(0)) / F.col("n_words"), 4).alias("dup_word_frac"),
@@ -211,13 +211,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_len: int = 512,
-    bucket_width: int = 4096,
-) -> DataFrame:
+def pack_sequences(df: DataFrame, max_len: int = 512, bucket_width: int = 4096) -> DataFrame:
     """Sequence packing for pretraining: concatenate the token stream in
     id order and chunk it into fixed `max_len` blocks; report where each
     document lands. Returns (id, n_tokens, start_pack, start_offset,
@@ -234,8 +228,8 @@ def pack_sequences(
     """
     from pyspark.sql import Window as W
 
-    toks = F.size(F.filter(tokens(text_col), lambda w: F.length(w) > 0))
-    base = df.select(F.col(id_col).alias("id"), toks.cast("bigint").alias("n_tokens"))
+    toks = F.size(F.filter(tokens("text"), lambda w: F.length(w) > 0))
+    base = df.select(F.col("doc_id").alias("id"), toks.cast("bigint").alias("n_tokens"))
     b = base.withColumn("bucket", F.floor(F.col("id") / bucket_width))
     btot = b.groupBy("bucket").agg(F.sum("n_tokens").alias("bucket_total"))
     wb = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, -1)
@@ -249,7 +243,7 @@ def pack_sequences(
             "prev_cum", F.col("bucket_prefix") + F.coalesce(F.sum("n_tokens").over(wd), F.lit(0))
         )
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_tokens",
             F.expr(f"prev_cum div {max_len}").alias("start_pack"),
             (F.col("prev_cum") % max_len).alias("start_offset"),
@@ -267,12 +261,11 @@ def md5_stratified_sample(
     strata_col: str,
     rates: dict[str, float],
     default_rate: float,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic per-stratum sampling by md5 bucket — the corpus-
     rebalancing primitive (downsample the dominant language/source,
     keep the tail). A row survives iff the first 8 hex chars of
-    md5(stratum:id), read as an integer, fall under rate·2³². Pure
+    md5(stratum:doc_id), read as an integer, fall under rate·2³². Pure
     narrow JVM expressions (md5/conv), no shuffle, and portable:
     md5 is standardized, so any engine reproduces the exact sample
     (unlike seeded RNG or engine-specific hashes).
@@ -281,34 +274,31 @@ def md5_stratified_sample(
     for k, v in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == k, F.lit(float(v))).otherwise(rate)
     bucket = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.col(strata_col), F.col(id_col).cast("string"))), 1, 8),
+        F.substring(F.md5(F.concat_ws(":", F.col(strata_col), F.col("doc_id").cast("string"))), 1, 8),
         16,
         10,
     ).cast("bigint")
     return df.filter(bucket < (rate * F.lit(float(2**32))).cast("bigint"))
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, rate_pct: int, salt: int = 0, hash_fn: str = "xxhash"
-) -> DataFrame:
+def hash_sample(df: DataFrame, id_col: str, rate_pct: int, hash_fn: str = "xxhash") -> DataFrame:
     """Deterministic, reproducible sampling: keep rows whose 64-bit hash
-    of (id, salt) falls in the lowest rate_pct% of the hash space.
+    of (id, 0) falls in the lowest rate_pct% of the hash space.
 
     Unlike TABLESAMPLE/df.sample, the kept set is a pure function of ids
-    — stable across runs, partitionings and cluster sizes, and different
-    salts give independent samples. The standard trick for carving
-    held-out splits from a 100 TB corpus.
+    — stable across runs, partitionings and cluster sizes. The standard
+    trick for carving held-out splits from a 100 TB corpus.
 
     hash_fn: 'xxhash' (default, fastest — engine-internal values) or
-    'md5' (first 8 hex chars of md5("<id>:<salt>") — standardized, so the
+    'md5' (first 8 hex chars of md5("<id>:0") — standardized, so the
     kept set is reproducible by ANY engine and oracle-checkable).
     """
     if hash_fn == "xxhash":
-        h = F.xxhash64(F.col(id_col), F.lit(salt))
+        h = F.xxhash64(F.col(id_col), F.lit(0))
     elif hash_fn == "md5":
         h = F.conv(
             F.substring(
-                F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(salt)))), 1, 8
+                F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit("0"))), 1, 8
             ),
             16,
             10,
@@ -318,13 +308,7 @@ def hash_sample(
     return df.filter(F.pmod(h, F.lit(100)) < rate_pct)
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 32,
-    overlap: int = 8,
-) -> DataFrame:
+def chunk_documents(df: DataFrame, chunk_tokens: int = 32, overlap: int = 8) -> DataFrame:
     """Split documents into overlapping token-window chunks — the standard
     pre-embedding segmentation in retrieval/training pipelines.
 
@@ -340,7 +324,7 @@ def chunk_documents(
     # carried the whole token array alongside every exploded start row,
     # duplicating an n-element array n/stride times (O(n^2/stride) bytes:
     # a million-token doc would materialize ~50 GB of array copies)
-    base = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("_toks"))
+    base = df.select(F.col("doc_id").alias("id"), tokens("text").alias("_toks"))
     toks = F.col("_toks")
     n = F.size(toks)
     # window starts: 0, stride, 2*stride... while start < n
@@ -363,7 +347,7 @@ def chunk_documents(
     )
 
 
-def unigram_model(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def unigram_model(df: DataFrame) -> DataFrame:
     """Corpus unigram LM: (term, n, logp) with p = count/total.
 
     Two partial-aggregated passes (term counts, then a broadcast 1-row
@@ -371,7 +355,7 @@ def unigram_model(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     smoothing: scoring the training corpus itself never sees OOV, and
     unsmoothed probabilities keep the math reproducible in any engine.
     """
-    tok = df.select(F.explode(tokens(text_col)).alias("term")).where(F.length("term") > 0)
+    tok = df.select(F.explode(tokens("text")).alias("term")).where(F.length("term") > 0)
     counts = tok.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
     total = counts.agg(F.sum("n").cast("double").alias("total"))
     return (
@@ -380,9 +364,7 @@ def unigram_model(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def unigram_doc_scores(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_doc_scores(df: DataFrame) -> DataFrame:
     """Per-doc unigram log-likelihood: (id, n_tokens, avg_logp, ppl).
 
     avg_logp = sum(tf·ln p(term)) / n_tokens; ppl = exp(-avg_logp) — the
@@ -395,12 +377,12 @@ def unigram_doc_scores(
     term instead, and everything else is unchanged.
     """
     tf = (
-        df.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("term"))
+        df.select(F.col("doc_id").alias("id"), F.explode(tokens("text")).alias("term"))
         .where(F.length("term") > 0)
         .groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    model = unigram_model(df, id_col, text_col)
+    model = unigram_model(df)
     return (
         tf.join(F.broadcast(model), "term")
         .groupBy("id")
@@ -417,7 +399,7 @@ def unigram_doc_scores(
     )
 
 
-def vocab_coverage(df: DataFrame, text_col: str = "text", min_count: int = 5) -> DataFrame:
+def vocab_coverage(df: DataFrame, min_count: int = 5) -> DataFrame:
     """Corpus vocabulary build + per-document OOV audit — the tokenizer-
     prep pass of a pretraining pipeline: vocab = tokens whose corpus
     occurrence count ≥ `min_count`; each document reports how many of its
@@ -434,7 +416,7 @@ def vocab_coverage(df: DataFrame, text_col: str = "text", min_count: int = 5) ->
     skewed keys, no Python.
     """
     toks = (
-        df.select(F.col("doc_id"), F.explode(tokens(text_col)).alias("tok"))
+        df.select(F.col("doc_id"), F.explode(tokens("text")).alias("tok"))
         .where(F.length("tok") > 0)
     )
     # (tok, n_in_doc) per doc: shrinks the join input from occurrences to
@@ -463,13 +445,13 @@ def vocab_coverage(df: DataFrame, text_col: str = "text", min_count: int = 5) ->
 LOGISTIC_QUALITY_WEIGHTS = (-1.5, 0.8, 2.0, 1.5)
 
 
-def quality_feature_exprs(text_col: str = "text"):
+def quality_feature_exprs():
     """The quality-filter feature triple as column expressions:
     (len_score, ttr, stop_frac) — shared by fixed-weight inference
     (with_logistic_quality) and distributed IRLS training
     (operators/mlfit.py via quality_features), so the trainer learns in
     exactly the feature space the inference pass applies."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     n = F.size(toks)
     len_score = F.least(n.cast("double") / 100.0, F.lit(10.0))
     ttr = F.size(F.array_distinct(toks)) / n
@@ -477,10 +459,10 @@ def quality_feature_exprs(text_col: str = "text"):
     return len_score, ttr, stop_frac
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Append len_score/ttr/stop_frac columns; rows with no tokens are
     dropped (their ratio features are undefined — 0/0)."""
-    len_score, ttr, stop_frac = quality_feature_exprs(text_col)
+    len_score, ttr, stop_frac = quality_feature_exprs()
     return (
         df.withColumn("len_score", len_score)
         .withColumn("ttr", ttr)
@@ -489,7 +471,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_logistic_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_logistic_quality(df: DataFrame) -> DataFrame:
     """Model-based quality scoring as a vectorized inference pass: a
     logistic classifier over cheap text features (length score, type-
     token ratio, stopword fraction) with fixed weights — the shape of a
@@ -497,13 +479,13 @@ def with_logistic_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     expressions: at 100 TB this is a narrow map over the scan, no
     shuffle at all. Adds `quality_prob` = σ(w·x) rounded to 4 decimals.
     """
-    len_score, ttr, stop_frac = quality_feature_exprs(text_col)
+    len_score, ttr, stop_frac = quality_feature_exprs()
     w0, w1, w2, w3 = LOGISTIC_QUALITY_WEIGHTS
     z = F.lit(w0) + F.lit(w1) * len_score + F.lit(w2) * ttr + F.lit(w3) * stop_frac
     return df.withColumn("quality_prob", F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 4))
 
 
-def bigram_doc_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def bigram_doc_scores(df: DataFrame) -> DataFrame:
     """Per-doc bigram-LM log-likelihood: (id, n_bigrams, avg_logp, ppl)
     with P(w_i | w_{i-1}) = corpus_count(w_{i-1} w_i) / corpus_count(
     w_{i-1} as a bigram left-context). Unsmoothed — scoring the training
@@ -527,8 +509,8 @@ def bigram_doc_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     per position, O(len^2) chars per doc (see dedup._token_windows).
     """
     base = df.select(
-        F.col(id_col).alias("id"),
-        F.filter(tokens(text_col), lambda x: F.length(x) > 0).alias("_toks"),
+        F.col("doc_id").alias("id"),
+        F.filter(tokens("text"), lambda x: F.length(x) > 0).alias("_toks"),
     )
     toks = F.col("_toks")
     big = F.transform(

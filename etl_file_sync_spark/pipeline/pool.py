@@ -63,7 +63,6 @@ class FTPConnectionPool:
         pool_size: int = DEFAULT_POOL_SIZE,
         max_wait: float = DEFAULT_MAX_WAIT,
         connect_timeout: float = DEFAULT_CONNECT_TIMEOUT,
-        passive_mode: bool = True,
         factory: Callable[[], FTP] | None = None,
     ) -> None:
         self._host, self._port = host, port
@@ -71,7 +70,6 @@ class FTPConnectionPool:
         self._pool_size = pool_size
         self._max_wait = max_wait
         self._connect_timeout = connect_timeout
-        self._passive = passive_mode
         self._factory = factory or self._connect
         self._idle: queue.Queue = queue.Queue()
         self._created = 0
@@ -81,7 +79,7 @@ class FTPConnectionPool:
         conn = QuickAckFTP()
         conn.connect(self._host, self._port, timeout=self._connect_timeout)
         conn.login(self._username, self._password)
-        conn.set_pasv(self._passive)
+        conn.set_pasv(True)
         return conn
 
     @staticmethod

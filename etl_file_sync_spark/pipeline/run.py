@@ -123,8 +123,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def load_env_file(path: str) -> None:
     """Minimal .env loader (KEY=VALUE lines, # comments)."""
-    import os
-
     with open(path) as fh:
         for line in fh:
             line = line.strip()

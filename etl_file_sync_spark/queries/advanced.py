@@ -79,8 +79,10 @@ def sql_recursive_bfs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     organic data."""
     from etl_file_sync_spark.operators.dedup import jaccard_pairs
 
+    # every recursion round scans the edge view: checkpoint it eagerly so
+    # the rounds read the materialized pairs, not the jaccard_pairs plan
     edges = jaccard_pairs(t(spark, sf_dir, "documents"), threshold=0.5).select("id_a", "id_b")
-    edges.createOrReplaceTempView("nd_edges")
+    edges.localCheckpoint(eager=True).createOrReplaceTempView("nd_edges")
     return spark.sql(_BFS_SQL)
 
 

@@ -67,9 +67,9 @@ from etl_file_sync_spark.queries.registry import register, t
     "embedding",
 )
 def cluster_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-means cluster profile of the embedding corpus: every vector is
-    assigned to its nearest stride-seed centroid (deterministic k =
-    n/50 seed, the same seed `kmeans_centroids` refines), and each
+    """K-means-style cluster profile of the embedding corpus: every
+    vector is assigned to its nearest stride centroid (deterministic
+    k = n/50, the cells ivf_topk probes), and each
     cluster reports its size, exact member-id checksum, and mean
     cosine cohesion. One GEMM map pass + one partial-aggregated
     groupBy; the oracle recomputes the assignment relationally via a

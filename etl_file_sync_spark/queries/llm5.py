@@ -356,35 +356,9 @@ def asof_nearest_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     explosion); the oracle restates nearest+tolerance as a bounded
     candidate join + row_number, so direction, tie-break, and tolerance
     semantics are all value-checked."""
-    from etl_file_sync_spark.operators.asof import asof_join
+    from etl_file_sync_spark.queries.streaming_face import _purchase_view_asof
 
-    e = t(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", F.round("value", 2).alias("purchase_value")
-    )
-    views = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id", F.col("ts").alias("view_ts"))
-        .agg(F.round(F.max("value"), 2).alias("view_value"))
-    )
-    joined = asof_join(
-        purchases,
-        views,
-        on="user_id",
-        left_time="ts",
-        right_time="view_ts",
-        right_vals=["view_ts", "view_value"],
-        direction="nearest",
-        tolerance=F.expr("INTERVAL 15 MINUTES"),
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "purchase_value",
-        F.col("view_ts").alias("near_view_ts"),
-        F.col("view_value").alias("near_view_value"),
-    ).orderBy("event_id")
+    return _purchase_view_asof(spark, sf_dir, "near", "nearest", F.expr("INTERVAL 15 MINUTES"))
 
 
 @register(

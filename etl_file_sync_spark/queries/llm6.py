@@ -188,8 +188,8 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     chars). Every stage is the registered operator the face exposes
     individually (operators/dedup.py jaccard_pairs, operators/cluster.py
     dedup_clusters); this query pins that they COMPOSE — the oracle
-    restates the full chain including jaccard_pairs' default
-    stop-shingle cut (max_df_frac=0.5; without it a boilerplate-heavy
+    restates the full chain including jaccard_pairs'
+    stop-shingle cut (MAX_DF_FRAC = 0.5; without it a boilerplate-heavy
     corpus would silently diverge, round-4 ADVICE) and the
     recursive-CTE closure. tests/test_scale_ops.py pins the agreement
     ON a boilerplate-heavy corpus where the cut actually fires."""

@@ -166,6 +166,14 @@ def asof_purchase_prev_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged union + last(ignorenulls) window — ONE shuffle on user_id.
     The right side is pre-deduped per (user, ts) for determinism.
     """
+    return _purchase_view_asof(spark, sf_dir, "prev", "backward", None)
+
+
+def _purchase_view_asof(spark: SparkSession, sf_dir: str, prefix: str, direction: str, tolerance) -> DataFrame:
+    """Each purchase (event_id, user_id, ts, purchase_value) with the
+    view that asof_join matches to it in ``direction`` within
+    ``tolerance``, as ``<prefix>_view_ts``/``<prefix>_view_value``. The
+    views are deduped per (user, ts), keeping the largest value."""
     from etl_file_sync_spark.operators.asof import asof_join
 
     e = t(spark, sf_dir, "events")
@@ -184,15 +192,36 @@ def asof_purchase_prev_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_time="ts",
         right_time="view_ts",
         right_vals=["view_ts", "view_value"],
+        direction=direction,
+        tolerance=tolerance,
     )
     return joined.select(
         "event_id",
         "user_id",
         "ts",
         "purchase_value",
-        F.col("view_ts").alias("prev_view_ts"),
-        F.col("view_value").alias("prev_view_value"),
+        F.col("view_ts").alias(f"{prefix}_view_ts"),
+        F.col("view_value").alias(f"{prefix}_view_value"),
     ).orderBy("event_id")
+
+
+def _view_range_join(purchases: DataFrame, events: DataFrame, delay: str, how: str) -> DataFrame:
+    """``how``-join of the purchase stream (user_id, ts, ...) to the view
+    stream of ``events`` — (view_id, v_user, view_ts), watermarked by
+    ``delay`` — on the same user and a view in the 30 minutes up to the
+    purchase."""
+    views = (
+        events.filter(F.col("event_type") == "view")
+        .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
+        .withWatermark("view_ts", delay)
+    )
+    return purchases.join(
+        views,
+        (F.col("user_id") == F.col("v_user"))
+        & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
+        & (F.col("view_ts") <= F.col("ts")),
+        how,
+    )
 
 
 @register(
@@ -224,18 +253,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id", "ts")
             .withWatermark("ts", "1 hour")
         )
-        views = (
-            ev.filter(F.col("event_type") == "view")
-            .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-            .withWatermark("view_ts", "1 hour")
-        )
-        joined = purchases.join(
-            views,
-            (F.col("user_id") == F.col("v_user"))
-            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
-            & (F.col("view_ts") <= F.col("ts")),
-            "inner",
-        ).select("event_id", "view_id", "user_id")
+        joined = _view_range_join(purchases, ev, "1 hour", "inner").select("event_id", "view_id", "user_id")
         out = run_to_memory_sink(joined, "stream_stream_join_sink", "append")
         return out.orderBy("event_id", "view_id")
 
@@ -407,19 +425,9 @@ def stream_outer_attribution_dedup(spark: SparkSession, sf_dir: str) -> DataFram
             .withWatermark("ts", "10 minutes")
             .dropDuplicatesWithinWatermark(["event_id"])
         )
-        views = (
-            events()
-            .filter(F.col("event_type") == "view")
-            .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-            .withWatermark("view_ts", "10 minutes")
+        joined = _view_range_join(deduped, events(), "10 minutes", "leftOuter").select(
+            "event_id", "user_id", "view_id"
         )
-        joined = deduped.join(
-            views,
-            (F.col("user_id") == F.col("v_user"))
-            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
-            & (F.col("view_ts") <= F.col("ts")),
-            "leftOuter",
-        ).select("event_id", "user_id", "view_id")
         out = run_to_memory_sink(joined, "stream_outer_attr_sink", "append")
     # drop the flush sentinels by their RESERVED id — "user_id >= 0" was
     # a sign convention that silently dropped real hash-range negative
@@ -594,19 +602,7 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id", "ts")
             .withWatermark("ts", "10 minutes")
         )
-        views = (
-            events()
-            .filter(F.col("event_type") == "view")
-            .select(F.col("event_id").alias("view_id"), F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-            .withWatermark("view_ts", "10 minutes")
-        )
-        joined = purchases.join(
-            views,
-            (F.col("user_id") == F.col("v_user"))
-            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
-            & (F.col("view_ts") <= F.col("ts")),
-            "full_outer",
-        ).select(
+        joined = _view_range_join(purchases, events(), "10 minutes", "full_outer").select(
             "event_id", "view_id", F.coalesce(F.col("user_id"), F.col("v_user")).alias("user_id")
         )
         out = run_to_memory_sink(joined, "stream_full_outer_sink", "append")

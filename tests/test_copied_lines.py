@@ -27,7 +27,7 @@ pytestmark = pytest.mark.unit
 
 PACKAGE = Path(__file__).resolve().parent.parent / "etl_file_sync_spark"
 WINDOW = 6
-CEILING = 165
+CEILING = 80
 
 
 def _kept_lines(path: Path) -> list[tuple[int, str]]:

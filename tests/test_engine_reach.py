@@ -21,6 +21,7 @@ needed.
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 import pytest
@@ -39,6 +40,11 @@ ALLOWED = {
     "jaro_winkler_py": "pure-Python reference model of Jaro-Winkler that the bit-level "
     "tests compare the engine's JW kernels against",
 }
+
+
+@functools.cache
+def _tree(path: Path) -> ast.Module:
+    return ast.parse(path.read_text())
 
 
 def _definitions(tree: ast.Module):
@@ -81,11 +87,11 @@ def unreached() -> list[str]:
 
     A use inside a definition that is itself unreached does not count,
     so the scan repeats until the unreached set stops growing."""
-    entry_words = {w for p in ENTRY_FILES for w, _ in _identifier_uses([ast.parse(p.read_text())])}
+    entry_words = {w for p in ENTRY_FILES for w, _ in _identifier_uses([_tree(p)])}
     defs = []  # (path, name, lo, hi)
     uses: dict[str, list[tuple[Path, int]]] = {}
     for path in sorted(PACKAGE.rglob("*.py")):
-        tree = ast.parse(path.read_text())
+        tree = _tree(path)
         defs += [(path, *d) for d in _definitions(tree)]
         # an __init__'s re-export imports are no use
         code = [n for n in tree.body if path.name != "__init__.py" or not isinstance(n, ast.ImportFrom)]
@@ -122,3 +128,136 @@ def test_every_engine_definition_is_reached(unreached_names):
 def test_allowed_entries_are_still_needed(unreached_names):
     names = {n.split("::")[1] for n in unreached_names}
     assert set(ALLOWED) <= names, f"ALLOWED lists reached names: {sorted(set(ALLOWED) - names)}"
+
+
+# Defaulted parameters. Each one is a setting; a setting no caller sets
+# is a literal under another name, and a branch that only it selects is
+# a code path only tests run.
+#
+# ``module.function(parameter)`` -> why it keeps its default although no
+# package or entry-point call passes it. Three kinds only: a guard that
+# raises (tests set a small value to trigger it), a physical-layout value
+# that tests sweep to prove the result does not depend on it, and a
+# deployment setting or test-substitution seam.
+ALLOWED_DEFAULTS = {
+    "similarity.cosine_topk(max_queries)": "guard that raises: the broadcast query side is bounded",
+    "bpe.bpe_train(max_vocab)": "guard that raises: the driver-side merge loop is bounded",
+    "rankstats.grouped_bucketed_cumsum(n_buckets)": "physical layout: tests sweep it, the sums do not change",
+    "rankstats.bucketed_cummax(n_buckets)": "physical layout: tests sweep it, the maxima do not change",
+    "rankstats.bucketed_row_number(n_buckets)": "physical layout: tests sweep it, the row numbers do not change",
+    "rankstats.avg_ranks(n_buckets)": "physical layout: tests sweep it, the ranks do not change",
+    "dedup.embedding_dup_pairs(blocks)": "physical layout: tests sweep it, the pairs do not change",
+    "text.pack_sequences(bucket_width)": "physical layout: tests sweep it, the packing does not change",
+    "pool.FTPConnectionPool(pool_size)": "deployment setting: connections per server",
+    "pool.FTPConnectionPool(max_wait)": "deployment setting: borrow timeout",
+    "pool.FTPConnectionPool(connect_timeout)": "deployment setting: FTP connect timeout",
+    "pool.FTPConnectionPool(factory)": "test seam: a fake FTP client in place of ftplib",
+    "config.servers_dataframe(env)": "test seam: an environment dict in place of os.environ",
+    "run.kafka_reader_options(env)": "test seam: an environment dict in place of os.environ",
+    "config.get_dlq_topic(suffix)": "deployment setting: the DLQ topic suffix",
+    "sink.foreach_batch_factory(staging_dir)": "deployment setting: where a batch's transfer staging lives",
+    "run.main(argv)": "test seam: the CLI arguments in place of sys.argv",
+}
+
+
+def _functions(tree: ast.Module):
+    """(call name, label, def, is method) of each top-level function and
+    each method of a top-level class, and the remaining top-level code;
+    a constructor is called by its class name."""
+    rest = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield node.name, node.name, node, False
+        elif isinstance(node, ast.ClassDef):
+            for m in node.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    init = m.name == "__init__"
+                    yield (node.name if init else m.name), f"{node.name}{'' if init else '.' + m.name}", m, True
+                else:
+                    rest.append(m)
+        else:
+            rest.append(node)
+    yield None, None, ast.Module(body=rest, type_ignores=[]), False
+
+
+def _defaulted(fn, method: bool):
+    """(parameter, position or None) of each parameter with a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    if method and pos and pos[0].arg in ("self", "cls"):
+        pos = pos[1:]
+    out = [(p.arg, i) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
+    return out + [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def _passes(call: ast.Call, caller, p: str, i, dead) -> bool:
+    """Whether ``call`` (made inside ``caller``) passes parameter ``p`` at
+    position ``i``: by keyword, by position or through ``*args`` or
+    ``**kwargs``, except as a forward of the caller's own parameter of
+    that name while it is in ``dead``."""
+    if any(k.arg is None for k in call.keywords) or (
+        i is not None and any(isinstance(a, ast.Starred) for a in call.args)
+    ):
+        return True
+    vals = [k.value for k in call.keywords if k.arg == p]
+    if i is not None and len(call.args) > i:
+        vals.append(call.args[i])
+    return any(not (isinstance(v, ast.Name) and caller and (*caller, v.id) in dead) for v in vals)
+
+
+def unpassed_defaults() -> tuple[list[str], list[str]]:
+    """(unpassed, allowed): ``module.function(parameter)`` of each
+    defaulted parameter that no call in package code or an entry file
+    passes, outside and inside ALLOWED_DEFAULTS.
+
+    Calls match by name. Forwarding the caller's own parameter does not
+    count while that parameter is itself unpassed and not allowed, so
+    the scan repeats until the unpassed set stops growing."""
+    params = {}  # (path, def line, parameter) -> (call name, label, position)
+    calls: dict[str, list[tuple[ast.Call, tuple | None]]] = {}
+    for path in sorted(PACKAGE.rglob("*.py")) + ENTRY_FILES:
+        for name, label, fn, method in _functions(_tree(path)):
+            caller = None
+            if name is not None and path not in ENTRY_FILES:
+                caller = (path, fn.lineno)
+                for p, i in _defaulted(fn, method):
+                    params[(*caller, p)] = (name, f"{path.stem}.{label}({p})", i)
+            for n in ast.walk(fn):
+                if isinstance(n, ast.Call):
+                    f = n.func
+                    called = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    if called:
+                        calls.setdefault(called, []).append((n, caller))
+
+    def unpassed(key, dead) -> bool:
+        name, _, i = params[key]
+        return not any(_passes(c, caller, key[2], i, dead) for c, caller in calls.get(name, ()))
+
+    dead: set[tuple] = set()
+    while True:
+        now = {k for k in params if params[k][1] not in ALLOWED_DEFAULTS and unpassed(k, dead)}
+        if now == dead:
+            break
+        dead = now
+    allowed = [params[k][1] for k in params if params[k][1] in ALLOWED_DEFAULTS and unpassed(k, dead)]
+    return sorted(params[k][1] for k in dead), sorted(allowed)
+
+
+@pytest.fixture(scope="module")
+def defaults_scan():
+    return unpassed_defaults()
+
+
+def test_every_default_is_passed_or_allowed(defaults_scan):
+    unpassed, _ = defaults_scan
+    assert not unpassed, (
+        f"{len(unpassed)} defaulted parameters that no package or entry-point call passes; "
+        "make each a literal or a module constant at its use:\n" + "\n".join(unpassed)
+    )
+
+
+def test_allowed_defaults_are_still_unpassed(defaults_scan):
+    _, allowed = defaults_scan
+    assert set(allowed) == set(ALLOWED_DEFAULTS), (
+        f"ALLOWED_DEFAULTS lists parameters that are passed or gone: {sorted(set(ALLOWED_DEFAULTS) - set(allowed))}"
+    )

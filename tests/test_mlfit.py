@@ -48,7 +48,7 @@ def test_irls_learns_a_separable_toy(spark):
     # classify every training point correctly after 8 Newton steps
     rows = [(float(i % 10) / 10.0, 1.0 if (i % 10) / 10.0 > 0.5 else 0.0) for i in range(200)]
     df = spark.createDataFrame(rows, "x1 double, label double")
-    beta = logistic_irls(df, ["x1"], "label", ridge=1e-6)
+    beta = logistic_irls(df, ["x1"], "label")
     for x1, y in rows[:10]:
         p = 1.0 / (1.0 + np.exp(-(beta[0] + beta[1] * x1)))
         assert (p > 0.5) == (y == 1.0), (x1, y, p)

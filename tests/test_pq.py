@@ -84,8 +84,9 @@ def test_no_cache_outlives_the_call(spark):
 @pytest.mark.parametrize("degenerate", [False, True], ids=["normal", "all_null_queries"])
 def test_one_opening_driver_action(spark, monkeypatch, fn, degenerate):
     """Building a top-k makes ONE collect (count, seed, queries and
-    centroids together), no count, and one toPandas per Lloyd round; a
-    degenerate input stops after that collect."""
+    centroids together), no count, and at most one toPandas per
+    codebook training round; a degenerate input stops after that
+    collect."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     e = _corpus(spark)
@@ -101,11 +102,10 @@ def test_one_opening_driver_action(spark, monkeypatch, fn, degenerate):
             return _orig(self, *a, **k)
 
         monkeypatch.setattr(DataFrame, name, counted)
-    kw = {"kmeans_iters": 0} if fn == "ivfpq_topk" else {}
-    _TOPK[fn](e, q, k=5, iters=3, **kw)
+    _TOPK[fn](e, q, k=5)
     assert calls[0] == "collect"
     if degenerate:
         assert calls == ["collect"]
     else:
         assert calls.count("collect") == 1 and "count" not in calls
-        assert calls.count("toPandas") <= 3
+        assert calls.count("toPandas") <= PQ.ITERS

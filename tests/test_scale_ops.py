@@ -192,7 +192,7 @@ def test_profile_table_values(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (2, "b")], "k long, v string"
     )
-    prof = {r.column: r for r in profile_table(df).collect()}
+    prof = {r.column: r for r in profile_table(df, df.columns).collect()}
     assert prof["k"].n_rows == 3 and prof["k"].n_nulls == 0 and prof["k"].n_distinct == 2
     assert prof["k"].min_val == "1" and prof["k"].max_val == "2"
     assert prof["v"].n_nulls == 1 and prof["v"].n_distinct == 2
@@ -222,7 +222,7 @@ def test_profile_table_awkward_column_names(spark):
     from etl_file_sync_spark.operators.profile import profile_table
 
     df = spark.createDataFrame([(1, "x")], ["order", "my col"])
-    prof = {r.column for r in profile_table(df).collect()}
+    prof = {r.column for r in profile_table(df, df.columns).collect()}
     assert prof == {"order", "my col"}
 
 
@@ -255,61 +255,9 @@ def test_scd2_new_keys_and_multi_change(spark):
     }
 
 
-def test_expand_pairs_cap_bounds_mega_cluster(spark):
-    """A planted 100k-copy exact-dup group must expand to bounded output
-    (the representative star, k-1 rows), not C(100k,2) ≈ 5e9 pairs."""
-    from etl_file_sync_spark.operators.dedup import exact_collapse, expand_pairs
-
-    n = 100_000
-    df = spark.range(n).select(F.col("id").alias("doc_id"), F.lit("same text").alias("text"))
-    reps, membership = exact_collapse(df, "doc_id", F.sha2(F.col("text"), 256))
-    assert reps.count() == 1
-    rep_pairs = spark.createDataFrame([], "id_a long, id_b long, est_jaccard double")
-    out = expand_pairs(rep_pairs, membership, "est_jaccard", 1.0, max_group_pairs=1000)
-    assert out.count() == n - 1  # star: (rep=0, member) for every copy
-    sample = out.orderBy("id_b").limit(3).collect()
-    assert [(r.id_a, r.id_b, r.est_jaccard) for r in sample] == [
-        (0, 1, 1.0), (0, 2, 1.0), (0, 3, 1.0)
-    ]
-
-
-def test_expand_pairs_cap_noop_below_cutoff(spark):
-    """Below the cap the pair contract is byte-identical to uncapped."""
-    from etl_file_sync_spark.operators.dedup import minhash_dedup_pairs
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = []
-    for g in range(4):
-        text = base + f" group{g}"
-        for m in range(5):  # C(5,2)=10 <= cap
-            rows.append((g * 10 + m, text))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = minhash_dedup_pairs(df, max_group_pairs=10).collect()
-    plain = minhash_dedup_pairs(df).collect()
-    key = lambda r: ((r.id_a, r.id_b), r.est_jaccard)  # noqa: E731
-    assert sorted(map(key, capped)) == sorted(map(key, plain))
-
-
-def test_expand_pairs_cap_keeps_cross_cluster_rep_pairs(spark):
-    """Capped clusters still surface near-dup relations ACROSS clusters
-    via their representative (the cross side is capped too)."""
-    from etl_file_sync_spark.operators.dedup import exact_collapse, expand_pairs
-
-    rows = [(i, "aaa") for i in range(10)] + [(100 + i, "bbb") for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    reps, membership = exact_collapse(df, "doc_id", F.col("text"))
-    rep_pairs = spark.createDataFrame([(0, 100, 0.9)], "id_a long, id_b long, score double")
-    out = expand_pairs(rep_pairs, membership, "score", 1.0, max_group_pairs=3).collect()
-    # per cluster: star of 9; cross: rep-rep only
-    stars = [r for r in out if r.score == 1.0]
-    cross = [r for r in out if r.score == 0.9]
-    assert len(stars) == 18 and len(cross) == 1
-    assert (cross[0].id_a, cross[0].id_b) == (0, 100)
-
-
 def test_corpus_dedup_pipeline_oracle_agrees_when_stop_shingle_cut_fires(spark, tmp_path):
     """Round-4 ADVICE: the composed pipeline's oracle must restate the
-    default stop-shingle cut (max_df_frac=0.5), not merely agree while
+    stop-shingle cut (MAX_DF_FRAC = 0.5), not merely agree while
     no shingle is hot. This corpus gives every doc a shared boilerplate
     prefix (df = 100% > 0.5, the cut FIRES); Spark query and DuckDB
     oracle must still agree — docs sharing only boilerplate form no
